@@ -302,6 +302,7 @@ BENCH_QUERIES = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from photon_ml_spark.materialize import scope
     from photon_ml_spark.queries import all_queries
     from photon_ml_spark.session import get_spark
 
@@ -329,54 +330,54 @@ def main() -> None:
         "l_returnflag"
     ).count().collect()
 
+    # each row runs in its own materialize scope: what the row cached or
+    # checkpointed is released when it ends (outside the row timer), so
+    # one row's memory cannot skew the next
     canary["flagship_game_pipeline"] = _probe("flagship_game_pipeline")
-    t0 = time.perf_counter()
-    run_flagship(spark, sf_dir)
-    timings["flagship_game_pipeline"] = round(time.perf_counter() - t0, 3)
+    with scope():
+        t0 = time.perf_counter()
+        run_flagship(spark, sf_dir)
+        timings["flagship_game_pipeline"] = round(time.perf_counter() - t0, 3)
 
     constituents: dict[str, dict[str, float]] = {}
 
     canary["curate_pipeline"] = _probe("curate_pipeline")
-    t0 = time.perf_counter()
-    curate_stages = run_curate(spark, sf_dir)
-    if curate_stages:
-        timings["curate_pipeline"] = close_stamps(
-            curate_stages, time.perf_counter() - t0
-        )
-        constituents["curate_pipeline"] = curate_stages
-    else:
-        timings["curate_pipeline"] = round(time.perf_counter() - t0, 3)
+    with scope():
+        t0 = time.perf_counter()
+        curate_stages = run_curate(spark, sf_dir)
+        if curate_stages:
+            timings["curate_pipeline"] = close_stamps(
+                curate_stages, time.perf_counter() - t0
+            )
+            constituents["curate_pipeline"] = curate_stages
+        else:
+            timings["curate_pipeline"] = round(time.perf_counter() - t0, 3)
 
     canary["train_game_cd_loop"] = _probe("train_game_cd_loop")
-    t0 = time.perf_counter()
-    game_stamps = run_train_game(spark, sf_dir)
-    timings["train_game_cd_loop"] = close_stamps(
-        game_stamps, time.perf_counter() - t0
-    )
+    with scope():
+        t0 = time.perf_counter()
+        game_stamps = run_train_game(spark, sf_dir)
+        timings["train_game_cd_loop"] = close_stamps(
+            game_stamps, time.perf_counter() - t0
+        )
     constituents["train_game_cd_loop"] = game_stamps
     for name in BENCH_QUERIES:
         spec = registry.get(name)
         if spec is None:
             continue
         canary[name] = _probe(name)
-        t0 = time.perf_counter()
-        if name in STAMPED_SUITES:
-            stamps: dict[str, float] = {}
-            df = spec.run(spark, sf_dir, stamps=stamps)
-            df.write.format("noop").mode("overwrite").save()
-            timings[name] = close_stamps(stamps, time.perf_counter() - t0)
-            constituents[name] = stamps
-            # free the row's checkpointed stamp blocks + any caches its
-            # blocks created, so one suite's memory can't skew the next
-            # row (outside the row timer, like every other teardown)
-            from photon_ml_spark.queries_merged import release_stamped
-
-            release_stamped()
-            spark.catalog.clearCache()
-        else:
-            df = spec.run(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.perf_counter() - t0, 3)
+        with scope():
+            t0 = time.perf_counter()
+            if name in STAMPED_SUITES:
+                stamps: dict[str, float] = {}
+                df = spec.run(spark, sf_dir, stamps=stamps)
+                df.write.format("noop").mode("overwrite").save()
+                timings[name] = close_stamps(stamps, time.perf_counter() - t0)
+                constituents[name] = stamps
+            else:
+                df = spec.run(spark, sf_dir)
+                df.write.format("noop").mode("overwrite").save()
+                timings[name] = round(time.perf_counter() - t0, 3)
 
     # accounting invariant: every stamped row total == Σ constituents
     for name, stamps in constituents.items():

@@ -58,6 +58,8 @@ import json
 from pyspark.storagelevel import StorageLevel
 from pyspark.sql import SparkSession
 
+from photon_ml_spark.materialize import checkpoint, persist, release, scope
+
 
 def _resolve_input(spark, cfg):
     """``input`` + optional ``date_range``/``days_range`` → the path(s)
@@ -168,10 +170,11 @@ def _read_input(spark, cfg):
         # on first action and every later branch reads the SAME ids
         # (the reference's AvroDataReader likewise materializes the
         # ingest RDD before GAME consumes it).
-        return read_training_examples(
-            spark, cfg["input"], column_names=cfg.get("column_names")
-        ).localCheckpoint(
-            eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
+        return checkpoint(
+            read_training_examples(
+                spark, cfg["input"], column_names=cfg.get("column_names")
+            ),
+            eager=False,
         )
     if fmt == "response_prediction_avro":
         # the reference's scoring-input format carries no uid; assign
@@ -181,10 +184,11 @@ def _read_input(spark, cfg):
         from photon_ml_spark.sources.avro_io import read_response_predictions
 
         # same generated-uid pinning rationale as the avro branch
-        return read_response_predictions(spark, cfg["input"]).withColumn(
-            "uid", F.monotonically_increasing_id()
-        ).localCheckpoint(
-            eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
+        return checkpoint(
+            read_response_predictions(spark, cfg["input"]).withColumn(
+                "uid", F.monotonically_increasing_id()
+            ),
+            eager=False,
         )
     resolved = _resolve_input(spark, cfg)
     return spark.read.parquet(
@@ -242,8 +246,8 @@ def _shard_configs(cfg) -> dict:
 def _assembled(spark, cfg, dictionaries=None):
     """Read the input and attach every configured feature shard's
     sparse-pair columns. Returns ``(frame, {shard: dictionary},
-    {shard: dim})``; dictionaries built here are cached (callers own
-    the release)."""
+    {shard: dim})``; dictionaries built here are cached in the
+    caller's scope."""
     from photon_ml_spark.sources import featurize
 
     raw = _read_input(spark, cfg)
@@ -255,9 +259,12 @@ def _assembled(spark, cfg, dictionaries=None):
         if dictionaries.get(name) is None:
             # built from the RAW frame — a dictionary plan hanging off
             # an earlier shard's assembly join would redo that join
-            dictionaries[name] = featurize.build_feature_dictionary(
-                raw, shard.feature_bags, has_intercept=shard.has_intercept
-            ).cache()
+            dictionaries[name] = persist(
+                featurize.build_feature_dictionary(
+                    raw, shard.feature_bags, has_intercept=shard.has_intercept
+                ),
+                StorageLevel.MEMORY_AND_DISK_DESER,
+            )
         n_keys = dictionaries[name].count()
         dims[name] = n_keys
         strategy = "map" if n_keys <= 100_000 else "join"
@@ -370,6 +377,7 @@ def _validate_stage_keys(d, stage: str) -> None:
         )
 
 
+@scope()
 def train(
     cfg: dict, spark: SparkSession, listeners=None, tuner=None
 ) -> None:
@@ -420,25 +428,6 @@ def train(
 
 
 def _train_impl(cfg: dict, spark: SparkSession, emitter, tuner) -> None:
-    """Exception-safe shell: every cache the body registers is released
-    on ANY exit — the in-process leak this guards against (tests and
-    sweep orchestration call the driver repeatedly, several paths via
-    pytest.raises) happens precisely on the raising paths a clean-exit
-    unpersist would miss."""
-    job_caches: list = []
-    try:
-        _train_impl_body(cfg, spark, emitter, tuner, job_caches)
-    finally:
-        for frame in job_caches:
-            try:
-                frame.unpersist()
-            except Exception:
-                pass
-
-
-def _train_impl_body(
-    cfg: dict, spark: SparkSession, emitter, tuner, job_caches: list
-) -> None:
     from pyspark.sql import functions as F
 
     from photon_ml_spark import events
@@ -564,9 +553,10 @@ def _train_impl_body(
 
     dict_in = None
     if inc and not multi_shard and not cfg.get("dictionary_input"):
-        dict_in = spark.read.parquet(
-            f"{inc['model_dir']}/feature-dictionary"
-        ).cache()
+        dict_in = persist(
+            spark.read.parquet(f"{inc['model_dir']}/feature-dictionary"),
+            StorageLevel.MEMORY_AND_DISK_DESER,
+        )
     elif inc and not multi_shard and cfg.get("dictionary_input"):
         # an explicit dictionary alongside a prior model must BE the
         # prior model's feature space — priors are indexed by the old
@@ -627,13 +617,15 @@ def _train_impl_body(
                     "space re-indexes the uncovered shards per run"
                 )
             for s, p in di.items():
-                dicts_in[s] = spark.read.parquet(
-                    f"{p}/feature-dictionary"
-                ).cache()
+                dicts_in[s] = persist(
+                    spark.read.parquet(f"{p}/feature-dictionary"),
+                    StorageLevel.MEMORY_AND_DISK_DESER,
+                )
         else:
-            dicts_in[next(iter(shard_cfgs))] = spark.read.parquet(
-                f"{di}/feature-dictionary"
-            ).cache()
+            dicts_in[next(iter(shard_cfgs))] = persist(
+                spark.read.parquet(f"{di}/feature-dictionary"),
+                StorageLevel.MEMORY_AND_DISK_DESER,
+            )
     elif dict_in is not None:
         dicts_in[next(iter(shard_cfgs))] = dict_in
     if inc and multi_shard:
@@ -657,11 +649,13 @@ def _train_impl_body(
                         "reused automatically) or retrain from scratch"
                     )
             else:
-                dicts_in[s] = spark.read.parquet(prev_path).cache()
+                dicts_in[s] = persist(
+                    spark.read.parquet(prev_path),
+                    StorageLevel.MEMORY_AND_DISK_DESER,
+                )
     assembled, dictionaries, dims = _assembled(
         spark, cfg, dictionaries=dicts_in
     )
-    job_caches.extend(dictionaries.values())
     dv_mode = cfg.get("data_validation", "disabled")
     if dv_mode != "disabled":
         # GameTrainingDriver's dataValidation hook (default
@@ -761,13 +755,15 @@ def _train_impl_body(
         )
 
         for s in shard_cfgs:
-            norm_tables[s] = sparse_normalization_table(
-                assembled,
-                f"{s}_indices",
-                f"{s}_values",
-                kind=norm_kind,
-            ).cache()
-            job_caches.append(norm_tables[s])
+            norm_tables[s] = persist(
+                sparse_normalization_table(
+                    assembled,
+                    f"{s}_indices",
+                    f"{s}_values",
+                    kind=norm_kind,
+                ),
+                StorageLevel.MEMORY_AND_DISK_DESER,
+            )
             assembled = apply_sparse_normalization(
                 assembled, norm_tables[s], f"{s}_indices", f"{s}_values"
             )
@@ -925,8 +921,7 @@ def _train_impl_body(
     from dataclasses import replace
 
     family = cfg.get("family", "binomial")
-    assembled = assembled.cache()
-    job_caches.append(assembled)
+    assembled = persist(assembled, StorageLevel.MEMORY_AND_DISK_DESER)
 
     _norm_rows_cache: dict = {}
 
@@ -1017,8 +1012,9 @@ def _train_impl_body(
             validation_frame = apply_sparse_normalization(
                 validation_frame, nt, f"{s}_indices", f"{s}_values",
             )
-        validation_frame = validation_frame.cache()
-        job_caches.append(validation_frame)
+        validation_frame = persist(
+            validation_frame, StorageLevel.MEMORY_AND_DISK_DESER
+        )
 
     def _eval_scored(fitted, frame):
         """Score + the EVALUATION margin: the transformer's score is
@@ -1042,9 +1038,10 @@ def _train_impl_body(
 
         scored = _eval_scored(fitted, validation_frame)
         if family in ("binomial", "logistic"):
-            auc = metrics.auroc(
-                scored, score="__eval_margin", label="response"
-            ).first().auroc
+            with scope():
+                auc = metrics.auroc(
+                    scored, score="__eval_margin", label="response"
+                ).first().auroc
             if auc is None:
                 raise ValueError(
                     "validation frame has a single response class (or "
@@ -1385,6 +1382,7 @@ def _train_impl_body(
     print(json.dumps(report))
 
 
+@scope()
 def index(cfg: dict, spark: SparkSession) -> None:
     """Offline feature-indexing job — the reference's standalone
     FeatureIndexingDriver (photon-client/.../index/
@@ -1446,6 +1444,7 @@ def index(cfg: dict, spark: SparkSession) -> None:
     )
 
 
+@scope()
 def bags(cfg: dict, spark: SparkSession) -> None:
     """Standalone name/term feature-bags job — the reference's fourth
     CLI driver, NameAndTermFeatureBagsDriver (photon-client/.../data/
@@ -1489,8 +1488,6 @@ def _evaluate_scores(scored, evaluators: list) -> dict:
     (fail fast, never a silently empty evaluation)."""
     from pyspark.sql import functions as F
 
-    from photon_ml_spark.functions import metrics
-
     if "response" not in scored.columns:
         raise ValueError(
             "evaluators need a 'response' label column on the scoring "
@@ -1504,25 +1501,11 @@ def _evaluate_scores(scored, evaluators: list) -> dict:
     # one scoring pass feeds every requested metric: without the
     # persist each .first() below re-executes the full scoring plan
     # (random-effect joins included) once per evaluator
-    sdf = scored.withColumn("__eval_margin", F.col("score") + off).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # drain scope (r14): only tie-group relations registered by THIS
-    # call's metrics are dropped in the finally — entries that predate
-    # the mark may be pinned hot by an unrelated in-flight evaluation
-    # (multi-threaded driver) and are not ours to evict
-    tie_mark = metrics.roc_tie_cache_mark()
-    try:
+    with scope():
+        sdf = persist(
+            scored.withColumn("__eval_margin", F.col("score") + off)
+        )
         return _evaluate_scores_body(sdf, evaluators)
-    finally:
-        # unpersist on EVERY exit — an unknown evaluator name or an
-        # undefined metric raises mid-loop and must not leak the cache.
-        # The AUC-family metrics register a persisted tie-group relation
-        # in the bounded metrics cache; every action of this call has
-        # run by now, so drain it too — a scoring driver leaves no
-        # persisted metric state behind (success or error alike).
-        sdf.unpersist()
-        metrics.release_roc_tie_cache(keep=tie_mark)
 
 
 def _evaluate_scores_body(sdf, evaluators) -> dict:
@@ -1584,6 +1567,7 @@ def _evaluate_scores_body(sdf, evaluators) -> dict:
     return out
 
 
+@scope()
 def score(cfg: dict, spark: SparkSession) -> None:
     from photon_ml_spark.sources.model_io import (
         _hadoop_exists,
@@ -1645,12 +1629,7 @@ def score(cfg: dict, spark: SparkSession) -> None:
                 f"{sorted(shard_ids)}; provide feature_shards mapping "
                 "each shard id to its bags"
             )
-        dictionaries = ref_dicts
-        try:
-            _score_body(cfg, spark, dictionaries, model=model)
-        finally:
-            for d in dictionaries.values():
-                d.unpersist()
+        _score_body(cfg, spark, ref_dicts, model=model)
         return
 
     shards_json = f"{model_dir}/feature-shards.json"
@@ -1667,22 +1646,20 @@ def score(cfg: dict, spark: SparkSession) -> None:
         shards = json.loads(_hadoop_read_text(spark, shards_json))["shards"]
         cfg = {**cfg, "feature_shards": shards}
         dictionaries = {
-            s: spark.read.parquet(
-                f"{model_dir}/feature-dictionaries/{s}"
-            ).cache()
+            s: persist(
+                spark.read.parquet(f"{model_dir}/feature-dictionaries/{s}"),
+                StorageLevel.MEMORY_AND_DISK_DESER,
+            )
             for s in shards
         }
     else:
         dictionaries = {
-            cfg.get("shard", "features"): spark.read.parquet(
-                f"{model_dir}/feature-dictionary"
-            ).cache()
+            cfg.get("shard", "features"): persist(
+                spark.read.parquet(f"{model_dir}/feature-dictionary"),
+                StorageLevel.MEMORY_AND_DISK_DESER,
+            )
         }
-    try:
-        _score_body(cfg, spark, dictionaries)
-    finally:
-        for d in dictionaries.values():
-            d.unpersist()
+    _score_body(cfg, spark, dictionaries)
 
 
 def _score_body(cfg: dict, spark, dictionaries: dict, model=None) -> None:
@@ -1777,6 +1754,7 @@ def _quality_prefilter(docs, q, tokens_col=None):
     return scored
 
 
+@scope()
 def curate(cfg: dict, spark: SparkSession) -> None:
     """End-to-end training-corpus curation driver — the data-pipeline
     twin of ``train``/``score``. Every stage is optional and config-
@@ -1837,8 +1815,6 @@ def curate(cfg: dict, spark: SparkSession) -> None:
 
     from photon_ml_spark.operators import dedup, sampling, text
 
-    from photon_ml_spark.operators.indexing import release_local_checkpoint
-
     _validate_cfg_keys(cfg, "curate")
     for stage in ("quality", "near_dedup", "contamination", "select",
                   "mix", "split", "chunk", "tokenize"):
@@ -1877,31 +1853,19 @@ def curate(cfg: dict, spark: SparkSession) -> None:
     raw_docs = docs
 
     def _advance(new_docs, report_key, stage):
-        """Swap in the next corpus generation: eager localCheckpoint
-        (materialize + TRUNCATE lineage), count the materialized
-        blocks for the report, stamp, then release the superseded
-        generation — each stage's generation is corpus-sized, so
-        leaving every one pinned multiplies storage pressure by the
-        stage count at scale (the same leak class as the round-7 IVF
-        fix). r13: checkpoint instead of cache()+count — a cached
-        generation keeps the whole upstream chain in its LOGICAL plan,
-        so every downstream action re-analyzed a plan that grew with
-        each stage (measured: ~5s of driver-side gap between jobs over
-        a 9-stage run — the guide §7.3 planning-cost failure shape);
-        the checkpoint pins the same bytes AND makes later stages plan
-        against a leaf. SERIALIZED level per the PLANS.md corpus-cache
-        rule; on multi-executor clusters prefer reliable checkpoints
-        for the same truncation (module note in coordinate_descent)."""
+        """Swap in the next corpus generation: checkpoint it, count the
+        materialized blocks for the report, stamp, then release the
+        superseded generation — each one is corpus-sized, so keeping
+        every stage's generation multiplies storage by the stage count.
+        A checkpoint rather than a cache: a cached generation keeps the
+        whole upstream chain in its plan, and re-analyzing that growing
+        plan cost ~5 s of driver gaps over a 9-stage run (r13)."""
         nonlocal docs
         prev = docs
-        docs = new_docs.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
+        docs = checkpoint(new_docs)
         report[report_key] = docs.count()
         _stamp(stage)
-        if prev is not raw_docs:
-            release_local_checkpoint(prev)
-        prev.unpersist()
+        release(prev)
 
     pii_cfg = cfg.get("pii")
     if pii_cfg is not None:
@@ -2060,14 +2024,18 @@ def curate(cfg: dict, spark: SparkSession) -> None:
                 docs, threshold=nd.get("threshold", 0.5),
                 n=nd.get("n", 2), tokens_col=TOK,
             )
-            pairs = dedup.neardup_cluster_edges(
-                rep_pairs, membership
-            ).cache()
+            pairs = persist(
+                dedup.neardup_cluster_edges(rep_pairs, membership),
+                StorageLevel.MEMORY_AND_DISK_DESER,
+            )
         else:
-            pairs = dedup.minhash_lsh_dedup(
-                docs, threshold=nd.get("threshold", 0.5), n=nd.get("n", 2),
-                tokens_col=TOK,
-            ).select("id_a", "id_b").cache()
+            pairs = persist(
+                dedup.minhash_lsh_dedup(
+                    docs, threshold=nd.get("threshold", 0.5),
+                    n=nd.get("n", 2), tokens_col=TOK,
+                ).select("id_a", "id_b"),
+                StorageLevel.MEMORY_AND_DISK_DESER,
+            )
         if cfg.get("split"):
             # split consumes the full clusters later; materialize the
             # cached pair relation NOW so the LSH cost lands on THIS
@@ -2178,9 +2146,9 @@ def curate(cfg: dict, spark: SparkSession) -> None:
         tcol = "chunk_text" if ch else "text"
         # a synthetic row key survives chunking's doc_id duplication;
         # persisted so the encode join sees the same ids the output does
-        keyed = frame.withColumn(
-            "__tok_uid", F.monotonically_increasing_id()
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        keyed = persist(
+            frame.withColumn("__tok_uid", F.monotonically_increasing_id())
+        )
         if kind == "bpe":
             enc = text.bpe_encode(
                 keyed, art, id_col="__tok_uid", text_col=tcol
@@ -2208,7 +2176,7 @@ def curate(cfg: dict, spark: SparkSession) -> None:
         path = f"{cfg['output_dir']}/{name}"
         frame.write.mode("overwrite").parquet(path)
         if pinned is not None:
-            pinned.unpersist()
+            release(pinned)
         # count the WRITTEN table (parquet metadata, near-free) rather
         # than re-executing the split/chunk lineage a second time
         report[f"out_{name}"] = spark.read.parquet(path).count()
@@ -2230,7 +2198,7 @@ def curate(cfg: dict, spark: SparkSession) -> None:
         # serialized: full-text corpus rows — the heaviest frames in
         # the pipeline; deserialized caching means one Java object per
         # row (the GC failure mode BASELINE round 8 documents)
-        labeled = labeled.persist(StorageLevel.MEMORY_AND_DISK)
+        labeled = persist(labeled)
         if tok:
             _train_tokenizer(labeled.filter(F.col("split") == "train"))
             _stamp("tokenizer_train")
@@ -2240,20 +2208,12 @@ def curate(cfg: dict, spark: SparkSession) -> None:
                 .drop("cluster_id", "split"),
                 side,
             )
-        labeled.unpersist()
+        release(labeled)
     else:
         if tok:
             _train_tokenizer(docs)
             _stamp("tokenizer_train")
         _finish(docs, "docs")
-    # release the job's remaining caches (the final docs generation —
-    # a localCheckpoint, so the RDD-block release, not the no-op
-    # unpersist — and the near-dup pair relation) — same in-process
-    # discipline as the train/score drivers
-    release_local_checkpoint(docs)
-    docs.unpersist()
-    if pairs is not None:
-        pairs.unpersist()
     print(
         json.dumps(
             {"status": "curated", "report": report, "timings": timings}
@@ -2261,6 +2221,7 @@ def curate(cfg: dict, spark: SparkSession) -> None:
     )
 
 
+@scope()
 def curate_stream(cfg: dict, spark: SparkSession) -> None:
     """Streaming near-dedup driver: drain a document-stream directory
     through the shared incremental minhash index (first-seen-wins, see
@@ -2327,6 +2288,7 @@ def curate_stream(cfg: dict, spark: SparkSession) -> None:
     print(json.dumps({"status": "curated-stream", "survivors": n_out}))
 
 
+@scope()
 def import_model(cfg: dict, spark: SparkSession) -> None:
     """One-time migration: convert a REFERENCE-toolchain GAME model dir
     (Avro fixed-effect/random-effect layout, ModelProcessingUtils.
@@ -2428,6 +2390,7 @@ def import_model(cfg: dict, spark: SparkSession) -> None:
     }))
 
 
+@scope()
 def export_model(cfg: dict, spark: SparkSession) -> None:
     """The inverse migration: write a NATIVE model dir (what `train` or
     `import-model` produced) in the REFERENCE toolchain's Avro layout,

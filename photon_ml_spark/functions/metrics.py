@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from photon_ml_spark.functions import links
+from photon_ml_spark.materialize import persist
 
 
 def _w(weight: str | None) -> Column:
@@ -60,81 +61,6 @@ def loss_metric(
 #: the bucket-offset triangular join stays a trivial broadcast.
 ROC_BUCKETS = 4096
 
-#: Bounded registry of persisted tie-group relations (see _roc_points).
-#: Each auroc/aupr/peak_f1 call pins one (s, pos, neg) relation — one
-#: row per DISTINCT score, i.e. row-set-sized on continuous scores — and
-#: the metric functions return lazy frames, so nothing in the call can
-#: know when the consumer's action has run. A loop caller (the λ-sweep
-#: model selection, per-iteration CD validation) would otherwise pin one
-#: relation per evaluation for the life of the session. Keep the last
-#: few (plan-identical calls share ONE CacheManager entry, so the a10/
-#: a10b/a12 trio costs one slot); evicting a still-lazy frame is safe —
-#: its consumer just recomputes (correctness never depends on the cache).
-_TIE_CACHE: list = []
-_TIE_CACHE_MAX = 4
-_TIE_CACHE_LOCK = __import__("threading").Lock()
-
-
-def roc_tie_cache_mark() -> list:
-    """Snapshot of the current registry entries. A consumer that wants
-    to drain only the relations ITS work registered (the CLI
-    evaluators) takes a mark before the work and passes it to
-    ``release_roc_tie_cache(keep=mark)`` — entries that predate the
-    mark (possibly pinned by an unrelated in-flight evaluation on
-    another driver thread) stay registered."""
-    with _TIE_CACHE_LOCK:
-        return list(_TIE_CACHE)
-
-
-def release_roc_tie_cache(keep: list | None = None) -> None:
-    """Drain the bounded tie-group registry: unpersist every entry now
-    instead of waiting for LRU eviction. For terminal consumers whose
-    metric actions have already run (the CLI evaluators' report-and-
-    exit path) so a scoring driver leaves no persisted metric state
-    behind. Safe at any time: a still-lazy consumer of an evicted
-    relation just recomputes — correctness never depends on the cache.
-
-    ``keep``: entries (a ``roc_tie_cache_mark`` snapshot) to leave
-    registered — scopes the drain to relations registered after the
-    mark, so one consumer's cleanup cannot evict cache entries an
-    unrelated concurrent evaluation is still reading hot (r14, the
-    r13 advice's drain-scoping fix)."""
-    kept_ids = {id(g) for g in keep} if keep else set()
-    with _TIE_CACHE_LOCK:
-        survivors = []
-        while _TIE_CACHE:
-            g = _TIE_CACHE.pop()
-            if id(g) in kept_ids:
-                survivors.append(g)
-            else:
-                g.unpersist()
-        _TIE_CACHE.extend(reversed(survivors))
-
-
-def _tie_cache_get(g: DataFrame) -> DataFrame:
-    """Registry lookup with plan-identity dedupe (r14, fixing the r13
-    advice's shared-entry eviction bug): plan-identical calls (the
-    a10/a10b/a12 trio, AUC+AUPR over one scored frame) previously
-    appended MULTIPLE handles that shared ONE CacheManager entry, so
-    LRU-evicting the older handle unpersisted data a newer 'cached'
-    slot still expected hot. Now a semantically-equal registered entry
-    is reused (and moved to MRU) instead of re-registered; only on a
-    miss is the relation persisted and appended. The lock makes the
-    registry safe for multi-threaded drivers (guide §2.6 overlapped
-    jobs)."""
-    with _TIE_CACHE_LOCK:
-        for i, existing in enumerate(_TIE_CACHE):
-            if existing.sameSemantics(g):
-                _TIE_CACHE.append(_TIE_CACHE.pop(i))
-                return existing
-        from pyspark.storagelevel import StorageLevel
-
-        g = g.persist(StorageLevel.MEMORY_AND_DISK)
-        _TIE_CACHE.append(g)
-        while len(_TIE_CACHE) > _TIE_CACHE_MAX:
-            _TIE_CACHE.pop(0).unpersist()
-        return g
-
 
 def _roc_points(df: DataFrame, score, label, weight,
                 buckets: int = ROC_BUCKETS) -> DataFrame:
@@ -164,8 +90,10 @@ def _roc_points(df: DataFrame, score, label, weight,
     # select — and uncached each branch re-executed the full scan +
     # tie-group shuffle of the scored frame (r13, guide §5 cache-on-
     # reuse; the flagship AUROC alone re-aggregated its 600k-row scored
-    # frame three times). SERIALIZED level per the PLANS.md corpus rule.
-    g = _tie_cache_get(
+    # frame three times). The metric functions return lazy frames, so
+    # the caller's scope owns the cache; the AUC/AUPR/peak-F1 trio over
+    # one scored frame shares a single entry.
+    g = persist(
         df.groupBy(F.col(score).alias("s")).agg(
             F.sum(w * F.col(label)).alias("pos"),
             F.sum(w * (F.lit(1.0) - F.col(label))).alias("neg"),

@@ -124,51 +124,6 @@ def pearson_topk_features(
     return ranked.select("entity", "feature", corr_out.alias("corr"), "rk")
 
 
-def normalization_factors(
-    df: DataFrame, cols: list[str], kind: str = "standardization"
-) -> dict[str, tuple[float, float]]:
-    """M5 normalization contexts (NormalizationContext.scala:37-128;
-    factors from summary GameTrainingDriver.scala:590-656).
-
-    Returns {col: (shift, factor)} with x' = (x - shift) * factor:
-    - standardization: shift=mean, factor=1/std
-    - scale_with_standard_deviation: shift=0, factor=1/std
-    - scale_with_max_magnitude: shift=0, factor=1/max|x|
-    - none: (0, 1)
-
-    Invalid (zero/NaN) variance repairs to factor 1.0, matching
-    FeatureDataStatistics' variance repair.
-    """
-    if kind == "none":
-        return {c: (0.0, 1.0) for c in cols}
-    aggs = []
-    for c in cols:
-        x = F.col(c)
-        aggs += [
-            F.avg(x).alias(f"{c}__mean"),
-            F.stddev_samp(x).alias(f"{c}__std"),
-            F.max(F.abs(x)).alias(f"{c}__maxabs"),
-        ]
-    row = df.agg(*aggs).first()
-    out = {}
-    for c in cols:
-        mean = row[f"{c}__mean"] or 0.0
-        std = row[f"{c}__std"]
-        maxabs = row[f"{c}__maxabs"]
-        if kind == "standardization":
-            factor = 1.0 / std if std and std > 0 else 1.0
-            out[c] = (mean, factor)
-        elif kind == "scale_with_standard_deviation":
-            factor = 1.0 / std if std and std > 0 else 1.0
-            out[c] = (0.0, factor)
-        elif kind == "scale_with_max_magnitude":
-            factor = 1.0 / maxabs if maxabs and maxabs > 0 else 1.0
-            out[c] = (0.0, factor)
-        else:
-            raise ValueError(f"unknown normalization: {kind}")
-    return out
-
-
 def feature_quantiles(
     df: DataFrame,
     cols: list[str],

@@ -16,28 +16,13 @@ an iterative training loop):
 - locked coordinates (M8): scored with their pre-trained model, never
   re-trained (FixedEffectModelCoordinate analog)
 
-Cache discipline (the reference persists+counts every intermediate,
-RandomEffectDataset.scala:279-341): the running score sum is
-checkpointed per update and the superseded generation is released
-after its replacement materializes. Per-coordinate score frames are
-materialized KIND-CONDITIONALLY (r14, see _SCORE_CHECKPOINT_KINDS):
-a FIXED coordinate's score is a shuffle-free literal projection of the
-cached training frame — kept lazy, because re-deriving it on the one
-later read (the refit subtraction) is cheaper than writing a second
-row-set-sized generation per update (r13). A RANDOM coordinate's score
-re-runs a model-table join on every lazy read, which the r13 bench
-measured as net-negative — it is checkpointed once per update, with
-the superseded generation released like the summed frames.
-
-Lineage discipline: the running score sum is rebuilt from its own
-previous generation every update, so its LOGICAL plan doubles per
-generation (cache substitution keeps execution cheap, but analysis/
-codegen of the exponentially growing plan OOMs the driver after ~20
-generations — measured locally). Each persisted generation is
-therefore ``localCheckpoint``-ed, which truncates the plan to a leaf.
-The reference's RDD design has the same discipline implicitly (RDD
-lineage is per-partition, and persist+count cuts recompute, not plan
-size — DataFrames need the explicit cut).
+Materialization (see ``photon_ml_spark.materialize``): every update
+checkpoints the running score sum, whose plan would otherwise double
+per generation, and releases the superseded generation. A random
+coordinate's score is checkpointed too, because each lazy read re-runs
+its model-table join (net-negative at bench scale, r14 A/B); a fixed
+coordinate's score is a shuffle-free projection of the cached training
+frame and stays lazy.
 """
 
 from __future__ import annotations
@@ -45,26 +30,11 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
+from photon_ml_spark.materialize import checkpoint, persist, release
 from photon_ml_spark.ml import glm as glm_mod
 from photon_ml_spark.ml import random_effects as re_mod
 from photon_ml_spark.ml import scoring
-from photon_ml_spark.operators.indexing import release_local_checkpoint
-
-
-#: Coordinate kinds whose per-coordinate score frame is CHECKPOINTED
-#: instead of left lazy (see train_game's score-materialization note).
-#: A fixed coordinate's score is a literal dot product over the cached
-#: training frame — re-deriving it on the refit subtraction is cheaper
-#: than a row-set-sized checkpoint per update (r13). A RANDOM
-#: coordinate's score is a join against the per-entity model table,
-#: and the lazy form re-runs that join on every downstream read (the
-#: refit's fit input AND the summed-score checkpoint) — measured
-#: net-negative at bench scale (r14 interleaved A/B), so random scores
-#: are materialized once per update again. Module-level so the A/B
-#: harness can flip it; not part of the public API.
-_SCORE_CHECKPOINT_KINDS = frozenset({"random"})
 
 
 @dataclass
@@ -259,32 +229,13 @@ def train_game(
     with the history entry just appended — the estimator uses it to
     emit ``CoordinateUpdateEvent``s to registered listeners while the
     loop is still running (events.py)."""
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    df = persist(df)
     df.count()
 
     model = GameModel(family=family, configs={c.name: c for c in coordinates})
     score_dfs: dict[str, DataFrame] = {}
     summed: DataFrame | None = None  # (uid, score) running total
     history: list[dict] = []
-    ours: set[int] = set()  # ids of RE model frames THIS loop checkpointed
-    score_ckpts: set[int] = set()  # ids of CHECKPOINTED score frames
-
-    def _persist(d: DataFrame) -> DataFrame:
-        # eager localCheckpoint: materializes AND truncates the logical
-        # plan (see module docstring). SERIALIZED storage, explicitly:
-        # the checkpointed generations are row-set-sized (every uid ×
-        # score, once per coordinate update) and the localCheckpoint default
-        # level stores DESERIALIZED row objects — at the 100x stress
-        # scale (60M rows) that is one JVM object graph per row per
-        # generation and OOMed a 24g heap in the first x100 summed-
-        # score join (r13 decade run); serialized blocks hold the same
-        # generations in ~2.5 GB. Same storage rule as PLANS.md's
-        # corpus-scale persist discipline. On a multi-executor cluster
-        # with executor churn, prefer reliable checkpoints
-        # (spark.sparkContext.setCheckpointDir + df.checkpoint).
-        return d.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
 
     # Warm start (M7/M9): a non-locked coordinate carrying a
     # ``pretrained`` model enters the loop as x0/prior ONLY — a random
@@ -327,72 +278,37 @@ def train_game(
                     data, cfg, family, prior, offset_col, uid_col=uid_col
                 )
                 if cfg.kind == "random":
-                    coord_model = _persist(coord_model)
-                    ours.add(id(coord_model))
-                    # the superseded RE model table served as prior/x0
-                    # for the fit just materialized — but the LAZY
-                    # per-coordinate score below still references it
-                    # through ``others``/``base`` until the new summed
-                    # generation materializes, so the release happens
-                    # AFTER the summed checkpoint (only generations
-                    # THIS loop checkpointed: a caller-provided
-                    # pretrained frame is not ours to drop)
-                    if prior is not None and id(prior) in ours:
+                    coord_model = checkpoint(coord_model)
+                    # the superseded table (not a caller's pretrained
+                    # frame) is released once the new summed generation
+                    # no longer reads it through the lazy score below
+                    if prior is not None and prior is not cfg.pretrained:
                         prior_to_release = prior
             model.coordinates[cfg.name] = coord_model
 
-            # Score materialization is KIND-CONDITIONAL (r14, refining
-            # the r13 all-lazy rule after the interleaved A/B): a FIXED
-            # coordinate's score is a shuffle-free literal dot product
-            # over the cached training frame — lazy, because re-deriving
-            # it on the refit subtraction is cheaper than a row-set-
-            # sized checkpoint per update. A RANDOM coordinate's score
-            # is a join against the (checkpointed) per-entity model
-            # table, and the lazy form re-runs that join on EVERY
-            # downstream read — the refit's fit input and the summed
-            # checkpoint — which the r13 bench measured as net-negative;
-            # it is checkpointed once per update and the superseded
-            # generation released below. Numerics identical either way —
-            # same expressions over the same pinned rows (checkpoint is
-            # row-transparent).
             new_score = _score_coordinate(df, cfg, coord_model, "score").select(
                 uid_col, "score"
             )
             old_score = score_dfs.get(cfg.name)
-            if cfg.kind in _SCORE_CHECKPOINT_KINDS:
-                new_score = _persist(new_score)
-                score_ckpts.add(id(new_score))
+            if cfg.kind == "random":
+                new_score = checkpoint(new_score)
 
             # incremental summed-score maintenance (J11): summed − old + new
             old_summed = summed
             if summed is None:
-                summed = _persist(new_score)
+                summed = checkpoint(new_score)
             else:
                 base = others if cfg.name in score_dfs else summed
-                summed = _persist(
+                summed = checkpoint(
                     scoring.add_scores(base, new_score, uid_col=uid_col)
                 )
-            # Release superseded generations. These frames are eager
-            # localCheckpoints, so plain unpersist() is a NO-OP on them
-            # (checkpoint blocks are RDD-level storage, not CacheManager
-            # entries) — without the explicit release the loop
-            # accumulates a row-set-sized stale frame per coordinate
-            # update until driver GC. Score frames are lazy and never
-            # alias a summed generation, so the release is
-            # unconditional.
-            if old_summed is not None and old_summed is not summed:
-                release_local_checkpoint(old_summed)
+            # the new summed generation was the last reader of these
+            if old_summed is not None:
+                release(old_summed)
             if prior_to_release is not None:
-                release_local_checkpoint(prior_to_release)
-                ours.discard(id(prior_to_release))
-            # the superseded CHECKPOINTED score generation of this
-            # coordinate was read for the last time by the summed
-            # checkpoint just materialized (through ``others``) —
-            # release its blocks now (lazy score frames have nothing
-            # to release)
-            if old_score is not None and id(old_score) in score_ckpts:
-                release_local_checkpoint(old_score)
-                score_ckpts.discard(id(old_score))
+                release(prior_to_release)
+            if old_score is not None:
+                release(old_score)
             score_dfs[cfg.name] = new_score
 
             entry = {"iteration": it, "coordinate": cfg.name}
@@ -403,16 +319,11 @@ def train_game(
             if on_update is not None:
                 on_update(entry)
 
-    df.unpersist()
-    # the running sum and the per-coordinate score generations are loop
-    # internals — nothing in the returned (model, history) reads them,
-    # so their checkpoint blocks are released here (lazy score frames
-    # have nothing to release); the final RE model tables (returned
-    # inside the model) are the only checkpointed frames that outlive
-    # the call
+    # loop internals; the RE model tables in ``model`` stay with the
+    # caller's scope
+    release(df)
     if summed is not None:
-        release_local_checkpoint(summed)
+        release(summed)
     for s in score_dfs.values():
-        if id(s) in score_ckpts:
-            release_local_checkpoint(s)
+        release(s)
     return model, history

@@ -44,9 +44,11 @@ import math
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
+from pyspark.storagelevel import StorageLevel
 
 from photon_ml_spark.functions import links
 from photon_ml_spark.functions.vectors import sparse_dot_literal
+from photon_ml_spark.materialize import persist, release
 
 SUPPORTED_FAMILIES = ("binomial", "logistic", "gaussian", "linear",
                       "poisson", "smoothed_hinge")
@@ -103,10 +105,10 @@ class _DataPass:
         # corpus caches): the solver re-reads this frame on every
         # L-BFGS/TRON iteration, so per-read deserialization cost
         # compounds; the projection above keeps rows narrow
-        self.df = df.select(*cols).persist()
+        self.df = persist(df.select(*cols), StorageLevel.MEMORY_AND_DISK_DESER)
 
-    def unpersist(self):
-        self.df.unpersist()
+    def release(self):
+        release(self.df)
 
     def _margin(self, beta: np.ndarray):
         return (
@@ -375,7 +377,7 @@ def solve_tron(
             if float(np.linalg.norm(g)) <= tol * (1.0 + g0_norm):
                 converged = True
     finally:
-        dp.unpersist()
+        dp.release()
 
     return {
         "coefficients": beta[:dim],
@@ -609,7 +611,7 @@ def solve_penalized(
                 converged = True  # no descent step exists numerically
                 break
     finally:
-        dp.unpersist()
+        dp.release()
 
     return {
         "coefficients": beta[:dim],

@@ -18,6 +18,9 @@ from dataclasses import dataclass, field
 import numpy as np
 from pyspark.ml.functions import array_to_vector
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.storagelevel import StorageLevel
+
+from photon_ml_spark.materialize import persist, release
 
 _GLR_FAMILY = {"binomial": "binomial", "logistic": "binomial",
                "gaussian": "gaussian", "linear": "gaussian",
@@ -226,10 +229,11 @@ def fit_fixed_effect(
     # (deserialized default on purpose — iterative reads, narrow rows;
     # the pipeline-side corpus caches use serialized storage instead)
     fit_cols = [label_col] + [c for c in (weight_col, offset_col) if c]
-    vec_df = (
-        densify(df, indices_col, values_col, dim)
-        .select(*fit_cols, "features_vec")
-        .persist()
+    vec_df = persist(
+        densify(df, indices_col, values_col, dim).select(
+            *fit_cols, "features_vec"
+        ),
+        StorageLevel.MEMORY_AND_DISK_DESER,
     )
     glr = GeneralizedLinearRegression(
         family=_GLR_FAMILY[family],
@@ -247,7 +251,7 @@ def fit_fixed_effect(
     model = glr.fit(vec_df)
     # training diagnostics (the legacy driver's model log, A12 inputs:
     # Evaluation.scala / Driver.computeAndLogModelMetrics) — extracted
-    # BEFORE unpersist: each first access runs a predictions pass over
+    # BEFORE release: each first access runs a predictions pass over
     # vec_df, which must hit the cache, not recompute the lineage
     s = model.summary
     meta = {"iterations": s.numIterations}  # stored by training — no job
@@ -263,7 +267,7 @@ def fit_fixed_effect(
                 meta[attr] = float(getattr(s, attr))
             except Exception:
                 pass
-    vec_df.unpersist()
+    release(vec_df)
     return FixedEffectGLM(
         family=family,
         coefficients=np.asarray(model.coefficients.toArray(), dtype=np.float64),

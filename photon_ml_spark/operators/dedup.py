@@ -26,7 +26,7 @@ import json
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
-from photon_ml_spark.operators.indexing import release_local_checkpoint
+from photon_ml_spark.materialize import checkpoint, persist, release
 from photon_ml_spark.operators.text import (
     bow_signature_of,
     shingles_of,
@@ -156,9 +156,7 @@ def ngram_jaccard_pairs(
         raise ValueError(f"unknown strategy {strategy!r}")
     # serialized: one row per (doc, shingle) — corpus-scale; see the
     # connected_components storage note
-    sh = doc_shingles(df, id_col, text_col, n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sh = persist(doc_shingles(df, id_col, text_col, n))
     if strategy == "auto":
         stats = sh.agg(
             F.count(F.lit(1)).alias("rows"),
@@ -167,18 +165,13 @@ def ngram_jaccard_pairs(
         mean_df = stats.rows / max(stats.vocab, 1)
         strategy = "copair" if mean_df > _COPAIR_MEAN_DF_CUTOFF else "ppjoin"
     if strategy == "copair":
-        # Materialize the (small) pairs frame so the corpus-sized
-        # shingle relation can be released here instead of lingering
-        # until driver GC — at corpus scale a stale MEMORY_AND_DISK
-        # block competes with live caches for memory/disk. (The ppjoin
-        # branch checkpoints inside the helper, before releasing its
-        # own doc_arr cache.)
-        out = _jaccard_copair(sh, threshold, id_col).localCheckpoint(
-            storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
+        # checkpoint the (small) pairs frame so the corpus-sized
+        # shingle relation can be released before returning (the
+        # ppjoin helper does the same with its doc_arr cache)
+        out = checkpoint(_jaccard_copair(sh, threshold, id_col))
     else:
         out = _jaccard_ppjoin(sh, threshold, id_col)
-    sh.unpersist()
+    release(sh)
     return out
 
 
@@ -231,7 +224,7 @@ def _jaccard_ppjoin(sh: DataFrame, threshold: float, id_col: str) -> DataFrame:
     # one row per doc: shingles sorted by (df asc, shingle asc) — the
     # AllPairs canonical order — reused by prefix generation AND
     # verification, so it is persisted once
-    doc_arr = (
+    doc_arr = persist(
         sh.join(dfreq, "shingle")
         .groupBy(id_col)
         .agg(
@@ -240,7 +233,6 @@ def _jaccard_ppjoin(sh: DataFrame, threshold: float, id_col: str) -> DataFrame:
             ).alias("ordered")
         )
         .withColumn("set_size", F.size("ordered"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     pref_len = (
         F.col("set_size")
@@ -334,8 +326,8 @@ def _jaccard_ppjoin(sh: DataFrame, threshold: float, id_col: str) -> DataFrame:
     # Materialize before releasing doc_arr: the checkpoint truncates
     # lineage, so the per-doc ordered-shingle relation (one array per
     # doc — corpus-scale) does not outlive the call as a stale cache.
-    out = out.localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
-    doc_arr.unpersist()
+    out = checkpoint(out)
+    release(doc_arr)
     return out
 
 
@@ -693,15 +685,16 @@ def minhash_lsh_collapsed(
     sids = (
         doc_sids
         if doc_sids is not None
-        else token_ids(df, id_col, text_col, n, tokens_col=tokens_col).cache()
+        else persist(
+            token_ids(df, id_col, text_col, n, tokens_col=tokens_col),
+            StorageLevel.MEMORY_AND_DISK_DESER,
+        )
     )
     aggs = [
         F.min((F.col("sid") * a + b) % MINHASH_PRIME).alias(f"mh{i}")
         for i, (a, b) in enumerate(MINHASH_PARAMS[:num_hashes])
     ] + _fingerprint_aggs()
-    sigfp = sids.groupBy(id_col).agg(*aggs).localCheckpoint(
-        storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    sigfp = checkpoint(sids.groupBy(id_col).agg(*aggs))
     membership = _membership_from_fingerprints(
         sigfp.select(id_col, "__n", "__s1", "__s2"), id_col
     )
@@ -740,7 +733,10 @@ def minhash_lsh_dedup(
     sids = (
         doc_sids
         if doc_sids is not None
-        else token_ids(df, id_col, text_col, n, tokens_col=tokens_col).cache()
+        else persist(
+            token_ids(df, id_col, text_col, n, tokens_col=tokens_col),
+            StorageLevel.MEMORY_AND_DISK_DESER,
+        )
     )
     if collapse_exact:
         # hot-bucket guard (see collapse_exact_sets): LSH runs over one
@@ -759,13 +755,10 @@ def minhash_lsh_dedup(
     # banded relation on BOTH sides — when the planner broadcasts one
     # side, the broadcast build re-executes the whole signature
     # aggregation; cached, both sides read the materialized rows.
-    # Caller-clears contract (r14, same as the module's sids caches):
-    # the returned pair relation is lazy, so this function cannot know
-    # when its consumer's action has run — a driver that loops dedup
-    # calls in one session (curate generations, a stream) should
-    # spark.catalog.clearCache() or unpersist between rounds; the bench
-    # harness already does (release_stamped + clearCache per row).
-    sigs = minhash_signatures(sids, id_col, num_hashes).cache()
+    sigs = persist(
+        minhash_signatures(sids, id_col, num_hashes),
+        StorageLevel.MEMORY_AND_DISK_DESER,
+    )
     cand = lsh_candidate_pairs(sigs, id_col, num_hashes, bands)
     return _verify_jaccard_pairs(cand, sids, id_col, threshold)
 
@@ -879,7 +872,10 @@ def simhash_neardup_pairs(
             rep_pairs, membership, id_col,
             value_col="hamming", within_value=0,
         )
-    sigs = simhash_signatures(sids, id_col, bits, bit_hash=bit_hash).cache()
+    sigs = persist(
+        simhash_signatures(sids, id_col, bits, bit_hash=bit_hash),
+        StorageLevel.MEMORY_AND_DISK_DESER,
+    )
     band_bits = bits // bands
     # one posexplode pass instead of a bands-way union over the cached
     # signature frame (r13 — same rewrite as the minhash ``_banded``):
@@ -1005,11 +1001,10 @@ def connected_components(
     # round-8 dictionary stress hit); serialized blocks are a few big
     # buffers, and the per-iteration reads of (long, long) rows
     # deserialize for pennies.
-    edges = (
+    edges = persist(
         e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
         .repartition("u")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     from pyspark.sql import Observation
 
@@ -1020,14 +1015,13 @@ def connected_components(
     # convergence after ONE iteration instead of needing two samples
     # from inside the loop.
     init_obs = Observation()
-    labels = (
+    labels = checkpoint(
         edges.groupBy("u")
         .agg(F.min("v").alias("m"))
         .select("u", F.least(F.col("u"), F.col("m")).alias("label"))
         .observe(
             init_obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
         )
-        .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
     prev_sum = init_obs.get["s"]
     converged = False
@@ -1073,16 +1067,14 @@ def connected_components(
         # job per iteration: one eager job per iteration, not two (r13,
         # guide §1.2 — same rows read, half the actions).
         obs = Observation()
-        new_labels = jumped.observe(
-            obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+        new_labels = checkpoint(
+            jumped.observe(
+                obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+            )
+        )
         s = obs.get["s"]
-        # new_labels is materialized (eager localCheckpoint), so the
-        # superseded iteration's checkpoint blocks can be released now
-        # instead of accumulating one stale label frame per iteration
-        # (DataFrame.unpersist is a no-op on checkpoint blocks — see
-        # release_local_checkpoint).
-        release_local_checkpoint(labels)
+        # superseded: new_labels is materialized and no longer reads it
+        release(labels)
         labels = new_labels
         # elementwise non-increasing => equal sums mean a fixpoint
         # (both None on an empty edge list: converged trivially)
@@ -1090,9 +1082,9 @@ def connected_components(
             converged = True
             break
         prev_sum = s
-    edges.unpersist()
+    release(edges)
     if not converged:
-        release_local_checkpoint(labels)
+        release(labels)
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} iterations"
         )
@@ -1520,7 +1512,10 @@ def incremental_neardup(
         id_col, *[f"mh{i}" for i in range(num_hashes)]
     )
     if new_sids is None:
-        new_sids = token_ids_hashed(new_docs, id_col, text_col, n).cache()
+        new_sids = persist(
+            token_ids_hashed(new_docs, id_col, text_col, n),
+            StorageLevel.MEMORY_AND_DISK_DESER,
+        )
     new_sids = new_sids.select(id_col, "sid")
     # id-collision guard FUSED into the batch-signature checkpoint job
     # (r14, guide §1.2 — same rows read, half the eager actions): the
@@ -1543,10 +1538,9 @@ def incremental_neardup(
     )
 
     def _guarded_ckpt(per_doc: DataFrame) -> DataFrame:
-        return (
+        return checkpoint(
             per_doc.join(old_ids_flagged, id_col, "left")
             .observe(clash_obs, F.count("__clash").alias("clashes"))
-            .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
         )
 
     membership = None

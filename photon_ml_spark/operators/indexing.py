@@ -44,26 +44,9 @@ same code path serves 100 features and 100M.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
-
-def release_local_checkpoint(df: DataFrame) -> None:
-    """Release the cached blocks behind a ``localCheckpoint``-ed frame.
-
-    ``DataFrame.unpersist()`` is a no-op here: checkpoint blocks are
-    RDD-level storage, not CacheManager entries, so they otherwise
-    linger until the JVM garbage-collects the RDD handle — at corpus
-    scale that is stale MEMORY_AND_DISK storage competing with live
-    caches. Only call this once nothing will read the frame again:
-    the checkpoint truncated lineage, so the data is unrecoverable
-    after release. Best-effort (reaches through py4j internals);
-    failure degrades to the old wait-for-GC behavior.
-    """
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
+from photon_ml_spark.materialize import checkpoint
 
 
 def zip_with_index(
@@ -109,10 +92,9 @@ def zip_with_index(
     # objects is ~5x its Tungsten size and OOMed a 24g heap at 100M
     # keys in the round-8 stress run — serialized it fits, and what
     # does not fit spills to disk instead of dying.
-    ranged = (
+    ranged = checkpoint(
         df.repartitionByRange(n_parts, *order_cols)
         .sortWithinPartitions(*order_cols)
-        .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
     # __mid is nondeterministic to Catalyst, so it is never reordered
     # across the checkpoint scan; its value is (partition index << 33)

@@ -25,10 +25,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from photon_ml_spark.functions.vectors import cosine_similarity, dense_dot, l2_norm
-
-
-def _with_norm(df: DataFrame, vec_col: str, out: str) -> DataFrame:
-    return df.withColumn(out, l2_norm(F.col(vec_col)))
+from photon_ml_spark.materialize import checkpoint, persist, release
 
 
 def _cosine_prenormed(qv, vv, qn, vn):
@@ -408,9 +405,9 @@ def cosine_neardup_pairs(
             value_col="cosine", within_value=1.0,
         )
     if block_col is None and not allow_full_cross:
-        cached = df.persist()
+        cached = persist(df, StorageLevel.MEMORY_AND_DISK_DESER)
         if df.limit(FULL_CROSS_MAX_ROWS + 1).count() > FULL_CROSS_MAX_ROWS:
-            cached.unpersist()
+            release(cached)
             raise ValueError(
                 "cosine_neardup_pairs(block_col=None) is a full self "
                 f"cross-join; input exceeds {FULL_CROSS_MAX_ROWS} rows. "
@@ -418,13 +415,10 @@ def cosine_neardup_pairs(
                 "or pass allow_full_cross=True to accept the quadratic "
                 "cost."
             )
-        # cut lineage into GC-managed blocks and release the cache pin
-        # (same discipline as ivf_topk_from_index): both cross-join
-        # sides below read these blocks, never the upstream lineage
-        df = cached.localCheckpoint(
-            storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
-        cached.unpersist()
+        # both cross-join sides below read the checkpoint blocks, never
+        # the upstream lineage
+        df = checkpoint(cached)
+        release(cached)
     a_cols = [
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("__va"),
@@ -719,9 +713,12 @@ def ivf_topk_from_index(
     ``filter(~col)`` / an agg over it quantifies the gap with no extra
     job on the search lineage (the alternative, an eager count of
     unrefined shortlist rows, would re-execute the whole ANN search)."""
-    q = queries.select(
-        F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qv")
-    ).persist()
+    q = persist(
+        queries.select(
+            F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qv")
+        ),
+        StorageLevel.MEMORY_AND_DISK_DESER,
+    )
     # the routed query set is broadcast into the candidate join below —
     # same "queries are small" regime (and the same 1e6 cap) as the
     # BLAS path. The guard runs a LIMIT-bounded count over the
@@ -732,7 +729,7 @@ def ivf_topk_from_index(
     # stops after ~1e6 rows, so failing fast stays cheap and the
     # partial cache is dropped before raising.
     if q.limit(1_000_001).count() > 1_000_000:
-        q.unpersist()
+        release(q)
         raise ValueError(
             "ivf_topk_from_index broadcasts the routed query set; "
             "batch >1e6 queries into multiple calls instead"
@@ -745,19 +742,14 @@ def ivf_topk_from_index(
         F.desc("__sim"), F.asc("cell")
     )
     # Eagerly materialize the routed probe set (bounded by the 1e6
-    # guard × n_probe) and cut its lineage, then release the query
-    # cache NOW: the previous version unpersisted q only on the error
-    # path, so every successful call left the frame pinned in executor
-    # storage for the session lifetime. The localCheckpoint blocks are
-    # reference-counted and dropped by the ContextCleaner when the
-    # returned plan is garbage-collected.
-    probes = (
+    # guard × n_probe) and cut its lineage, so the query cache can be
+    # released now
+    probes = checkpoint(
         routed.withColumn("__pr", F.row_number().over(probe_win))
         .filter(F.col("__pr") <= n_probe)
         .select(query_id_col, "__qv", "cell")
-        .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
-    q.unpersist()
+    release(q)
     vectors = spark.read.parquet(f"{index_path}/vectors")
     from photon_ml_spark.sources.model_io import _hadoop_exists
 

@@ -217,11 +217,6 @@ def bow_signature_of(toks: Column) -> Column:
     return F.array_join(F.array_sort(F.array_distinct(toks)), " ")
 
 
-def word_shingles(text: Column, n: int = 2) -> Column:
-    """Word n-gram shingle array (may contain duplicates)."""
-    return shingles_of(tokens(text), n)
-
-
 def shingles_of(toks: Column, n: int) -> Column:
     """Word n-gram shingles over a pre-built token array (the shared-
     tokenization seam — see ``tokens_expr``).

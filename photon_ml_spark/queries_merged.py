@@ -49,6 +49,7 @@ from __future__ import annotations
 from functools import reduce
 
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 # Ensure every constituent registration exists before we capture it.
 from photon_ml_spark import (  # noqa: F401
@@ -57,6 +58,7 @@ from photon_ml_spark import (  # noqa: F401
     queries_pipeline,
     queries_streaming,
 )
+from photon_ml_spark.materialize import checkpoint, persist
 from photon_ml_spark.queries import QUERY_REGISTRY, register
 from photon_ml_spark.queries_pipeline import _TOKS_SQL
 
@@ -217,12 +219,6 @@ for _anchor in ("m2_per_entity_ridge", "x1_text_quality"):
     _SPEC[_anchor] = QUERY_REGISTRY.pop(_anchor)
 
 
-#: frames eagerly checkpointed by _stamp for the CURRENT bench row —
-#: released by release_stamped() after the row is read (clearCache()
-#: does not free localCheckpoint blocks)
-_STAMPED_FRAMES: list = []
-
-
 def _stamp(stamps, name, df):
     """Per-constituent bench instrumentation (VERDICT r6 Missing #1:
     suite rows hid their blocks' costs, making regression-vs-box-
@@ -252,20 +248,11 @@ def _stamp(stamps, name, df):
     t0 = _time.perf_counter()
     if callable(df):
         df = df()
-    df = df.localCheckpoint()  # eager: materializes every partition
+    # eager: materializes every partition; the bench row's scope owns
+    # the blocks
+    df = checkpoint(df, level=StorageLevel.MEMORY_AND_DISK_DESER)
     stamps[name] = round(_time.perf_counter() - t0, 3)
-    _STAMPED_FRAMES.append(df)
     return df
-
-
-def release_stamped() -> None:
-    """Free the checkpoint blocks of the last stamped bench row (the
-    bench harness calls this between rows so one suite's materialized
-    blocks cannot occupy memory during the next)."""
-    from photon_ml_spark.operators.indexing import release_local_checkpoint
-
-    while _STAMPED_FRAMES:
-        release_local_checkpoint(_STAMPED_FRAMES.pop())
 
 
 def _widen(spark, sf_dir, names, stamps=None):
@@ -406,10 +393,8 @@ def x6_neardup_pairs(spark, sf_dir, stamps=None):
     # one cached shingle-id relation feeds both the minhash and simhash
     # constituents (both shingle at n=2) — the vocabulary sort runs
     # once; serialized, it is one row per (doc, token) — corpus-scale
-    from pyspark import StorageLevel
-
     if stamps is None:
-        sids = token_ids(docs, n=2).persist(StorageLevel.MEMORY_AND_DISK)
+        sids = persist(token_ids(docs, n=2))
     else:
         # build AND materialize the SHARED relation under its own
         # stamp so its cost is attributed once, not smeared into the
@@ -420,7 +405,7 @@ def x6_neardup_pairs(spark, sf_dir, stamps=None):
         import time as _time
 
         t0 = _time.perf_counter()
-        sids = token_ids(docs, n=2).persist(StorageLevel.MEMORY_AND_DISK)
+        sids = persist(token_ids(docs, n=2))
         sids.count()
         stamps["token_ids_shared"] = round(_time.perf_counter() - t0, 3)
     lsh = minhash_lsh_dedup(docs, threshold=0.5, n=2, doc_sids=sids).select(

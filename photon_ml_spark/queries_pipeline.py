@@ -14,7 +14,9 @@ Portability conventions (see queries.py):
 from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
+from pyspark.storagelevel import StorageLevel
 
+from photon_ml_spark.materialize import persist, release
 from photon_ml_spark.queries import _t, register
 
 # Shared SQL fragments -------------------------------------------------------
@@ -470,7 +472,9 @@ def x32_incremental_neardup(spark, sf_dir, doc_sids=None):
     )
 
     docs = _t(spark, sf_dir, "documents")
-    sids = doc_sids if doc_sids is not None else token_ids(docs, n=2).cache()
+    sids = doc_sids if doc_sids is not None else persist(
+        token_ids(docs, n=2), StorageLevel.MEMORY_AND_DISK_DESER
+    )
     half = docs.filter(F.col("doc_id") % 2 == 0)
     old = half.filter(F.col("doc_id") % 3 != 0)
     new = half.filter(F.col("doc_id") % 3 == 0)
@@ -479,10 +483,13 @@ def x32_incremental_neardup(spark, sf_dir, doc_sids=None):
     save_minhash_index(old, idx, n=2, num_hashes=16, sid_fn=sid_fn)
     # persisted: the pair relation feeds both the output block and the
     # multi-consumer resolution (see neardup_process_batch's note)
-    pairs = incremental_neardup(
-        new, idx, threshold=0.5, n=2, num_hashes=16, bands=4,
-        new_sids=sid_fn(new, "doc_id", "text", 2),
-    ).persist()
+    pairs = persist(
+        incremental_neardup(
+            new, idx, threshold=0.5, n=2, num_hashes=16, bands=4,
+            new_sids=sid_fn(new, "doc_id", "text", 2),
+        ),
+        StorageLevel.MEMORY_AND_DISK_DESER,
+    )
     surv = drop_new_duplicates(new, pairs, old.select("doc_id"))
     return pairs.select(
         F.lit("inc_pairs").alias("variant"),
@@ -554,7 +561,9 @@ def x33_stream_neardup(spark, sf_dir, doc_sids=None, phase_stamps=None):
     from photon_ml_spark.streaming.curation import neardup_process_batch
 
     docs = _t(spark, sf_dir, "documents")
-    sids = doc_sids if doc_sids is not None else token_ids(docs, n=2).cache()
+    sids = doc_sids if doc_sids is not None else persist(
+        token_ids(docs, n=2), StorageLevel.MEMORY_AND_DISK_DESER
+    )
     half = docs.filter(F.col("doc_id") % 2 == 1)
     root = tempfile.mkdtemp(prefix="photon_stream_dedup_")
     for bid, keep in ((0, F.col("doc_id") % 3 != 0), (1, F.col("doc_id") % 3 == 0)):
@@ -1733,7 +1742,7 @@ def x22_leakage_safe_split(spark, sf_dir, phase_stamps=None):
         # separates near-dup detection from cluster resolution
         import time as _time
 
-        pairs = pairs.persist()
+        pairs = persist(pairs, StorageLevel.MEMORY_AND_DISK_DESER)
         t0 = _time.perf_counter()
         pairs.count()
         phase_stamps["pairs"] = round(_time.perf_counter() - t0, 3)
@@ -1743,12 +1752,10 @@ def x22_leakage_safe_split(spark, sf_dir, phase_stamps=None):
         uniform=lcg_uniform(F.col("cluster_id") * 104729, 11),
     )
     if phase_stamps is not None:
-        # cluster_and_keep's connected-components loop is eager
+        # cluster_and_keep's connected-components loop is eager, so it
+        # was the edge list's last reader
         phase_stamps["cluster"] = round(_time.perf_counter() - t0, 3)
-        # the edge list was only persisted for stamp attribution and
-        # the eager clustering above already consumed it — release it
-        # here instead of leaking it until a global clearCache
-        pairs.unpersist()
+        release(pairs)
     return out.select("doc_id", "cluster_id", "split")
 
 

@@ -792,10 +792,6 @@ def _header_bytes(spark: SparkSession, path: str, limit: int) -> bytes:
         stream.close()
 
 
-def _list_avro_files(spark: SparkSession, path: str) -> list[str]:
-    return [p for p, _ in _list_avro_files_with_size(spark, path)]
-
-
 def _pyarrow_list_with_size(path: str) -> list[tuple[str, int]]:
     """Driver-side listing via ``pyarrow.fs`` for schemes the JVM
     Hadoop conf has no connector for (e.g. ``s3://`` without

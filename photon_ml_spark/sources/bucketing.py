@@ -32,10 +32,6 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def cojoin_bucketed(
     spark: SparkSession, left_table: str, right_table: str, key: str,
     how: str = "inner",

@@ -21,10 +21,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def spread_scan(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Round-robin repartition a scan UP to the session's default
     parallelism when the source yielded fewer splits.

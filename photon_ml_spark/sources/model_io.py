@@ -21,6 +21,7 @@ import json
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.storagelevel import StorageLevel
 
 
 def _hadoop_write_text(spark: SparkSession, path: str, text: str) -> None:
@@ -71,6 +72,7 @@ def _hadoop_read_text(spark: SparkSession, path: str) -> str:
     finally:
         stream.close()
 
+from photon_ml_spark.materialize import persist
 from photon_ml_spark.ml.coordinate_descent import CoordinateConfig, GameModel
 from photon_ml_spark.ml.glm import FixedEffectGLM
 
@@ -408,7 +410,7 @@ def load_photon_game_model(
         d, n = zip_with_index(
             keys.distinct(), "feature_key", id_col="feature_index"
         )
-        dictionaries[shard] = d.persist()
+        dictionaries[shard] = persist(d, StorageLevel.MEMORY_AND_DISK_DESER)
         dims[shard] = n
 
     fam = family

@@ -47,6 +47,9 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.storagelevel import StorageLevel
+
+from photon_ml_spark.materialize import persist, scope
 
 from photon_ml_spark.sources.model_io import (
     _hadoop_exists,
@@ -231,8 +234,11 @@ def neardup_process_batch(
             return token_ids_hashed(d, i, t, nn, tokens_col=tokens_col)
     if not _hadoop_exists(spark, f"{index_path}/{INDEX_PARAMS_FILE}"):
         # bootstrap: batch-internal LSH dedup, survivors found the index
-        sids = sid_fn(batch, id_col, text_col, n).persist()
-        try:
+        with scope():
+            sids = persist(
+                sid_fn(batch, id_col, text_col, n),
+                StorageLevel.MEMORY_AND_DISK_DESER,
+            )
             # hot-bucket guard (dedup.collapse_exact_sets): LSH over one
             # rep per distinct shingle set, linear star edges into the
             # clustering — a boilerplate-heavy batch must not explode
@@ -259,8 +265,6 @@ def neardup_process_batch(
                 spark, index_path, n=n, num_hashes=num_hashes
             )
             _hadoop_write_text(spark, marker, json.dumps(fp, sort_keys=True))
-        finally:
-            sids.unpersist()
         return
 
     # Replay safety: the prior index state is the stored relations
@@ -285,11 +289,13 @@ def neardup_process_batch(
     old_sigs = old_sigs.filter(not_mine)
     old_sids = old_sids.filter(not_mine)
     # one shingle-id relation serves detection AND the index append;
-    # explicitly unpersisted so a long-running stream doesn't leak one
-    # cached frame per trigger
-    sids = sid_fn(batch, id_col, text_col, n).persist()
-    pairs = None
-    try:
+    # the scope releases everything per trigger, so a long-running
+    # stream does not accumulate cached frames
+    with scope():
+        sids = persist(
+            sid_fn(batch, id_col, text_col, n),
+            StorageLevel.MEMORY_AND_DISK_DESER,
+        )
         # pairs are persisted because resolution consumes them several
         # times (old-hit semi-joins from both sides + the new-new edge
         # list feeding connected components) — unpersisted, every
@@ -299,12 +305,15 @@ def neardup_process_batch(
         # new docs collapse before the bucket join against the index);
         # the expansion inside incremental_neardup keeps the pair
         # relation identical
-        pairs = incremental_neardup(
-            batch, index_path, threshold=threshold, id_col=id_col,
-            text_col=text_col, n=n, num_hashes=num_hashes, bands=bands,
-            new_sids=sids, old_sids=old_sids, old_sigs=old_sigs,
-            collapse_exact=True,
-        ).persist()
+        pairs = persist(
+            incremental_neardup(
+                batch, index_path, threshold=threshold, id_col=id_col,
+                text_col=text_col, n=n, num_hashes=num_hashes, bands=bands,
+                new_sids=sids, old_sids=old_sids, old_sigs=old_sigs,
+                collapse_exact=True,
+            ),
+            StorageLevel.MEMORY_AND_DISK_DESER,
+        )
         if timings is not None:
             # bench attribution only: materialize the persisted pairs
             # under a "detect" stamp (consumers then read the cache —
@@ -314,17 +323,15 @@ def neardup_process_batch(
         # resolution on the new-new edges
         survivors = _phase(
             "resolve",
-            lambda: drop_new_duplicates(
-                batch, pairs, old_sigs.select(id_col), id_col=id_col
-            ).persist(),
+            lambda: persist(
+                drop_new_duplicates(
+                    batch, pairs, old_sigs.select(id_col), id_col=id_col
+                ),
+                StorageLevel.MEMORY_AND_DISK_DESER,
+            ),
         )
         publish(survivors, sids)
         _hadoop_write_text(spark, marker, json.dumps(fp, sort_keys=True))
-        survivors.unpersist()
-    finally:
-        sids.unpersist()
-        if pairs is not None:
-            pairs.unpersist()
 
 
 def stream_neardup(

@@ -19,6 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from photon_ml_spark.materialize import scope
     from photon_ml_spark.queries import all_queries
     from photon_ml_spark.session import get_spark
 
@@ -50,27 +51,23 @@ def main() -> None:
         # jobs don't aggregate into one line
         seen[row] = seen.get(row, 0) + 1
         label = row if seen[row] == 1 else f"{row}#{seen[row]}"
-        if row == "flagship":
-            run_labeled(label, lambda: bench.run_flagship(spark, sf_dir))
-        elif row == "curate":
-            run_labeled(label, lambda: bench.run_curate(spark, sf_dir))
-        elif row == "train_game":
-            run_labeled(
-                label, lambda: bench.run_train_game(spark, sf_dir)
-            )
-        else:
-            spec = registry[row]
+        with scope():
+            if row == "flagship":
+                run_labeled(label, lambda: bench.run_flagship(spark, sf_dir))
+            elif row == "curate":
+                run_labeled(label, lambda: bench.run_curate(spark, sf_dir))
+            elif row == "train_game":
+                run_labeled(
+                    label, lambda: bench.run_train_game(spark, sf_dir)
+                )
+            else:
+                spec = registry[row]
 
-            def thunk(spec=spec):
-                df = spec.run(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
+                def thunk(spec=spec):
+                    df = spec.run(spark, sf_dir)
+                    df.write.format("noop").mode("overwrite").save()
 
-            run_labeled(label, thunk)
-            if row in bench.STAMPED_SUITES:
-                from photon_ml_spark.queries_merged import release_stamped
-
-                release_stamped()
-                spark.catalog.clearCache()
+                run_labeled(label, thunk)
 
     # ---- pull job-level metrics from the UI REST API
     ui = spark.sparkContext.uiWebUrl

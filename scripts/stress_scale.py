@@ -357,20 +357,20 @@ def run_x6(spark) -> dict:
     Per-block stamps at both scales + ratios — the suite's own
     constituents (minhash/embedding/incremental/streaming blocks)
     attribute any superlinearity to a specific stage."""
+    from photon_ml_spark.materialize import scope
     from photon_ml_spark.queries import all_queries
 
     registry = all_queries()
     out: dict = {"sf01": {}, "xN": {}, "ratio": {}, "factor": FACTOR}
     for sf_dir, key in ((SRC, "sf01"), (X10, "xN")):
         stamps: dict[str, float] = {}
-        t0 = time.perf_counter()
-        _noop(registry["x6_neardup_pairs"].run(spark, sf_dir, stamps=stamps))
-        stamps["total"] = round(time.perf_counter() - t0, 2)
+        with scope():
+            t0 = time.perf_counter()
+            _noop(
+                registry["x6_neardup_pairs"].run(spark, sf_dir, stamps=stamps)
+            )
+            stamps["total"] = round(time.perf_counter() - t0, 2)
         out[key] = stamps
-        from photon_ml_spark.queries_merged import release_stamped
-
-        release_stamped()
-        spark.catalog.clearCache()
     for name, v in out["xN"].items():
         out["ratio"][name] = _ratio(out["sf01"].get(name, 0), v)
     return out

@@ -1437,8 +1437,7 @@ def test_cli_curate_stream_pii_redaction(spark, tmp_path, capsys):
 def test_advice_fixes_round8(spark, tmp_path, capsys):
     """Regression pins for the round-8 ADVICE findings: a RELATIVE
     input root resolves date ranges (globStatus paths are absolute —
-    the root is qualified first); a failed evaluator does not leak the
-    persisted scoring frame; single-row training input does not
+    the root is qualified first); single-row training input does not
     divide by zero in the (n-1) variance under ANSI mode."""
     import os
 
@@ -1465,19 +1464,7 @@ def test_advice_fixes_round8(spark, tmp_path, capsys):
     assert len(paths) == 1 and paths[0].endswith("2026/08/01")
     assert spark.read.parquet(*paths).count() == 50
 
-    # 2) evaluator failure path releases the persisted frame. Compare
-    # RDD-id SETS, not counts: the async ContextCleaner may drop other
-    # tests' stale caches between the two snapshots (observed in full
-    # suite runs), but a leak would always show as a NEW id
-    jsc = spark.sparkContext._jsc
-    before_ids = set(jsc.getPersistentRDDs().keySet())
-    scored = training.limit(20).withColumn("score", F.rand(7))
-    with pytest.raises(ValueError, match="unknown evaluator"):
-        cli._evaluate_scores(scored, ["AUC", "NDCG"])
-    leaked = set(jsc.getPersistentRDDs().keySet()) - before_ids
-    assert not leaked, f"evaluator error path leaked cached RDDs {leaked}"
-
-    # 3) single-row input: variance guard, factor repairs to 1
+    # 2) single-row input: variance guard, factor repairs to 1
     one_feat = spark.createDataFrame(
         [(0, [0, 1], [0.5, 2.0])],
         "uid long, features_indices array<int>, features_values array<double>",
@@ -2121,3 +2108,76 @@ def test_multi_shard_dictionary_input_and_prior_mismatch_guards(
             },
             spark,
         )
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["train", "train_raises", "score", "evaluator_error", "curate"],
+)
+def test_drivers_leave_nothing_materialized(
+    spark, sf_dir, tmp_path, capsys, case
+):
+    """Every driver run (and each evaluation) owns a materialize scope:
+    once it returns, successfully or by raising, none of the frames it
+    persisted or checkpointed is still registered — no new persistent
+    RDD (checkpoint blocks included) and no CacheManager entry."""
+    training = datasets.lineitem_training_frame(spark, sf_dir)
+    inp = str(tmp_path / "input.parquet")
+    training.write.parquet(inp)
+    docs = str(tmp_path / "docs.parquet")
+    spark.read.parquet(f"{sf_dir}/documents.parquet").write.parquet(docs)
+    model_dir = str(tmp_path / "model")
+    train_cfg = {
+        "input": inp,
+        "feature_bags": ["features"],
+        "coordinates": [
+            {"name": "global", "kind": "fixed"},
+            {"name": "per_supplier", "kind": "random",
+             "entity_col": "suppkey", "reg_param": 1.0},
+        ],
+        "family": "binomial",
+        "n_iterations": 1,
+        "evaluators": ["AUC"],
+        "output_dir": model_dir,
+    }
+
+    def train_raises():
+        # raises after the feature dictionaries are cached
+        with pytest.raises(ValueError, match="update_sequence"):
+            cli.train({**train_cfg, "update_sequence": ["global"]}, spark)
+
+    def evaluator_error():
+        scored = training.limit(20).withColumn("score", F.rand(7))
+        with pytest.raises(ValueError, match="unknown evaluator"):
+            cli._evaluate_scores(scored, ["AUC", "NDCG"])
+
+    run = {
+        "train": lambda: cli.train(train_cfg, spark),
+        "train_raises": train_raises,
+        "score": lambda: cli.score(
+            {"input": inp, "model_dir": model_dir,
+             "output_dir": str(tmp_path / "scores"),
+             "evaluators": ["AUC", "AUPR"]},
+            spark,
+        ),
+        "evaluator_error": evaluator_error,
+        "curate": lambda: cli.curate(
+            {"input": docs, "output_dir": str(tmp_path / "curated"),
+             "quality": {"min_tokens": 3, "max_ppl": 1e9},
+             "exact_dedup": True,
+             "near_dedup": {"threshold": 0.5, "n": 2},
+             "chunk": {"max_tokens": 64, "overlap": 8}},
+            spark,
+        ),
+    }[case]
+    if case == "score":
+        cli.train(train_cfg, spark)
+    # caches other tests left unowned are not this run's
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    run()
+    capsys.readouterr()
+    leaked = set(jsc.getPersistentRDDs().keySet()) - before
+    assert not leaked, f"{case} left persistent RDDs {sorted(leaked)}"
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

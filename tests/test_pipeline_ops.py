@@ -112,7 +112,7 @@ def test_jaccard_and_cc_release_intermediate_caches(spark, docs):
     stale MEMORY_AND_DISK block competes with live caches. Each call
     may leave exactly ONE new persistent RDD: the returned frame's own
     checkpoint (caller-owned)."""
-    from photon_ml_spark.operators.indexing import release_local_checkpoint
+    from photon_ml_spark.materialize import release
 
     jsc = spark.sparkContext._jsc
     docs.count()  # register the fixture's cache before the snapshot
@@ -127,7 +127,7 @@ def test_jaccard_and_cc_release_intermediate_caches(spark, docs):
             f"{strategy} leaked {len(new)} cached RDDs (expected only "
             "the returned pairs checkpoint)"
         )
-        release_local_checkpoint(out)
+        release(out)
         assert not (set(jsc.getPersistentRDDs().keySet()) - before)
 
     edges = spark.createDataFrame(

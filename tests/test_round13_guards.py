@@ -170,54 +170,6 @@ def test_cd_checkpoint_generations_are_serialized(spark):
     assert not any("deserialized" in lv for lv in levels), levels
 
 
-def test_roc_tie_cache_is_bounded(spark):
-    """The persisted ROC tie-group relation (r13: one cache entry shared
-    by the stats/offsets/window branches) must not accumulate one pinned
-    relation per evaluation: loop callers (λ-sweep selection, CD-loop
-    validation) call auroc().first() per candidate. The registry keeps
-    at most _TIE_CACHE_MAX entries and unpersists evictees; values are
-    cache-independent (eviction just recomputes)."""
-    from photon_ml_spark.functions import metrics
-
-    frames = [
-        spark.range(200).select(
-            (F.col("id") * (i + 3) % 97).cast("double").alias("score"),
-            (F.col("id") % 2).cast("double").alias("label"),
-        )
-        for i in range(metrics._TIE_CACHE_MAX + 3)
-    ]
-    vals = [metrics.auroc(f).first().auroc for f in frames]
-    assert len(metrics._TIE_CACHE) <= metrics._TIE_CACHE_MAX
-    # a re-evaluation after eviction reproduces the value exactly
-    again = metrics.auroc(frames[0]).first().auroc
-    assert again == vals[0]
-
-
-def test_roc_tie_cache_drains(spark):
-    """release_roc_tie_cache unpersists and empties the registry — the
-    CLI evaluators call it on every exit so a scoring driver leaves no
-    persisted metric state behind (pinned by test_cli.py::
-    test_advice_fixes_round8's no-leak snapshot) — and a post-drain
-    evaluation still reproduces the value exactly."""
-    from photon_ml_spark.functions import metrics
-
-    df = spark.range(300).select(
-        (F.col("id") * 7 % 101).cast("double").alias("score"),
-        (F.col("id") % 2).cast("double").alias("label"),
-    )
-    before = metrics.auroc(df).first().auroc
-    assert metrics._TIE_CACHE
-    pinned = list(metrics._TIE_CACHE)
-    metrics.release_roc_tie_cache()
-    assert not metrics._TIE_CACHE
-    assert all(
-        g.storageLevel.useMemory is False and g.storageLevel.useDisk is False
-        for g in pinned
-    )
-    assert metrics.auroc(df).first().auroc == before
-    metrics.release_roc_tie_cache()
-
-
 def test_drop_new_duplicates_batch_side_membership(spark, tmp_path):
     """r13: drop_new_duplicates tests pair-endpoint membership against
     the BATCH-side ids instead of scanning the corpus-sized index-id
