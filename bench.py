@@ -80,8 +80,11 @@ def close_stamps(stamps: dict[str, float], elapsed: float) -> float:
 
 
 def run_flagship(spark, sf_dir: str) -> int:
+    from pyspark.storagelevel import StorageLevel
+
     from photon_ml_spark.datamodel import FeatureShardConfig
     from photon_ml_spark.functions import metrics
+    from photon_ml_spark.materialize import persist, release
     from photon_ml_spark.ml import glm, scoring
     from photon_ml_spark.sources import datasets, featurize
 
@@ -93,24 +96,33 @@ def run_flagship(spark, sf_dir: str) -> int:
     # On a real cluster reading block-sized files the scan already
     # yields enough splits and this shuffle is a no-op to remove.
     par = spark.sparkContext.defaultParallelism
-    training = datasets.lineitem_training_frame(
-        spark, sf_dir, uid_strategy="monotonic", pre_repartition=par
-    ).cache()
+    training = persist(
+        datasets.lineitem_training_frame(
+            spark, sf_dir, uid_strategy="monotonic", pre_repartition=par
+        ),
+        StorageLevel.MEMORY_AND_DISK_DESER,
+    )
     training.count()
-    dictionary = featurize.build_feature_dictionary(
-        training, ["features"], has_intercept=True
-    ).cache()
+    dictionary = persist(
+        featurize.build_feature_dictionary(
+            training, ["features"], has_intercept=True
+        ),
+        StorageLevel.MEMORY_AND_DISK_DESER,
+    )
     shard = FeatureShardConfig("features", ["features"])
     # tiny dictionary -> zero-shuffle map-side assembly; single cache of
     # the slim fit projection (the bag column is dead weight post-assembly)
-    assembled = featurize.assemble_shard(
-        training, dictionary, shard, strategy="map"
-    ).select(
-        "uid", "response", "offset", "weight",
-        "features_indices", "features_values",
-    ).cache()
+    assembled = persist(
+        featurize.assemble_shard(
+            training, dictionary, shard, strategy="map"
+        ).select(
+            "uid", "response", "offset", "weight",
+            "features_indices", "features_values",
+        ),
+        StorageLevel.MEMORY_AND_DISK_DESER,
+    )
     n = assembled.count()
-    training.unpersist()
+    release(training)
     # diagnostics=False: the flagship reads only coefficients+intercept;
     # the GLR summary statistics are ~4 extra aggregation jobs (guide
     # §1.2 — don't compute what you throw away)
@@ -120,8 +132,8 @@ def run_flagship(spark, sf_dir: str) -> int:
     scored = scoring.score_literal(assembled, model)
     auc = metrics.auroc(scored, score="score", label="response").first().auroc
     assert 0.0 <= auc <= 1.0
-    assembled.unpersist()
-    dictionary.unpersist()
+    release(assembled)
+    release(dictionary)
     return n
 
 

@@ -16,8 +16,8 @@ Train config:
      # featureShardId (FeatureShardConfiguration.scala:23,
      # CoordinateDataConfiguration.scala:24,37,58): one dictionary,
      # dim, normalization table, and summary per shard; the model dir
-     # persists feature-dictionaries/{shard} + feature-shards.json and
-     # the score driver reassembles from those artifacts
+     # persists every shard's dictionary and definition and the score
+     # driver reassembles from those artifacts
      "feature_shards": {"shard1": {"bags": ["userFeatures"]},
                         "shard2": {"bags": ["songFeatures"],
                                    "has_intercept": true}},
@@ -47,13 +47,18 @@ Score config:
 
 The dictionary is persisted beside the model (S4) so scoring assembles
 with the training vocabulary — unknown score-time features drop,
-matching the reference's fixed-index-map behavior.
+matching the reference's fixed-index-map behavior. The saved layout of
+that feature space (single- or multi-shard dictionaries, shard
+definitions, fixed-effect variance tables) belongs to
+``sources/model_io.py`` (``write_feature_space``/``read_feature_space``);
+the drivers here never build its paths.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+from functools import partial
 
 from pyspark.storagelevel import StorageLevel
 from pyspark.sql import SparkSession
@@ -428,24 +433,69 @@ def train(
 
 
 def _train_impl(cfg: dict, spark: SparkSession, emitter, tuner) -> None:
-    from pyspark.sql import functions as F
-
+    """The train driver as a stage sequence: featurize, coordinate
+    descent, select, save (GameTrainingDriver.scala:363-516)."""
     from photon_ml_spark import events
-    from photon_ml_spark.estimator import GameEstimator
-    from photon_ml_spark.ml.coordinate_descent import CoordinateConfig
-    from photon_ml_spark.sources.model_io import save_game_model
 
-    # validate coordinate-entry keys BEFORE any input IO — a typo'd
-    # field ("reg_params") silently falling back to its default is the
-    # same failure class as a typo'd top-level key
+    shard_cfgs, coord_shard = _resolve_shards(cfg)
+    emitter.send_event(events.SetupEvent(params=events.params_summary(cfg)))
+    inc, prev_model = _prior_model(cfg, spark, shard_cfgs)
+    dicts_in = _dictionary_sources(cfg, spark, shard_cfgs, inc)
+    assembled, dictionaries, dims = _assemble_training(
+        cfg, spark, shard_cfgs, dicts_in
+    )
+    assembled, norm_tables = _normalize(cfg, assembled, shard_cfgs)
+    coords = _coordinate_configs(
+        cfg, spark, coord_shard, dictionaries, dims, inc, prev_model
+    )
+    assembled = persist(assembled, StorageLevel.MEMORY_AND_DISK_DESER)
+    validation_frame = _validation_frame(cfg, spark, dictionaries, norm_tables)
+    out = cfg["output_dir"]
+    output_mode = cfg.get("output_mode", "best").lower()
+    if output_mode not in ("best", "all", "none"):
+        raise ValueError("output_mode must be best|all|none")
+    multi_shard = cfg.get("feature_shards") is not None
+    report = {
+        "status": "trained",
+        "model_dir": out,
+        # single-shard reports keep the scalar (back-compat); multi-
+        # shard reports the per-shard dim map
+        "dim": dict(dims) if multi_shard else dims[next(iter(dims))],
+    }
+    family = cfg.get("family", "binomial")
+    fit = partial(
+        _fit, assembled, coords, family, cfg.get("n_iterations", 2), emitter
+    )
+    # original-space saves share one per-shard factor-row cache
+    save = partial(
+        _save_model, spark, cfg, dictionaries, coord_shard, norm_tables, {}
+    )
+    fitted = _select(
+        cfg, tuner, fit, validation_frame, coords, family, emitter, report,
+        save, f"{out}/models" if output_mode == "all" else None,
+    )
+    variance_tables = _fixed_effect_variances(
+        cfg, spark, fitted, assembled, coord_shard, dims, norm_tables
+    )
+    frame = validation_frame if validation_frame is not None else assembled
+    _evaluate_selected(cfg, fitted, frame, report)
+    if output_mode != "none":
+        _save_trained(
+            spark, save, fitted, out, shard_cfgs if multi_shard else None,
+            dictionaries, coord_shard, variance_tables,
+        )
+        if variance_tables:
+            report["variances"] = sorted(variance_tables)
+    print(json.dumps(report))
+
+
+def _resolve_shards(cfg: dict):
+    """``(shard configs, {coordinate: shard})``, validated before any
+    IO (CoordinateDataConfiguration.scala:24,37,58 featureShardId): a
+    typo'd field or shard must fail here, not mid-training."""
     for c in cfg["coordinates"]:
         _validate_stage_keys(c, "coordinates[]")
-    # per-coordinate feature shards (CoordinateDataConfiguration.scala:
-    # 24,37,58 featureShardId): resolve every coordinate's shard now,
-    # before any IO — a typo'd shard name must fail here, not as a
-    # missing column mid-training
     shard_cfgs = _shard_configs(cfg)
-    multi_shard = cfg.get("feature_shards") is not None
     sole_shard = next(iter(shard_cfgs)) if len(shard_cfgs) == 1 else None
     coord_shard: dict[str, str] = {}
     for c in cfg["coordinates"]:
@@ -465,194 +515,154 @@ def _train_impl(cfg: dict, spark: SparkSession, emitter, tuner) -> None:
         _validate_stage_keys(
             cfg["per_group_evaluation"], "per_group_evaluation"
         )
+    return shard_cfgs, coord_shard
 
-    emitter.send_event(events.SetupEvent(params=events.params_summary(cfg)))
+
+def _shard_specs(shard_cfgs: dict) -> dict:
+    """Shard configs → the specs a model dir saves them as."""
+    return {
+        s: {"bags": list(sh.feature_bags), "has_intercept": sh.has_intercept}
+        for s, sh in shard_cfgs.items()
+    }
+
+
+def _prior_model(cfg: dict, spark, shard_cfgs: dict):
+    """M9 incremental training (GameTrainingDriver incrementalTraining +
+    modelInputDirectory) → ``(its config, the previous model)``, or
+    ``(None, None)``. Fixed effects get a Gaussian prior centered on the
+    previous coefficients (``_fixed_prior``), random effects the
+    previous model TABLE as prior/x0 with carry-forward for data-less
+    entities, all in the previous feature space."""
+    from photon_ml_spark.sources.model_io import (
+        load_game_model,
+        saved_shard_specs,
+    )
 
     inc = cfg.get("incremental_training")
-    prev_model = None
+    if not inc:
+        return None, None
+    if isinstance(inc, str):
+        inc = {"model_dir": inc}
+    _validate_stage_keys(inc, "incremental_training")
+    if "model_dir" not in inc:
+        raise ValueError("incremental_training needs model_dir")
+    # priors are indexed per shard: the prior model must have the same
+    # shard layout, and a multi-shard one the same shard DEFINITIONS
+    # (a renamed bag or a dropped intercept would silently re-index the
+    # spaces the priors live in)
+    prev_shards = saved_shard_specs(spark, inc["model_dir"])
+    if cfg.get("feature_shards") is not None:
+        if prev_shards is None:
+            raise ValueError(
+                "incremental_training.model_dir holds a single-shard "
+                "model (no feature-shards.json) but feature_shards "
+                "is configured — priors are indexed per shard; use "
+                "the single-shard config or retrain from scratch"
+            )
+        cur_shards = _shard_specs(shard_cfgs)
+        if prev_shards != cur_shards:
+            raise ValueError(
+                "feature_shards differs from the prior model's saved "
+                f"feature-shards.json (prior: {prev_shards}; "
+                f"configured: {cur_shards}) — priors are indexed by "
+                "the previous per-shard feature spaces; match the "
+                "prior config or retrain from scratch"
+            )
+    elif prev_shards is not None:
+        raise ValueError(
+            "incremental_training.model_dir holds a MULTI-shard "
+            "model (feature-shards.json present) but this config "
+            "is single-shard — configure the matching "
+            "feature_shards map (priors are indexed per shard) "
+            "or retrain from scratch"
+        )
+    if str(cfg.get("normalization", "none")).lower() != "none":
+        raise ValueError(
+            "incremental_training cannot combine with normalization: "
+            "the prior model is original-space while training would "
+            "run in the scaled space — retrain without normalization "
+            "or drop the prior"
+        )
+    return inc, load_game_model(inc["model_dir"], spark)
+
+
+def _same_dictionary(a, b) -> bool:
+    """One symmetric-difference proof over two (small) dictionary
+    relations."""
+    return not (
+        a.exceptAll(b).limit(1).count() > 0
+        or b.exceptAll(a).limit(1).count() > 0
+    )
+
+
+def _dictionary_sources(cfg: dict, spark, shard_cfgs: dict, inc) -> dict:
+    """{shard: dictionary} this run reuses instead of building one:
+    ``dictionary_input``, the `index` driver's output
+    (FeatureIndexingDriver's consume side; with feature_shards a
+    {shard: index_output_dir} map, like the reference's per-shard PalDB
+    stores), and the prior model's feature space for the other shards.
+    A given dictionary must BE the prior's space: priors are indexed
+    by it."""
+    from photon_ml_spark.sources.model_io import read_feature_space
+
+    multi_shard = cfg.get("feature_shards") is not None
+    di = cfg.get("dictionary_input")
+    if di and multi_shard:
+        if not isinstance(di, dict):
+            raise ValueError(
+                "with feature_shards, dictionary_input must be a "
+                "map {shard_name: index_output_dir}"
+            )
+        unknown = sorted(set(di) - set(shard_cfgs))
+        if unknown:
+            raise ValueError(
+                f"dictionary_input names unknown shard(s) {unknown}; "
+                f"configured shards: {sorted(shard_cfgs)}"
+            )
+        missing = sorted(set(shard_cfgs) - set(di))
+        if missing and not inc:
+            # a partial map would silently rebuild the uncovered
+            # shards' dictionaries from THIS run's data — the
+            # frozen-feature-space contract broken without an error.
+            # With incremental_training the prior model fills the gap.
+            raise ValueError(
+                "dictionary_input must cover every configured shard; "
+                f"missing {missing} — a partially frozen feature "
+                "space re-indexes the uncovered shards per run"
+            )
+    elif di:
+        di = {next(iter(shard_cfgs)): di}
+    prev = {}
     if inc:
-        # M9 incremental training (GameTrainingDriver incrementalTraining
-        # + modelInputDirectory): warm-start every coordinate from the
-        # previous run's model — fixed effects get a Gaussian prior
-        # centered on the previous coefficients with precision =
-        # 1/variance when a variance table was saved (the reason
-        # variance_computation exists), random effects get the previous
-        # model TABLE as prior/x0 with carry-forward for data-less
-        # entities. The previous run's dictionary is reused by default:
-        # priors are meaningless across different feature spaces.
-        if isinstance(inc, str):
-            inc = {"model_dir": inc}
-        _validate_stage_keys(inc, "incremental_training")
-        if "model_dir" not in inc:
-            raise ValueError("incremental_training needs model_dir")
-        if multi_shard:
-            # per-shard priors need the prior run's per-shard feature
-            # spaces: the prior model dir must be a multi-shard model
-            # whose shard DEFINITIONS (bags + intercept) match this
-            # config exactly — a renamed bag or a dropped intercept
-            # would silently re-index the spaces the priors live in
-            from photon_ml_spark.sources.model_io import (
-                _hadoop_exists,
-                _hadoop_read_text,
-            )
-
-            shards_json = f"{inc['model_dir']}/feature-shards.json"
-            if not _hadoop_exists(spark, shards_json):
-                raise ValueError(
-                    "incremental_training.model_dir holds a single-shard "
-                    "model (no feature-shards.json) but feature_shards "
-                    "is configured — priors are indexed per shard; use "
-                    "the single-shard config or retrain from scratch"
-                )
-            prev_shards = json.loads(
-                _hadoop_read_text(spark, shards_json)
-            )["shards"]
-            cur_shards = {
-                s: {
-                    "bags": list(sh.feature_bags),
-                    "has_intercept": sh.has_intercept,
-                }
-                for s, sh in shard_cfgs.items()
-            }
-            if prev_shards != cur_shards:
-                raise ValueError(
-                    "feature_shards differs from the prior model's saved "
-                    f"feature-shards.json (prior: {prev_shards}; "
-                    f"configured: {cur_shards}) — priors are indexed by "
-                    "the previous per-shard feature spaces; match the "
-                    "prior config or retrain from scratch"
-                )
-        else:
-            # the inverse mismatch needs the same guided failure: a
-            # legacy single-shard config against a multi-shard prior
-            # would otherwise die on a raw 'path does not exist' for
-            # {model_dir}/feature-dictionary (multi-shard models write
-            # feature-dictionaries/{shard} instead)
-            from photon_ml_spark.sources.model_io import _hadoop_exists
-
-            if _hadoop_exists(
-                spark, f"{inc['model_dir']}/feature-shards.json"
-            ):
-                raise ValueError(
-                    "incremental_training.model_dir holds a MULTI-shard "
-                    "model (feature-shards.json present) but this config "
-                    "is single-shard — configure the matching "
-                    "feature_shards map (priors are indexed per shard) "
-                    "or retrain from scratch"
-                )
-        if str(cfg.get("normalization", "none")).lower() != "none":
+        _, prev = read_feature_space(
+            spark, inc["model_dir"], flat_shard=next(iter(shard_cfgs))
+        )
+    dicts_in = {}
+    for s, path in (di or {}).items():
+        d = read_feature_space(spark, path, flat_shard=s)[1][s]
+        if s in prev and not _same_dictionary(prev[s], d):
             raise ValueError(
-                "incremental_training cannot combine with normalization: "
-                "the prior model is original-space while training would "
-                "run in the scaled space — retrain without normalization "
-                "or drop the prior"
-            )
-        from photon_ml_spark.sources.model_io import load_game_model
-
-        prev_model = load_game_model(inc["model_dir"], spark)
-
-    dict_in = None
-    if inc and not multi_shard and not cfg.get("dictionary_input"):
-        dict_in = persist(
-            spark.read.parquet(f"{inc['model_dir']}/feature-dictionary"),
-            StorageLevel.MEMORY_AND_DISK_DESER,
-        )
-    elif inc and not multi_shard and cfg.get("dictionary_input"):
-        # an explicit dictionary alongside a prior model must BE the
-        # prior model's feature space — priors are indexed by the old
-        # dictionary, so a silently different mapping would center
-        # every prior on the wrong feature. One symmetric-difference
-        # job over the (small) dictionary relations proves equality.
-        prev_d = spark.read.parquet(
-            f"{inc['model_dir']}/feature-dictionary"
-        )
-        new_d = spark.read.parquet(
-            f"{cfg['dictionary_input']}/feature-dictionary"
-        )
-        if (
-            prev_d.exceptAll(new_d).limit(1).count() > 0
-            or new_d.exceptAll(prev_d).limit(1).count() > 0
-        ):
-            raise ValueError(
+                f"dictionary_input[{s!r}] differs from the prior "
+                "model's saved per-shard dictionary — priors are "
+                "indexed by the previous feature space; drop the "
+                "dictionary_input entry (the prior dictionary is "
+                "reused automatically) or retrain from scratch"
+                if multi_shard else
                 "dictionary_input differs from incremental_training."
                 "model_dir's saved dictionary — priors are indexed by "
                 "the previous feature space; drop dictionary_input (the "
                 "previous dictionary is reused automatically) or "
                 "retrain from scratch on the new space"
             )
-    dicts_in: dict = {}
-    if cfg.get("dictionary_input"):
-        # reuse an offline-built dictionary (the `index` driver's
-        # output — FeatureIndexingDriver's consume side): training
-        # skips the distinct+ordinal job entirely and every run shares
-        # ONE frozen feature space (the precondition for warm starts
-        # and incremental priors to be meaningful across runs). With
-        # feature_shards, pass a {shard: index_output_dir} map — one
-        # offline index per shard, mirroring the reference's per-shard
-        # PalDB stores (FeatureIndexingDriver writes one per shard).
-        di = cfg["dictionary_input"]
-        if multi_shard:
-            if not isinstance(di, dict):
-                raise ValueError(
-                    "with feature_shards, dictionary_input must be a "
-                    "map {shard_name: index_output_dir}"
-                )
-            unknown = sorted(set(di) - set(shard_cfgs))
-            if unknown:
-                raise ValueError(
-                    f"dictionary_input names unknown shard(s) {unknown}; "
-                    f"configured shards: {sorted(shard_cfgs)}"
-                )
-            missing = sorted(set(shard_cfgs) - set(di))
-            if missing and not inc:
-                # a partial map would silently rebuild the uncovered
-                # shards' dictionaries from THIS run's data — the
-                # frozen-feature-space contract (the whole point of
-                # dictionary_input) broken without an error. With
-                # incremental_training the prior model fills the gap
-                # below instead.
-                raise ValueError(
-                    "dictionary_input must cover every configured shard; "
-                    f"missing {missing} — a partially frozen feature "
-                    "space re-indexes the uncovered shards per run"
-                )
-            for s, p in di.items():
-                dicts_in[s] = persist(
-                    spark.read.parquet(f"{p}/feature-dictionary"),
-                    StorageLevel.MEMORY_AND_DISK_DESER,
-                )
-        else:
-            dicts_in[next(iter(shard_cfgs))] = persist(
-                spark.read.parquet(f"{di}/feature-dictionary"),
-                StorageLevel.MEMORY_AND_DISK_DESER,
-            )
-    elif dict_in is not None:
-        dicts_in[next(iter(shard_cfgs))] = dict_in
-    if inc and multi_shard:
-        # the prior model's per-shard dictionaries ARE the feature
-        # spaces its priors are indexed by: reuse them for every shard.
-        # An explicitly supplied dictionary_input shard must BE that
-        # space — same symmetric-difference proof as single-shard.
-        for s in shard_cfgs:
-            prev_path = f"{inc['model_dir']}/feature-dictionaries/{s}"
-            if s in dicts_in:
-                prev_d = spark.read.parquet(prev_path)
-                if (
-                    prev_d.exceptAll(dicts_in[s]).limit(1).count() > 0
-                    or dicts_in[s].exceptAll(prev_d).limit(1).count() > 0
-                ):
-                    raise ValueError(
-                        f"dictionary_input[{s!r}] differs from the prior "
-                        "model's saved per-shard dictionary — priors are "
-                        "indexed by the previous feature space; drop the "
-                        "dictionary_input entry (the prior dictionary is "
-                        "reused automatically) or retrain from scratch"
-                    )
-            else:
-                dicts_in[s] = persist(
-                    spark.read.parquet(prev_path),
-                    StorageLevel.MEMORY_AND_DISK_DESER,
-                )
+        dicts_in[s] = persist(d, StorageLevel.MEMORY_AND_DISK_DESER)
+    for s, d in prev.items():
+        if s not in dicts_in:
+            dicts_in[s] = persist(d, StorageLevel.MEMORY_AND_DISK_DESER)
+    return dicts_in
+
+
+def _assemble_training(cfg: dict, spark, shard_cfgs: dict, dicts_in: dict):
+    """``_assembled``, then the optional data validation and summaries."""
     assembled, dictionaries, dims = _assembled(
         spark, cfg, dictionaries=dicts_in
     )
@@ -675,186 +685,200 @@ def _train_impl(cfg: dict, spark: SparkSession, emitter, tuner) -> None:
                 ),
                 mode=dv_mode,
             )
-
     if cfg.get("data_summary_dir"):
-        # dataSummaryDirectory (GameTrainingDriver): per-feature
-        # summaries of each assembled shard — nnz/moments/min/max from
-        # the exploded sparse pairs (zeros implicit: mean/variance use
-        # the full row count), dictionary-labeled, written as parquet.
-        # Runs on the RAW assembled frame, BEFORE any normalization —
-        # the artifact must describe the data, not the training
-        # transform (summaries are the INPUT normalization derives
-        # its factors from). Multi-shard runs write one summary per
-        # shard under {dir}/{shard}; the legacy single-shard layout
-        # stays flat.
-        n_rows = assembled.count()
-        for s in shard_cfgs:
-            pairs = assembled.select(
-                F.explode(
-                    F.arrays_zip(
-                        F.col(f"{s}_indices"), F.col(f"{s}_values")
-                    )
-                ).alias("__p")
-            ).select(
-                F.col(f"__p.{s}_indices").alias("feature_index"),
-                F.col(f"__p.{s}_values").cast("double").alias("x"),
-            )
-            nn = F.lit(float(n_rows))
-            summary = pairs.groupBy("feature_index").agg(
-                F.count(F.lit(1)).alias("nnz"),
-                F.sum("x").alias("s1"),
-                F.sum(F.col("x") * F.col("x")).alias("s2"),
-                F.min("x").alias("min"),
-                F.max("x").alias("max"),
-            ).select(
-                "feature_index",
-                "nnz",
-                (F.col("s1") / nn).alias("mean"),
-                # n > 1 guard: a single-row input must not divide by
-                # zero (throws under Spark 4 ANSI mode) — variance is
-                # NULL there
-                F.when(
-                    nn > F.lit(1.0),
-                    (F.col("s2") - F.col("s1") * F.col("s1") / nn)
-                    / (nn - F.lit(1.0)),
-                ).alias("variance"),
-                # implicit zeros widen the range ONLY where the feature
-                # is absent from some rows
-                F.when(
-                    F.col("nnz") < F.lit(n_rows),
-                    F.least(F.col("min"), F.lit(0.0)),
-                ).otherwise(F.col("min")).alias("min"),
-                F.when(
-                    F.col("nnz") < F.lit(n_rows),
-                    F.greatest(F.col("max"), F.lit(0.0)),
-                ).otherwise(F.col("max")).alias("max"),
-            )
-            target = (
-                f"{cfg['data_summary_dir']}/{s}"
-                if multi_shard
-                else cfg["data_summary_dir"]
-            )
-            summary.join(
-                F.broadcast(dictionaries[s]), "feature_index", "left"
-            ).write.mode("overwrite").parquet(target)
+        _write_data_summaries(cfg, assembled, shard_cfgs, dictionaries)
+    return assembled, dictionaries, dims
 
+
+def _write_data_summaries(cfg, assembled, shard_cfgs, dictionaries) -> None:
+    """dataSummaryDirectory (GameTrainingDriver): per-feature summaries
+    of each assembled shard — nnz/moments/min/max from the exploded
+    sparse pairs (zeros implicit: mean/variance use the full row
+    count), dictionary-labeled, written as parquet. Runs on the RAW
+    assembled frame, BEFORE any normalization — the artifact must
+    describe the data, not the training transform (summaries are the
+    INPUT normalization derives its factors from). Multi-shard runs
+    write one summary per shard under {dir}/{shard}; the legacy
+    single-shard layout stays flat."""
+    from pyspark.sql import functions as F
+
+    n_rows = assembled.count()
+    for s in shard_cfgs:
+        pairs = assembled.select(
+            F.explode(
+                F.arrays_zip(F.col(f"{s}_indices"), F.col(f"{s}_values"))
+            ).alias("__p")
+        ).select(
+            F.col(f"__p.{s}_indices").alias("feature_index"),
+            F.col(f"__p.{s}_values").cast("double").alias("x"),
+        )
+        nn = F.lit(float(n_rows))
+        summary = pairs.groupBy("feature_index").agg(
+            F.count(F.lit(1)).alias("nnz"),
+            F.sum("x").alias("s1"),
+            F.sum(F.col("x") * F.col("x")).alias("s2"),
+            F.min("x").alias("min"),
+            F.max("x").alias("max"),
+        ).select(
+            "feature_index",
+            "nnz",
+            (F.col("s1") / nn).alias("mean"),
+            # n > 1 guard: a single-row input must not divide by zero
+            # (throws under Spark 4 ANSI mode) — variance is NULL there
+            F.when(
+                nn > F.lit(1.0),
+                (F.col("s2") - F.col("s1") * F.col("s1") / nn)
+                / (nn - F.lit(1.0)),
+            ).alias("variance"),
+            # implicit zeros widen the range ONLY where the feature is
+            # absent from some rows
+            F.when(
+                F.col("nnz") < F.lit(n_rows),
+                F.least(F.col("min"), F.lit(0.0)),
+            ).otherwise(F.col("min")).alias("min"),
+            F.when(
+                F.col("nnz") < F.lit(n_rows),
+                F.greatest(F.col("max"), F.lit(0.0)),
+            ).otherwise(F.col("max")).alias("max"),
+        )
+        target = (
+            f"{cfg['data_summary_dir']}/{s}"
+            if cfg.get("feature_shards") is not None
+            else cfg["data_summary_dir"]
+        )
+        summary.join(
+            F.broadcast(dictionaries[s]), "feature_index", "left"
+        ).write.mode("overwrite").parquet(target)
+
+
+def _normalize(cfg: dict, assembled, shard_cfgs: dict):
+    """GameTrainingDriver's normalization param (NormalizationType,
+    factors from the feature summaries, GameTrainingDriver.scala:
+    590-656): training runs on factor-scaled SPARSE pairs (the shift
+    folds into the intercept — see
+    normalization.apply_sparse_normalization), and the final model is
+    mapped back to original space before persisting. One factor table
+    per shard — each shard is its own feature space with its own index
+    range. Returns ``(frame, {shard: factor table})``."""
     norm_kind = str(cfg.get("normalization", "none")).lower()
     norm_tables: dict = {}
-    if norm_kind != "none":
-        # GameTrainingDriver's normalization param (NormalizationType,
-        # factors from the feature summaries, GameTrainingDriver.scala:
-        # 590-656): training runs on factor-scaled SPARSE pairs (the
-        # shift folds into the intercept — see
-        # normalization.apply_sparse_normalization), and the final
-        # model is mapped back to original space before persisting.
-        # One factor table per shard — each shard is its own feature
-        # space with its own index range.
-        from photon_ml_spark.ml.normalization import (
-            apply_sparse_normalization,
-            sparse_normalization_table,
+    if norm_kind == "none":
+        return assembled, norm_tables
+    from photon_ml_spark.ml.normalization import (
+        apply_sparse_normalization,
+        sparse_normalization_table,
+    )
+
+    for s in shard_cfgs:
+        norm_tables[s] = persist(
+            sparse_normalization_table(
+                assembled, f"{s}_indices", f"{s}_values", kind=norm_kind,
+            ),
+            StorageLevel.MEMORY_AND_DISK_DESER,
         )
-
-        for s in shard_cfgs:
-            norm_tables[s] = persist(
-                sparse_normalization_table(
-                    assembled,
-                    f"{s}_indices",
-                    f"{s}_values",
-                    kind=norm_kind,
-                ),
-                StorageLevel.MEMORY_AND_DISK_DESER,
-            )
-            assembled = apply_sparse_normalization(
-                assembled, norm_tables[s], f"{s}_indices", f"{s}_values"
-            )
-
-    def _bounds(c):
-        # reference parity (GLMSuite.createConstraintFeatureMap): a
-        # JSON constraint list on a fixed coordinate resolves against
-        # the coordinate's OWN shard dictionary into per-index box
-        # bounds
-        if "constraints" not in c:
-            return None, None
-        from photon_ml_spark.ml.constraints import parse_constraint_map
-
-        s = coord_shard[c["name"]]
-        parsed = parse_constraint_map(
-            c["constraints"], dictionaries[s], dims[s]
+        assembled = apply_sparse_normalization(
+            assembled, norm_tables[s], f"{s}_indices", f"{s}_values"
         )
-        return (None, None) if parsed is None else parsed
+    return assembled, norm_tables
 
-    def _fixed_prior(name, prev, dim):
-        """(prior_mean, prior_precision) arrays (dim+1, intercept last)
-        from the previous fixed model + its saved variance table. No
-        variances on disk → warm-start-only (mean carried, no penalty),
-        matching the reference's requirement that incremental priors
-        come from a variance-computing run."""
-        import numpy as np
 
-        mean = np.append(
-            np.asarray(prev.coefficients, dtype=float), float(prev.intercept)
-        )
-        vpath = f"{inc['model_dir']}/fixed-effect/{name}/variances"
-        from photon_ml_spark.sources.model_io import _hadoop_exists
-
-        if not _hadoop_exists(spark, vpath):
-            return None, None
-        vdf = spark.read.parquet(vpath)
-        has_key = "feature_key" in vdf.columns
-        cols = ["feature_index", "variance"] + (
-            ["feature_key"] if has_key else []
-        )
-        rows = vdf.select(*cols).collect()
-        from photon_ml_spark.datamodel import INTERCEPT_KEY
-
-        prec = np.zeros(dim + 1)
-        for r in rows:
-            v = float(r.variance)
-            if v <= 0:
-                continue
-            if has_key:
-                # key-resolved tables (everything written since the
-                # variances-on-the-wire round): the intercept is the
-                # INTERCEPT_KEY row — imported reference models carry
-                # it with a NULL index (their dictionaries have no
-                # intercept slot), train-produced tables at slot dim-1
-                if r.feature_key == INTERCEPT_KEY:
-                    prec[dim] = 1.0 / v
-                    continue
-                if r.feature_index is None:
-                    continue  # key outside this feature space
-                j = int(r.feature_index)
-                if 0 <= j < dim:
-                    prec[j] = 1.0 / v
-                continue
-            # legacy keyless tables: intercept at the dictionary's
-            # final slot by construction (build_feature_dictionary)
-            j = int(r.feature_index)
-            if j == dim - 1:
-                prec[dim] = 1.0 / v
-            elif 0 <= j < dim - 1:
-                prec[j] = 1.0 / v
-        return mean, prec
-
-    # varianceComputationType — read (and fail) BEFORE training, and
-    # thread into RANDOM coordinates so per-entity fits carry σ²
-    # (RandomEffectOptimizationProblem.scala:133-189); fixed
-    # coordinates compute theirs at the CD optimum below instead
+def _variance_kind(cfg: dict) -> str:
+    """varianceComputationType: none|simple|full."""
     vc = str(cfg.get("variance_computation", "none")).lower()
     if vc not in ("none", "simple", "full"):
         raise ValueError(
             f"variance_computation must be none|simple|full, got {vc!r}"
         )
+    return vc
+
+
+def _fixed_prior(spark, model_dir: str, name: str, prev, dim: int):
+    """(prior_mean, prior_precision) arrays (dim+1, intercept last)
+    from the previous fixed model + its saved variance table. No
+    variances on disk → warm-start-only (mean carried, no penalty),
+    matching the reference's requirement that incremental priors
+    come from a variance-computing run."""
+    import numpy as np
+
+    from photon_ml_spark.datamodel import INTERCEPT_KEY
+    from photon_ml_spark.sources.model_io import read_variance_tables
+
+    mean = np.append(
+        np.asarray(prev.coefficients, dtype=float), float(prev.intercept)
+    )
+    vdf = read_variance_tables(spark, model_dir, [name]).get(name)
+    if vdf is None:
+        return None, None
+    has_key = "feature_key" in vdf.columns
+    cols = ["feature_index", "variance"] + (
+        ["feature_key"] if has_key else []
+    )
+    prec = np.zeros(dim + 1)
+    for r in vdf.select(*cols).collect():
+        v = float(r.variance)
+        if v <= 0:
+            continue
+        if has_key:
+            # key-resolved tables (everything written since the
+            # variances-on-the-wire round): the intercept is the
+            # INTERCEPT_KEY row — imported reference models carry it
+            # with a NULL index (their dictionaries have no intercept
+            # slot), train-produced tables at slot dim-1
+            if r.feature_key == INTERCEPT_KEY:
+                prec[dim] = 1.0 / v
+                continue
+            if r.feature_index is None:
+                continue  # key outside this feature space
+            j = int(r.feature_index)
+            if 0 <= j < dim:
+                prec[j] = 1.0 / v
+            continue
+        # legacy keyless tables: intercept at the dictionary's final
+        # slot by construction (build_feature_dictionary)
+        j = int(r.feature_index)
+        if j == dim - 1:
+            prec[dim] = 1.0 / v
+        elif 0 <= j < dim - 1:
+            prec[j] = 1.0 / v
+    return mean, prec
+
+
+def _coordinate_configs(
+    cfg: dict, spark, coord_shard, dictionaries, dims, inc, prev_model
+) -> list:
+    """The configured coordinates as ``CoordinateConfig``s, in update
+    order."""
+    from dataclasses import replace
+
+    from photon_ml_spark.ml.constraints import parse_constraint_map
+    from photon_ml_spark.ml.coordinate_descent import CoordinateConfig
+
+    # varianceComputationType — read (and fail) BEFORE training, and
+    # thread into RANDOM coordinates so per-entity fits carry σ²
+    # (RandomEffectOptimizationProblem.scala:133-189); fixed
+    # coordinates compute theirs at the CD optimum instead
+    vc = _variance_kind(cfg)
     coords = []
     for c in cfg["coordinates"]:
         s = coord_shard[c["name"]]
-        lo, hi = _bounds(c)
+        lo = hi = None
+        if "constraints" in c:
+            # reference parity (GLMSuite.createConstraintFeatureMap): a
+            # JSON constraint list on a fixed coordinate resolves
+            # against the coordinate's OWN shard dictionary into
+            # per-index box bounds
+            parsed = parse_constraint_map(
+                c["constraints"], dictionaries[s], dims[s]
+            )
+            lo, hi = (None, None) if parsed is None else parsed
         pretrained = None
         pm = pp = None
         if prev_model is not None and c["name"] in prev_model.coordinates:
             pretrained = prev_model.coordinates[c["name"]]
             if c["kind"] == "fixed":
-                pm, pp = _fixed_prior(c["name"], pretrained, dims[s])
+                pm, pp = _fixed_prior(
+                    spark, inc["model_dir"], c["name"], pretrained, dims[s]
+                )
         coords.append(
             CoordinateConfig(
                 name=c["name"],
@@ -883,16 +907,13 @@ def _train_impl(cfg: dict, spark: SparkSession, emitter, tuner) -> None:
         # partialRetrainLockedCoordinates (M8): these coordinates keep
         # the previous model verbatim — scored every update, never
         # re-trained. Only meaningful with a previous model to lock to.
-        known = {c.name for c in coords}
-        unknown = sorted(locked_names - known)
+        unknown = sorted(locked_names - {c.name for c in coords})
         if unknown:
             raise ValueError(
                 f"locked_coordinates names unknown coordinate(s) {unknown}"
             )
-        from dataclasses import replace as _replace
-
         coords = [
-            _replace(c, locked=True) if c.name in locked_names else c
+            replace(c, locked=True) if c.name in locked_names else c
             for c in coords
         ]
         missing = sorted(
@@ -917,155 +938,177 @@ def _train_impl(cfg: dict, spark: SparkSession, emitter, tuner) -> None:
             )
         by_name = {c.name: c for c in coords}
         coords = [by_name[n] for n in seq]
+    return coords
 
-    from dataclasses import replace
 
-    family = cfg.get("family", "binomial")
-    assembled = persist(assembled, StorageLevel.MEMORY_AND_DISK_DESER)
-
-    _norm_rows_cache: dict = {}
-
-    def _backmapped_model(model):
-        """Original-space COPY of a transformed-space GameModel (never
-        mutates — the sweep's candidate saves and the final save must
-        not double-transform the selected model). Each coordinate maps
-        back through its OWN shard's factor table."""
-        if not norm_tables:
-            return model
-        from photon_ml_spark.ml.coordinate_descent import GameModel
+def _validation_frame(cfg: dict, spark, dictionaries, norm_tables):
+    """The held-out frame (or ``None``), assembled ONCE with the training
+    dictionary and cached for every evaluation."""
+    if not cfg.get("validation_input"):
+        return None
+    # the TRAINING range must not leak onto the validation path (a flat
+    # validation dir would fail daily-dir resolution); validation gets
+    # its own optional range — the reference's separate
+    # validationDataDateRange/DaysRange params
+    vcfg = {
+        k: v for k, v in cfg.items() if k not in ("date_range", "days_range")
+    }
+    vcfg["input"] = cfg["validation_input"]
+    if cfg.get("validation_date_range"):
+        vcfg["date_range"] = cfg["validation_date_range"]
+    if cfg.get("validation_days_range"):
+        vcfg["days_range"] = cfg["validation_days_range"]
+    frame, _, _ = _assembled(spark, vcfg, dictionaries=dictionaries)
+    if norm_tables:
         from photon_ml_spark.ml.normalization import (
-            backmap_fixed_model,
-            backmap_random_effects,
+            apply_sparse_normalization,
         )
 
-        out_model = GameModel(family=model.family)
-        out_model.configs = dict(model.configs)
-        for name, c in model.configs.items():
-            s = coord_shard[name]
-            m = model.coordinates[name]
-            if c.kind == "fixed":
-                if s not in _norm_rows_cache:
-                    # O(dim) like the model itself; collected ONCE per
-                    # shard — sweep mode calls this per saved candidate
-                    _norm_rows_cache[s] = norm_tables[s].collect()
-                out_model.coordinates[name] = backmap_fixed_model(
-                    m, _norm_rows_cache[s]
-                )
-            else:
-                out_model.coordinates[name] = backmap_random_effects(
-                    m, norm_tables[s]
-                )
-        return out_model
-
-
-    def fit_with(overrides: dict, warm_from=None):
-        cs = [
-            replace(c, reg_param=float(overrides.get(c.name, c.reg_param)))
-            for c in coords
-        ]
-        if warm_from is not None:
-            # warm start across the λ sweep (ModelTraining.scala:
-            # 178-224): the previous λ's coordinate models seed the
-            # next fit — fixed as optimizer x0, random as prior
-            cs = [
-                replace(
-                    c,
-                    pretrained=warm_from.coordinates.get(
-                        c.name, c.pretrained
-                    ),
-                )
-                for c in cs
-            ]
-        est = GameEstimator(
-            coordinates=cs, family=family,
-            n_iterations=cfg.get("n_iterations", 2),
-        )
-        for li in emitter.listeners():
-            est.register_listener(li)
-        return est.fit(assembled)
-
-    validation_frame = None
-    if cfg.get("validation_input"):
-        # assembled ONCE with the training dictionary and cached —
-        # reused by every sweep evaluation and the per-group sink
-        # the TRAINING range must not leak onto the validation path
-        # (a flat validation dir would fail daily-dir resolution);
-        # validation gets its own optional range — the reference's
-        # separate validationDataDateRange/DaysRange params
-        vcfg = {
-            k: v
-            for k, v in cfg.items()
-            if k not in ("date_range", "days_range")
-        }
-        vcfg["input"] = cfg["validation_input"]
-        if cfg.get("validation_date_range"):
-            vcfg["date_range"] = cfg["validation_date_range"]
-        if cfg.get("validation_days_range"):
-            vcfg["days_range"] = cfg["validation_days_range"]
-        validation_frame, _, _ = _assembled(
-            spark, vcfg, dictionaries=dictionaries,
-        )
         for s, nt in norm_tables.items():
             # the TRAINING factors transform the held-out frame too —
             # refitting contexts on validation data would evaluate a
             # different model than the one being selected
-            validation_frame = apply_sparse_normalization(
-                validation_frame, nt, f"{s}_indices", f"{s}_values",
+            frame = apply_sparse_normalization(
+                frame, nt, f"{s}_indices", f"{s}_values",
             )
-        validation_frame = persist(
-            validation_frame, StorageLevel.MEMORY_AND_DISK_DESER
-        )
+    return persist(frame, StorageLevel.MEMORY_AND_DISK_DESER)
 
-    def _eval_scored(fitted, frame):
-        """Score + the EVALUATION margin: the transformer's score is
-        the raw model margin WITHOUT offset; evaluation adds the
-        offset explicitly (GameScoringDriver.scala:234, the estimator
-        module's documented contract)."""
-        scored = fitted.transform(frame)
-        off = (
-            F.coalesce(F.col("offset"), F.lit(0.0))
-            if "offset" in scored.columns
-            else F.lit(0.0)
-        )
-        return scored.withColumn("__eval_margin", F.col("score") + off)
 
-    def validation_metric(fitted):
-        """Primary validation metric on the held-out frame, by family
-        direction (T8, EvaluatorType.scala:59-65 betterThan): AUROC
-        (higher better) for binomial, negated RMSE otherwise — both on
-        the offset-inclusive margin."""
-        from photon_ml_spark.functions import metrics
+def _fit(assembled, coords, family, n_iterations, emitter, overrides,
+         warm_from=None):
+    """One GAME fit with per-coordinate reg-weight ``overrides``."""
+    from dataclasses import replace
 
-        scored = _eval_scored(fitted, validation_frame)
-        if family in ("binomial", "logistic"):
-            with scope():
-                auc = metrics.auroc(
-                    scored, score="__eval_margin", label="response"
-                ).first().auroc
-            if auc is None:
-                raise ValueError(
-                    "validation frame has a single response class (or "
-                    "no rows) — AUROC is undefined; fix validation_input"
-                )
-            return float(auc)
-        return -float(
-            metrics.weighted_rmse(
+    from photon_ml_spark.estimator import GameEstimator
+
+    cs = [
+        replace(c, reg_param=float(overrides.get(c.name, c.reg_param)))
+        for c in coords
+    ]
+    if warm_from is not None:
+        # warm start across the λ sweep (ModelTraining.scala:178-224):
+        # the previous λ's coordinate models seed the next fit — fixed
+        # as optimizer x0, random as prior
+        cs = [
+            replace(
+                c, pretrained=warm_from.coordinates.get(c.name, c.pretrained)
+            )
+            for c in cs
+        ]
+    est = GameEstimator(
+        coordinates=cs, family=family, n_iterations=n_iterations,
+    )
+    for li in emitter.listeners():
+        est.register_listener(li)
+    return est.fit(assembled)
+
+
+def _backmapped_model(model, coord_shard, norm_tables, norm_rows):
+    """Original-space COPY of a transformed-space GameModel (never
+    mutates — the sweep's candidate saves and the final save must not
+    double-transform the selected model). Each coordinate maps back
+    through its OWN shard's factor table, collected once into
+    ``norm_rows``."""
+    if not norm_tables:
+        return model
+    from photon_ml_spark.ml.coordinate_descent import GameModel
+    from photon_ml_spark.ml.normalization import (
+        backmap_fixed_model,
+        backmap_random_effects,
+    )
+
+    out_model = GameModel(family=model.family)
+    out_model.configs = dict(model.configs)
+    for name, c in model.configs.items():
+        s = coord_shard[name]
+        m = model.coordinates[name]
+        if c.kind == "fixed":
+            if s not in norm_rows:
+                # O(dim) like the model itself; collected ONCE per
+                # shard — sweep mode saves once per candidate
+                norm_rows[s] = norm_tables[s].collect()
+            out_model.coordinates[name] = backmap_fixed_model(
+                m, norm_rows[s]
+            )
+        else:
+            out_model.coordinates[name] = backmap_random_effects(
+                m, norm_tables[s]
+            )
+    return out_model
+
+
+def _save_model(spark, cfg, dictionaries, coord_shard, norm_tables,
+                norm_rows, model, path) -> None:
+    """Save ``model`` in original space: it scores RAW data
+    (NormalizationContext.scala:77-94 algebra: β_j = β'_j·factor_j,
+    the intercept absorbs the shifts)."""
+    from photon_ml_spark.sources.model_io import save_game_model
+
+    save_game_model(
+        _backmapped_model(model, coord_shard, norm_tables, norm_rows),
+        path, spark,
+        sparsity_threshold=cfg.get("sparsity_threshold", 0.0),
+        dictionary={n: dictionaries[coord_shard[n]] for n in coord_shard},
+    )
+
+
+def _with_eval_margin(scored):
+    """``scored`` plus the EVALUATION margin ``__eval_margin``: the
+    transformer's score is the raw model margin WITHOUT offset;
+    evaluation adds the offset explicitly (GameScoringDriver.scala:234,
+    the estimator module's documented contract)."""
+    from pyspark.sql import functions as F
+
+    off = (
+        F.coalesce(F.col("offset"), F.lit(0.0))
+        if "offset" in scored.columns
+        else F.lit(0.0)
+    )
+    return scored.withColumn("__eval_margin", F.col("score") + off)
+
+
+def _validation_metric(validation_frame, family, fitted) -> float:
+    """Primary validation metric on the held-out frame, by family
+    direction (T8, EvaluatorType.scala:59-65 betterThan): AUROC
+    (higher better) for binomial, negated RMSE otherwise — both on
+    the offset-inclusive margin."""
+    from photon_ml_spark.functions import metrics
+
+    scored = _with_eval_margin(fitted.transform(validation_frame))
+    if family in ("binomial", "logistic"):
+        with scope():
+            auc = metrics.auroc(
                 scored, score="__eval_margin", label="response"
-            ).first().rmse
+            ).first().auroc
+        if auc is None:
+            raise ValueError(
+                "validation frame has a single response class (or "
+                "no rows) — AUROC is undefined; fix validation_input"
+            )
+        return float(auc)
+    return -float(
+        metrics.weighted_rmse(
+            scored, score="__eval_margin", label="response"
+        ).first().rmse
+    )
+
+
+def _check_overrides(overrides, coord_names, where, hint="") -> None:
+    """Fail fast on reg-weight typos: an override key matching no
+    coordinate would silently select among identical models."""
+    unknown = sorted(set(overrides) - coord_names)
+    if unknown:
+        raise ValueError(
+            f"{where} names unknown coordinate(s) {unknown}{hint}"
         )
 
-    out = cfg["output_dir"]
+
+def _select(cfg, tuner, fit, validation_frame, coords, family, emitter,
+            report, save, candidates_dir):
+    """T8 model selection (GameTrainingDriver.scala selectModels): a
+    pluggable tuner's search, an explicit ``reg_param_sweep``, or one
+    fit. Returns the selected fitted model."""
     sweep = cfg.get("reg_param_sweep")
-    output_mode = cfg.get("output_mode", "best").lower()
-    if output_mode not in ("best", "all", "none"):
-        raise ValueError("output_mode must be best|all|none")
-    report = {
-        "status": "trained",
-        "model_dir": out,
-        # single-shard reports keep the scalar (back-compat); multi-
-        # shard reports the per-shard dim map
-        "dim": dict(dims) if multi_shard else dims[sole_shard],
-    }
     if tuner is None and cfg.get("tuner"):
         from photon_ml_spark.ml.hypersearch import make_tuner
 
@@ -1075,227 +1118,208 @@ def _train_impl(cfg: dict, spark: SparkSession, emitter, tuner) -> None:
             "configure either reg_param_sweep (explicit list) or a "
             "tuner (searched selection), not both"
         )
-    if tuner is not None:
-        # pluggable-tuner model selection (HyperparameterTuner seam):
-        # the tuner searches per-coordinate reg weights against the
-        # validation metric; the winning point is refit once for the
-        # output model. Same held-out-data requirement as the sweep.
-        if validation_frame is None:
-            raise ValueError(
-                "tuner-driven selection requires validation_input: "
-                "selecting on the training metric would always favor "
-                "the least-regularized model"
-            )
-        coord_names = {c.name for c in coords}
-
-        def evaluate(params: dict) -> float:
-            unknown = sorted(set(params) - coord_names)
-            if unknown:
-                raise ValueError(
-                    f"tuner point names unknown coordinate(s) {unknown}"
-                )
-            m = validation_metric(fit_with(params))
-            emitter.send_event(
-                events.OptimizationLogEvent(
-                    index=len(tuner_history), reg_weights=dict(params),
-                    metric=m,
-                )
-            )
-            tuner_history.append((dict(params), m))
-            return m
-
-        tuner_history = []
-        found = tuner.search(
-            evaluate, n=int(cfg.get("tuner_iterations", 10)), maximize=True
-        )
-        best_params, best_value = found["best_params"], found["best_value"]
-        # a custom tuner may return a reconstructed/rounded point not
-        # value-identical to any history entry — fall back to -1
-        # (unknown index) instead of raising after all the expensive
-        # evaluations but before the refit
-        emitter.send_event(
-            events.ModelSelectionEvent(
-                index=next(
-                    (
-                        i for i, (p, v) in enumerate(tuner_history)
-                        if p == best_params and v == best_value
-                    ),
-                    -1,
-                ),
-                reg_weights=dict(best_params),
-                metric=best_value,
-            )
-        )
-        report["tuner"] = {
-            "evaluations": [
-                {"config": p, "metric": v} for p, v in tuner_history
-            ],
-            "best": {"config": best_params, "metric": best_value},
-        }
-        fitted = fit_with(best_params)
-    elif sweep:
-        # reference: explicit regularization-weight sweep + model
-        # selection (GameTrainingDriver.scala selectModels / T8;
-        # ModelOutputMode NONE|BEST|ALL). Selection REQUIRES held-out
-        # data — a training-set metric would always pick the weakest
-        # regularization (the overfit direction), so its absence is an
-        # error, same as the reference's validation-data requirement.
-        if validation_frame is None:
-            raise ValueError(
-                "reg_param_sweep requires validation_input: selecting "
-                "on the training metric would always favor the least-"
-                "regularized model"
-            )
-        # fail fast on sweep typos: an override key matching no
-        # coordinate would silently train N identical models and
-        # "select" among them with no signal
-        coord_names = {c.name for c in coords}
-        for i, overrides in enumerate(sweep):
-            unknown = sorted(set(overrides) - coord_names)
-            if unknown:
-                raise ValueError(
-                    f"reg_param_sweep[{i}] names unknown coordinate(s) "
-                    f"{unknown}; configured coordinates: "
-                    f"{sorted(coord_names)}"
-                )
-        # warm_start_sweep (legacy Driver useWarmStart parity): fits
-        # run in DESCENDING regularization order (ModelTraining.scala:
-        # 168 sortWith(_ >= _) — heavier shrinkage converges fastest
-        # from zero), each seeded by the previous λ's model. Report
-        # entries keep their original sweep indexes either way.
-        entries = list(enumerate(sweep))
-        warm = bool(cfg.get("warm_start_sweep", False))
-        if warm:
-            # sort on each entry's EFFECTIVE per-coordinate weights —
-            # an override dict omitting a coordinate means "use the
-            # coordinate's configured reg_param", not 0.0, so resolve
-            # the fallback before comparing (an empty-override entry
-            # otherwise sorts last regardless of its actual λ)
-            coord_defaults = [(c.name, float(c.reg_param)) for c in coords]
-
-            def _effective(ov):
-                return tuple(
-                    float(ov.get(name, default))
-                    for name, default in coord_defaults
-                )
-
-            entries.sort(key=lambda e: _effective(e[1]), reverse=True)
-        results = []  # (index, overrides, metric) — models not retained
-        best = None  # (metric, index, overrides, fitted)
-        prev_fitted = None
-        for i, overrides in entries:
-            fitted = fit_with(
-                overrides, warm_from=prev_fitted.model if warm and prev_fitted else None
-            )
-            prev_fitted = fitted
-            m = validation_metric(fitted)
-            # Driver.scala:179,409 parity: one optimization-log event
-            # per regularization weight, same as the tuner branch
-            emitter.send_event(
-                events.OptimizationLogEvent(
-                    index=i, reg_weights=dict(overrides), metric=m,
-                )
-            )
-            results.append((i, overrides, m))
-            if best is None or m > best[0]:
-                best = (m, i, overrides, fitted)
-            if output_mode == "all":
-                save_game_model(
-                    _backmapped_model(fitted.model), f"{out}/models/{i}",
-                    spark,
-                    sparsity_threshold=cfg.get("sparsity_threshold", 0.0),
-                    dictionary={
-                        n: dictionaries[coord_shard[n]] for n in coord_shard
-                    },
-                )
-        report["sweep"] = [
-            {"index": i, "config": ov, "metric": m} for i, ov, m in results
-        ]
-        report["best"] = {"index": best[1], "config": best[2], "metric": best[0]}
-        emitter.send_event(
-            events.ModelSelectionEvent(
-                index=best[1], reg_weights=dict(best[2]), metric=best[0],
-            )
-        )
-        fitted = best[3]
-    else:
-        fitted = fit_with({})
+    if tuner is None and not sweep:
+        fitted = fit({})
         report["updates"] = len(fitted.history)
-    variance_tables = {}  # vc read+validated before the coordinate build
-    if vc != "none":
-        # varianceComputationType (GameTrainingDriver; M10/A3):
-        # coefficient variances of each FIXED coordinate at the CD
-        # optimum — the coordinate's local problem sees the full summed
-        # margin as offset, so the full offset-inclusive margin is its
-        # exact curvature point. Computed in the (possibly normalized)
-        # training space, then scaled back by factor² — exact for the
-        # shift-free kinds; under standardization the intercept slot
-        # keeps its transformed-space variance (the shift adjustment's
-        # cross-covariances are not tracked, same simplification the
-        # per-slot SIMPLE path makes by ignoring off-diagonals).
-        from photon_ml_spark.ml.variance import (
-            simple_variance,
-            sparse_full_hessian_variance,
-            sparse_hessian_diagonal,
+        return fitted
+    # selection REQUIRES held-out data, same as the reference's
+    # validation-data requirement
+    if validation_frame is None:
+        raise ValueError(
+            ("tuner-driven selection" if tuner is not None
+             else "reg_param_sweep")
+            + " requires validation_input: selecting on the training "
+            "metric would always favor the least-regularized model"
         )
+    coord_names = {c.name for c in coords}
+    metric = partial(_validation_metric, validation_frame, family)
+    if tuner is not None:
+        return _tuner_search(
+            cfg, tuner, fit, metric, coord_names, emitter, report
+        )
+    for i, overrides in enumerate(sweep):
+        _check_overrides(
+            overrides, coord_names, f"reg_param_sweep[{i}]",
+            f"; configured coordinates: {sorted(coord_names)}",
+        )
+    return _sweep(
+        cfg, sweep, fit, metric, coords, emitter, report, save,
+        candidates_dir,
+    )
 
-        scored_tr = _eval_scored(fitted, assembled)
-        for name, c in fitted.model.configs.items():
-            if c.kind != "fixed":
-                continue
-            s = coord_shard[name]
-            if vc == "simple":
-                hd = sparse_hessian_diagonal(
-                    scored_tr,
-                    f"{s}_indices",
-                    f"{s}_values",
-                    margin_col="__eval_margin",
-                    weight_col="weight",
-                    family=family,
-                    l2=c.reg_param,
-                    dim=dims[s],
-                )
-                vt = simple_variance(hd).select("feature_index", "variance")
-            else:
-                rows = sparse_full_hessian_variance(
-                    scored_tr,
-                    dims[s],
-                    f"{s}_indices",
-                    f"{s}_values",
-                    margin_col="__eval_margin",
-                    weight_col="weight",
-                    family=family,
-                    l2=c.reg_param,
-                )
-                vt = spark.createDataFrame(
-                    rows, "feature_index long, variance double"
-                )
-            if norm_tables.get(s) is not None:
-                vt = vt.join(
-                    F.broadcast(norm_tables[s]), "feature_index", "left"
-                ).select(
-                    "feature_index",
-                    (
-                        F.col("variance")
-                        * F.pow(F.coalesce(F.col("factor"), F.lit(1.0)), 2)
-                    ).alias("variance"),
-                )
-            variance_tables[name] = vt
+
+def _tuner_search(cfg, tuner, fit, metric, coord_names, emitter, report):
+    """HyperparameterTuner seam: search per-coordinate reg weights
+    against the validation metric, then refit the winning point."""
+    from photon_ml_spark import events
+
+    history = []
+
+    def evaluate(params: dict) -> float:
+        _check_overrides(params, coord_names, "tuner point")
+        m = metric(fit(params))
+        emitter.send_event(
+            events.OptimizationLogEvent(
+                index=len(history), reg_weights=dict(params), metric=m,
+            )
+        )
+        history.append((dict(params), m))
+        return m
+
+    found = tuner.search(
+        evaluate, n=int(cfg.get("tuner_iterations", 10)), maximize=True
+    )
+    best_params, best_value = found["best_params"], found["best_value"]
+    # a custom tuner may return a reconstructed/rounded point not
+    # value-identical to any history entry — fall back to -1 (unknown
+    # index) instead of raising after all the expensive evaluations
+    # but before the refit
+    emitter.send_event(
+        events.ModelSelectionEvent(
+            index=next(
+                (
+                    i for i, (p, v) in enumerate(history)
+                    if p == best_params and v == best_value
+                ),
+                -1,
+            ),
+            reg_weights=dict(best_params),
+            metric=best_value,
+        )
+    )
+    report["tuner"] = {
+        "evaluations": [{"config": p, "metric": v} for p, v in history],
+        "best": {"config": best_params, "metric": best_value},
+    }
+    return fit(best_params)
+
+
+def _sweep(cfg, sweep, fit, metric, coords, emitter, report, save,
+           candidates_dir):
+    """Explicit reg-weight sweep, best validation metric wins; with
+    ``candidates_dir`` (ModelOutputMode ALL) every candidate is saved."""
+    from photon_ml_spark import events
+
+    # warm_start_sweep (legacy Driver useWarmStart parity): fits run in
+    # DESCENDING regularization order (ModelTraining.scala:168
+    # sortWith(_ >= _) — heavier shrinkage converges fastest from zero),
+    # each seeded by the previous λ's model. Report entries keep their
+    # original sweep indexes either way.
+    entries = list(enumerate(sweep))
+    warm = bool(cfg.get("warm_start_sweep", False))
+    if warm:
+        # sort on each entry's EFFECTIVE per-coordinate weights — an
+        # override dict omitting a coordinate means "use the
+        # coordinate's configured reg_param", not 0.0
+        defaults = [(c.name, float(c.reg_param)) for c in coords]
+        entries.sort(
+            key=lambda e: tuple(float(e[1].get(n, d)) for n, d in defaults),
+            reverse=True,
+        )
+    results = []  # (index, overrides, metric) — models not retained
+    best = None  # (metric, index, overrides, fitted)
+    prev_fitted = None
+    for i, overrides in entries:
+        fitted = fit(
+            overrides,
+            warm_from=prev_fitted.model if warm and prev_fitted else None,
+        )
+        prev_fitted = fitted
+        m = metric(fitted)
+        # Driver.scala:179,409 parity: one optimization-log event per
+        # regularization weight, same as the tuner
+        emitter.send_event(
+            events.OptimizationLogEvent(
+                index=i, reg_weights=dict(overrides), metric=m,
+            )
+        )
+        results.append((i, overrides, m))
+        if best is None or m > best[0]:
+            best = (m, i, overrides, fitted)
+        if candidates_dir is not None:
+            save(fitted.model, f"{candidates_dir}/{i}")
+    report["sweep"] = [
+        {"index": i, "config": ov, "metric": m} for i, ov, m in results
+    ]
+    report["best"] = {"index": best[1], "config": best[2], "metric": best[0]}
+    emitter.send_event(
+        events.ModelSelectionEvent(
+            index=best[1], reg_weights=dict(best[2]), metric=best[0],
+        )
+    )
+    return best[3]
+
+
+def _fixed_effect_variances(cfg, spark, fitted, assembled, coord_shard,
+                            dims, norm_tables) -> dict:
+    """varianceComputationType (GameTrainingDriver; M10/A3): coefficient
+    variances of each FIXED coordinate at the CD optimum — the
+    coordinate's local problem sees the full summed margin as offset,
+    so the full offset-inclusive margin is its exact curvature point.
+    Computed in the (possibly normalized) training space, then scaled
+    back by factor² — exact for the shift-free kinds; under
+    standardization the intercept slot keeps its transformed-space
+    variance (the shift adjustment's cross-covariances are not
+    tracked, same simplification the per-slot SIMPLE path makes by
+    ignoring off-diagonals). Returns ``{coordinate: table}``."""
+    vc = _variance_kind(cfg)
+    if vc == "none":
+        return {}
+    from pyspark.sql import functions as F
+
+    from photon_ml_spark.ml.variance import (
+        simple_variance,
+        sparse_full_hessian_variance,
+        sparse_hessian_diagonal,
+    )
+
+    family = cfg.get("family", "binomial")
+    scored_tr = _with_eval_margin(fitted.transform(assembled))
+    variance_tables = {}
+    for name, c in fitted.model.configs.items():
+        if c.kind != "fixed":
+            continue
+        s = coord_shard[name]
+        if vc == "simple":
+            hd = sparse_hessian_diagonal(
+                scored_tr, f"{s}_indices", f"{s}_values",
+                margin_col="__eval_margin", weight_col="weight",
+                family=family, l2=c.reg_param, dim=dims[s],
+            )
+            vt = simple_variance(hd).select("feature_index", "variance")
+        else:
+            rows = sparse_full_hessian_variance(
+                scored_tr, dims[s], f"{s}_indices", f"{s}_values",
+                margin_col="__eval_margin", weight_col="weight",
+                family=family, l2=c.reg_param,
+            )
+            vt = spark.createDataFrame(
+                rows, "feature_index long, variance double"
+            )
+        if norm_tables.get(s) is not None:
+            vt = vt.join(
+                F.broadcast(norm_tables[s]), "feature_index", "left"
+            ).select(
+                "feature_index",
+                (
+                    F.col("variance")
+                    * F.pow(F.coalesce(F.col("factor"), F.lit(1.0)), 2)
+                ).alias("variance"),
+            )
+        variance_tables[name] = vt
+    return variance_tables
+
+
+def _evaluate_selected(cfg: dict, fitted, frame, report: dict) -> None:
+    """``per_group_evaluation`` (savePerGroupEvaluationResult,
+    GameTrainingDriver.scala:878-901; written even with output_mode
+    none) and ``evaluators`` (same grammar as the score driver) of the
+    selected model over ``frame``."""
     pge = cfg.get("per_group_evaluation")
     if pge:
-        # savePerGroupEvaluationResult parity (GameTrainingDriver
-        # .scala:878-901 + A11 MultiEvaluator): per-group metric of
-        # the selected model over the validation (or training)
-        # frame, written beside the model. Independent of output_mode:
-        # the evaluation needs only output_dir (always configured), and
-        # output_mode=none + per_group_evaluation is exactly the
-        # "evaluate without persisting models" run.
         from photon_ml_spark.functions import metrics
 
-        frame = (
-            validation_frame if validation_frame is not None else assembled
-        )
-        scored = _eval_scored(fitted, frame)
+        scored = _with_eval_margin(fitted.transform(frame))
         group = pge["group_col"]
         kind = pge.get("metric", "auc")
         if kind == "auc":
@@ -1311,75 +1335,29 @@ def _train_impl(cfg: dict, spark: SparkSession, emitter, tuner) -> None:
             raise ValueError(
                 "per_group_evaluation.metric must be auc|precision_at_k"
             )
-        per_group.write.mode("overwrite").parquet(
-            f"{out}/group-evaluation"
-        )
+        out = cfg["output_dir"]
+        per_group.write.mode("overwrite").parquet(f"{out}/group-evaluation")
         report["group_evaluation"] = f"{out}/group-evaluation"
     if cfg.get("evaluators"):
-        # GameDriver's `evaluators` param applied at train time: the
-        # requested reference-named metrics over the selected model's
-        # validation (or training) scores — same grammar as the score
-        # driver (_evaluate_scores)
-        frame = (
-            validation_frame if validation_frame is not None else assembled
-        )
         report["evaluation"] = _evaluate_scores(
             fitted.transform(frame), cfg["evaluators"]
         )
-    if output_mode != "none":
-        # back to original space BEFORE persisting: the saved model
-        # scores RAW data (NormalizationContext.scala:77-94 algebra) —
-        # β_j = β'_j·factor_j, intercept absorbs the shifts; per-entity
-        # tables are backmapped as a distributed transform
-        save_game_model(
-            _backmapped_model(fitted.model), out, spark,
-            sparsity_threshold=cfg.get("sparsity_threshold", 0.0),
-            dictionary={
-                n: dictionaries[coord_shard[n]] for n in coord_shard
-            },
-        )
-        if multi_shard:
-            # per-shard dictionaries + the shard definitions, so the
-            # score driver reassembles every shard with the TRAINING
-            # vocabulary and bag unions (the reference persists one
-            # index map per shard the same way)
-            from photon_ml_spark.sources.model_io import _hadoop_write_text
 
-            for s, sh in shard_cfgs.items():
-                dictionaries[s].write.mode("overwrite").parquet(
-                    f"{out}/feature-dictionaries/{s}"
-                )
-            _hadoop_write_text(
-                spark,
-                f"{out}/feature-shards.json",
-                json.dumps(
-                    {
-                        "shards": {
-                            s: {
-                                "bags": list(sh.feature_bags),
-                                "has_intercept": sh.has_intercept,
-                            }
-                            for s, sh in shard_cfgs.items()
-                        }
-                    },
-                    indent=2,
-                ),
-            )
-        else:
-            dictionaries[sole_shard].write.mode("overwrite").parquet(
-                f"{out}/feature-dictionary"
-            )
-        for name, vt in variance_tables.items():
-            vt.join(
-                F.broadcast(dictionaries[coord_shard[name]]),
-                "feature_index",
-                "left",
-            ).write.mode("overwrite").parquet(
-                f"{out}/fixed-effect/{name}/variances"
-            )
-        if variance_tables:
-            report["variances"] = sorted(variance_tables)
-    print(json.dumps(report))
+
+def _save_trained(spark, save, fitted, out, shard_cfgs, dictionaries,
+                  coord_shard, variance_tables) -> None:
+    """The selected model plus its feature space, so the score driver
+    reassembles every shard with the TRAINING vocabulary, and the
+    dictionary-labeled variance tables."""
+    from photon_ml_spark.sources.model_io import write_feature_space
+
+    save(fitted.model, out)
+    write_feature_space(
+        spark, out,
+        None if shard_cfgs is None else _shard_specs(shard_cfgs),
+        dictionaries, variance_tables,
+        {n: dictionaries[coord_shard[n]] for n in variance_tables},
+    )
 
 
 @scope()
@@ -1397,11 +1375,15 @@ def index(cfg: dict, spark: SparkSession) -> None:
     allowlists the dictionary (GLMSuite.getSelectedFeatureSetFromFile
     flow, applied as a semi-join), or ``{"bags_dir": <path>}`` pointing
     at a ``bags`` driver output (per-bag name\\tterm text lists —
-    the reference's NameAndTermFeatureBagsDriver artifact). Output
-    layout matches what ``train``
-    persists beside a model (``{output_dir}/feature-dictionary``), so
-    ``train`` consumes it via ``dictionary_input``."""
+    the reference's NameAndTermFeatureBagsDriver artifact). The output
+    is a single-shard feature space in the layout ``train`` persists
+    beside a model (``model_io.write_feature_space``), so ``train``
+    consumes it via ``dictionary_input``."""
     from photon_ml_spark.sources import featurize
+    from photon_ml_spark.sources.model_io import (
+        read_feature_space,
+        write_feature_space,
+    )
 
     _validate_cfg_keys(cfg, "index")
     df = _read_input(spark, cfg)
@@ -1435,8 +1417,8 @@ def index(cfg: dict, spark: SparkSession) -> None:
         selected_features=selected,
     )
     out = cfg["output_dir"]
-    dictionary.write.mode("overwrite").parquet(f"{out}/feature-dictionary")
-    n = spark.read.parquet(f"{out}/feature-dictionary").count()
+    write_feature_space(spark, out, None, {"features": dictionary})
+    n = read_feature_space(spark, out)[1]["features"].count()
     print(
         json.dumps(
             {"status": "indexed", "n_features": n, "output_dir": out}
@@ -1470,6 +1452,7 @@ def bags(cfg: dict, spark: SparkSession) -> None:
     print(json.dumps({"status": "bags", "bags": counts, "output_dir": out}))
 
 
+@scope()
 def _evaluate_scores(scored, evaluators: list) -> dict:
     """Scoring-time evaluation — the reference scoring driver's
     ``evaluators`` param (GameScoringDriver.scala:180 →
@@ -1486,31 +1469,17 @@ def _evaluate_scores(scored, evaluators: list) -> dict:
     Metrics are computed on the OFFSET-INCLUSIVE margin against the
     ``response`` column; an unknown name or a label-less frame raises
     (fail fast, never a silently empty evaluation)."""
-    from pyspark.sql import functions as F
+    from photon_ml_spark.functions import metrics
 
     if "response" not in scored.columns:
         raise ValueError(
             "evaluators need a 'response' label column on the scoring "
             "input — score without evaluators, or add labels"
         )
-    off = (
-        F.coalesce(F.col("offset"), F.lit(0.0))
-        if "offset" in scored.columns
-        else F.lit(0.0)
-    )
     # one scoring pass feeds every requested metric: without the
     # persist each .first() below re-executes the full scoring plan
     # (random-effect joins included) once per evaluator
-    with scope():
-        sdf = persist(
-            scored.withColumn("__eval_margin", F.col("score") + off)
-        )
-        return _evaluate_scores_body(sdf, evaluators)
-
-
-def _evaluate_scores_body(sdf, evaluators) -> dict:
-    from photon_ml_spark.functions import metrics
-
+    sdf = persist(_with_eval_margin(scored))
     m, lbl = "__eval_margin", "response"
     loss_kinds = {
         "LOGISTIC_LOSS": "logistic",
@@ -1571,7 +1540,7 @@ def _evaluate_scores_body(sdf, evaluators) -> dict:
 def score(cfg: dict, spark: SparkSession) -> None:
     from photon_ml_spark.sources.model_io import (
         _hadoop_exists,
-        _hadoop_read_text,
+        read_feature_space,
     )
 
     _validate_cfg_keys(cfg, "score")
@@ -1632,8 +1601,10 @@ def score(cfg: dict, spark: SparkSession) -> None:
         _score_body(cfg, spark, ref_dicts, model=model)
         return
 
-    shards_json = f"{model_dir}/feature-shards.json"
-    if _hadoop_exists(spark, shards_json):
+    shards, dictionaries = read_feature_space(
+        spark, model_dir, flat_shard=cfg.get("shard", "features")
+    )
+    if shards is not None:
         # multi-shard model: the shard definitions AND vocabularies are
         # the training run's saved artifacts — user-supplied shard keys
         # would be a second source of truth, so they are rejected
@@ -1643,22 +1614,11 @@ def score(cfg: dict, spark: SparkSession) -> None:
                 "feature-shards.json defines the shards — drop the "
                 "'shard'/'feature_bags' keys from the score config"
             )
-        shards = json.loads(_hadoop_read_text(spark, shards_json))["shards"]
         cfg = {**cfg, "feature_shards": shards}
-        dictionaries = {
-            s: persist(
-                spark.read.parquet(f"{model_dir}/feature-dictionaries/{s}"),
-                StorageLevel.MEMORY_AND_DISK_DESER,
-            )
-            for s in shards
-        }
-    else:
-        dictionaries = {
-            cfg.get("shard", "features"): persist(
-                spark.read.parquet(f"{model_dir}/feature-dictionary"),
-                StorageLevel.MEMORY_AND_DISK_DESER,
-            )
-        }
+    dictionaries = {
+        s: persist(d, StorageLevel.MEMORY_AND_DISK_DESER)
+        for s, d in dictionaries.items()
+    }
     _score_body(cfg, spark, dictionaries)
 
 
@@ -2010,32 +1970,22 @@ def curate(cfg: dict, spark: SparkSession) -> None:
             report["after_near_dedup"] = docs.count()
             _stamp("near_dedup")
     elif nd:
-        # default path: exact-duplicate sets collapse to one
-        # representative BEFORE the LSH bucket self-join (a corpus with
+        # exact-duplicate sets collapse to one representative BEFORE
+        # the LSH bucket self-join (a corpus with
         # millions of copies of one boilerplate page otherwise explodes
         # that join quadratically — the hot-bucket hazard), and the
         # downstream consumers (cluster_and_keep here, leakage_safe_
         # split below) take the LINEAR rep-pair + member→rep star edge
         # list — same connected components as the full pair relation,
-        # never the within-group cliques. `collapse_exact: false`
-        # restores the direct pipeline.
-        if nd.get("collapse_exact", True):
-            rep_pairs, membership = dedup.minhash_lsh_collapsed(
-                docs, threshold=nd.get("threshold", 0.5),
-                n=nd.get("n", 2), tokens_col=TOK,
-            )
-            pairs = persist(
-                dedup.neardup_cluster_edges(rep_pairs, membership),
-                StorageLevel.MEMORY_AND_DISK_DESER,
-            )
-        else:
-            pairs = persist(
-                dedup.minhash_lsh_dedup(
-                    docs, threshold=nd.get("threshold", 0.5),
-                    n=nd.get("n", 2), tokens_col=TOK,
-                ).select("id_a", "id_b"),
-                StorageLevel.MEMORY_AND_DISK_DESER,
-            )
+        # never the within-group cliques.
+        rep_pairs, membership = dedup.minhash_lsh_collapsed(
+            docs, threshold=nd.get("threshold", 0.5),
+            n=nd.get("n", 2), tokens_col=TOK,
+        )
+        pairs = persist(
+            dedup.neardup_cluster_edges(rep_pairs, membership),
+            StorageLevel.MEMORY_AND_DISK_DESER,
+        )
         if cfg.get("split"):
             # split consumes the full clusters later; materialize the
             # cached pair relation NOW so the LSH cost lands on THIS
@@ -2312,9 +2262,9 @@ def import_model(cfg: dict, spark: SparkSession) -> None:
     from dataclasses import replace as _replace
 
     from photon_ml_spark.sources.model_io import (
-        _hadoop_write_text,
         load_photon_game_model,
         save_game_model,
+        write_feature_space,
     )
 
     _validate_cfg_keys(cfg, "import_model")
@@ -2334,9 +2284,7 @@ def import_model(cfg: dict, spark: SparkSession) -> None:
                 indices_col=f"{shard_name}_indices",
                 values_col=f"{shard_name}_values",
             )
-        dicts[ref_shard].write.mode("overwrite").parquet(
-            f"{out}/feature-dictionary"
-        )
+        shards = None
         coord_dict = {n: dicts[ref_shard] for n in model.configs}
     else:
         fs = cfg.get("feature_shards")
@@ -2348,37 +2296,24 @@ def import_model(cfg: dict, spark: SparkSession) -> None:
             )
         for sid in shard_ids:
             _validate_stage_keys(fs[sid], "feature_shards{}")
-            dicts[sid].write.mode("overwrite").parquet(
-                f"{out}/feature-dictionaries/{sid}"
-            )
-        _hadoop_write_text(
-            spark,
-            f"{out}/feature-shards.json",
-            json.dumps({"shards": {
-                sid: {
-                    "bags": list(fs[sid].get("bags", ["features"])),
-                    "has_intercept": bool(
-                        fs[sid].get("has_intercept", False)
-                    ),
-                }
-                for sid in shard_ids
-            }}),
-        )
+        shards = {
+            sid: {
+                "bags": list(fs[sid].get("bags", ["features"])),
+                "has_intercept": bool(fs[sid].get("has_intercept", False)),
+            }
+            for sid in shard_ids
+        }
         coord_dict = {
             n: dicts[c.indices_col[: -len("_indices")]]
             for n, c in model.configs.items()
         }
     save_game_model(model, out, spark, dictionary=coord_dict)
-    # imported σ² land where incremental_training looks for them —
-    # {out}/fixed-effect/{name}/variances (feature_key, feature_index,
-    # variance; the intercept row keeps a NULL index since loader
-    # dictionaries carry no intercept slot, routed by key in
-    # _fixed_prior) — so a retrain-with-prior from this import uses
-    # precision 1/σ² instead of the plain-L2 fallback
-    for name, vt in model.variances.items():
-        vt.write.mode("overwrite").parquet(
-            f"{out}/fixed-effect/{name}/variances"
-        )
+    # imported σ² land where incremental_training looks for them
+    # (feature_key, feature_index, variance; the intercept row keeps a
+    # NULL index since loader dictionaries carry no intercept slot,
+    # routed by key in _fixed_prior) — so a retrain-with-prior from
+    # this import uses precision 1/σ² instead of the plain-L2 fallback
+    write_feature_space(spark, out, shards, dicts, model.variances)
     print(json.dumps({
         "status": "imported",
         "output_dir": out,
@@ -2396,38 +2331,24 @@ def export_model(cfg: dict, spark: SparkSession) -> None:
     `import-model` produced) in the REFERENCE toolchain's Avro layout,
     so models trained here keep serving through existing
     reference-based consumers. Dictionaries come from the native dir's
-    saved feature space (feature-dictionary / feature-dictionaries/
-    {shard}); the export refuses a model saved without one (name/term
-    labels are the wire format)."""
+    saved feature space (``model_io.read_feature_space``); the export
+    refuses a model saved without one (name/term labels are the wire
+    format)."""
     from photon_ml_spark.sources.model_io import (
-        _hadoop_exists,
-        _hadoop_read_text,
         load_game_model,
+        read_feature_space,
+        read_variance_tables,
         save_photon_game_model,
     )
 
     _validate_cfg_keys(cfg, "export_model")
     mdir = cfg["model_dir"]
     model = load_game_model(mdir, spark)
-    shards_json = f"{mdir}/feature-shards.json"
-    if _hadoop_exists(spark, shards_json):
-        shard_ids = sorted(
-            json.loads(_hadoop_read_text(spark, shards_json))["shards"]
-        )
-        dictionaries = {
-            s: spark.read.parquet(f"{mdir}/feature-dictionaries/{s}")
-            for s in shard_ids
-        }
-    else:
-        if not _hadoop_exists(spark, f"{mdir}/feature-dictionary"):
-            raise ValueError(
-                f"{mdir!r} has no saved feature dictionary — the "
-                "reference layout writes (name, term) labels; retrain "
-                "or re-import with a dictionary"
-            )
-        d = spark.read.parquet(f"{mdir}/feature-dictionary")
+    shards, dictionaries = read_feature_space(spark, mdir)
+    if shards is None:
         # single-shard: every coordinate's indices_col shares one
         # prefix — map the dictionary under each distinct shard name
+        (d,) = dictionaries.values()
         dictionaries = {
             c.indices_col[: -len("_indices")]: d
             for c in model.configs.values()
@@ -2436,11 +2357,10 @@ def export_model(cfg: dict, spark: SparkSession) -> None:
     # tables beside the model — put them on the wire
     # (BayesianLinearModelAvro.variances) so reference-side incremental
     # learning (PriorDistribution.scala:23-120) keeps the prior
-    variance_tables = {}
-    for name, c in model.configs.items():
-        vpath = f"{mdir}/fixed-effect/{name}/variances"
-        if c.kind == "fixed" and _hadoop_exists(spark, vpath):
-            variance_tables[name] = spark.read.parquet(vpath)
+    variance_tables = read_variance_tables(
+        spark, mdir,
+        [n for n, c in model.configs.items() if c.kind == "fixed"],
+    )
     save_photon_game_model(
         model, dictionaries, cfg["output_dir"], spark,
         variance_tables=variance_tables or None,

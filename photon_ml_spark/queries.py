@@ -60,27 +60,16 @@ def r6(c) -> F.Column:
     return F.round(c, 6)
 
 
-# Import side-effect modules that register queries.
+# Import side-effect modules that register queries. A module that fails
+# to import raises here: a silently skipped module would shrink the gate.
 def _load_all_registrations():
-    from photon_ml_spark import queries_core  # noqa: F401
-    try:
-        from photon_ml_spark import queries_ml  # noqa: F401
-    except ImportError:
-        pass
-    try:
-        from photon_ml_spark import queries_pipeline  # noqa: F401
-    except ImportError:
-        pass
-    try:
-        from photon_ml_spark import queries_streaming  # noqa: F401
-    except ImportError:
-        pass
+    import photon_ml_spark.queries_core  # noqa: F401
+    import photon_ml_spark.queries_ml  # noqa: F401
+    import photon_ml_spark.queries_pipeline  # noqa: F401
+    import photon_ml_spark.queries_streaming  # noqa: F401
     # merged suite queries: folds near-duplicate registrations into
     # per-family gate rows (must load LAST — it captures + re-registers)
-    try:
-        from photon_ml_spark import queries_merged  # noqa: F401
-    except ImportError:
-        pass
+    import photon_ml_spark.queries_merged  # noqa: F401
 
 
 # Explicit registry order. The driver's correctness gate records the
@@ -155,16 +144,7 @@ GATE_ORDER = [
 
 def all_queries() -> dict[str, QuerySpec]:
     _load_all_registrations()
-    ordered: dict[str, QuerySpec] = {}
-    for name in GATE_ORDER:
-        # a GATE_ORDER name may be absent when its optional query
-        # module failed to import (the tolerance _load_all_registrations
-        # provides) — degrade to the loadable subset instead of taking
-        # the whole registry down; tests/test_oracle.py pins the full
-        # expected set when everything imports
-        if name in QUERY_REGISTRY:
-            ordered[name] = QUERY_REGISTRY[name]
-    for name in sorted(QUERY_REGISTRY):
-        if name not in ordered:
-            ordered[name] = QUERY_REGISTRY[name]
+    ordered = {name: QUERY_REGISTRY[name] for name in GATE_ORDER}
+    for name in sorted(set(QUERY_REGISTRY) - set(ordered)):
+        ordered[name] = QUERY_REGISTRY[name]
     return ordered

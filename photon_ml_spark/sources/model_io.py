@@ -10,6 +10,14 @@ are parquet:
     <dir>/fixed-effect/<name>/coefficients/   (feature_index, feature_key?, coefficient)
     <dir>/random-effect/<name>/models/        (entity, coefficients, intercept, …)
 
+plus the feature space the model is indexed by (``write_feature_space``
+/ ``read_feature_space``), in one of two layouts:
+
+    <dir>/feature-dictionary/                 single shard (feature_key, feature_index)
+    <dir>/feature-dictionaries/<shard>/       one dictionary per shard, and
+    <dir>/feature-shards.json                 {"shards": {shard: {bags, has_intercept}}}
+    <dir>/fixed-effect/<name>/variances/      optional σ² per fixed coordinate
+
 Sparsification (P10): coefficients with |value| < threshold are
 dropped at save (modelSparsityThreshold, GameTrainingDriver.scala:
 166-169); load reconstitutes dense arrays with zeros.
@@ -162,6 +170,84 @@ def load_game_model(path: str, spark: SparkSession) -> GameModel:
                 f"{path}/random-effect/{name}/models"
             )
     return model
+
+
+def write_feature_space(
+    spark: SparkSession,
+    path: str,
+    shards: dict | None,
+    dictionaries: dict[str, DataFrame],
+    variance_tables: dict[str, DataFrame] | None = None,
+    variance_labels: dict[str, DataFrame] | None = None,
+) -> None:
+    """Persist the feature space beside a model. ``shards`` maps each
+    shard to ``{"bags": [...], "has_intercept": bool}``; ``None`` writes
+    the flat single-shard layout from the one entry of ``dictionaries``.
+    ``variance_tables`` maps fixed coordinates to their σ² tables; a
+    coordinate in ``variance_labels`` has its table joined with that
+    dictionary for feature keys."""
+    if shards is None:
+        (d,) = dictionaries.values()
+        d.write.mode("overwrite").parquet(f"{path}/feature-dictionary")
+    else:
+        for s in shards:
+            dictionaries[s].write.mode("overwrite").parquet(
+                f"{path}/feature-dictionaries/{s}"
+            )
+        _hadoop_write_text(
+            spark,
+            f"{path}/feature-shards.json",
+            json.dumps({"shards": shards}, indent=2),
+        )
+    for name, vt in (variance_tables or {}).items():
+        if name in (variance_labels or {}):
+            vt = vt.join(
+                F.broadcast(variance_labels[name]), "feature_index", "left"
+            )
+        vt.write.mode("overwrite").parquet(
+            f"{path}/fixed-effect/{name}/variances"
+        )
+
+
+def saved_shard_specs(spark: SparkSession, path: str) -> dict | None:
+    """The shard specs a multi-shard model dir was saved with, or
+    ``None`` for any other dir."""
+    shards_json = f"{path}/feature-shards.json"
+    if not _hadoop_exists(spark, shards_json):
+        return None
+    return json.loads(_hadoop_read_text(spark, shards_json))["shards"]
+
+
+def read_feature_space(
+    spark: SparkSession, path: str, flat_shard: str = "features"
+) -> tuple[dict | None, dict[str, DataFrame]]:
+    """``(shard specs or None, {shard: dictionary})`` saved under
+    ``path`` by ``write_feature_space``; the legacy flat layout has no
+    specs and its one dictionary is keyed by ``flat_shard``."""
+    shards = saved_shard_specs(spark, path)
+    if shards is not None:
+        return shards, {
+            s: spark.read.parquet(f"{path}/feature-dictionaries/{s}")
+            for s in shards
+        }
+    if not _hadoop_exists(spark, f"{path}/feature-dictionary"):
+        raise ValueError(
+            f"{path!r} has no saved feature dictionary — the "
+            "reference layout writes (name, term) labels; retrain "
+            "or re-import with a dictionary"
+        )
+    return None, {flat_shard: spark.read.parquet(f"{path}/feature-dictionary")}
+
+
+def read_variance_tables(
+    spark: SparkSession, path: str, names
+) -> dict[str, DataFrame]:
+    """{name: σ² table} for the fixed coordinates ``names`` saved with one."""
+    return {
+        name: spark.read.parquet(f"{path}/fixed-effect/{name}/variances")
+        for name in names
+        if _hadoop_exists(spark, f"{path}/fixed-effect/{name}/variances")
+    }
 
 
 def save_scores(

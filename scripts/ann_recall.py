@@ -60,6 +60,9 @@ def jittered_corpus(spark, sf_dir: str, replicas: int):
 
 def run(spark, sf_dir: str, replicas: int, k: int, cells: int,
         n_queries: int, workdir: str) -> dict:
+    from pyspark.storagelevel import StorageLevel
+
+    from photon_ml_spark.materialize import persist, release
     from photon_ml_spark.operators.similarity import (
         cosine_topk,
         ivf_topk_from_index,
@@ -67,15 +70,20 @@ def run(spark, sf_dir: str, replicas: int, k: int, cells: int,
         save_ivf_index,
     )
 
-    corpus = jittered_corpus(spark, sf_dir, replicas).cache()
+    corpus = persist(
+        jittered_corpus(spark, sf_dir, replicas), StorageLevel.MEMORY_AND_DISK_DESER
+    )
     n = corpus.count()
     step = max(n // n_queries, 1)
-    queries = corpus.filter(
-        F.pmod(F.col("vec_id"), F.lit(step)) == 0
-    ).limit(n_queries).cache()
+    queries = persist(
+        corpus.filter(
+            F.pmod(F.col("vec_id"), F.lit(step)) == 0
+        ).limit(n_queries),
+        StorageLevel.MEMORY_AND_DISK_DESER,
+    )
     nq = queries.count()
 
-    truth = cosine_topk(corpus, queries, k).cache()
+    truth = persist(cosine_topk(corpus, queries, k), StorageLevel.MEMORY_AND_DISK_DESER)
     truth.count()
 
     curves: dict[str, dict[str, float]] = {}
@@ -104,9 +112,9 @@ def run(spark, sf_dir: str, replicas: int, k: int, cells: int,
                 )
                 rcurve[str(n_probe)] = round(recall_at_k(truth, pred, k), 4)
             curves[f"{name}_refine"] = rcurve
-    truth.unpersist()
-    queries.unpersist()
-    corpus.unpersist()
+    release(truth)
+    release(queries)
+    release(corpus)
     return {
         "recall_at_k": curves,
         "params": {

@@ -70,6 +70,9 @@ def synth_frame(spark, dim: int):
 
 
 def main() -> None:
+    from pyspark.storagelevel import StorageLevel
+
+    from photon_ml_spark.materialize import persist, release
     from photon_ml_spark.ml import glm
     from photon_ml_spark.session import get_spark
 
@@ -79,7 +82,7 @@ def main() -> None:
     out: dict = {"rows": ROWS, "nnz": NNZ, "fits": {}}
     glr_cap = glm.GLR_MAX_FEATURES
     for dim in DIMS:
-        df = synth_frame(spark, dim).cache()
+        df = persist(synth_frame(spark, dim), StorageLevel.MEMORY_AND_DISK_DESER)
         df.count()
         cell: dict = {}
         engines = []
@@ -103,7 +106,7 @@ def main() -> None:
                 glm.GLR_MAX_FEATURES = glr_cap
         out["fits"][str(dim)] = cell
         print(f"dim={dim}: {cell}", file=sys.stderr)
-        df.unpersist()
+        release(df)
     print(json.dumps(out))
     spark.stop()
 

@@ -125,33 +125,42 @@ def _flagship_rows(spark, sf_dir: str):
     """The flagship fit + score, returning a comparable result set
     (rounded scores per uid) instead of just a count."""
     from pyspark.sql import functions as F
+    from pyspark.storagelevel import StorageLevel
 
     from photon_ml_spark.datamodel import FeatureShardConfig
+    from photon_ml_spark.materialize import persist, release
     from photon_ml_spark.ml import glm, scoring
     from photon_ml_spark.sources import datasets, featurize
 
-    training = datasets.lineitem_training_frame(
-        spark, sf_dir, uid_strategy="stable"
-    ).cache()
-    dictionary = featurize.build_feature_dictionary(
-        training, ["features"], has_intercept=True
-    ).cache()
+    training = persist(
+        datasets.lineitem_training_frame(spark, sf_dir, uid_strategy="stable"),
+        StorageLevel.MEMORY_AND_DISK_DESER,
+    )
+    dictionary = persist(
+        featurize.build_feature_dictionary(
+            training, ["features"], has_intercept=True
+        ),
+        StorageLevel.MEMORY_AND_DISK_DESER,
+    )
     shard = FeatureShardConfig("features", ["features"])
-    assembled = featurize.assemble_shard(
-        training, dictionary, shard, strategy="map"
-    ).select(
-        "uid", "response", "offset", "weight",
-        "features_indices", "features_values",
-    ).cache()
+    assembled = persist(
+        featurize.assemble_shard(
+            training, dictionary, shard, strategy="map"
+        ).select(
+            "uid", "response", "offset", "weight",
+            "features_indices", "features_values",
+        ),
+        StorageLevel.MEMORY_AND_DISK_DESER,
+    )
     model = glm.fit_fixed_effect(assembled, dim=5, family="binomial")
     scored = scoring.score_literal(assembled, model)
     rows = {
         (r.uid, round(r.score, 6))
         for r in scored.select("uid", "score").collect()
     }
-    assembled.unpersist()
-    dictionary.unpersist()
-    training.unpersist()
+    release(assembled)
+    release(dictionary)
+    release(training)
     return rows
 
 

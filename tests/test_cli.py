@@ -2111,6 +2111,50 @@ def test_multi_shard_dictionary_input_and_prior_mismatch_guards(
 
 
 @pytest.mark.parametrize(
+    "dictionary_input, match",
+    [
+        ("index_dir", "dictionary_input must be a map"),
+        ({"shardA": "a", "shardC": "c"}, "names unknown shard"),
+        ({"shardA": "a"}, "must cover every configured shard"),
+    ],
+    ids=["not_a_map", "unknown_shard", "partial_map"],
+)
+def test_multi_shard_dictionary_input_config_errors(
+    spark, tmp_path, dictionary_input, match
+):
+    """With feature_shards, dictionary_input must be a map over the
+    configured shards that covers all of them (without
+    incremental_training). Each violation fails before any Spark job
+    runs."""
+    sc = spark.sparkContext
+    group = f"dictionary-input-{tmp_path.name}"
+    sc.setJobGroup(group, "dictionary_input config errors")
+    try:
+        with pytest.raises(ValueError, match=match):
+            cli.train(
+                {
+                    "input": str(tmp_path / "absent.parquet"),
+                    "feature_shards": {
+                        "shardA": {"bags": ["bag_a"]},
+                        "shardB": {"bags": ["bag_b"]},
+                    },
+                    "coordinates": [
+                        {"name": "global", "kind": "fixed",
+                         "shard": "shardA"},
+                    ],
+                    "dictionary_input": dictionary_input,
+                    "output_dir": str(tmp_path / "model"),
+                },
+                spark,
+            )
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+@pytest.mark.parametrize(
     "case",
     ["train", "train_raises", "score", "evaluator_error", "curate"],
 )

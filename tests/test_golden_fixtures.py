@@ -17,6 +17,7 @@ as DATA only).
 """
 
 import json
+import os
 import zlib
 
 import numpy as np
@@ -26,6 +27,10 @@ from pyspark.sql import functions as F
 from photon_ml_spark.sources.avro_io import read_avro, read_training_examples
 
 RES = "/root/reference/photon-client/src/integTest/resources"
+pytestmark = pytest.mark.skipif(
+    not os.path.isdir(RES),
+    reason=f"reference toolchain resources directory {RES} is absent",
+)
 DRIVER_IN = f"{RES}/DriverIntegTest/input"
 GAME = f"{RES}/GameIntegTest"
 

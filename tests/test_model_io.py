@@ -209,3 +209,76 @@ def test_export_random_effects_reference_layout_roundtrip(spark, tmp_path):
     # nonzero mass survives (slots re-indexed by the reloaded space)
     assert sorted(x for x in re["e1"][0] if x != 0) == [-2.0, 1.0]
     assert sorted(x for x in re["e2"][0] if x != 0) == [0.5]
+
+
+def _layout(root):
+    """Directories and non-data files under ``root``, relative to it."""
+    out = set()
+    for d, _, files in os.walk(root):
+        rel = os.path.relpath(d, root)
+        out.add(rel)
+        out |= {
+            os.path.normpath(os.path.join(rel, f)) for f in files
+            if not f.startswith(("part-", ".", "_"))
+        }
+    return out
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.select(*sorted(df.columns)).collect())
+
+
+@pytest.mark.parametrize("multi_shard", [False, True], ids=["flat", "shards"])
+def test_feature_space_round_trip(spark, tmp_path, multi_shard):
+    """write_feature_space + read_feature_space round-trip either
+    layout: the saved tree, the dictionary rows and the shard specs;
+    a labeled variance table gains its dictionary's feature keys."""
+    dicts = {
+        "a": spark.createDataFrame(
+            [("x\u0001", 0), ("(INTERCEPT)", 1)],
+            "feature_key string, feature_index long",
+        ),
+        "b": spark.createDataFrame(
+            [("y\u0001t", 0)], "feature_key string, feature_index long"
+        ),
+    }
+    variances = {
+        "global": spark.createDataFrame(
+            [(0, 0.5), (1, 2.0)], "feature_index long, variance double"
+        )
+    }
+    specs = {
+        "a": {"bags": ["bag_a"], "has_intercept": True},
+        "b": {"bags": ["bag_b", "bag_c"], "has_intercept": False},
+    }
+    if not multi_shard:
+        dicts, specs = {"a": dicts["a"]}, None
+    path = str(tmp_path / "model")
+    model_io.write_feature_space(
+        spark, path, specs, dicts, variances, {"global": dicts["a"]}
+    )
+
+    saved = (
+        {"feature-dictionaries", "feature-dictionaries/a",
+         "feature-dictionaries/b", "feature-shards.json"}
+        if multi_shard else {"feature-dictionary"}
+    )
+    assert _layout(path) == {
+        ".", "fixed-effect", "fixed-effect/global",
+        "fixed-effect/global/variances",
+    } | saved
+    got_specs, got = model_io.read_feature_space(spark, path, flat_shard="a")
+    assert got_specs == specs
+    assert sorted(got) == sorted(dicts)
+    for s, d in dicts.items():
+        assert _rows(got[s]) == _rows(d)
+    got_v = model_io.read_variance_tables(spark, path, ["global", "other"])
+    assert sorted(got_v) == ["global"]
+    assert _rows(got_v["global"]) == [
+        (0, "x\u0001", 0.5), (1, "(INTERCEPT)", 2.0)
+    ]
+
+
+def test_feature_space_missing_raises(spark, tmp_path):
+    with pytest.raises(ValueError, match="no saved feature dictionary"):
+        model_io.read_feature_space(spark, str(tmp_path))

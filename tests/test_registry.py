@@ -1,9 +1,12 @@
 """Registry integrity: the driver's correctness gate records the first
 50 entries of ``all_queries()``, whose order comes from ``GATE_ORDER``.
-``all_queries()`` tolerates a query module failing to import (optional
-deps), but in THIS environment every module must import — a silent
-import failure would shrink both the gate and the oracle test with no
-signal (ADVICE round-3 #2)."""
+A query module that fails to import makes ``all_queries()`` raise — a
+silent import failure would shrink both the gate and the oracle test
+with no signal."""
+
+import sys
+
+import pytest
 
 from photon_ml_spark.queries import GATE_ORDER, all_queries
 
@@ -27,3 +30,10 @@ def test_gate_order_has_no_duplicates_and_fits_window():
 def test_every_registered_query_has_a_runner():
     for name, spec in all_queries().items():
         assert callable(spec.run), name
+
+
+def test_query_module_import_failure_is_loud(monkeypatch):
+    # None in sys.modules makes the next import of that module fail
+    monkeypatch.setitem(sys.modules, "photon_ml_spark.queries_ml", None)
+    with pytest.raises(ImportError, match="queries_ml"):
+        all_queries()
