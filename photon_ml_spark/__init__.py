@@ -3,8 +3,9 @@
 A brand-new analytics/ML engine with the query and data-processing
 capabilities of the reference (GLM + GAME/GLMix mixed-effect training,
 scoring, evaluation, featurization), re-expressed Spark-first:
-DataFrames end-to-end, Catalyst-optimized plans, ``applyInPandas`` only
-where per-entity imperative logic genuinely requires it.
+DataFrames end-to-end, Catalyst-optimized plans, Python over Arrow
+batches (of entities, for the per-entity solves) only where imperative
+logic genuinely requires it.
 
 Layout (maps to SURVEY.md §2 operator inventory):
 

@@ -1265,6 +1265,7 @@ def _fixed_effect_variances(cfg, spark, fitted, assembled, coord_shard,
     vc = _variance_kind(cfg)
     if vc == "none":
         return {}
+    import pandas as pd
     from pyspark.sql import functions as F
 
     from photon_ml_spark.ml.variance import (
@@ -1293,8 +1294,10 @@ def _fixed_effect_variances(cfg, spark, fitted, assembled, coord_shard,
                 margin_col="__eval_margin", weight_col="weight",
                 family=family, l2=c.reg_param,
             )
+            # Arrow, not a list of tuples: no Python worker unpickles it
             vt = spark.createDataFrame(
-                rows, "feature_index long, variance double"
+                pd.DataFrame(rows, columns=["feature_index", "variance"]),
+                "feature_index long, variance double",
             )
         if norm_tables.get(s) is not None:
             vt = vt.join(

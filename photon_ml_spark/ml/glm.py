@@ -67,9 +67,16 @@ class FixedEffectGLM:
 
     def as_table(self, spark: SparkSession) -> DataFrame:
         """Model as DataFrame(feature_index long, coefficient double) —
-        the scalable representation (join-able, never driver-bound)."""
-        rows = [(int(i), float(c)) for i, c in enumerate(self.coefficients)]
-        return spark.createDataFrame(rows, "feature_index long, coefficient double")
+        the scalable representation (join-able, never driver-bound).
+        Built from a pandas frame so it crosses to the JVM as Arrow: a
+        list of tuples would start Python workers to unpickle it."""
+        import pandas as pd
+
+        coef = np.asarray(self.coefficients, dtype=np.float64)
+        pdf = pd.DataFrame(
+            {"feature_index": np.arange(len(coef), dtype=np.int64), "coefficient": coef}
+        )
+        return spark.createDataFrame(pdf, "feature_index long, coefficient double")
 
 
 #: spark.ml GeneralizedLinearRegression raises past this feature

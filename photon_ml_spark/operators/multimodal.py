@@ -64,6 +64,12 @@ def _digest_byte(digest_col, i: int):
     return F.conv(F.substring(digest_col, 2 * i + 1, 2), 16, 10).cast("int")
 
 
+def _fake_metric(value, zero):
+    """A fake decoder's metric, or the real decoders' failed-row
+    ``zero`` where the payload, and so its ``__dig`` digest, is NULL."""
+    return F.when(F.col("__dig").isNotNull(), value).otherwise(zero)
+
+
 def _pil_available() -> bool:
     try:
         import PIL.Image  # noqa: F401
@@ -309,17 +315,19 @@ def decode_image(
         # no JVM↔Python transpose for the payload bytes. Values are
         # bit-identical to _fake_decode (same digest, same integer
         # arithmetic, same float division). The REAL decode paths below
-        # stay mapInPandas — they are the sanctioned Python site.
+        # stay mapInPandas — they are the sanctioned Python site. A
+        # NULL payload has a NULL digest and reads as the real decoders
+        # read a payload they cannot decode: zeros, decode_ok=False.
         dig = df.withColumn("__dig", F.sha2(F.col(payload_col), 256))
         b = lambda i: _digest_byte(F.col("__dig"), i)  # noqa: E731
         return dig.select(
             F.col("doc_id").cast("long").alias("doc_id"),
             F.col(payload_col).cast("binary").alias("payload"),
             F.col("media_type").cast("string").alias("media_type"),
-            (F.lit(16) + b(0) % 240).alias("width"),
-            (F.lit(16) + b(1) % 240).alias("height"),
-            (b(2) / F.lit(255.0)).alias("mean_luma"),
-            F.lit(True).alias("decode_ok"),
+            _fake_metric(F.lit(16) + b(0) % 240, 0).alias("width"),
+            _fake_metric(F.lit(16) + b(1) % 240, 0).alias("height"),
+            _fake_metric(b(2) / F.lit(255.0), 0.0).alias("mean_luma"),
+            F.col("__dig").isNotNull().alias("decode_ok"),
         )
 
     # decoder selection happens ONCE on the driver and is captured by
@@ -458,25 +466,26 @@ def decode_audio(
     if fake:
         # Catalyst rendering of _fake_audio_decode — see decode_image's
         # fake branch for the rationale (guide §4.1; bit-identical by
-        # construction)
+        # construction) and for its NULL-payload row
         dig = df.withColumn("__dig", F.sha2(F.col(payload_col), 256))
         b = lambda i: _digest_byte(F.col("__dig"), i)  # noqa: E731
         return dig.select(
             F.col("doc_id").cast("long").alias("doc_id"),
             F.col(payload_col).cast("binary").alias("payload"),
             F.col("media_type").cast("string").alias("media_type"),
-            (
+            _fake_metric(
                 F.element_at(
                     F.array(F.lit(8), F.lit(16), F.lit(22), F.lit(44)),
                     b(0) % 4 + 1,
                 )
-                * 1000
+                * 1000,
+                0,
             ).cast("int").alias("sample_rate"),
-            (F.lit(1000) + (b(1) * 256 + b(2)) * 37)
+            _fake_metric(F.lit(1000) + (b(1) * 256 + b(2)) * 37, 0)
             .cast("long")
             .alias("n_samples"),
-            (b(3) / F.lit(255.0)).alias("rms"),
-            F.lit(True).alias("decode_ok"),
+            _fake_metric(b(3) / F.lit(255.0), 0.0).alias("rms"),
+            F.col("__dig").isNotNull().alias("decode_ok"),
         )
 
     # decoder selection happens ONCE on the driver and is captured by
@@ -705,7 +714,7 @@ def decode_video(
     if fake:
         # Catalyst rendering of _fake_video_decode — see decode_image's
         # fake branch for the rationale (guide §4.1; bit-identical by
-        # construction)
+        # construction) and for its NULL-payload row
         dig = df.withColumn("__dig", F.sha2(F.col(payload_col), 256))
         b = lambda i: _digest_byte(F.col("__dig"), i)  # noqa: E731
         fps = F.element_at(
@@ -717,13 +726,13 @@ def decode_video(
             F.col("doc_id").cast("long").alias("doc_id"),
             F.col(payload_col).cast("binary").alias("payload"),
             F.col("media_type").cast("string").alias("media_type"),
-            (F.lit(32) + b(0) % 224).alias("width"),
-            (F.lit(32) + b(1) % 224).alias("height"),
-            fps.alias("fps"),
-            n_frames.alias("n_frames"),
-            (n_frames / fps).alias("duration_sec"),
-            (b(5) / F.lit(255.0)).alias("mean_luma"),
-            F.lit(True).alias("decode_ok"),
+            _fake_metric(F.lit(32) + b(0) % 224, 0).alias("width"),
+            _fake_metric(F.lit(32) + b(1) % 224, 0).alias("height"),
+            _fake_metric(fps, 0.0).alias("fps"),
+            _fake_metric(n_frames, 0).alias("n_frames"),
+            _fake_metric(n_frames / fps, 0.0).alias("duration_sec"),
+            _fake_metric(b(5) / F.lit(255.0), 0.0).alias("mean_luma"),
+            F.col("__dig").isNotNull().alias("decode_ok"),
         )
 
     use_av = _av_available()

@@ -409,9 +409,10 @@ def per_entity_cap(
     sorts within partitions; no driver involvement. ``order_cols``
     overrides the hash ordering (oracle determinism).
 
-    This cap is what makes ``applyInPandas`` per-entity solves safe:
-    it bounds the largest group (the reference's 2 GB/partition
-    assumption, RandomEffectDataset.scala:38-45).
+    This cap is what makes the per-entity solves over Arrow batches of
+    entities (ml/random_effects.py) safe: it bounds the rows one entity
+    carries into a batch (the reference's 2 GB/partition assumption,
+    RandomEffectDataset.scala:38-45).
     """
     if order_cols:
         order = [F.col(c) for c in order_cols]

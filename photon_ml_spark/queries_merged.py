@@ -1324,8 +1324,8 @@ FROM ({_SPEC["m2b_per_entity_poisson"].oracle.strip()}) m2b
 """,
     note="M2 per-entity solver suite, now four blocks: the round-3 "
     "ridge/subspace/exempt closed-form blocks (notes in queries_ml.py) "
-    "plus the POISSON family through the same applyInPandas Newton "
-    "solver, verified by its distributed stationarity oracle (m2b: "
+    "plus the POISSON family through the same Newton solver over Arrow "
+    "batches of entities, verified by its distributed stationarity oracle (m2b: "
     "coef/intercept carry the recomputed penalized gradient, which "
     "must round to 0) — variant-tagged union",
 )

@@ -8,7 +8,8 @@ Exactness conventions (see queries.py docstring):
   closed-form division applied identically on both sides
 - data-dependent double summands (Hessian) are quantized to an integer
   grid before summation
-- the per-entity ridge fit runs the REAL applyInPandas local solver;
+- the per-entity ridge fit runs the REAL local solver over Arrow
+  batches of entities;
   with integer-valued inputs its normal-equation entries are exact, so
   the solve is reproducible against the SQL closed form
 """
@@ -55,7 +56,7 @@ FROM closed WHERE entity % 5 = 0
 """,
     note="M2/M4/A6 + P7/J10/J12 per-entity solver suite in ONE gate row. "
     "'ridge': one ridge GLM per entity via the real "
-    "groupBy(entity).applyInPandas local Newton solver (gaussian, l2=10, "
+    "local Newton solver over Arrow batches of entities (gaussian, l2=10, "
     "intercept unpenalized) — integer-valued inputs make the normal "
     "equations exact, matched against the SQL closed form "
     "(RandomEffectCoordinate.scala:234-300, SingleNodeOptimizationProblem). "
@@ -865,11 +866,12 @@ SELECT CAST(l_suppkey AS VARCHAR) AS entity,
 FROM lineitem GROUP BY l_suppkey
 """,
     note="M13: per-entity smoothed-hinge SVM (photon-api/.../function/svm, "
-    "Rennie smoothing) via the applyInPandas Newton solver, verified by a "
-    "FIXED-POINT oracle: the penalized subgradient Σ dl/dm·x + λβ "
-    "(intercept unpenalized) is recomputed DISTRIBUTED at the returned "
-    "coefficients and must round to 0 per entity — the optimum itself has "
-    "no closed form, but its stationarity condition is checkable",
+    "Rennie smoothing) via the Newton solver over Arrow batches of "
+    "entities, verified by a FIXED-POINT oracle: the penalized "
+    "subgradient Σ dl/dm·x + λβ (intercept unpenalized) is recomputed "
+    "DISTRIBUTED at the returned coefficients and must round to 0 per "
+    "entity — the optimum itself has no closed form, but its "
+    "stationarity condition is checkable",
 )
 def m13_smoothed_hinge_svm(spark, sf_dir):
     from photon_ml_spark.ml.random_effects import fit_random_effects
@@ -1210,13 +1212,13 @@ SELECT CAST(l_suppkey AS VARCHAR) AS entity,
        CAST(COUNT(*) AS BIGINT) AS n_samples
 FROM lineitem WHERE l_suppkey < 40 GROUP BY l_suppkey
 """,
-    note="M2 poisson family (count response) through the applyInPandas "
-    "per-entity Newton solver, verified by a FIXED-POINT oracle like "
-    "m13: the penalized gradient Σ(exp(m) − y)·x + λβ (intercept "
-    "unpenalized) is recomputed DISTRIBUTED at the returned "
-    "coefficients and must round to 0 per entity "
-    "(PoissonLossFunction.scala; no closed form exists for the optimum "
-    "itself)",
+    note="M2 poisson family (count response) through the per-entity "
+    "Newton solver over Arrow batches of entities, verified by a "
+    "FIXED-POINT oracle like m13: the penalized gradient "
+    "Σ(exp(m) − y)·x + λβ (intercept unpenalized) is recomputed "
+    "DISTRIBUTED at the returned coefficients and must round to 0 per "
+    "entity (PoissonLossFunction.scala; no closed form exists for the "
+    "optimum itself)",
 )
 def m2b_per_entity_poisson(spark, sf_dir):
     from photon_ml_spark.ml.random_effects import fit_random_effects

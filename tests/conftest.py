@@ -10,7 +10,16 @@ SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="photon-ml-spark-tests", master="local[*]")
+    # The suite's inputs are tiny (sf0.001/sf0.01): 4 shuffle partitions
+    # instead of 32 cut task launches in each of its thousands of small
+    # jobs, and nothing reads the UI. On a 4-core box this took the
+    # full run from 1633 s to 1432 s with identical results.
+    s = get_spark(
+        app_name="photon-ml-spark-tests",
+        master="local[*]",
+        shuffle_partitions=4,
+        extra_conf={"spark.ui.enabled": "false"},
+    )
     yield s
 
 

@@ -1,11 +1,19 @@
-"""Random-effect (per-entity applyInPandas) training tests."""
+"""Random-effect training tests: per-entity solves over Arrow batches of
+entities (``mapInArrow``), checked against a driver-side loop."""
+
+import functools
+from collections import defaultdict
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from photon_ml_spark.datamodel import FeatureShardConfig
 from photon_ml_spark.ml import glm, random_effects, scoring
+from photon_ml_spark.ml.local_glm import fit_local_glm
 from photon_ml_spark.sources import datasets, featurize
 
 
@@ -180,7 +188,7 @@ def test_subspace_projection_matches_full_solve(spark, sf_dir):
 def test_skewed_entity_capped_before_fit(spark, sf_dir):
     """The 100 TB skew discipline: one entity 50x heavier than the rest
     is bounded by the T2 reservoir cap BEFORE the per-entity solve, so
-    no applyInPandas group exceeds the cap (the reference's
+    no entity's collected rows exceed the cap (the reference's
     one-entity-fits-one-partition invariant, RandomEffectDataset.scala:
     38-45) — and the capped fit still produces a usable model with
     rescaled weights compensating the sample loss."""
@@ -219,3 +227,216 @@ def test_skewed_entity_capped_before_fit(spark, sf_dir):
     rows = {r.entity: r for r in models.collect()}
     assert rows["hot"].n_samples == cap
     assert rows["hot"].converged
+
+
+# --- reference loop: every entity fit on the driver, one at a time ------
+
+REF_DIM = 5
+#: fixed before comparing: the two paths may only differ by the order of
+#: an entity's rows, which moves coefficients by ~1e-13
+REF_TOL = 1e-9
+
+
+def _reference_frame(spark, sf_dir, null_features=False):
+    """60 entities of ~100 rows; entity-dependent support (index
+    1 + entity % 3, never index 4), optionally NULL feature arrays on
+    every second line of an order."""
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    ent = F.col("l_orderkey") % 60
+    idx = F.array(F.lit(0).cast("long"), (F.lit(1) + ent % 3).cast("long"))
+    val = F.array(
+        (F.col("l_quantity") / 25.0).cast("double"),
+        (F.col("l_discount") * 10.0 - 0.5).cast("double"),
+    )
+    if null_features:
+        null = F.col("l_linenumber") == 2
+        idx = F.when(~null, idx)
+        val = F.when(~null, val)
+    return li.select(
+        ent.cast("string").alias("entity"),
+        idx.alias("features_indices"),
+        val.alias("features_values"),
+        F.when(F.col("l_returnflag") == "R", 1.0).otherwise(0.0).alias("response"),
+        (F.lit(0.5) + (F.col("l_linenumber") % 3) * 0.25).alias("weight"),
+        ((F.col("l_tax") - 0.04) * 5.0).alias("offset"),
+    )
+
+
+def _reference_fit(rows, prior, dim=REF_DIM, min_samples=1, reg_param=1.0,
+                   compute_variance=None, project_subspace=False,
+                   lower_bounds=None, upper_bounds=None):
+    """The per-entity semantics of fit_random_effects, one
+    ``fit_local_glm`` call per entity over its collected rows."""
+    by_entity = defaultdict(list)
+    for r in rows:
+        by_entity[r.entity].append(r)
+    out = {}
+    for e, rs in by_entity.items():
+        p = prior.get(e)
+        if len(rs) < min_samples and p is None:
+            continue
+        support = set(range(dim))
+        if project_subspace:
+            support = {i for r in rs for i in (r.features_indices or [])}
+            if p is not None:
+                support |= {int(i) for i in np.flatnonzero(p.coefficients)}
+        support = sorted(support)
+        pos = {g: k for k, g in enumerate(support)}
+        X = np.zeros((len(rs), len(support)))
+        for k, r in enumerate(rs):
+            for i, v in zip(r.features_indices or [], r.features_values or []):
+                X[k, pos[i]] = v
+        x0 = prior_mean = prior_prec = None
+        if p is not None:
+            x0 = np.array([p.coefficients[g] for g in support] + [p.intercept])
+            if getattr(p, "variances", None) is not None:
+                var = [p.variances[g] for g in support] + [p.intercept_variance]
+                prior_mean = x0.copy()
+                prior_prec = 1.0 / np.clip(var, 1e-12, None)
+        res = fit_local_glm(
+            X, np.array([r.response for r in rs]),
+            weight=np.array([r.weight for r in rs]),
+            offset=np.array([r.offset for r in rs]),
+            family="binomial", l2=reg_param, x0=x0, prior_mean=prior_mean,
+            prior_precision=prior_prec, max_iter=50, tol=1e-8,
+            compute_variance=compute_variance,
+            lower_bounds=None if lower_bounds is None else [lower_bounds[g] for g in support],
+            upper_bounds=None if upper_bounds is None else [upper_bounds[g] for g in support],
+        )
+        coef = np.zeros(dim)
+        coef[support] = res["coefficients"]
+        fit = dict(coefficients=coef, intercept=res["intercept"],
+                   n_samples=len(rs), n_iter=res["n_iter"],
+                   converged=res["converged"])
+        if compute_variance:
+            var = np.zeros(dim)
+            var[support] = res["variances"]
+            fit.update(variances=var, intercept_variance=res["intercept_variance"])
+        out[e] = fit
+    for e, p in prior.items():
+        if e not in by_entity:  # J3 copy: carried forward untrained
+            fit = dict(coefficients=np.array(p.coefficients), intercept=p.intercept,
+                       n_samples=0, n_iter=0, converged=True)
+            if compute_variance:
+                fit.update(variances=np.array(p.variances),
+                           intercept_variance=p.intercept_variance)
+            out[e] = fit
+    return out
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["plain", "min_samples", "prior", "full_variance", "subspace", "bounds",
+     "null_features"],
+)
+def test_matches_reference_loop(spark, sf_dir, case):
+    frame = _reference_frame(spark, sf_dir, null_features=case == "null_features")
+    kw = {}
+    prior_model = None
+    if case == "min_samples":
+        sizes = sorted(r[1] for r in frame.groupBy("entity").count().collect())
+        kw["min_samples"] = sizes[len(sizes) // 2]
+    elif case == "prior":
+        prior_model = random_effects.fit_random_effects(
+            frame, entity_col="entity", dim=REF_DIM, reg_param=1.0,
+            compute_variance="simple",
+        ).cache()
+        # entities 50-59 have no training rows: carried forward
+        frame = frame.filter(F.col("entity").cast("int") < 50)
+        kw["compute_variance"] = "simple"
+    elif case == "full_variance":
+        kw["compute_variance"] = "full"
+    elif case == "subspace":
+        kw["project_subspace"] = True
+    elif case == "bounds":
+        kw.update(lower_bounds=[-0.2] * REF_DIM, upper_bounds=[0.3] * REF_DIM)
+
+    got = {
+        r.entity: r.asDict()
+        for r in random_effects.fit_random_effects(
+            frame, entity_col="entity", dim=REF_DIM, reg_param=1.0,
+            prior_model=prior_model, **kw,
+        ).collect()
+    }
+    prior = {} if prior_model is None else {
+        r.entity: r for r in prior_model.collect()
+    }
+    want = _reference_fit(frame.collect(), prior, **kw)
+
+    assert got.keys() == want.keys()
+    if case == "min_samples":
+        assert 0 < len(want) < frame.select("entity").distinct().count()
+    if case == "prior":
+        assert sum(w["n_samples"] == 0 for w in want.values()) == 10
+    if case == "bounds":
+        assert any(np.isclose(w["coefficients"], 0.3).any() or
+                   np.isclose(w["coefficients"], -0.2).any()
+                   for w in want.values())
+    for e, w in want.items():
+        g = got[e]
+        for k in ("n_samples", "n_iter", "converged"):
+            assert g[k] == w[k], (e, k)
+        np.testing.assert_allclose(g["coefficients"], w["coefficients"],
+                                   rtol=0, atol=REF_TOL)
+        assert abs(g["intercept"] - w["intercept"]) <= REF_TOL
+        if "variances" in w:
+            np.testing.assert_allclose(g["variances"], w["variances"],
+                                       rtol=0, atol=REF_TOL)
+            assert abs(g["intercept_variance"] - w["intercept_variance"]) <= REF_TOL
+    if prior_model is not None:
+        prior_model.unpersist()
+
+
+# --- output side of one Arrow batch --------------------------------------
+
+SAMPLE = pa.struct([
+    ("idx", pa.list_(pa.int64())), ("val", pa.list_(pa.float64())),
+    ("y", pa.float64()), ("w", pa.float64()), ("o", pa.float64()),
+])
+
+
+def _entity_batch(n_entities, dim, seed=0):
+    """One mapInArrow input batch: entity e has 3 + e % 4 rows with two
+    nonzeros each."""
+    rng = np.random.default_rng(seed)
+    rows = [
+        [
+            {"idx": sorted(rng.choice(dim, 2, replace=False).tolist()),
+             "val": rng.normal(size=2).tolist(), "y": float(rng.random() < 0.5),
+             "w": 1.0, "o": 0.0}
+            for _ in range(3 + e % 4)
+        ]
+        for e in range(n_entities)
+    ]
+    return pa.RecordBatch.from_pydict(
+        {"__entity": [f"e{e}" for e in range(n_entities)], "__rows": rows},
+        schema=pa.schema([("__entity", pa.string()), ("__rows", pa.list_(SAMPLE))]),
+    )
+
+
+def test_wide_batch_output_is_flushed(spark, monkeypatch):
+    """A batch's fitted vectors go out once entities × dim reaches
+    _FLUSH_DOUBLES: several RecordBatches that together equal the
+    unsplit output (entities dropped by min_samples included). The
+    session is only needed to parse the DDL schema."""
+    dim = 8
+    batch = _entity_batch(12, dim)
+    solve = functools.partial(
+        random_effects._solve_batches, dim=dim, min_samples=4, project=False,
+        lower=None, upper=None,
+        schema=to_arrow_schema(StructType.fromDDL(random_effects.MODEL_SCHEMA_VAR)),
+        kernel=dict(family="binomial", l2=1.0, max_iter=50, tol=1e-8,
+                    compute_variance="full"),
+    )
+    whole = list(solve([batch]))
+    assert [b.num_rows for b in whole] == [9]  # e % 4 == 0 has 3 rows
+    monkeypatch.setattr(random_effects, "_FLUSH_DOUBLES", 3 * dim)
+    split = list(solve([batch]))
+    assert [b.num_rows for b in split] == [3, 3, 3]
+    assert pa.Table.from_batches(split).equals(pa.Table.from_batches(whole))
+
+
+def test_vectors_refuse_int32_offset_overflow():
+    half = np.broadcast_to(0.0, (2**30,))  # no memory behind it
+    with pytest.raises(OverflowError):
+        random_effects._vectors([half, half], pa.list_(pa.float64()))

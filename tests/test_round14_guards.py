@@ -48,6 +48,16 @@ def test_fake_decoders_match_python_stubs(spark):
     ):
         plan = d._jdf.queryExecution().executedPlan().toString()
         assert "EvalPython" not in plan and "MapInPandas" not in plan
+    # a NULL payload: the fake paths read it as the real ones do
+    # (zeros, decode_ok=False), never NULL metrics with decode_ok=True
+    null = spark.createDataFrame(
+        [(7, None, "image/fake")], "doc_id long, payload binary, media_type string"
+    )
+    for decode in (mm.decode_image, mm.decode_audio, mm.decode_video):
+        fake = decode(null, fake=True).collect()
+        real = decode(null, fake=False).collect()
+        assert fake == real, decode.__name__
+        assert fake[0].decode_ok is False
 
 
 def test_ivf_sampled_training_is_deterministic_and_covers_corpus(spark, tmp_path):
