@@ -374,9 +374,7 @@ def main() -> None:
         )
     constituents["train_game_cd_loop"] = game_stamps
     for name in BENCH_QUERIES:
-        spec = registry.get(name)
-        if spec is None:
-            continue
+        spec = registry[name]
         canary[name] = _probe(name)
         with scope():
             t0 = time.perf_counter()

@@ -1540,7 +1540,8 @@ def incremental_neardup(
     def _guarded_ckpt(per_doc: DataFrame) -> DataFrame:
         return checkpoint(
             per_doc.join(old_ids_flagged, id_col, "left")
-            .observe(clash_obs, F.count("__clash").alias("clashes"))
+            .observe(clash_obs, F.count("__clash").alias("clashes")),
+            eager=True,
         )
 
     membership = None
@@ -1572,6 +1573,7 @@ def incremental_neardup(
         new_sigs = _guarded_ckpt(
             minhash_signatures(new_sids, id_col, num_hashes)
         ).select(id_col, *[f"mh{i}" for i in range(num_hashes)])
+    # cannot block: the eager checkpoint above already ran the observed plan
     if clash_obs.get["clashes"] > 0:
         raise ValueError(
             "incremental_neardup: new batch ids overlap the indexed "

@@ -46,16 +46,16 @@ SELECT 'hashed', feature_key,
        ) % 1024
 FROM keys
 """,
-    note="S3/S4/U1/U2/F1 feature-index suite in ONE gate row. 'dict': "
-    "distinct feature keys -> deterministic dense index + intercept "
-    "slot (the reference's in-memory/PalDB dictionary). 'hashed': the "
-    "hashing-trick mapping hash(key) mod 1024 for the SAME keys — the "
-    "dictionary-FREE scale path (assemble_shard_hashed) for 100M+ "
-    "feature spaces where even building a dictionary is prohibitive; "
-    "the polynomial codepoint hash is deliberately portable, replayed "
-    "exactly by a DuckDB list_reduce",
 )
 def s3_feature_dictionary(spark, sf_dir):
+    """S3/S4/U1/U2/F1 feature-index suite in ONE gate row. 'dict':
+    distinct feature keys -> deterministic dense index + intercept slot
+    (the reference's in-memory/PalDB dictionary). 'hashed': the
+    hashing-trick mapping hash(key) mod 1024 for the SAME keys — the
+    dictionary-FREE scale path (assemble_shard_hashed) for 100M+ feature
+    spaces where even building a dictionary is prohibitive; the
+    polynomial codepoint hash is deliberately portable, replayed exactly
+    by a DuckDB list_reduce"""
     from photon_ml_spark.sources.featurize import (
         build_feature_dictionary,
         hashed_feature_index,
@@ -111,17 +111,17 @@ SELECT 'libsvm' AS variant,
 FROM lineitem
 WHERE l_suppkey < 10
 """,
-    note="S1/S2/S6/S11 I/O round-trip suite: lineitem -> "
-    "TrainingExampleAvro files (pure-Python OCF codec, deflate, "
-    "distributed per-partition write) -> distributed Avro scan back -> "
-    "aggregate; and lineitem -> LibSVM text sink -> built-in libsvm "
-    "scan back -> aggregate. The oracle computes the same aggregates "
-    "straight from parquet, so both encode/decode round trips must be "
-    "value-exact (AvroDataReader.scala:85-208, TrainingExampleAvro."
-    "avsc; LibSVMInputDataFormat.scala:31-89). Integer-valued summands "
-    "only (exactness convention)",
 )
 def s1_avro_roundtrip_scan(spark, sf_dir):
+    """S1/S2/S6/S11 I/O round-trip suite: lineitem ->
+    TrainingExampleAvro files (pure-Python OCF codec, deflate,
+    distributed per-partition write) -> distributed Avro scan back ->
+    aggregate; and lineitem -> LibSVM text sink -> built-in libsvm scan
+    back -> aggregate. The oracle computes the same aggregates straight
+    from parquet, so both encode/decode round trips must be value-exact
+    (AvroDataReader.scala:85-208, TrainingExampleAvro.avsc;
+    LibSVMInputDataFormat.scala:31-89). Integer-valued summands only
+    (exactness convention)"""
     import os
     import tempfile
 
@@ -203,9 +203,10 @@ FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
 GROUP BY l_returnflag
 """,
-    note="S7/F4: date-range predicate reaches the parquet scan (partition-pruning analog)",
 )
 def s7_date_range_scan(spark, sf_dir):
+    """S7/F4: date-range predicate reaches the parquet scan
+    (partition-pruning analog)"""
     li = _t(spark, sf_dir, "lineitem")
     return (
         li.filter(
@@ -235,11 +236,11 @@ WITH ex AS (
 SELECT p_partkey, feature_key, CAST(COUNT(*) AS BIGINT) AS dup_count
 FROM ex GROUP BY p_partkey, feature_key HAVING COUNT(*) > 1
 """,
-    note="S2/F1: per-row duplicate-feature-key detection in a merged shard "
-    "(AvroDataReader.scala:319-324 raises on duplicates); key uses the "
-    "U+0001 separator",
 )
 def s2_dup_feature_check(spark, sf_dir):
+    """S2/F1: per-row duplicate-feature-key detection in a merged shard
+    (AvroDataReader.scala:319-324 raises on duplicates); key uses the
+    U+0001 separator"""
     from photon_ml_spark.sources.featurize import check_duplicate_features
 
     part = _t(spark, sf_dir, "part")
@@ -267,11 +268,11 @@ FROM part GROUP BY p_brand
 UNION ALL
 SELECT 'part_attrs', 'type', p_type FROM part GROUP BY p_type
 """,
-    note="S5: distinct (name, term) extraction per feature bag "
-    "(NameAndTermFeatureBagsDriver.scala:148-180) — the vocabulary scan "
-    "without index assignment",
 )
 def s5_nameterm_bags(spark, sf_dir):
+    """S5: distinct (name, term) extraction per feature bag
+    (NameAndTermFeatureBagsDriver.scala:148-180) — the vocabulary scan
+    without index assignment"""
     part = _t(spark, sf_dir, "part").select(
         F.array(
             F.struct(F.lit("brand").alias("name"), F.col("p_brand").alias("term"),
@@ -290,9 +291,7 @@ def s5_nameterm_bags(spark, sf_dir):
     )
 
 
-@register(
-    "p5_random_downsample",
-    oracle="""
+P5_RANDOM_DOWNSAMPLE_SQL = """
 WITH d AS (
   SELECT l_orderkey * 100 + l_linenumber AS uid FROM lineitem
 )
@@ -300,15 +299,16 @@ SELECT uid
 FROM d
 WHERE CAST((48271 * ((uid + 7) % 2147483647)) % 2147483647 AS DOUBLE)
       / 2147483647.0 < 0.1
-""",
-    note="P5: uniform seeded down-sample, keep when hash(uid, seed) < rate "
-    "(DefaultDownSampler.scala:28-50; deterministic across retries, the "
-    "byteswap64-seed discipline). Uses the engine-portable Park–Miller "
-    "lcg_uniform — exact BIGINT arithmetic both engines — so the oracle "
-    "reproduces the EXACT sampled row set, not just its size; production "
-    "default stays xxhash64 (hash_uniform)",
-)
+"""
+
+
 def p5_random_downsample(spark, sf_dir):
+    """P5: uniform seeded down-sample, keep when hash(uid, seed) < rate
+    (DefaultDownSampler.scala:28-50; deterministic across retries, the
+    byteswap64-seed discipline). Uses the engine-portable Park–Miller
+    lcg_uniform — exact BIGINT arithmetic both engines — so the oracle
+    reproduces the EXACT sampled row set, not just its size; production
+    default stays xxhash64 (hash_uniform)"""
     from photon_ml_spark.operators.sampling import lcg_uniform, uniform_downsample
 
     li = _t(spark, sf_dir, "lineitem").select(
@@ -335,10 +335,11 @@ SELECT 'daily/' || strftime(d.day, '%Y/%m/%d') AS path,
        CAST(COALESCE(cnt.n, 0) AS BIGINT) AS n_orders
 FROM days d LEFT JOIN cnt ON cnt.day = d.day
 """,
-    note="S7/F4: inclusive date-range -> daily/yyyy/MM/dd path resolution "
-    "(IOUtils.scala:115-164, DateRange/DaysRange) joined to per-day counts",
 )
 def f4_daily_paths(spark, sf_dir):
+    """S7/F4: inclusive date-range -> daily/yyyy/MM/dd path resolution
+    (IOUtils.scala:115-164, DateRange/DaysRange) joined to per-day
+    counts"""
     from photon_ml_spark.sources.datasets import daily_paths
 
     paths = daily_paths(spark, "1996-03-01", "1996-03-10")
@@ -370,16 +371,16 @@ SELECT
   CAST(COUNT(*) AS BIGINT) AS n_rows
 FROM orders
 """,
-    note="P4/F7: validator aggregate (DataValidators.scala:320-417 row-AND "
-    "pattern) through the FULL standard_training_checks suite — finite "
-    "label/offset, positive weight, binary label, and finite feature "
-    "VECTOR (validateFeatures, DataValidators.scala:88-195; higher-order "
-    "exists over the values array) — with NaN/Inf/zero/nonbinary "
-    "violations injected at deterministic orderkey residues so every "
-    "counter is exercised nonzero; the oracle mirrors the injection "
-    "conditions",
 )
 def p4_data_validation(spark, sf_dir):
+    """P4/F7: validator aggregate (DataValidators.scala:320-417 row-AND
+    pattern) through the FULL standard_training_checks suite — finite
+    label/offset, positive weight, binary label, and finite feature
+    VECTOR (validateFeatures, DataValidators.scala:88-195; higher-order
+    exists over the values array) — with NaN/Inf/zero/nonbinary
+    violations injected at deterministic orderkey residues so every
+    counter is exercised nonzero; the oracle mirrors the injection
+    conditions"""
     from photon_ml_spark.operators.validation import (
         standard_training_checks,
         validation_report,
@@ -429,12 +430,13 @@ SELECT o_orderkey AS uid,
        o_orderpriority AS priority
 FROM orders WHERE o_orderkey % 11 = 0
 """,
-    note="P1/P2/F3: GameDatum projection — uid/response/offset/weight "
-    "defaults plus id-tag resolution with metadataMap fallback "
-    "(GameConverters.scala:44-172; tag fallback :167-169). The Spark side "
-    "uses a real MapType column; the oracle reproduces the resolved values",
 )
 def p1_game_datum_projection(spark, sf_dir):
+    """P1/P2/F3: GameDatum projection — uid/response/offset/weight
+    defaults plus id-tag resolution with metadataMap fallback
+    (GameConverters.scala:44-172; tag fallback :167-169). The Spark side
+    uses a real MapType column; the oracle reproduces the resolved
+    values"""
     from photon_ml_spark.sources.datasets import project_game_datum
 
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 11 == 0)
@@ -452,9 +454,7 @@ def p1_game_datum_projection(spark, sf_dir):
     return project_game_datum(staged, id_tags=["custkey", "priority"])
 
 
-@register(
-    "p6_stratified_downsample",
-    oracle="""
+P6_STRATIFIED_DOWNSAMPLE_SQL = """
 WITH labeled AS (
   SELECT l_orderkey, l_linenumber,
          CASE WHEN l_returnflag = 'R' THEN 1.0 ELSE 0.0 END AS label,
@@ -468,12 +468,13 @@ WITH labeled AS (
 )
 SELECT label, CAST(COUNT(*) AS BIGINT) AS cnt, SUM(weight) AS weight_sum
 FROM sampled GROUP BY label
-""",
-    note="P6: keep positives, gate negatives at 1/4, rescale weight by 4 "
-    "(BinaryClassificationDownSampler.scala:32-70; deterministic key-mod gate; "
-    "exact-representable rate so weight sums are order-independent)",
-)
+"""
+
+
 def p6_stratified_downsample(spark, sf_dir):
+    """P6: keep positives, gate negatives at 1/4, rescale weight by 4
+    (BinaryClassificationDownSampler.scala:32-70; deterministic key-mod
+    gate; exact-representable rate so weight sums are order-independent)"""
     from photon_ml_spark.operators.sampling import stratified_downsample
 
     li = _t(spark, sf_dir, "lineitem").select(
@@ -501,10 +502,10 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_orders,
        CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_entities
 FROM orders WHERE o_custkey IN (SELECT o_custkey FROM support)
 """,
-    note="P9: drop entities below support threshold via semi-join "
-    "(RandomEffectDataset.scala:586-606)",
 )
 def p9_entity_support_filter(spark, sf_dir):
+    """P9: drop entities below support threshold via semi-join
+    (RandomEffectDataset.scala:586-606)"""
     from photon_ml_spark.operators.sampling import filter_entities_by_support
 
     o = _t(spark, sf_dir, "orders")
@@ -551,11 +552,12 @@ SELECT CAST(entity AS BIGINT) AS entity, feature, ROUND(corr, 6) AS corr,
        CAST(rk AS INT) AS rk
 FROM r WHERE rk <= 2
 """,
-    note="P8/T3: per-entity top-k features by |Pearson corr with label| from "
-    "one-pass moments (LocalDataset.scala:103-129,180-260); integer-valued "
-    "inputs keep moment sums exact so corr is bit-deterministic",
 )
 def p8_pearson_topk(spark, sf_dir):
+    """P8/T3: per-entity top-k features by |Pearson corr with label|
+    from one-pass moments (LocalDataset.scala:103-129,180-260);
+    integer-valued inputs keep moment sums exact so corr is
+    bit-deterministic"""
     from photon_ml_spark.functions.stats import pearson_topk_features
 
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_suppkey") % 10 == 0).select(
@@ -584,10 +586,10 @@ SELECT o.o_orderkey AS uid,
        0.0 + COALESCE(s.score, 0.0) AS offset
 FROM orders o LEFT JOIN scores s ON o.o_orderkey = s.uid
 """,
-    note="J1/J2: left-outer residual-score attach, missing->0, added to offset "
-    "(FixedEffectDataset.scala:46-58)",
 )
 def j1_residual_attach(spark, sf_dir):
+    """J1/J2: left-outer residual-score attach, missing->0, added to
+    offset (FixedEffectDataset.scala:46-58)"""
     from photon_ml_spark.ml.scoring import attach_residual_offset
 
     o = _t(spark, sf_dir, "orders").select(
@@ -626,11 +628,11 @@ j AS (
 SELECT status, CAST(COUNT(*) AS BIGINT) AS n_entities
 FROM j GROUP BY status
 """,
-    note="J3/J12: warm-start split via FULL OUTER join of data entities vs "
-    "prior models -> train_warm | train_cold | copy "
-    "(RandomEffectCoordinate.scala:243-292, fullOuterJoin :252)",
 )
 def j3_warmstart_classify(spark, sf_dir):
+    """J3/J12: warm-start split via FULL OUTER join of data entities vs
+    prior models -> train_warm | train_cold | copy
+    (RandomEffectCoordinate.scala:243-292, fullOuterJoin :252)"""
     from photon_ml_spark.ml.random_effects import classify_warm_start
     from photon_ml_spark.operators.sampling import filter_entities_by_support
 
@@ -661,10 +663,10 @@ SELECT CAST(l_suppkey AS BIGINT) AS entity,
        SUM(l_quantity) AS passive_qty
 FROM ranked WHERE rn > 200 GROUP BY l_suppkey
 """,
-    note="J8/U3: passive data = all-data ANTI-JOIN active(capped) set "
-    "(RandomEffectDataset.scala:631-640 subtractByKey)",
 )
 def j8_passive_anti_join(spark, sf_dir):
+    """J8/U3: passive data = all-data ANTI-JOIN active(capped) set
+    (RandomEffectDataset.scala:631-640 subtractByKey)"""
     from photon_ml_spark.operators.sampling import per_entity_cap
 
     li = _t(spark, sf_dir, "lineitem").select(
@@ -704,9 +706,10 @@ SELECT COALESCE(s1.uid, s2.uid) AS uid,
        ROUND(COALESCE(s1.score, 0.0) + COALESCE(s2.score, 0.0), 6) AS score
 FROM s1 FULL OUTER JOIN s2 ON s1.uid = s2.uid
 """,
-    note="J11/U4: score-set '+' as full-outer-join arithmetic (DataScores.scala:29-54)",
 )
 def j11_score_add(spark, sf_dir):
+    """J11/U4: score-set '+' as full-outer-join arithmetic
+    (DataScores.scala:29-54)"""
     from photon_ml_spark.ml.scoring import add_scores
 
     li = _t(spark, sf_dir, "lineitem")
@@ -726,9 +729,7 @@ def j11_score_add(spark, sf_dir):
 # --------------------------------------------------------------- aggregations
 
 
-@register(
-    "a4_feature_stats",
-    oracle="""
+A4_FEATURE_STATS_SQL = """
 WITH f AS (
   SELECT 'qty' AS feature, l_quantity AS x FROM lineitem
   UNION ALL SELECT 'price_r', ROUND(l_extendedprice) FROM lineitem
@@ -745,12 +746,13 @@ SELECT feature,
        SUM(ABS(x)) / COUNT(*) AS mean_abs,
        CAST(SUM(CASE WHEN x <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS nnz
 FROM f GROUP BY feature
-""",
-    note="A4: per-feature count/mean/var/min/max/L1/L2/meanAbs/nnz "
-    "(FeatureDataStatistics.scala:59-138); integer-valued inputs keep "
-    "sums exact so no rounding is needed",
-)
+"""
+
+
 def a4_feature_stats(spark, sf_dir):
+    """A4: per-feature count/mean/var/min/max/L1/L2/meanAbs/nnz
+    (FeatureDataStatistics.scala:59-138); integer-valued inputs keep
+    sums exact so no rounding is needed"""
     from photon_ml_spark.functions.stats import feature_statistics
 
     li = _t(spark, sf_dir, "lineitem").select(
@@ -768,10 +770,11 @@ SELECT CAST(o_custkey AS BIGINT) AS entity, CAST(COUNT(*) AS BIGINT) AS cnt
 FROM orders GROUP BY o_custkey
 ORDER BY cnt DESC, entity ASC LIMIT 100
 """,
-    note="A5/T4: heaviest entities for partition planning "
-    "(RandomEffectDatasetPartitioner.scala:129-136; uid tie-break for determinism)",
 )
 def a5_entity_cardinality(spark, sf_dir):
+    """A5/T4: heaviest entities for partition planning
+    (RandomEffectDatasetPartitioner.scala:129-136; uid tie-break for
+    determinism)"""
     o = _t(spark, sf_dir, "orders")
     return (
         o.groupBy(F.col("o_custkey").cast("long").alias("entity"))
@@ -781,9 +784,7 @@ def a5_entity_cardinality(spark, sf_dir):
     )
 
 
-@register(
-    "a8_dataset_stats",
-    oracle="""
+A8_DATASET_STATS_SQL = """
 WITH t AS (SELECT ROUND(o_totalprice * 100) AS cents FROM orders)
 SELECT CAST(COUNT(*) AS BIGINT) AS n,
        SUM(cents) / 10000000 AS response_sum_100k,
@@ -791,11 +792,12 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n,
        SQRT((SUM(cents * cents) - SUM(cents) * SUM(cents) / COUNT(*))
             / (COUNT(*) - 1)) / 100 AS response_stddev
 FROM t
-""",
-    note="A8: dataset summary (FixedEffectDataset.scala:124-136); integer "
-    "cents keep sums exact across engines",
-)
+"""
+
+
 def a8_dataset_stats(spark, sf_dir):
+    """A8: dataset summary (FixedEffectDataset.scala:124-136); integer
+    cents keep sums exact across engines"""
     o = _t(spark, sf_dir, "orders").select(
         F.round(F.col("o_totalprice") * 100, 0).alias("cents")
     )
@@ -833,9 +835,7 @@ _SCORED_SQL = """
 """
 
 
-@register(
-    "a9_metric_suite",
-    oracle=f"""
+A9_SCALAR_METRICS_SQL = f"""
 WITH scored AS ({_SCORED_SQL})
 SELECT
   ROUND(SQRT(SUM(weight * (score - label) * (score - label)) / SUM(weight)), 5) AS rmse,
@@ -844,11 +844,12 @@ SELECT
         / SUM(weight), 5) AS logistic_loss,
   CAST(COUNT(*) AS BIGINT) AS n
 FROM scored
-""",
-    note="A9/A12/A13: weighted RMSE/MAE/logistic loss in one pass "
-    "(RMSEEvaluator.scala, LogisticLossEvaluator.scala, EvaluationSuite)",
-)
-def a9_metric_suite(spark, sf_dir):
+"""
+
+
+def a9_scalar_metrics(spark, sf_dir):
+    """A9/A12/A13: weighted RMSE/MAE/logistic loss in one pass
+    (RMSEEvaluator.scala, LogisticLossEvaluator.scala, EvaluationSuite)"""
     from photon_ml_spark.functions import links
 
     s = _scored_lineitem(spark, sf_dir)
@@ -864,9 +865,7 @@ def a9_metric_suite(spark, sf_dir):
     )
 
 
-@register(
-    "a13_eval_suite",
-    oracle=f"""
+A13_EVAL_SUITE_SQL = f"""
 WITH scored AS ({{scored}})
 SELECT
   ROUND(SQRT(SUM(weight * (score - label) * (score - label)) / SUM(weight)), 5) AS rmse,
@@ -882,12 +881,13 @@ FROM scored
          CASE WHEN l_returnflag = 'R' THEN 1.0 ELSE 0.0 END AS label,
          1.0 + l_linenumber / 10.0 AS weight
   FROM lineitem
-"""),
-    note="A13 EvaluationSuite: ALL scalar metrics in one aggregation pass "
-    "over one scan (EvaluationSuite.scala; CoordinateDescent.scala:312-333 "
-    "runs this per coordinate update)",
-)
+""")
+
+
 def a13_eval_suite(spark, sf_dir):
+    """A13 EvaluationSuite: ALL scalar metrics in one aggregation pass
+    over one scan (EvaluationSuite.scala;
+    CoordinateDescent.scala:312-333 runs this per coordinate update)"""
     from photon_ml_spark.functions.metrics import evaluation_suite
 
     s = _scored_lineitem(spark, sf_dir)
@@ -902,9 +902,7 @@ def a13_eval_suite(spark, sf_dir):
     )
 
 
-@register(
-    "a9b_loss_kernels",
-    oracle="""
+A9B_LOSS_KERNELS_SQL = """
 WITH s AS (
   SELECT l_discount * 2.0 - l_tax + 0.5 AS margin,
          CAST(l_linenumber AS DOUBLE) AS cnt,
@@ -921,12 +919,13 @@ SELECT
     END)) / SUM(weight), 5) AS smoothed_hinge_loss,
   CAST(COUNT(*) AS BIGINT) AS n
 FROM s
-""",
-    note="A9: the remaining loss-evaluator kernels — weighted Poisson "
-    "deviance part (PoissonLossEvaluator) and Rennie smoothed hinge "
-    "(SmoothedHingeLossEvaluator) in one pass",
-)
+"""
+
+
 def a9b_loss_kernels(spark, sf_dir):
+    """A9: the remaining loss-evaluator kernels — weighted Poisson
+    deviance part (PoissonLossEvaluator) and Rennie smoothed hinge
+    (SmoothedHingeLossEvaluator) in one pass"""
     from photon_ml_spark.functions.metrics import loss_metric
 
     s = _t(spark, sf_dir, "lineitem").select(
@@ -951,9 +950,7 @@ def a9b_loss_kernels(spark, sf_dir):
     )
 
 
-@register(
-    "a10_auroc",
-    oracle=f"""
+A10_AUROC_SQL = f"""
 WITH scored AS ({_SCORED_SQL}),
 g AS (
   SELECT score AS s, SUM(weight * label) AS pos, SUM(weight * (1.0 - label)) AS neg
@@ -972,20 +969,19 @@ t AS (
   FROM c
 )
 SELECT ROUND(SUM(area) / (MAX(ctp) * MAX(cfp)), 6) AS auroc FROM t
-""",
-    note="A10: weighted AUROC as tie-grouped trapezoid sweep over window "
-    "cumulative sums (AreaUnderROCCurveLocalEvaluator.scala:25-72)",
-)
+"""
+
+
 def a10_auroc(spark, sf_dir):
+    """A10: weighted AUROC as tie-grouped trapezoid sweep over window
+    cumulative sums (AreaUnderROCCurveLocalEvaluator.scala:25-72)"""
     from photon_ml_spark.functions.metrics import auroc
 
     s = _scored_lineitem(spark, sf_dir)
     return auroc(s, weight="weight").select(r6(F.col("auroc")).alias("auroc"))
 
 
-@register(
-    "a10b_aupr",
-    oracle=f"""
+A10B_AUPR_SQL = f"""
 WITH scored AS ({_SCORED_SQL}),
 g AS (
   SELECT score AS s, SUM(weight * label) AS pos, SUM(weight * (1.0 - label)) AS neg
@@ -1006,21 +1002,20 @@ t AS (
 )
 SELECT ROUND(SUM((ctp - ptp) * (prec + pprec) / 2.0) / MAX(ctp), 6) AS aupr
 FROM t
-""",
-    note="A10: weighted area under the precision-recall curve, trapezoid "
-    "over tie-grouped points, curve anchored at precision=1 "
-    "(AreaUnderPRCurveEvaluator)",
-)
+"""
+
+
 def a10b_aupr(spark, sf_dir):
+    """A10: weighted area under the precision-recall curve, trapezoid
+    over tie-grouped points, curve anchored at precision=1
+    (AreaUnderPRCurveEvaluator)"""
     from photon_ml_spark.functions.metrics import aupr
 
     s = _scored_lineitem(spark, sf_dir)
     return aupr(s, weight="weight").select(r6(F.col("aupr")).alias("aupr"))
 
 
-@register(
-    "a11_grouped_precision_at_k",
-    oracle="""
+A11_GROUPED_PRECISION_AT_K_SQL = """
 WITH scored AS (
   SELECT o_custkey AS grp, o_orderkey AS uid,
          o_totalprice AS score,
@@ -1038,11 +1033,12 @@ per_group AS (
 SELECT ROUND(AVG(precision_at_k), 6) AS mean_precision_at_k,
        CAST(COUNT(*) AS BIGINT) AS n_groups
 FROM per_group
-""",
-    note="A11/T5: per-group precision@5 then unweighted mean of groups "
-    "(MultiEvaluator.scala:36-90, PrecisionAtKLocalEvaluator.scala:29-53)",
-)
+"""
+
+
 def a11_grouped_precision_at_k(spark, sf_dir):
+    """A11/T5: per-group precision@5 then unweighted mean of groups
+    (MultiEvaluator.scala:36-90, PrecisionAtKLocalEvaluator.scala:29-53)"""
     from photon_ml_spark.functions.metrics import precision_at_k_per_group
 
     o = _t(spark, sf_dir, "orders").select(
@@ -1058,9 +1054,7 @@ def a11_grouped_precision_at_k(spark, sf_dir):
     )
 
 
-@register(
-    "a11b_grouped_auc",
-    oracle="""
+A11B_GROUPED_AUC_SQL = """
 WITH scored AS (
   SELECT l_suppkey AS grp,
          l_discount * 5.0 - l_tax * 3.0 + l_quantity / 25.0 AS score,
@@ -1091,12 +1085,13 @@ pg AS (
 SELECT ROUND(AVG(sa / (p * n)), 6) AS mean_group_auc,
        CAST(COUNT(*) AS BIGINT) AS n_groups
 FROM pg
-""",
-    note="A11 MultiAUC: per-group tie-grouped AUROC sweep (windows "
-    "partitioned by group — one shuffle, no per-group collect), then the "
-    "MultiEvaluator unweighted mean (MultiEvaluatorType.scala:52-66)",
-)
+"""
+
+
 def a11b_grouped_auc(spark, sf_dir):
+    """A11 MultiAUC: per-group tie-grouped AUROC sweep (windows
+    partitioned by group — one shuffle, no per-group collect), then the
+    MultiEvaluator unweighted mean (MultiEvaluatorType.scala:52-66)"""
     from photon_ml_spark.functions.metrics import auroc_per_group, multi_metric_mean
 
     s = _t(spark, sf_dir, "lineitem").select(
@@ -1114,9 +1109,7 @@ def a11b_grouped_auc(spark, sf_dir):
     )
 
 
-@register(
-    "a14_feature_quantiles",
-    oracle="""
+A14_FEATURE_QUANTILES_SQL = """
 SELECT ROUND(quantile_cont(l_quantity, 0.25), 6) AS l_quantity_q25,
        ROUND(quantile_cont(l_quantity, 0.5), 6) AS l_quantity_q50,
        ROUND(quantile_cont(l_quantity, 0.75), 6) AS l_quantity_q75,
@@ -1130,13 +1123,14 @@ SELECT ROUND(quantile_cont(l_quantity, 0.25), 6) AS l_quantity_q25,
        ROUND(quantile_cont(l_discount, 0.75), 6) AS l_discount_q75,
        ROUND(quantile_cont(l_discount, 0.99), 6) AS l_discount_q99
 FROM lineitem
-""",
-    note="A4/A8 percentile block: exact per-feature quantile summary "
-    "(Spark `percentile` linear interpolation == SQL quantile_cont); "
-    "the scale path flips exact=False to the mergeable t-digest-style "
-    "approx_percentile sketch with the same schema",
-)
+"""
+
+
 def a14_feature_quantiles(spark, sf_dir):
+    """A4/A8 percentile block: exact per-feature quantile summary (Spark
+    `percentile` linear interpolation == SQL quantile_cont); the scale
+    path flips exact=False to the mergeable t-digest-style
+    approx_percentile sketch with the same schema"""
     from photon_ml_spark.functions.stats import feature_quantiles
 
     li = _t(spark, sf_dir, "lineitem")
@@ -1165,12 +1159,12 @@ SELECT CAST(entity AS BIGINT) AS entity,
        ROUND(SUM(weight * total / CAST(LEAST(total, 200) AS DOUBLE)), 4) AS weight_sum
 FROM ranked WHERE rn <= 200 GROUP BY entity
 """,
-    note="T2: bounded per-entity sample, survivors' weights rescaled by "
-    "count/cap (RandomEffectDataset.scala:454-527, "
-    "MinHeapWithFixedCapacity.scala; deterministic uid ordering here, "
-    "xxhash64 ordering in production operator)",
 )
 def t2_reservoir_cap(spark, sf_dir):
+    """T2: bounded per-entity sample, survivors' weights rescaled by
+    count/cap (RandomEffectDataset.scala:454-527,
+    MinHeapWithFixedCapacity.scala; deterministic uid ordering here,
+    xxhash64 ordering in production operator)"""
     from photon_ml_spark.operators.sampling import per_entity_cap
 
     li = _t(spark, sf_dir, "lineitem").select(
@@ -1192,20 +1186,19 @@ def t2_reservoir_cap(spark, sf_dir):
 # ------------------------------------------------------------------ scalars
 
 
-@register(
-    "f5_link_functions",
-    oracle="""
+F5_LINK_FUNCTIONS_SQL = """
 SELECT CAST(o_orderkey AS BIGINT) AS uid,
        ROUND(1.0 / (1.0 + EXP(-(o_totalprice / 300000.0 - 1.0))), 6) AS sigmoid,
        ROUND(EXP(o_totalprice / 600000.0 - 1.0), 6) AS exp_mean,
        ROUND(GREATEST(o_totalprice / 300000.0 - 1.0, 0)
              + LN(1 + EXP(-ABS(o_totalprice / 300000.0 - 1.0))), 6) AS log1p_exp
 FROM orders WHERE o_orderkey % 97 = 0
-""",
-    note="F5: logistic/exp/log1p-exp link kernels as column expressions "
-    "(LogisticLossFunction.scala:47-84, PoissonLossFunction.scala:31-54)",
-)
+"""
+
+
 def f5_link_functions(spark, sf_dir):
+    """F5: logistic/exp/log1p-exp link kernels as column expressions
+    (LogisticLossFunction.scala:47-84, PoissonLossFunction.scala:31-54)"""
     from photon_ml_spark.functions import links
 
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 97 == 0)
@@ -1218,9 +1211,7 @@ def f5_link_functions(spark, sf_dir):
     )
 
 
-@register(
-    "f6_vector_ops",
-    oracle="""
+F6_VECTOR_OPS_SQL = """
 WITH v AS (
   SELECT CAST(l_orderkey AS BIGINT) * 100 + l_linenumber AS uid,
          [CAST(l_quantity AS DOUBLE), ROUND(l_discount * 100)] AS a,
@@ -1235,12 +1226,13 @@ SELECT uid,
                        / SQRT(list_dot_product(a, a)) / SQRT(list_dot_product(b, b)), 6)
             ELSE 0.0 END AS cosine_ab
 FROM v
-""",
-    note="F6: vector kernels as pure Catalyst expressions — dot, L2 norm, "
-    "cosine (VectorUtils.scala analog; zip_with + aggregate fold, no UDF); "
-    "integer-quantized components keep folds exact",
-)
+"""
+
+
 def f6_vector_ops(spark, sf_dir):
+    """F6: vector kernels as pure Catalyst expressions — dot, L2 norm,
+    cosine (VectorUtils.scala analog; zip_with + aggregate fold, no
+    UDF); integer-quantized components keep folds exact"""
     from photon_ml_spark.functions.vectors import (
         cosine_similarity,
         dense_dot,
@@ -1271,10 +1263,10 @@ SELECT CAST(o_custkey AS BIGINT) AS entity,
          AS priorities
 FROM orders GROUP BY o_custkey
 """,
-    note="U5/A7: per-entity support-set union as sorted collect_set "
-    "(RandomEffectDataset.scala:417-424 foldByKey-union)",
 )
 def u5_entity_index_union(spark, sf_dir):
+    """U5/A7: per-entity support-set union as sorted collect_set
+    (RandomEffectDataset.scala:417-424 foldByKey-union)"""
     o = _t(spark, sf_dir, "orders")
     return o.groupBy(F.col("o_custkey").cast("long").alias("entity")).agg(
         F.array_join(

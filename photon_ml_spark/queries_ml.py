@@ -23,9 +23,7 @@ from photon_ml_spark.queries import _t, r6, register
 # --------------------------------------------------------------- M2 per-entity
 
 
-@register(
-    "m2_per_entity_ridge",
-    oracle="""
+M2_RIDGE_BLOCKS_SQL = """
 WITH d AS (
   SELECT l_suppkey AS entity, l_quantity AS x,
          ROUND(l_extendedprice / 1000) AS y
@@ -53,27 +51,29 @@ FROM closed
 UNION ALL
 SELECT 'exempt', CAST(entity AS VARCHAR), coef, intercept, n_samples
 FROM closed WHERE entity % 5 = 0
-""",
-    note="M2/M4/A6 + P7/J10/J12 per-entity solver suite in ONE gate row. "
-    "'ridge': one ridge GLM per entity via the real "
-    "local Newton solver over Arrow batches of entities (gaussian, l2=10, "
-    "intercept unpenalized) — integer-valued inputs make the normal "
-    "equations exact, matched against the SQL closed form "
-    "(RandomEffectCoordinate.scala:234-300, SingleNodeOptimizationProblem). "
-    "'subspace' (P7): the SAME problem embedded in a dim=3 space with each "
-    "entity active only at index suppkey%3, solved with "
-    "project_subspace=True (RandomEffectDataset.scala:390-426, "
-    "LinearSubspaceProjector.scala:37-66); coef is the SUM of the full "
-    "scattered coefficient vector, so it matches the closed form iff the "
-    "subspace solve is right AND the scatter-back leaves exact zeros "
-    "elsewhere. 'exempt' (J12+J10+P9): min_samples=10^9 makes every "
-    "entity under-supported; a prior model for suppkey%5==0 entities "
-    "joins in (J10 left join, RandomEffectDataset.scala:405-421) and "
-    "exempts exactly those from the support filter "
-    "(RandomEffectDataset.scala:586-606) — they are warm-started (M7) "
-    "and refit to the same closed form; everyone else is dropped",
-)
-def m2_per_entity_ridge(spark, sf_dir):
+"""
+
+
+def m2_ridge_blocks(spark, sf_dir):
+    """M2/M4/A6 + P7/J10/J12 per-entity solver suite in ONE gate row.
+    'ridge': one ridge GLM per entity via the real local Newton solver
+    over Arrow batches of entities (gaussian, l2=10, intercept
+    unpenalized) — integer-valued inputs make the normal equations
+    exact, matched against the SQL closed form
+    (RandomEffectCoordinate.scala:234-300,
+    SingleNodeOptimizationProblem). 'subspace' (P7): the SAME problem
+    embedded in a dim=3 space with each entity active only at index
+    suppkey%3, solved with project_subspace=True
+    (RandomEffectDataset.scala:390-426,
+    LinearSubspaceProjector.scala:37-66); coef is the SUM of the full
+    scattered coefficient vector, so it matches the closed form iff the
+    subspace solve is right AND the scatter-back leaves exact zeros
+    elsewhere. 'exempt' (J12+J10+P9): min_samples=10^9 makes every
+    entity under-supported; a prior model for suppkey%5==0 entities
+    joins in (J10 left join, RandomEffectDataset.scala:405-421) and
+    exempts exactly those from the support filter
+    (RandomEffectDataset.scala:586-606) — they are warm-started (M7) and
+    refit to the same closed form; everyone else is dropped"""
     from photon_ml_spark.ml.random_effects import fit_random_effects
 
     li = _t(spark, sf_dir, "lineitem").select(
@@ -190,13 +190,13 @@ SELECT CAST(f1.entity AS VARCHAR) AS entity,
        CAST(n1 AS BIGINT) AS n_samples
 FROM f1 JOIN prior ON f1.entity = prior.entity
 """,
-    note="M9 incremental learning through the REAL distributed path: a prior "
-    "model table (ridge fit + SIMPLE variances on fold 0) joins into "
-    "fit_random_effects on fold 1, whose Gaussian-prior penalty "
-    "Σ(β−μ)²/(2σ²) (PriorDistribution.scala:23-120) the oracle reproduces "
-    "as the closed-form posterior",
 )
 def m9_incremental_prior(spark, sf_dir):
+    """M9 incremental learning through the REAL distributed path: a
+    prior model table (ridge fit + SIMPLE variances on fold 0) joins
+    into fit_random_effects on fold 1, whose Gaussian-prior penalty
+    Σ(β−μ)²/(2σ²) (PriorDistribution.scala:23-120) the oracle reproduces
+    as the closed-form posterior"""
     from photon_ml_spark.ml.random_effects import fit_random_effects
 
     d = _t(spark, sf_dir, "lineitem").select(
@@ -272,13 +272,13 @@ SELECT '(INTERCEPT)', 0.0, 1.0,
        ROUND(0.75 - SUM(coef * factor * shift), 6)
 FROM ctx
 """,
-    note="M5: standardization contexts from exact moments + the "
-    "transformed→original coefficient algebra: beta=beta'*factor, "
-    "intercept=i' − Σ beta'·factor·shift "
-    "(NormalizationContext.scala:37-128, factors "
-    "GameTrainingDriver.scala:590-656)",
 )
 def m5_normalization_backmap(spark, sf_dir):
+    """M5: standardization contexts from exact moments + the
+    transformed→original coefficient algebra: beta=beta'*factor,
+    intercept=i' − Σ beta'·factor·shift
+    (NormalizationContext.scala:37-128, factors
+    GameTrainingDriver.scala:590-656)"""
     from photon_ml_spark.ml.normalization import (
         backmap_coefficients,
         normalization_table,
@@ -334,12 +334,12 @@ SELECT feature,
        ROUND(1.0 / (SUM(h) / 1000000 + 0.5), 6) AS variance
 FROM u GROUP BY feature
 """,
-    note="A3/M10: logistic Hessian diagonal Σ w·mu·(1−mu)·x² (+l2) and "
-    "SIMPLE variance 1/H_jj; summands quantized to 1e-6 grid for "
-    "order-independence (HessianDiagonalAggregator.scala, "
-    "DistributedOptimizationProblem.scala:86-96)",
 )
 def m10_hessian_variance(spark, sf_dir):
+    """A3/M10: logistic Hessian diagonal Σ w·mu·(1−mu)·x² (+l2) and
+    SIMPLE variance 1/H_jj; summands quantized to 1e-6 grid for
+    order-independence (HessianDiagonalAggregator.scala,
+    DistributedOptimizationProblem.scala:86-96)"""
     from photon_ml_spark.ml.variance import hessian_diagonal, simple_variance
 
     li = _t(spark, sf_dir, "lineitem").select(
@@ -394,24 +394,23 @@ SELECT uid, ROUND(fixed_score, 6) AS fixed_score, ROUND(re_score, 6) AS re_score
        ROUND(1.0 / (1.0 + EXP(-(fixed_score + re_score))), 6) AS prediction
 FROM scored
 """,
-    note="M12/J4/J5/J11/P10 + S8/S9 SINK ROUND-TRIP: full GAME scoring "
-    "composition — broadcast fixed-effect dot product + per-entity "
-    "model-table left join (missing model → 0, "
-    "RandomEffectModel.scala:283-287) after P10 sparsification, score "
-    "sum, sigmoid mean (GameModel.scala:108-112). The GAME model is "
-    "saved and RELOADED through the model sink/scan "
-    "(ModelProcessingUtils.scala:77-265) before scoring; its two "
-    "coordinates carry DIFFERENT feature shards (fx on a 2-dim "
-    "qty/disc shard, re on the 1-dim qty shard) and total/prediction "
-    "come from the shard-aware GameTransformer "
-    "(GameTransformer.scala:150-283 — each coordinate resolves its own "
-    "featureShardId's columns), so a wrong per-coordinate column "
-    "binding flips the hash. The scored output is written and RE-READ "
-    "through the S8 score sink (GameScoringDriver.scala:229-256) — the "
-    "oracle-compared rows are the re-read table, so a green row proves "
-    "both sinks round-trip",
 )
 def m12_game_scoring(spark, sf_dir):
+    """M12/J4/J5/J11/P10 + S8/S9 SINK ROUND-TRIP: full GAME scoring
+    composition — broadcast fixed-effect dot product + per-entity
+    model-table left join (missing model → 0,
+    RandomEffectModel.scala:283-287) after P10 sparsification, score
+    sum, sigmoid mean (GameModel.scala:108-112). The GAME model is saved
+    and RELOADED through the model sink/scan
+    (ModelProcessingUtils.scala:77-265) before scoring; its two
+    coordinates carry DIFFERENT feature shards (fx on a 2-dim qty/disc
+    shard, re on the 1-dim qty shard) and total/prediction come from the
+    shard-aware GameTransformer (GameTransformer.scala:150-283 — each
+    coordinate resolves its own featureShardId's columns), so a wrong
+    per-coordinate column binding flips the hash. The scored output is
+    written and RE-READ through the S8 score sink
+    (GameScoringDriver.scala:229-256) — the oracle-compared rows are the
+    re-read table, so a green row proves both sinks round-trip"""
     import os
 
     import numpy as np
@@ -604,27 +603,27 @@ UNION ALL
 SELECT '__m8_locked__', 0.5, 0.25,
        (SELECT CAST(COUNT(DISTINCT e) AS BIGINT) FROM d)
 """,
-    note="M3/M7/M8/J1/J11 through the REAL train_game loop, on TWO "
-    "feature shards (CoordinateDataConfiguration.scala:24,37,58 "
-    "featureShardId — the fixed coordinate trains on the qty shard, the "
-    "random coordinate on the disc shard, the reference flagship's "
-    "userFeatures/songFeatures split): 2 backfitting iterations over "
-    "[fixed global, per-supplier ridge] with gaussian family — fixed1 → "
-    "RE1 on residual → fixed2 on (y − RE1 score) via the incremental "
-    "summed-score subtraction → RE2 warm-started from RE1 "
-    "(CoordinateDescent.scala:373-463). Every stage is a closed-form "
-    "least-squares solve, so the oracle replays the whole descent in SQL "
-    "(z = ROUND(discount·100) keeps every moment sum integer-valued → "
-    "order-independent). The __m8_* rows run a SECOND train_game with "
-    "the random coordinate LOCKED to a constant pretrained model on the "
-    "disc shard (coef 0.5, intercept 0.25): partial retraining scores-"
-    "but-never-trains the locked coordinate (GameEstimator.train:"
-    "770-775) — the fixed coordinate's closed form on the locked "
-    "residual and the untouched locked model are both oracle-checked; "
-    "the binomial/validation variants stay in "
-    "tests/test_coordinate_descent.py",
 )
 def m3_coordinate_descent(spark, sf_dir):
+    """M3/M7/M8/J1/J11 through the REAL train_game loop, on TWO feature
+    shards (CoordinateDataConfiguration.scala:24,37,58 featureShardId —
+    the fixed coordinate trains on the qty shard, the random coordinate
+    on the disc shard, the reference flagship's
+    userFeatures/songFeatures split): 2 backfitting iterations over
+    [fixed global, per-supplier ridge] with gaussian family — fixed1 →
+    RE1 on residual → fixed2 on (y − RE1 score) via the incremental
+    summed-score subtraction → RE2 warm-started from RE1
+    (CoordinateDescent.scala:373-463). Every stage is a closed-form
+    least-squares solve, so the oracle replays the whole descent in SQL
+    (z = ROUND(discount·100) keeps every moment sum integer-valued →
+    order-independent). The __m8_* rows run a SECOND train_game with the
+    random coordinate LOCKED to a constant pretrained model on the disc
+    shard (coef 0.5, intercept 0.25): partial retraining
+    scores-but-never-trains the locked coordinate
+    (GameEstimator.train:770-775) — the fixed coordinate's closed form
+    on the locked residual and the untouched locked model are both
+    oracle-checked; the binomial/validation variants stay in
+    tests/test_coordinate_descent.py"""
     from photon_ml_spark.ml.coordinate_descent import CoordinateConfig, train_game
 
     # (orderkey, linenumber, suppkey, partkey) is the unique row key in
@@ -781,18 +780,6 @@ SELECT 'gp' AS variant, CAST(NULL AS DOUBLE) AS lam,
        ROUND(best, 6) AS val_mse, TRUE AS ok
 FROM dmse
 """,
-    note="M11 suite in ONE distributed scan: the train/val moment sums "
-    "(sufficient statistics for 1-feature ridge) are aggregated once; "
-    "the 4-λ grid rows, the 13-λ dense-grid best, and the model-based "
-    "mode — a deterministic slice-sampled GP-EI search "
-    "(GaussianProcessSearch.scala, SliceSampler.scala) over "
-    "log10 λ ∈ [-2, 4] — all derive from that row driver-side (driver "
-    "hook GameTrainingDriver.scala:677-726; exact integer sums keep "
-    "Python/SQL IEEE arithmetic bit-equal; the in-plan cross-join "
-    "strategy survives as ridge_grid_eval_1d, parity-tested). The gp "
-    "row's val_mse is the dense-grid best (SQL-replayable); ok is "
-    "computed Spark-side as gp_best ≤ dense_best·1.001 — a wrong GP "
-    "flips the hash",
 )
 def m11_reg_grid(spark, sf_dir):
     # ONE distributed pass: the train/val moment sums are sufficient
@@ -801,6 +788,17 @@ def m11_reg_grid(spark, sf_dir):
     # from the same collected moments row (exact integer-valued sums →
     # Python/SQL IEEE arithmetic matches the in-plan formulas bit-for-
     # bit, same as the oracle convention).
+    """M11 suite in ONE distributed scan: the train/val moment sums
+    (sufficient statistics for 1-feature ridge) are aggregated once; the
+    4-λ grid rows, the 13-λ dense-grid best, and the model-based mode —
+    a deterministic slice-sampled GP-EI search
+    (GaussianProcessSearch.scala, SliceSampler.scala) over log10 λ ∈
+    [-2, 4] — all derive from that row driver-side (driver hook
+    GameTrainingDriver.scala:677-726; exact integer sums keep Python/SQL
+    IEEE arithmetic bit-equal; the in-plan cross-join strategy survives
+    as ridge_grid_eval_1d, parity-tested). The gp row's val_mse is the
+    dense-grid best (SQL-replayable); ok is computed Spark-side as
+    gp_best ≤ dense_best·1.001 — a wrong GP flips the hash"""
     from photon_ml_spark.ml.hypersearch import (
         gp_ridge_search_1d,
         ridge_closed_form,
@@ -865,15 +863,15 @@ SELECT CAST(l_suppkey AS VARCHAR) AS entity,
        CAST(COUNT(*) AS BIGINT) AS n_samples
 FROM lineitem GROUP BY l_suppkey
 """,
-    note="M13: per-entity smoothed-hinge SVM (photon-api/.../function/svm, "
-    "Rennie smoothing) via the Newton solver over Arrow batches of "
-    "entities, verified by a FIXED-POINT oracle: the penalized "
-    "subgradient Σ dl/dm·x + λβ (intercept unpenalized) is recomputed "
-    "DISTRIBUTED at the returned coefficients and must round to 0 per "
-    "entity — the optimum itself has no closed form, but its "
-    "stationarity condition is checkable",
 )
 def m13_smoothed_hinge_svm(spark, sf_dir):
+    """M13: per-entity smoothed-hinge SVM (photon-api/.../function/svm,
+    Rennie smoothing) via the Newton solver over Arrow batches of
+    entities, verified by a FIXED-POINT oracle: the penalized
+    subgradient Σ dl/dm·x + λβ (intercept unpenalized) is recomputed
+    DISTRIBUTED at the returned coefficients and must round to 0 per
+    entity — the optimum itself has no closed form, but its stationarity
+    condition is checkable"""
     from photon_ml_spark.ml.random_effects import fit_random_effects
 
     li = _t(spark, sf_dir, "lineitem").select(
@@ -958,15 +956,15 @@ SELECT lam, ROUND(beta, 6) AS coef,
        'owlqn' AS optimizer
 FROM sol
 """,
-    note="M4 (fixed-effect L1/elastic net) through the REAL distributed "
-    "OWLQN path (ml/distributed_solver.py, OWLQN.scala:39, "
-    "RegularizationContext.scala:38-132) WITH an offset — the combination "
-    "spark.ml GLR cannot express. Univariate gaussian: the oracle is the "
-    "exact soft-threshold solution on centered moments (intercept "
-    "unpenalized; L1 never touches it); λ=120000 drives the coefficient to "
-    "an exact orthant-projected 0",
 )
 def m4_elastic_net_fixed(spark, sf_dir):
+    """M4 (fixed-effect L1/elastic net) through the REAL distributed
+    OWLQN path (ml/distributed_solver.py, OWLQN.scala:39,
+    RegularizationContext.scala:38-132) WITH an offset — the combination
+    spark.ml GLR cannot express. Univariate gaussian: the oracle is the
+    exact soft-threshold solution on centered moments (intercept
+    unpenalized; L1 never touches it); λ=120000 drives the coefficient
+    to an exact orthant-projected 0"""
     from photon_ml_spark.ml.glm import fit_fixed_effect
 
     d = _t(spark, sf_dir, "lineitem").select(
@@ -995,9 +993,7 @@ def m4_elastic_net_fixed(spark, sf_dir):
     )
 
 
-@register(
-    "m9b_fixed_effect_prior",
-    oracle="""
+M9B_FIXED_EFFECT_PRIOR_SQL = """
 WITH d AS (
   SELECT l_quantity AS x, ROUND(l_extendedprice / 1000) AS y FROM lineitem
 ),
@@ -1015,13 +1011,14 @@ SELECT ROUND((b1 * (n + 10.0) - sx * b2) / det, 6) AS coef,
        ROUND(((sxx + 1000.0) * b2 - sx * b1) / det, 6) AS intercept,
        'lbfgs' AS optimizer
 FROM sol
-""",
-    note="M9 on the FIXED coordinate (PriorDistribution.scala:23-120): "
-    "Gaussian prior (μ=[1,0], precision=[1000,10] over coef+intercept) "
-    "folded into the distributed solve; oracle is the exact 2×2 posterior "
-    "normal-equation solution via Cramer's rule",
-)
+"""
+
+
 def m9b_fixed_effect_prior(spark, sf_dir):
+    """M9 on the FIXED coordinate (PriorDistribution.scala:23-120):
+    Gaussian prior (μ=[1,0], precision=[1000,10] over coef+intercept)
+    folded into the distributed solve; oracle is the exact 2×2 posterior
+    normal-equation solution via Cramer's rule"""
     import numpy as np
 
     from photon_ml_spark.ml.glm import fit_fixed_effect
@@ -1053,16 +1050,16 @@ def m9b_fixed_effect_prior(spark, sf_dir):
 SELECT 0.0 AS g_coef, 0.0 AS g_int, CAST(COUNT(*) AS BIGINT) AS n
 FROM lineitem
 """,
-    note="M1/A1/M6 MAIN path — spark.ml GLR IRLS (binomial, offset + "
-    "weight, JVM-side whole-stage codegen), the solver the flagship "
-    "uses (DistributedOptimizationProblem.scala:112-157, "
-    "GeneralizedLinearModel training loop). Verified by the m13/m2b "
-    "FIXED-POINT pattern: the weighted logistic gradient "
-    "Σ w·(σ(margin)−y)·x is recomputed DISTRIBUTED at the returned "
-    "coefficients and must round to 0 (no closed form exists for the "
-    "MLE itself)",
 )
 def m1_glr_fixed_effect(spark, sf_dir):
+    """M1/A1/M6 MAIN path — spark.ml GLR IRLS (binomial, offset +
+    weight, JVM-side whole-stage codegen), the solver the flagship uses
+    (DistributedOptimizationProblem.scala:112-157,
+    GeneralizedLinearModel training loop). Verified by the m13/m2b
+    FIXED-POINT pattern: the weighted logistic gradient Σ
+    w·(σ(margin)−y)·x is recomputed DISTRIBUTED at the returned
+    coefficients and must round to 0 (no closed form exists for the MLE
+    itself)"""
     from photon_ml_spark.ml.glm import fit_fixed_effect
 
     # single-row-group synthetic parquet yields ~3 splits; spread to
@@ -1103,9 +1100,7 @@ def m1_glr_fixed_effect(spark, sf_dir):
     )
 
 
-@register(
-    "m1b_box_fixed_effect",
-    oracle="""
+M1B_BOX_FIXED_EFFECT_SQL = """
 WITH d AS (
   SELECT l_quantity AS x, ROUND(l_extendedprice / 1000) AS y FROM lineitem
 ),
@@ -1123,13 +1118,14 @@ SELECT ROUND(beta, 6) AS coef,
        ROUND((sy - beta * sx) / n, 6) AS intercept,
        'lbfgsb' AS optimizer
 FROM sol
-""",
-    note="M1/LBFGSB.scala:39 on the fixed coordinate: box [−1, 0.001] on "
-    "the feature (intercept free) through the distributed active-set "
-    "projected L-BFGS; oracle profiles out the intercept and clips the "
-    "centered univariate optimum — exact whether or not the bound binds",
-)
+"""
+
+
 def m1b_box_fixed_effect(spark, sf_dir):
+    """M1/LBFGSB.scala:39 on the fixed coordinate: box [−1, 0.001] on
+    the feature (intercept free) through the distributed active-set
+    projected L-BFGS; oracle profiles out the intercept and clips the
+    centered univariate optimum — exact whether or not the bound binds"""
     import numpy as np
 
     from photon_ml_spark.ml.glm import fit_fixed_effect
@@ -1154,9 +1150,7 @@ def m1b_box_fixed_effect(spark, sf_dir):
     )
 
 
-@register(
-    "j7_byjoin_scoring",
-    oracle="""
+J7_BYJOIN_SCORING_SQL = """
 WITH s AS (
   SELECT 3.0 * p_size + -2.0 * (p_partkey % 7) + 1.0 AS score FROM part
 )
@@ -1164,18 +1158,20 @@ SELECT CAST(SUM(score) AS DOUBLE) AS bcast_sum,
        CAST(SUM(score) AS DOUBLE) AS shuffle_sum,
        CAST(COUNT(*) AS BIGINT) AS n
 FROM s
-""",
-    note="J4/J7 wide-model scoring paths (FixedEffectCoordinate.scala:"
-    "144-155; RandomEffectCoordinate.scala:346-366 broadcast set): the "
-    "SAME (feature_index → coefficient) model table scores the part "
-    "relation twice through score_by_join — once with the broadcast "
-    "hint (J7's broadcast-the-small-set physical strategy), once with "
-    "broadcast_model=False (the shuffle join for models past broadcast "
-    "size) — and both exact integer score sums must equal the SQL "
-    "closed form. Gates the model-as-table scoring path the literal "
-    "plan (J4, m12) cannot exercise",
-)
+"""
+
+
 def j7_byjoin_scoring(spark, sf_dir):
+    """J4/J7 wide-model scoring paths
+    (FixedEffectCoordinate.scala:144-155;
+    RandomEffectCoordinate.scala:346-366 broadcast set): the SAME
+    (feature_index → coefficient) model table scores the part relation
+    twice through score_by_join — once with the broadcast hint (J7's
+    broadcast-the-small-set physical strategy), once with
+    broadcast_model=False (the shuffle join for models past broadcast
+    size) — and both exact integer score sums must equal the SQL closed
+    form. Gates the model-as-table scoring path the literal plan (J4,
+    m12) cannot exercise"""
     from photon_ml_spark.ml.scoring import score_by_join
 
     part = _t(spark, sf_dir, "part").select(
@@ -1204,23 +1200,22 @@ def j7_byjoin_scoring(spark, sf_dir):
     )
 
 
-@register(
-    "m2b_per_entity_poisson",
-    oracle="""
+M2B_PER_ENTITY_POISSON_SQL = """
 SELECT CAST(l_suppkey AS VARCHAR) AS entity,
        0.0 AS g_x, 0.0 AS g_int,
        CAST(COUNT(*) AS BIGINT) AS n_samples
 FROM lineitem WHERE l_suppkey < 40 GROUP BY l_suppkey
-""",
-    note="M2 poisson family (count response) through the per-entity "
-    "Newton solver over Arrow batches of entities, verified by a "
-    "FIXED-POINT oracle like m13: the penalized gradient "
-    "Σ(exp(m) − y)·x + λβ (intercept unpenalized) is recomputed "
-    "DISTRIBUTED at the returned coefficients and must round to 0 per "
-    "entity (PoissonLossFunction.scala; no closed form exists for the "
-    "optimum itself)",
-)
+"""
+
+
 def m2b_per_entity_poisson(spark, sf_dir):
+    """M2 poisson family (count response) through the per-entity Newton
+    solver over Arrow batches of entities, verified by a FIXED-POINT
+    oracle like m13: the penalized gradient Σ(exp(m) − y)·x + λβ
+    (intercept unpenalized) is recomputed DISTRIBUTED at the returned
+    coefficients and must round to 0 per entity
+    (PoissonLossFunction.scala; no closed form exists for the optimum
+    itself)"""
     from photon_ml_spark.ml.random_effects import fit_random_effects
 
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_suppkey") < 40).select(
@@ -1254,9 +1249,7 @@ def m2b_per_entity_poisson(spark, sf_dir):
     )
 
 
-@register(
-    "m1c_tron_fixed_effect",
-    oracle="""
+M1C_TRON_FIXED_EFFECT_SQL = """
 WITH d AS (
   SELECT l_quantity AS x,
          ROUND(l_extendedprice / 1000) AS y,
@@ -1275,15 +1268,15 @@ SELECT ROUND((sxr * n - sx * sr) / det, 6) AS coef,
        ROUND(((sxx + 500.0) * sr - sx * sxr) / det, 6) AS intercept,
        'tron' AS optimizer, CAST(TRUE AS BOOLEAN) AS converged
 FROM sol
-""",
-    note="A2/M1: trust-region truncated Newton (TRON.scala:78-233) with "
-    "distributed Hessian·vector CG rounds "
-    "(HessianVectorAggregator.scala) — ridge with an OFFSET through the "
-    "real solve_tron path; oracle is the exact 2×2 ridge normal-equation "
-    "solution on offset-adjusted moments via Cramer's rule (intercept "
-    "unpenalized)",
-)
+"""
+
+
 def m1c_tron_fixed_effect(spark, sf_dir):
+    """A2/M1: trust-region truncated Newton (TRON.scala:78-233) with
+    distributed Hessian·vector CG rounds (HessianVectorAggregator.scala)
+    — ridge with an OFFSET through the real solve_tron path; oracle is
+    the exact 2×2 ridge normal-equation solution on offset-adjusted
+    moments via Cramer's rule (intercept unpenalized)"""
     from photon_ml_spark.ml.glm import fit_fixed_effect
 
     d = _t(spark, sf_dir, "lineitem").select(
@@ -1310,9 +1303,7 @@ def m1c_tron_fixed_effect(spark, sf_dir):
 # ------------------------------------------------------------ A12 legacy suite
 
 
-@register(
-    "a12_peak_f1_aic",
-    oracle="""
+A12_PEAK_F1_AIC_SQL = """
 WITH scored AS (
   SELECT l_discount * 5.0 - l_tax * 3.0 + l_quantity / 25.0 - 1.0 AS score,
          CASE WHEN l_returnflag = 'R' THEN 1.0 ELSE 0.0 END AS label,
@@ -1355,14 +1346,15 @@ SELECT ROUND(f1.peak_f1, 5) AS peak_f1,
        ROUND(2.0 * 4 - 2.0 * pll.loglik, 4) AS p_aic,
        ROUND(2.0 * 4 - 2.0 * pll.loglik + 2.0 * 4 * 5 / (pll.n - 5), 4) AS p_aicc
 FROM f1, ll, pll
-""",
-    note="A12: legacy metric suite extras — peak F1 over all thresholds "
-    "(window sweep) + logistic AND Poisson data log-likelihood + "
-    "small-sample-corrected AIC (Evaluation.scala:40-165, logistic "
-    ":148-161, poisson :131-145, AIC :105-125); lnΓ(1+y) exact via "
-    "JVM Σ ln i, DuckDB LGAMMA on the oracle side",
-)
+"""
+
+
 def a12_peak_f1_aic(spark, sf_dir):
+    """A12: legacy metric suite extras — peak F1 over all thresholds
+    (window sweep) + logistic AND Poisson data log-likelihood +
+    small-sample-corrected AIC (Evaluation.scala:40-165, logistic
+    :148-161, poisson :131-145, AIC :105-125); lnΓ(1+y) exact via JVM Σ
+    ln i, DuckDB LGAMMA on the oracle side"""
     from photon_ml_spark.functions.metrics import (
         logistic_data_loglik_and_aic,
         peak_f1,

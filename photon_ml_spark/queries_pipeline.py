@@ -17,7 +17,7 @@ from pyspark.sql import Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from photon_ml_spark.materialize import persist, release
-from photon_ml_spark.queries import _t, register
+from photon_ml_spark.queries import _t, register, timed
 
 # Shared SQL fragments -------------------------------------------------------
 
@@ -55,9 +55,7 @@ def _quantized(df):
 # ------------------------------------------------------------------ text
 
 
-@register(
-    "x1_text_quality",
-    oracle=f"""
+X1_QUALITY_SCORES_SQL = f"""
 WITH t AS (
   SELECT doc_id, text, {_TOKS_SQL} AS toks FROM documents WHERE doc_id % 5 = 0
 )
@@ -74,11 +72,13 @@ SELECT doc_id,
         + GREATEST(1.0 - CAST(len(regexp_extract_all(text, '[^\\w\\s]')) AS BIGINT)
                    / CAST(GREATEST(length(text), 1) AS DOUBLE) * 10.0, 0.0)) / 3.0 AS quality
 FROM t
-""",
-    note="pipeline/text: token counts (whitespace + BPE-ish regex), stopword/"
-    "punct ratios, composite quality score — exact rational arithmetic",
-)
-def x1_text_quality(spark, sf_dir):
+"""
+
+
+def x1_quality_scores(spark, sf_dir):
+    """pipeline/text: token counts (whitespace + BPE-ish regex),
+    stopword/punct ratios, composite quality score — exact rational
+    arithmetic"""
     from photon_ml_spark.operators.text import bpe_ish_token_count, quality_score
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
@@ -117,10 +117,10 @@ pred AS (
 SELECT lang_pred, CAST(COUNT(*) AS BIGINT) AS n_docs
 FROM pred GROUP BY lang_pred
 """,
-    note="pipeline/text: stopword-profile language heuristic, argmax with "
-    "lexicographic tie-break",
 )
 def x2_language_id(spark, sf_dir):
+    """pipeline/text: stopword-profile language heuristic, argmax with
+    lexicographic tie-break"""
     from photon_ml_spark.operators.text import identify_language
 
     docs = _t(spark, sf_dir, "documents")
@@ -131,9 +131,7 @@ def x2_language_id(spark, sf_dir):
     )
 
 
-@register(
-    "x3_bow_exact_dedup",
-    oracle=f"""
+X3_BOW_EXACT_DEDUP_SQL = f"""
 WITH s AS (
   SELECT doc_id,
          array_to_string(list_sort(list_distinct({_TOKS_SQL})), ' ') AS dup_key
@@ -141,20 +139,19 @@ WITH s AS (
 )
 SELECT dup_key, CAST(COUNT(*) AS BIGINT) AS n_docs, MIN(doc_id) AS keep_id
 FROM s GROUP BY dup_key HAVING COUNT(*) > 1
-""",
-    note="pipeline/dedup: exact dedup via hash-groupBy on the canonical "
-    "bag-of-words signature",
-)
+"""
+
+
 def x3_bow_exact_dedup(spark, sf_dir):
+    """pipeline/dedup: exact dedup via hash-groupBy on the canonical
+    bag-of-words signature"""
     from photon_ml_spark.operators.dedup import bow_exact_dedup
 
     docs = _t(spark, sf_dir, "documents")
     return bow_exact_dedup(docs).select("dup_key", "n_docs", "keep_id")
 
 
-@register(
-    "x24_substring_spans",
-    oracle=f"""
+X24_SUBSTRING_SPANS_SQL = f"""
 WITH t AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
 w AS (SELECT doc_id, unnest(range(0, len(toks) - 9)) AS pos, toks
       FROM t WHERE len(toks) >= 10),
@@ -175,16 +172,17 @@ j AS (SELECT doc_id, pos, SUM(nw) OVER (PARTITION BY doc_id ORDER BY pos
 SELECT doc_id, MIN(pos) AS span_start, MAX(pos) + 10 AS span_end,
        CAST(COUNT(*) AS BIGINT) AS n_windows
 FROM j GROUP BY doc_id, island
-""",
-    note="pipeline/dedup: exact substring-level dedup (Lee et al. 2022 "
-    "arXiv:2107.06499 at token granularity) — every duplicated 10-token "
-    "window corpus-wide, merged to maximal per-doc spans via "
-    "gaps-and-islands (doc-partitioned windows). Gate row runs the "
-    "exact string-window strategy; the rolling double-hash scale path "
-    "(16 bytes/window on the wire, explode folded map-side) is "
-    "span-identical by regression test",
-)
+"""
+
+
 def x24_substring_spans(spark, sf_dir):
+    """pipeline/dedup: exact substring-level dedup (Lee et al. 2022
+    arXiv:2107.06499 at token granularity) — every duplicated 10-token
+    window corpus-wide, merged to maximal per-doc spans via
+    gaps-and-islands (doc-partitioned windows). Gate row runs the exact
+    string-window strategy; the rolling double-hash scale path (16
+    bytes/window on the wire, explode folded map-side) is span-identical
+    by regression test"""
     from photon_ml_spark.operators.dedup import duplicated_window_spans
 
     docs = _t(spark, sf_dir, "documents")
@@ -213,10 +211,10 @@ JOIN sizes sa ON sa.doc_id = id_a
 JOIN sizes sb ON sb.doc_id = id_b
 WHERE n_inter / CAST(sa.sz + sb.sz - n_inter AS DOUBLE) >= 0.5
 """,
-    note="pipeline/dedup: bigram-shingle Jaccard pairs >= 0.5 via shingle "
-    "self-join (25 planted near-dup pairs in the synthetic corpus)",
 )
 def x4_ngram_jaccard_pairs(spark, sf_dir):
+    """pipeline/dedup: bigram-shingle Jaccard pairs >= 0.5 via shingle
+    self-join (25 planted near-dup pairs in the synthetic corpus)"""
     from photon_ml_spark.operators.dedup import ngram_jaccard_pairs
 
     docs = _t(spark, sf_dir, "documents")
@@ -225,9 +223,7 @@ def x4_ngram_jaccard_pairs(spark, sf_dir):
     )
 
 
-@register(
-    "x5_minhash_signatures",
-    oracle=f"""
+X5_MINHASH_SIGNATURES_SQL = f"""
 WITH ds AS ({_DOC_SIDS_SQL})
 SELECT doc_id,
        MIN((sid * 1000003 + 12345) % 2147483647) AS mh0,
@@ -239,16 +235,19 @@ SELECT doc_id,
        MIN((sid * 424243 + 44444) % 2147483647) AS mh6,
        MIN((sid * 311111 + 55555) % 2147483647) AS mh7
 FROM ds WHERE doc_id % 10 = 0 GROUP BY doc_id
-""",
-    note="pipeline/dedup: portable minhash signatures (linear permutations "
-    "over dense bigram-shingle ids)",
-)
-def x5_minhash_signatures(spark, sf_dir):
-    from photon_ml_spark.operators.dedup import minhash_signatures, token_ids
+"""
 
-    docs = _t(spark, sf_dir, "documents")
-    sids = token_ids(docs, n=2).filter(F.col("doc_id") % 10 == 0)
-    return minhash_signatures(sids, num_hashes=8)
+
+def x5_minhash_signatures(doc_sids):
+    """pipeline/dedup: portable minhash signatures (linear permutations
+    over dense bigram-shingle ids). ``doc_sids`` is the documents
+    table's ``token_ids(n=2)`` relation, which the x6 suite builds once
+    for its shingle-based constituents"""
+    from photon_ml_spark.operators.dedup import minhash_signatures
+
+    return minhash_signatures(
+        doc_sids.filter(F.col("doc_id") % 10 == 0), num_hashes=8
+    )
 
 
 # MinHash+LSH candidate/verify pipeline as reusable CTEs (shared by the
@@ -310,26 +309,23 @@ _LSH_ALL_PAIRS_SQL = (
 )
 
 
-@register(
-    "x6_minhash_lsh_pairs",
-    oracle=f"""
+X6_MINHASH_LSH_PAIRS_SQL = f"""
 WITH {_LSH_PAIRS_CTES}
 SELECT id_a, id_b, jaccard FROM lsh_pairs
-""",
-    note="pipeline/dedup: full MinHash+LSH (16 hashes, 4 bands) candidate "
-    "generation + exact-Jaccard verification; recall vs x4 is the LSH "
-    "band-probability, reproduced exactly by the oracle",
-)
-def x6_minhash_lsh_pairs(spark, sf_dir):
+"""
+
+
+def x6_minhash_lsh_pairs(docs, doc_sids):
+    """pipeline/dedup: full MinHash+LSH (16 hashes, 4 bands) candidate
+    generation + exact-Jaccard verification; recall vs x4 is the LSH
+    band-probability, reproduced exactly by the oracle. ``doc_sids``:
+    see x5"""
     from photon_ml_spark.operators.dedup import minhash_lsh_dedup
 
-    docs = _t(spark, sf_dir, "documents")
-    return minhash_lsh_dedup(docs, threshold=0.5, n=2)
+    return minhash_lsh_dedup(docs, threshold=0.5, n=2, doc_sids=doc_sids)
 
 
-@register(
-    "x17_dedup_clusters",
-    oracle=f"""
+X17_DEDUP_CLUSTERS_SQL = f"""
 WITH RECURSIVE {_LSH_PAIRS_CTES},
 edges AS (
   SELECT id_a AS u, id_b AS v FROM lsh_pairs
@@ -346,13 +342,14 @@ SELECT d.doc_id,
        COALESCE(c.cluster_id, d.doc_id) AS cluster_id,
        COALESCE(c.cluster_id, d.doc_id) = d.doc_id AS is_keep
 FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
-""",
-    note="pipeline/dedup: LSH dup pairs -> connected components "
-    "(min-label propagation + pointer jumping, 2 shuffles/iter, no "
-    "driver state) -> one canonical keeper per dup cluster; oracle "
-    "replays the closure with a recursive CTE",
-)
+"""
+
+
 def x17_dedup_clusters(spark, sf_dir):
+    """pipeline/dedup: LSH dup pairs -> connected components (min-label
+    propagation + pointer jumping, 2 shuffles/iter, no driver state) ->
+    one canonical keeper per dup cluster; oracle replays the closure
+    with a recursive CTE"""
     from photon_ml_spark.operators.dedup import cluster_and_keep, minhash_lsh_dedup
 
     docs = _t(spark, sf_dir, "documents")
@@ -425,9 +422,7 @@ _CC_KEEP_SQL = """
 )"""
 
 
-@register(
-    "x32_incremental_neardup",
-    oracle=f"""
+X32_INCREMENTAL_NEARDUP_SQL = f"""
 WITH RECURSIVE {_LSH_PAIRS_CTES},
 ip AS MATERIALIZED (
   SELECT id_a, id_b, jaccard FROM lsh_pairs
@@ -451,34 +446,30 @@ UNION ALL
 SELECT 'inc_survivors' AS variant, doc_id AS id_a,
        CAST(-1 AS BIGINT) AS id_b, CAST(NULL AS DOUBLE) AS stat
 FROM i_s
-""",
-    note="pipeline/dedup: PERSISTED-INDEX incremental near-dedup over the "
-    "even-doc-id half of the corpus — save_minhash_index bootstraps "
-    "batch=-1 state on disk for the indexed 2/3, incremental_neardup "
-    "LSH-joins the new 1/3 against the STORED relations (never a "
-    "corpus rescan), "
-    "drop_new_duplicates resolves first-seen survivors; oracle replays "
-    "index-side ∪ batch-side banding + exact-Jaccard verify + the "
-    "new-new component closure",
-)
-def x32_incremental_neardup(spark, sf_dir, doc_sids=None):
+"""
+
+
+def x32_incremental_neardup(spark, sf_dir, doc_sids):
+    """pipeline/dedup: PERSISTED-INDEX incremental near-dedup over the
+    even-doc-id half of the corpus — save_minhash_index bootstraps
+    batch=-1 state on disk for the indexed 2/3, incremental_neardup
+    LSH-joins the new 1/3 against the STORED relations (never a corpus
+    rescan), drop_new_duplicates resolves first-seen survivors; oracle
+    replays index-side ∪ batch-side banding + exact-Jaccard verify + the
+    new-new component closure. ``doc_sids``: see x5"""
     import tempfile
 
     from photon_ml_spark.operators.dedup import (
         drop_new_duplicates,
         incremental_neardup,
         save_minhash_index,
-        token_ids,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    sids = doc_sids if doc_sids is not None else persist(
-        token_ids(docs, n=2), StorageLevel.MEMORY_AND_DISK_DESER
-    )
     half = docs.filter(F.col("doc_id") % 2 == 0)
     old = half.filter(F.col("doc_id") % 3 != 0)
     new = half.filter(F.col("doc_id") % 3 == 0)
-    sid_fn = _corpus_sid_fn(sids)
+    sid_fn = _corpus_sid_fn(doc_sids)
     idx = tempfile.mkdtemp(prefix="photon_inc_idx_")
     save_minhash_index(old, idx, n=2, num_hashes=16, sid_fn=sid_fn)
     # persisted: the pair relation feeds both the output block and the
@@ -504,9 +495,7 @@ def x32_incremental_neardup(spark, sf_dir, doc_sids=None):
     )
 
 
-@register(
-    "x33_stream_neardup",
-    oracle=f"""
+X33_STREAM_NEARDUP_SQL = f"""
 WITH RECURSIVE lshp AS MATERIALIZED (
   SELECT * FROM ({_LSH_ALL_PAIRS_SQL}) lp0
   WHERE id_a % 2 = 1 AND id_b % 2 = 1
@@ -543,27 +532,24 @@ UNION ALL
 SELECT 'stream' AS variant, doc_id AS id_a, CAST(1 AS BIGINT) AS id_b,
        CAST(NULL AS DOUBLE) AS stat
 FROM s1_s
-""",
-    note="streaming/dedup: 2-micro-batch STREAMING near-dedup replay over "
-    "the odd-doc-id half of the corpus — "
-    "neardup_process_batch (the foreachBatch body) bootstraps the "
-    "shared index from batch 0 (batch-internal LSH dedup + staged "
-    "batch=0 publish + _published marker), then batch 1 increments "
-    "against ONLY batch 0's surviving state; output = published "
-    "survivors with their publish-partition id, so the staged "
-    "batch=<id> layout itself is under the value hash; oracle replays "
-    "both batches (stream/batch parity of the wrapper is pytest-pinned)",
-)
-def x33_stream_neardup(spark, sf_dir, doc_sids=None, phase_stamps=None):
+"""
+
+
+def x33_stream_neardup(spark, sf_dir, doc_sids, phase_stamps=None):
+    """streaming/dedup: 2-micro-batch STREAMING near-dedup replay over
+    the odd-doc-id half of the corpus — neardup_process_batch (the
+    foreachBatch body) bootstraps the shared index from batch 0
+    (batch-internal LSH dedup + staged batch=0 publish + _published
+    marker), then batch 1 increments against ONLY batch 0's surviving
+    state; output = published survivors with their publish-partition id,
+    so the staged batch=<id> layout itself is under the value hash;
+    oracle replays both batches (stream/batch parity of the wrapper is
+    pytest-pinned). ``doc_sids``: see x5"""
     import tempfile
 
-    from photon_ml_spark.operators.dedup import token_ids
     from photon_ml_spark.streaming.curation import neardup_process_batch
 
     docs = _t(spark, sf_dir, "documents")
-    sids = doc_sids if doc_sids is not None else persist(
-        token_ids(docs, n=2), StorageLevel.MEMORY_AND_DISK_DESER
-    )
     half = docs.filter(F.col("doc_id") % 2 == 1)
     root = tempfile.mkdtemp(prefix="photon_stream_dedup_")
     for bid, keep in ((0, F.col("doc_id") % 3 != 0), (1, F.col("doc_id") % 3 == 0)):
@@ -571,7 +557,7 @@ def x33_stream_neardup(spark, sf_dir, doc_sids=None, phase_stamps=None):
         neardup_process_batch(
             half.filter(keep), f"{root}/index", f"{root}/docs",
             batch_id=bid, threshold=0.5, n=2, num_hashes=16, bands=4,
-            sid_fn=_corpus_sid_fn(sids), timings=t,
+            sid_fn=_corpus_sid_fn(doc_sids), timings=t,
         )
         if t:
             # b0 = bootstrap (batch-internal LSH), b1 = incremental
@@ -593,9 +579,7 @@ _MIX_SHARES_SQL = " UNION ALL ".join(
 )
 
 
-@register(
-    "x18_corpus_mix",
-    oracle=f"""
+X18_SHARE_MIX_SQL = f"""
 WITH shares AS ({_MIX_SHARES_SQL}),
 counts AS (SELECT source, COUNT(*) AS cnt FROM documents GROUP BY source),
 j AS (SELECT c.source, c.cnt, s.share FROM counts c JOIN shares s USING (source)),
@@ -607,13 +591,14 @@ SELECT d.doc_id, d.source, ROUND(r.rate, 6) AS rate
 FROM documents d JOIN rates r USING (source)
 WHERE CAST((48271 * ((d.doc_id * 104729 + 11) % 2147483647)) % 2147483647 AS DOUBLE)
       / 2147483647.0 < r.rate
-""",
-    note="pipeline/mixing: downsample sources to a target corpus mix "
-    "(feasible-total rates computed in-plan, 1-row T* scalar cross-"
-    "joined — no collect) + deterministic per-row Bernoulli keep; "
-    "portable LCG gate lets the oracle reproduce the exact row set",
-)
-def x18_corpus_mix(spark, sf_dir):
+"""
+
+
+def x18_share_mix(spark, sf_dir):
+    """pipeline/mixing: downsample sources to a target corpus mix
+    (feasible-total rates computed in-plan, 1-row T* scalar cross-joined
+    — no collect) + deterministic per-row Bernoulli keep; portable LCG
+    gate lets the oracle reproduce the exact row set"""
     from photon_ml_spark.operators.sampling import corpus_mix, lcg_uniform
 
     docs = _t(spark, sf_dir, "documents")
@@ -631,9 +616,7 @@ def x18_corpus_mix(spark, sf_dir):
     return out.select("doc_id", "source", F.round("rate", 6).alias("rate"))
 
 
-@register(
-    "x28_epoch_oversample",
-    oracle=f"""
+X28_EPOCH_OVERSAMPLE_SQL = f"""
 WITH shares AS ({_MIX_SHARES_SQL}),
 counts AS (SELECT source, COUNT(*) AS cnt FROM documents GROUP BY source),
 j AS (SELECT c.source, c.cnt, s.share FROM counts c JOIN shares s USING (source)),
@@ -652,14 +635,15 @@ SELECT doc_id, source,
        CAST(unnest(generate_series(0, n - 1)) AS BIGINT) AS copy_idx,
        ROUND(rate, 6) AS rate
 FROM base WHERE n >= 1
-""",
-    note="pipeline/mixing: epoch-capped oversampling to target shares "
-    "(UniMax, Chung et al. 2023) — under-represented sources REPEATED "
-    "up to max_epochs=3, over-represented downsampled, copies tagged; "
-    "floor(rate) + deterministic-Bernoulli(frac) integerization makes "
-    "the exact copy multiset engine-replayable",
-)
+"""
+
+
 def x28_epoch_oversample(spark, sf_dir):
+    """pipeline/mixing: epoch-capped oversampling to target shares
+    (UniMax, Chung et al. 2023) — under-represented sources REPEATED up
+    to max_epochs=3, over-represented downsampled, copies tagged;
+    floor(rate) + deterministic-Bernoulli(frac) integerization makes the
+    exact copy multiset engine-replayable"""
     from photon_ml_spark.operators.sampling import (
         lcg_uniform,
         oversample_to_shares,
@@ -682,9 +666,7 @@ def x28_epoch_oversample(spark, sf_dir):
     )
 
 
-@register(
-    "x27_dsir_select",
-    oracle=f"""
+X27_DSIR_SELECT_SQL = f"""
 WITH toks AS (
   SELECT doc_id, (lang = 'zh') AS tgt, unnest({_TOKS_SQL}) AS tok
   FROM documents
@@ -717,15 +699,16 @@ keyed AS (
 SELECT doc_id, n_tokens, ROUND(gk, 6) + 0.0 AS gumbel_key,
        CAST(ROW_NUMBER() OVER (ORDER BY gk DESC, doc_id) AS INTEGER) AS rank
 FROM keyed ORDER BY gk DESC, doc_id LIMIT 40
-""",
-    note="pipeline/selection: DSIR importance resampling (Xie et al. "
-    "NeurIPS 2023) — add-one unigram LMs over target (lang='zh') vs "
-    "raw docs in ONE count pass, per-doc log importance ratio via a "
-    "vocab-bounded join, Gumbel top-k (deterministic portable uniform) "
-    "draws k=40 raw docs ∝ exp(logweight) without replacement; "
-    "TakeOrdered top-k, no global sort",
-)
+"""
+
+
 def x27_dsir_select(spark, sf_dir):
+    """pipeline/selection: DSIR importance resampling (Xie et al.
+    NeurIPS 2023) — add-one unigram LMs over target (lang='zh') vs raw
+    docs in ONE count pass, per-doc log importance ratio via a
+    vocab-bounded join, Gumbel top-k (deterministic portable uniform)
+    draws k=40 raw docs ∝ exp(logweight) without replacement;
+    TakeOrdered top-k, no global sort"""
     from photon_ml_spark.operators.sampling import dsir_select, lcg_uniform
 
     docs = _t(spark, sf_dir, "documents")
@@ -742,9 +725,7 @@ def x27_dsir_select(spark, sf_dir):
     )
 
 
-@register(
-    "x7_simhash_neardup",
-    oracle=f"""
+X7_SIMHASH_NEARDUP_SQL = f"""
 WITH ds AS ({_DOC_SIDS_SQL}),
 sigs AS (
   SELECT doc_id, CAST(
@@ -778,21 +759,22 @@ cand AS (
 )
 SELECT id_a, id_b, CAST(bit_count(xor(sh_a, sh_b)) AS BIGINT) AS hamming
 FROM cand WHERE bit_count(xor(sh_a, sh_b)) <= 3
-""",
-    note="pipeline/dedup: 16-bit SimHash over bigram shingles, hamming<=3 "
-    "pairs via 4-band pigeonhole buckets + popcount verify",
-)
-def x7_simhash_neardup(spark, sf_dir):
+"""
+
+
+def x7_simhash_neardup(docs, doc_sids):
+    """pipeline/dedup: 16-bit SimHash over bigram shingles, hamming<=3
+    pairs via 4-band pigeonhole buckets + popcount verify. ``doc_sids``:
+    see x5"""
     from photon_ml_spark.operators.dedup import (
         SIMHASH_ORACLE_BITS,
         simhash_neardup_pairs,
     )
 
-    docs = _t(spark, sf_dir, "documents")
     # pinned to the narrow LCG shape the DuckDB oracle above replays in
     # ANSI SQL; the function DEFAULT is the wide xxhash scale form
     out = simhash_neardup_pairs(
-        docs, max_hamming=3, n=2,
+        docs, max_hamming=3, n=2, doc_sids=doc_sids,
         bits=SIMHASH_ORACLE_BITS, bit_hash="lcg",
     )
     return out.select("id_a", "id_b", F.col("hamming").cast("long").alias("hamming"))
@@ -801,9 +783,7 @@ def x7_simhash_neardup(spark, sf_dir):
 # ------------------------------------------------------------- embeddings
 
 
-@register(
-    "x8_embedding_neardup",
-    oracle=f"""
+X8_EMBEDDING_NEARDUP_SQL = f"""
 WITH q AS (SELECT vec_id, label, {_QE_SQL} AS qe FROM embeddings)
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
        list_dot_product(a.qe, b.qe)
@@ -811,11 +791,12 @@ SELECT a.vec_id AS id_a, b.vec_id AS id_b,
 FROM q a JOIN q b ON a.label = b.label AND a.vec_id < b.vec_id
 WHERE list_dot_product(a.qe, b.qe)
         / sqrt(list_dot_product(a.qe, a.qe)) / sqrt(list_dot_product(b.qe, b.qe)) >= 0.4
-""",
-    note="pipeline/dedup: embedding-cosine near-dup pairs >= 0.4, "
-    "label-blocked self-join; integer-quantized dot products",
-)
+"""
+
+
 def x8_embedding_neardup(spark, sf_dir):
+    """pipeline/dedup: embedding-cosine near-dup pairs >= 0.4,
+    label-blocked self-join; integer-quantized dot products"""
     from photon_ml_spark.operators.similarity import cosine_neardup_pairs
 
     emb = _quantized(_t(spark, sf_dir, "embeddings"))
@@ -841,13 +822,12 @@ SELECT query_id, vec_id, cosine, CAST(rank AS INT) AS rank FROM ranked WHERE ran
 """
 
 
-@register(
-    "x9_ann_brute_topk",
-    oracle=_ANN_ORACLE_BASE.format(join_cond="TRUE"),
-    note="pipeline/similarity: exact brute-force cosine top-5 for 1-in-25 "
-    "query vectors (broadcast cross join + rank window)",
-)
+X9_ANN_BRUTE_TOPK_SQL = _ANN_ORACLE_BASE.format(join_cond="TRUE")
+
+
 def x9_ann_brute_topk(spark, sf_dir):
+    """pipeline/similarity: exact brute-force cosine top-5 for 1-in-25
+    query vectors (broadcast cross join + rank window)"""
     from photon_ml_spark.operators.similarity import cosine_topk
 
     emb = _quantized(_t(spark, sf_dir, "embeddings"))
@@ -855,15 +835,14 @@ def x9_ann_brute_topk(spark, sf_dir):
     return cosine_topk(emb, queries, k=5, vec_col="qe")
 
 
-@register(
-    "x9b_ann_blas_topk",
-    oracle=_ANN_ORACLE_BASE.format(join_cond="TRUE"),
-    note="pipeline/similarity: the SAME exact brute-force top-5 as x9 "
-    "through the Arrow/BLAS path (mapInPandas batch matmul + per-batch "
-    "partial top-k, broadcast query matrix) — identical oracle, so the "
-    "two physical strategies are verified value-equal",
-)
+X9B_ANN_BLAS_TOPK_SQL = _ANN_ORACLE_BASE.format(join_cond="TRUE")
+
+
 def x9b_ann_blas_topk(spark, sf_dir):
+    """pipeline/similarity: the SAME exact brute-force top-5 as x9
+    through the Arrow/BLAS path (mapInPandas batch matmul + per-batch
+    partial top-k, broadcast query matrix) — identical oracle, so the
+    two physical strategies are verified value-equal"""
     from photon_ml_spark.operators.similarity import cosine_topk_blas
 
     emb = _quantized(_t(spark, sf_dir, "embeddings"))
@@ -871,9 +850,7 @@ def x9b_ann_blas_topk(spark, sf_dir):
     return cosine_topk_blas(emb, queries, k=5, vec_col="qe")
 
 
-@register(
-    "x10_ann_ivf_topk",
-    oracle=f"""
+X10_ANN_IVF_TOPK_SQL = f"""
 WITH base AS (SELECT vec_id, {_QE_SQL} AS qe FROM embeddings),
 cells AS (
   SELECT vec_id, qe,
@@ -895,12 +872,13 @@ ranked AS (
   FROM pairs
 )
 SELECT query_id, vec_id, cosine, CAST(rank AS INT) AS rank FROM ranked WHERE rank <= 5
-""",
-    note="pipeline/similarity: LSH/IVF-bucketed top-5 — candidates limited "
-    "to the query's Walsh-hyperplane cell (the scale path; recall vs x9 "
-    "measured in tests)",
-)
+"""
+
+
 def x10_ann_ivf_topk(spark, sf_dir):
+    """pipeline/similarity: LSH/IVF-bucketed top-5 — candidates limited
+    to the query's Walsh-hyperplane cell (the scale path; recall vs x9
+    measured in tests)"""
     from photon_ml_spark.operators.similarity import (
         alternating_patterns,
         hyperplane_cell,
@@ -915,19 +893,18 @@ def x10_ann_ivf_topk(spark, sf_dir):
     return ivf_topk(emb, queries, k=5, cell_col="cell", vec_col="qe")
 
 
-@register(
-    "x10b_ann_ivf_index_topk",
-    oracle=_ANN_ORACLE_BASE.format(join_cond="TRUE"),
-    note="pipeline/similarity: PERSISTED-IVF search — save_ivf_index "
-    "materializes a KMeans coarse quantizer + the corpus parquet "
-    "PARTITIONED BY cell on disk, ivf_topk_from_index routes each "
-    "query to its n_probe nearest stored centroids and joins only "
-    "those cells' files (partition-pruned scan). Gated at n_probe = "
-    "n_cells (full probe), which is EXACT brute force by the IVF "
-    "identity — so the brute oracle verifies the whole save→route→"
-    "prune→score path value-equal regardless of quantizer assignment",
-)
+X10B_ANN_IVF_INDEX_TOPK_SQL = _ANN_ORACLE_BASE.format(join_cond="TRUE")
+
+
 def x10b_ann_ivf_index_topk(spark, sf_dir):
+    """pipeline/similarity: PERSISTED-IVF search — save_ivf_index
+    materializes a KMeans coarse quantizer + the corpus parquet
+    PARTITIONED BY cell on disk, ivf_topk_from_index routes each query
+    to its n_probe nearest stored centroids and joins only those cells'
+    files (partition-pruned scan). Gated at n_probe = n_cells (full
+    probe), which is EXACT brute force by the IVF identity — so the
+    brute oracle verifies the whole save→route→prune→score path
+    value-equal regardless of quantizer assignment"""
     import tempfile
 
     from photon_ml_spark.operators.similarity import (
@@ -944,9 +921,7 @@ def x10b_ann_ivf_index_topk(spark, sf_dir):
     )
 
 
-@register(
-    "x9c_ann_sq8_topk",
-    oracle=f"""
+X9C_ANN_SQ8_TOPK_SQL = f"""
 WITH q AS (SELECT vec_id, {_QE_SQL} AS qe FROM embeddings),
 dims AS (
   SELECT i, MIN(qe[i + 1]) AS lo, MAX(qe[i + 1]) - MIN(qe[i + 1]) AS d
@@ -977,17 +952,18 @@ ranked AS (
 )
 SELECT query_id, vec_id, cosine, CAST(rank AS INT) AS rank
 FROM ranked WHERE rank <= 5
-""",
-    note="pipeline/similarity: SQ8 scalar-quantized top-5 (the FAISS "
-    "QT_8bit idea — per-dim min-max codes in ONE signed byte, a ~4x "
-    "smaller persisted index than float32): train (one min/max agg "
-    "pass) -> encode to array<tinyint> -> score on the integer "
-    "reconstruction Z = 255*lo + d*(code+128), which equals the "
-    "dequantized cosine EXACTLY by scale invariance — so the oracle "
-    "replays quantize+reconstruct+rank bit-identically; all Catalyst "
-    "expressions, no Python in encode or search",
-)
+"""
+
+
 def x9c_ann_sq8_topk(spark, sf_dir):
+    """pipeline/similarity: SQ8 scalar-quantized top-5 (the FAISS
+    QT_8bit idea — per-dim min-max codes in ONE signed byte, a ~4x
+    smaller persisted index than float32): train (one min/max agg pass)
+    -> encode to array<tinyint> -> score on the integer reconstruction Z
+    = 255*lo + d*(code+128), which equals the dequantized cosine EXACTLY
+    by scale invariance — so the oracle replays
+    quantize+reconstruct+rank bit-identically; all Catalyst expressions,
+    no Python in encode or search"""
     from photon_ml_spark.operators.similarity import (
         sq8_encode,
         sq8_topk,
@@ -1003,9 +979,7 @@ def x9c_ann_sq8_topk(spark, sf_dir):
     return sq8_topk(enc, queries, lo, hi, k=5)
 
 
-@register(
-    "x9d_ann_pq_topk",
-    oracle=f"""
+X9D_ANN_PQ_TOPK_SQL = f"""
 WITH q AS (SELECT vec_id, {_QE_SQL} AS qe FROM embeddings),
 seeds AS (
   SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS c, qe
@@ -1047,19 +1021,20 @@ ranked AS (
 )
 SELECT query_id, vec_id, cosine, CAST(rank AS INT) AS rank
 FROM ranked WHERE rank <= 5
-""",
-    note="pipeline/similarity: PQ product-quantized ADC top-5 (the FAISS "
-    "IVF-PQ storage idea — m=8 sub-quantizers x ksub=16 centroids, one "
-    "BYTE per subvector: dim*4/m = 32x smaller than float32). Gate "
-    "variant uses the deterministic SAMPLED codebook (k-means init "
-    "with zero Lloyd rounds) so the oracle re-derives codebook, codes "
-    "(argmin with ties -> lowest centroid), reconstruction, and the "
-    "asymmetric raw-query-vs-reconstructed-corpus cosine EXACTLY on "
-    "integer-quantized vectors; encode is one numpy distance matrix "
-    "per sub-quantizer per Arrow batch (mapInPandas), search is pure "
-    "Catalyst over the literal codebook",
-)
+"""
+
+
 def x9d_ann_pq_topk(spark, sf_dir):
+    """pipeline/similarity: PQ product-quantized ADC top-5 (the FAISS
+    IVF-PQ storage idea — m=8 sub-quantizers x ksub=16 centroids, one
+    BYTE per subvector: dim*4/m = 32x smaller than float32). Gate
+    variant uses the deterministic SAMPLED codebook (k-means init with
+    zero Lloyd rounds) so the oracle re-derives codebook, codes (argmin
+    with ties -> lowest centroid), reconstruction, and the asymmetric
+    raw-query-vs-reconstructed-corpus cosine EXACTLY on
+    integer-quantized vectors; encode is one numpy distance matrix per
+    sub-quantizer per Arrow batch (mapInPandas), search is pure Catalyst
+    over the literal codebook"""
     from photon_ml_spark.operators.similarity import (
         pq_encode,
         pq_topk,
@@ -1073,9 +1048,7 @@ def x9d_ann_pq_topk(spark, sf_dir):
     return pq_topk(enc, queries, cb, k=5, codes_col="pq", vec_col="qe")
 
 
-@register(
-    "x14_sequence_packing",
-    oracle=f"""
+X14_SEQUENCE_PACKING_SQL = f"""
 WITH t AS (
   SELECT doc_id, doc_id % 8 AS shard,
          CAST(len({_TOKS_SQL}) AS BIGINT) AS n_tokens
@@ -1093,12 +1066,13 @@ SELECT shard, pack_id,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(SUM(n_tokens) AS BIGINT) AS pack_tokens
 FROM packed GROUP BY shard, pack_id
-""",
-    note="pipeline/text: sequence packing — docs assigned to fixed "
-    "2048-token packs by shard-local running sum (deterministic, "
-    "shard-parallel; the LLM-pretraining batch-packing op)",
-)
+"""
+
+
 def x14_sequence_packing(spark, sf_dir):
+    """pipeline/text: sequence packing — docs assigned to fixed
+    2048-token packs by shard-local running sum (deterministic,
+    shard-parallel; the LLM-pretraining batch-packing op)"""
     from photon_ml_spark.operators.text import greedy_pack
 
     docs = _t(spark, sf_dir, "documents")
@@ -1109,9 +1083,7 @@ def x14_sequence_packing(spark, sf_dir):
     )
 
 
-@register(
-    "x25_global_shuffle",
-    oracle="""
+X25_GLOBAL_SHUFFLE_SQL = """
 WITH d AS (
   SELECT l_orderkey * 100 + l_linenumber AS uid
   FROM lineitem WHERE l_orderkey % 7 = 0
@@ -1123,15 +1095,16 @@ SELECT uid,
        CAST((48271 * ((48271 * ((uid + 18) % 2147483647)) % 2147483647))
             % 2147483647 AS BIGINT) AS ord
 FROM d
-""",
-    note="pipeline/export: deterministic global shuffle — pseudo-random "
-    "shard + tie-free within-shard order key as pure expressions "
-    "(Park-Miller bijection), so the pre-training corpus shuffle costs "
-    "one hash exchange + local sort, never a global sort; the physical "
-    "writer (write_training_shards: one sorted file per shard dir) is "
-    "round-trip tested in tests/test_pipeline_ops.py",
-)
+"""
+
+
 def x25_global_shuffle(spark, sf_dir):
+    """pipeline/export: deterministic global shuffle — pseudo-random
+    shard + tie-free within-shard order key as pure expressions
+    (Park-Miller bijection), so the pre-training corpus shuffle costs
+    one hash exchange + local sort, never a global sort; the physical
+    writer (write_training_shards: one sorted file per shard dir) is
+    round-trip tested in tests/test_pipeline_ops.py"""
     from photon_ml_spark.operators.sampling import shuffle_assignment
 
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 7 == 0)
@@ -1143,9 +1116,7 @@ def x25_global_shuffle(spark, sf_dir):
     )
 
 
-@register(
-    "x31_corpus_report",
-    oracle=r"""
+X31_CORPUS_REPORT_SQL = r"""
 WITH t AS (
   SELECT lang,
          CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
@@ -1166,20 +1137,19 @@ SELECT lang,
        ROUND((COUNT(*) - COUNT(DISTINCT fp)) / CAST(COUNT(*) AS DOUBLE), 6)
          AS dup_doc_frac
 FROM t GROUP BY lang
-""",
-    note="pipeline/text: per-language corpus data card — doc/token counts, "
-    "exact-duplicate mass via normalized-fingerprint count-distinct, PII "
-    "incidence; the summary a curation run publishes next to its shards",
-)
+"""
+
+
 def x31_corpus_report(spark, sf_dir):
+    """pipeline/text: per-language corpus data card — doc/token counts,
+    exact-duplicate mass via normalized-fingerprint count-distinct, PII
+    incidence; the summary a curation run publishes next to its shards"""
     from photon_ml_spark.operators.text import corpus_report
 
     return corpus_report(_t(spark, sf_dir, "documents"))
 
 
-@register(
-    "x12_quality_filter",
-    oracle=f"""
+X12_QUALITY_FILTER_SQL = f"""
 WITH t AS (
   SELECT doc_id, text, lang, {_TOKS_SQL} AS toks FROM documents
 ),
@@ -1197,12 +1167,13 @@ SELECT lang,
        CAST(SUM(n_tokens) AS BIGINT) AS tokens_kept,
        ROUND(SUM(quality) / COUNT(*), 6) AS mean_quality
 FROM q WHERE quality >= 0.5 GROUP BY lang
-""",
-    note="pipeline/text: the corpus-curation filter — quality >= threshold, "
-    "surviving docs/token mass per language (the keep/drop decision a "
-    "training-data pipeline runs at ingest)",
-)
+"""
+
+
 def x12_quality_filter(spark, sf_dir):
+    """pipeline/text: the corpus-curation filter — quality >= threshold,
+    surviving docs/token mass per language (the keep/drop decision a
+    training-data pipeline runs at ingest)"""
     from photon_ml_spark.operators.text import quality_score
 
     docs = _t(spark, sf_dir, "documents")
@@ -1214,9 +1185,7 @@ def x12_quality_filter(spark, sf_dir):
     )
 
 
-@register(
-    "x26_model_quality_filter",
-    oracle=f"""
+X26_MODEL_QUALITY_FILTER_SQL = f"""
 WITH t AS (
   SELECT doc_id, lang, text, {_TOKS_SQL} AS toks FROM documents
 ),
@@ -1251,16 +1220,17 @@ SELECT f.lang,
                      THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
 FROM f JOIN probe p USING (lang)
 GROUP BY f.lang, p.coef, p.intercept
-""",
-    note="pipeline/curation: MODEL-based quality filtering — the "
-    "heuristic quality score distilled into one linear probe per "
-    "language (trained by the distributed per-entity solver, the "
-    "fasttext-classifier-filter pattern), documents kept when the "
-    "PROBE's prediction clears the cutoff; integer-quantized features "
-    "keep the normal equations exact so the oracle replays the closed "
-    "form (ridge l2=10, intercept unpenalized)",
-)
+"""
+
+
 def x26_model_quality_filter(spark, sf_dir):
+    """pipeline/curation: MODEL-based quality filtering — the heuristic
+    quality score distilled into one linear probe per language (trained
+    by the distributed per-entity solver, the fasttext-classifier-filter
+    pattern), documents kept when the PROBE's prediction clears the
+    cutoff; integer-quantized features keep the normal equations exact
+    so the oracle replays the closed form (ridge l2=10, intercept
+    unpenalized)"""
     from photon_ml_spark.operators.text import model_quality_filter
 
     docs = _t(spark, sf_dir, "documents")
@@ -1273,19 +1243,18 @@ def x26_model_quality_filter(spark, sf_dir):
     )
 
 
-@register(
-    "x13_token_histogram",
-    oracle=f"""
+X13_TOKEN_HISTOGRAM_SQL = f"""
 WITH t AS (SELECT {_TOKS_SQL} AS toks FROM documents)
 SELECT CAST(len(toks) // 10 AS BIGINT) AS bucket,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(SUM(len(toks)) AS BIGINT) AS n_tokens
 FROM t GROUP BY 1
-""",
-    note="pipeline/text: token-length histogram (decade buckets) — the "
-    "length-distribution scan that sizes packing/truncation decisions",
-)
+"""
+
+
 def x13_token_histogram(spark, sf_dir):
+    """pipeline/text: token-length histogram (decade buckets) — the
+    length-distribution scan that sizes packing/truncation decisions"""
     from photon_ml_spark.operators.text import tokens
 
     docs = _t(spark, sf_dir, "documents")
@@ -1300,9 +1269,7 @@ def x13_token_histogram(spark, sf_dir):
     )
 
 
-@register(
-    "x15_repetition_stats",
-    oracle=f"""
+X15_REPETITION_STATS_SQL = f"""
 WITH t AS (
   SELECT doc_id, {_TOKS_SQL} AS toks FROM documents WHERE doc_id % 4 = 0
 ),
@@ -1324,12 +1291,13 @@ SELECT doc_id,
                  / CAST(len(bigrams) AS DOUBLE)
             ELSE 0.0 END AS dup_bigram_frac
 FROM b
-""",
-    note="pipeline/text: Gopher-style repetition filters — duplicate-"
-    "token and duplicate-bigram fractions per document (boilerplate/"
-    "spam cut); exact int/int rationals, pure Catalyst",
-)
+"""
+
+
 def x15_repetition_stats(spark, sf_dir):
+    """pipeline/text: Gopher-style repetition filters — duplicate-token
+    and duplicate-bigram fractions per document (boilerplate/spam cut);
+    exact int/int rationals, pure Catalyst"""
     from photon_ml_spark.operators.text import repetition_stats
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 4 == 0)
@@ -1354,11 +1322,11 @@ SELECT doc_id,
          '\b\d{16}\b', '[PII]', 'g')) AS BIGINT) AS redacted_len
 FROM documents WHERE doc_id % 6 = 0
 """,
-    note="pipeline/text: PII scan stage — per-document email/phone/card "
-    "regex match counts plus redacted-text length (matches replaced "
-    "with [PII]); single-pass JVM regex, no Python",
 )
 def x16_pii_scan(spark, sf_dir):
+    """pipeline/text: PII scan stage — per-document email/phone/card
+    regex match counts plus redacted-text length (matches replaced with
+    [PII]); single-pass JVM regex, no Python"""
     from photon_ml_spark.operators.text import pii_scan
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 6 == 0)
@@ -1381,9 +1349,7 @@ _SHA_BYTE = """
 """
 
 
-@register(
-    "xm1_multimodal_decode_resize",
-    oracle=f"""
+XM1_MULTIMODAL_DECODE_RESIZE_SQL = f"""
 WITH hashed AS (
   SELECT doc_id, sha256(text) AS h FROM documents WHERE doc_id % 3 = 0
 ),
@@ -1403,12 +1369,13 @@ SELECT doc_id, width, height, ROUND(mean_luma, 6) AS mean_luma,
        CAST(224 - ROUND(width * scale) AS INT) AS pad_x,
        CAST(224 - ROUND(height * scale) AS INT) AS pad_y
 FROM planned
-""",
-    note="pipeline/multimodal: binary payload -> mapInPandas fake decode "
-    "(deterministic sha256 stub — real codec slot) + letterbox resize plan "
-    "as pure expressions; oracle reproduces the digest arithmetic",
-)
+"""
+
+
 def xm1_multimodal_decode_resize(spark, sf_dir):
+    """pipeline/multimodal: binary payload -> mapInPandas fake decode
+    (deterministic sha256 stub — real codec slot) + letterbox resize
+    plan as pure expressions; oracle reproduces the digest arithmetic"""
     from photon_ml_spark.operators.multimodal import (
         attach_payload,
         decode_image,
@@ -1425,9 +1392,7 @@ def xm1_multimodal_decode_resize(spark, sf_dir):
     )
 
 
-@register(
-    "xm3_audio_decode_resample",
-    oracle=f"""
+XM3_AUDIO_DECODE_RESAMPLE_SQL = f"""
 WITH hashed AS (
   SELECT doc_id, sha256(text) AS h FROM documents WHERE doc_id % 5 = 1
 ),
@@ -1445,13 +1410,14 @@ SELECT doc_id, sample_rate, n_samples, ROUND(rms, 6) AS rms,
          AS duration_us,
        CAST(CEIL(n_samples * 16000.0 / sample_rate) AS BIGINT) AS out_samples
 FROM meta
-""",
-    note="pipeline/multimodal: audio twin of xm1 — binary payload -> "
-    "mapInPandas fake audio decode (sample rate / length / RMS from the "
-    "sha256 digest — real codec slot) + 16 kHz resample plan as pure "
-    "expressions; oracle reproduces the digest arithmetic",
-)
+"""
+
+
 def xm3_audio_decode_resample(spark, sf_dir):
+    """pipeline/multimodal: audio twin of xm1 — binary payload ->
+    mapInPandas fake audio decode (sample rate / length / RMS from the
+    sha256 digest — real codec slot) + 16 kHz resample plan as pure
+    expressions; oracle reproduces the digest arithmetic"""
     from photon_ml_spark.operators.multimodal import (
         attach_payload,
         decode_audio,
@@ -1470,9 +1436,7 @@ def xm3_audio_decode_resample(spark, sf_dir):
     )
 
 
-@register(
-    "xm4_video_decode",
-    oracle=f"""
+XM4_VIDEO_DECODE_SQL = f"""
 WITH hashed AS (
   SELECT doc_id, sha256(text) AS h FROM documents WHERE doc_id % 7 = 2
 ),
@@ -1492,15 +1456,16 @@ SELECT doc_id, width, height, fps, n_frames,
        ROUND(n_frames / fps, 6) AS duration_sec,
        ROUND(mean_luma, 6) AS mean_luma
 FROM meta
-""",
-    note="pipeline/multimodal: video twin of xm1/xm3 — binary payload -> "
-    "mapInPandas fake video decode (dims / fps / frame count / sampled "
-    "luma from the sha256 digest — real codec slot: PyAV when present, "
-    "stdlib YUV4MPEG2 decoder otherwise, REAL path tested "
-    "unconditionally) + duration arithmetic; oracle reproduces the "
-    "digest arithmetic",
-)
+"""
+
+
 def xm4_video_decode(spark, sf_dir):
+    """pipeline/multimodal: video twin of xm1/xm3 — binary payload ->
+    mapInPandas fake video decode (dims / fps / frame count / sampled
+    luma from the sha256 digest — real codec slot: PyAV when present,
+    stdlib YUV4MPEG2 decoder otherwise, REAL path tested
+    unconditionally) + duration arithmetic; oracle reproduces the digest
+    arithmetic"""
     from photon_ml_spark.operators.multimodal import (
         attach_payload,
         decode_video,
@@ -1515,9 +1480,7 @@ def xm4_video_decode(spark, sf_dir):
     )
 
 
-@register(
-    "xm2_frame_sample_plan",
-    oracle="""
+XM2_FRAME_SAMPLE_PLAN_SQL = """
 WITH d AS (
   SELECT doc_id, n_chars / 10.0 AS duration FROM documents WHERE doc_id % 9 = 0
 ),
@@ -1530,12 +1493,13 @@ SELECT doc_id,
        CAST(CASE WHEN nf <= 0 THEN 1 ELSE nf END AS INT) AS n_frames,
        ROUND((CASE WHEN nf <= 0 THEN 1 ELSE nf END - 1) / 2.0, 6) AS last_ts
 FROM n
-""",
-    note="pipeline/multimodal: deterministic video frame-sampling plan "
-    "(uniform stride fps=2, cap 16) — pure expressions, no Python; decoder "
-    "stage consumes the timestamp array",
-)
+"""
+
+
 def xm2_frame_sample_plan(spark, sf_dir):
+    """pipeline/multimodal: deterministic video frame-sampling plan
+    (uniform stride fps=2, cap 16) — pure expressions, no Python;
+    decoder stage consumes the timestamp array"""
     from photon_ml_spark.operators.multimodal import frame_sample_plan
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 9 == 0)
@@ -1558,9 +1522,7 @@ _TRIGRAM_SET_SQL = f"""
 """
 
 
-@register(
-    "x19_contamination",
-    oracle=f"""
+X19_CONTAMINATION_SQL = f"""
 WITH sh AS ({_TRIGRAM_SET_SQL}),
 tr AS (SELECT * FROM sh WHERE doc_id % 4 <> 0),
 ev AS (SELECT doc_id AS eval_id, shingle FROM sh WHERE doc_id % 4 = 0)
@@ -1570,14 +1532,15 @@ SELECT tr.doc_id,
 FROM tr JOIN ev USING (shingle)
 GROUP BY tr.doc_id
 HAVING COUNT(DISTINCT tr.shingle) >= 5
-""",
-    note="pipeline/contamination: benchmark-contamination detection — "
-    "word-trigram collisions between the training split and a held-out "
-    "eval split (shingle equi-join + per-doc distinct counts; eval side "
-    "broadcast-sized in practice); docs sharing >= 5 distinct trigrams "
-    "flagged",
-)
+"""
+
+
 def x19_contamination(spark, sf_dir):
+    """pipeline/contamination: benchmark-contamination detection —
+    word-trigram collisions between the training split and a held-out
+    eval split (shingle equi-join + per-doc distinct counts; eval side
+    broadcast-sized in practice); docs sharing >= 5 distinct trigrams
+    flagged"""
     from photon_ml_spark.operators.dedup import contaminated_docs
 
     docs = _t(spark, sf_dir, "documents")
@@ -1587,9 +1550,7 @@ def x19_contamination(spark, sf_dir):
     return out.filter(F.col("n_shared_ngrams") >= 5)
 
 
-@register(
-    "x30_ngram_novelty",
-    oracle=f"""
+X30_NGRAM_NOVELTY_SQL = f"""
 WITH sh AS ({_TRIGRAM_SET_SQL}),
 dfreq AS (SELECT shingle, COUNT(*) AS dfq FROM sh GROUP BY shingle)
 SELECT sh.doc_id,
@@ -1599,14 +1560,15 @@ SELECT sh.doc_id,
              / CAST(COUNT(*) AS DOUBLE), 6) AS novelty
 FROM sh JOIN dfreq USING (shingle)
 GROUP BY sh.doc_id
-""",
-    note="pipeline/curation: per-doc trigram novelty — fraction of the "
-    "doc's distinct word trigrams occurring in no other doc (document-"
-    "frequency agg + join back on the shingle key, no all-pairs); low "
-    "novelty flags boilerplate that survives pairwise near-dup "
-    "thresholds",
-)
+"""
+
+
 def x30_ngram_novelty(spark, sf_dir):
+    """pipeline/curation: per-doc trigram novelty — fraction of the
+    doc's distinct word trigrams occurring in no other doc
+    (document-frequency agg + join back on the shingle key, no
+    all-pairs); low novelty flags boilerplate that survives pairwise
+    near-dup thresholds"""
     from photon_ml_spark.operators.text import ngram_novelty
 
     docs = _t(spark, sf_dir, "documents")
@@ -1616,9 +1578,7 @@ def x30_ngram_novelty(spark, sf_dir):
     )
 
 
-@register(
-    "x20_semantic_dedup",
-    oracle=f"""
+X20_SEMANTIC_DEDUP_SQL = f"""
 WITH RECURSIVE base AS (SELECT vec_id, {_QE_SQL} AS qe FROM embeddings),
 cells AS (
   SELECT vec_id, qe,
@@ -1648,13 +1608,14 @@ SELECT b.vec_id,
        COALESCE(c.cluster_id, b.vec_id) AS cluster_id,
        COALESCE(c.cluster_id, b.vec_id) = b.vec_id AS is_keep
 FROM base b LEFT JOIN comp c USING (vec_id)
-""",
-    note="pipeline/semantic-dedup: SemDedup pattern — hyperplane-LSH "
-    "cells -> within-cell cosine >= 0.4 pairs -> distributed connected "
-    "components -> min-id keeper per semantic cluster; oracle replays "
-    "the closure with a recursive CTE (quantized-integer cosine)",
-)
+"""
+
+
 def x20_semantic_dedup(spark, sf_dir):
+    """pipeline/semantic-dedup: SemDedup pattern — hyperplane-LSH cells
+    -> within-cell cosine >= 0.4 pairs -> distributed connected
+    components -> min-id keeper per semantic cluster; oracle replays the
+    closure with a recursive CTE (quantized-integer cosine)"""
     from photon_ml_spark.operators.similarity import (
         alternating_patterns,
         semantic_dedup,
@@ -1667,9 +1628,7 @@ def x20_semantic_dedup(spark, sf_dir):
     return out.select("vec_id", "cluster_id", "is_keep")
 
 
-@register(
-    "x21_doc_chunking",
-    oracle=f"""
+X21_DOC_CHUNKING_SQL = f"""
 WITH t AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
 nz AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) > 0),
 c AS (
@@ -1685,22 +1644,21 @@ SELECT doc_id, CAST(cid AS INT) AS chunk_id,
        array_to_string(list_slice(toks, cid * 100 + 1, cid * 100 + 120), ' ')
          AS chunk_text
 FROM c
-""",
-    note="pipeline/chunking: token-window document chunking "
-    "(max_tokens=120, overlap=20) — pure-expression flatMap (tokenize "
-    "-> index arithmetic -> slice -> posexplode), no shuffle; the "
-    "standard LLM context-window preparation upstream of packing (x14)",
-)
+"""
+
+
 def x21_doc_chunking(spark, sf_dir):
+    """pipeline/chunking: token-window document chunking
+    (max_tokens=120, overlap=20) — pure-expression flatMap (tokenize ->
+    index arithmetic -> slice -> posexplode), no shuffle; the standard
+    LLM context-window preparation upstream of packing (x14)"""
     from photon_ml_spark.operators.text import chunk_documents
 
     docs = _t(spark, sf_dir, "documents")
     return chunk_documents(docs, max_tokens=120, overlap=20)
 
 
-@register(
-    "x22_leakage_safe_split",
-    oracle=f"""
+X22_LEAKAGE_SAFE_SPLIT_SQL = f"""
 WITH RECURSIVE {_LSH_PAIRS_CTES},
 edges AS (
   SELECT id_a AS u, id_b AS v FROM lsh_pairs
@@ -1721,13 +1679,14 @@ SELECT doc_id, cluster_id,
                       % 2147483647 AS DOUBLE) / 2147483647.0 < 0.25
             THEN 'test' ELSE 'train' END AS split
 FROM labeled
-""",
-    note="pipeline/splitting: leakage-safe train/test split — the split "
-    "key is the LSH near-dup CLUSTER (connected components), so a doc "
-    "and all its near-copies land on the same side; deterministic "
-    "portable LCG gate at test_frac=0.25",
-)
+"""
+
+
 def x22_leakage_safe_split(spark, sf_dir, phase_stamps=None):
+    """pipeline/splitting: leakage-safe train/test split — the split key
+    is the LSH near-dup CLUSTER (connected components), so a doc and all
+    its near-copies land on the same side; deterministic portable LCG
+    gate at test_frac=0.25"""
     from photon_ml_spark.operators.dedup import minhash_lsh_dedup
     from photon_ml_spark.operators.sampling import (
         lcg_uniform,
@@ -1740,28 +1699,22 @@ def x22_leakage_safe_split(spark, sf_dir, phase_stamps=None):
         # bench attribution only (the x21 suite): materialize the LSH
         # edge list under its own stamp so the split constituent
         # separates near-dup detection from cluster resolution
-        import time as _time
-
         pairs = persist(pairs, StorageLevel.MEMORY_AND_DISK_DESER)
-        t0 = _time.perf_counter()
-        pairs.count()
-        phase_stamps["pairs"] = round(_time.perf_counter() - t0, 3)
-        t0 = _time.perf_counter()
-    out = leakage_safe_split(
-        docs, pairs, test_frac=0.25,
-        uniform=lcg_uniform(F.col("cluster_id") * 104729, 11),
-    )
+        with timed(phase_stamps, "pairs"):
+            pairs.count()
+    with timed(phase_stamps, "cluster"):
+        out = leakage_safe_split(
+            docs, pairs, test_frac=0.25,
+            uniform=lcg_uniform(F.col("cluster_id") * 104729, 11),
+        )
     if phase_stamps is not None:
         # cluster_and_keep's connected-components loop is eager, so it
         # was the edge list's last reader
-        phase_stamps["cluster"] = round(_time.perf_counter() - t0, 3)
         release(pairs)
     return out.select("doc_id", "cluster_id", "split")
 
 
-@register(
-    "x23_unigram_perplexity",
-    oracle=f"""
+X23_UNIGRAM_PERPLEXITY_SQL = f"""
 WITH toks AS (
   SELECT doc_id, unnest({_TOKS_SQL}) AS tok FROM documents
 ),
@@ -1773,19 +1726,112 @@ SELECT doc_id,
                  / COUNT(*)), 6) AS ppl
 FROM toks JOIN counts c USING (tok) CROSS JOIN totals t
 GROUP BY doc_id
-""",
-    note="pipeline/quality: CCNet-style perplexity filter — add-one "
-    "unigram LM fitted on the corpus (vocab-sized count agg + 1-row "
-    "total), per-doc ppl = exp(-mean ln p); token join + per-doc agg, "
-    "fully in Catalyst",
-)
+"""
+
+
 def x23_unigram_perplexity(spark, sf_dir):
+    """pipeline/quality: CCNet-style perplexity filter — add-one unigram
+    LM fitted on the corpus (vocab-sized count agg + 1-row total),
+    per-doc ppl = exp(-mean ln p); token join + per-doc agg, fully in
+    Catalyst"""
     from photon_ml_spark.operators.text import unigram_perplexity
 
     docs = _t(spark, sf_dir, "documents")
     out = unigram_perplexity(docs)
     return out.select(
         "doc_id", "n_tokens", F.round("ppl", 6).alias("ppl")
+    )
+
+
+X19B_TFIDF_KEYWORDS_SQL = f"""
+  WITH tk AS (
+    SELECT doc_id, unnest({_TOKS_SQL}) AS term
+    FROM documents WHERE doc_id % 3 = 0
+  ),
+  tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tk GROUP BY 1, 2),
+  dfq AS (SELECT term, COUNT(*) AS dfn FROM tf GROUP BY 1),
+  nd AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM tk),
+  sc AS (
+    SELECT doc_id, tf.term,
+           ROUND(tf * LN(CAST(n_docs AS DOUBLE) / dfn), 6) AS v
+    FROM tf JOIN dfq ON tf.term = dfq.term, nd
+  ),
+  rk AS (
+    SELECT doc_id, term, v,
+           ROW_NUMBER() OVER (
+             PARTITION BY doc_id ORDER BY v DESC, term ASC
+           ) AS rn
+    FROM sc
+  )
+  SELECT doc_id, term, v FROM rk WHERE rn <= 3
+"""
+
+
+def x19b_tfidf_keywords(docs):
+    """pipeline/curation: tf-idf keyword extraction over every third of
+    ``docs`` (the documents table) — top-3 characteristic terms/doc:
+    doc-term counts, term-keyed df join, broadcast 1-row corpus size,
+    per-doc rank window with rounded-score + lexicographic tie-break"""
+    from photon_ml_spark.operators.text import tfidf_top_terms
+
+    return tfidf_top_terms(docs.filter(F.col("doc_id") % 3 == 0), k=3).select(
+        "doc_id", "term", F.col("tfidf").alias("v")
+    )
+
+
+X19C_BIGRAM_PERPLEXITY_SQL = f"""
+  WITH dt AS (
+    SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
+  ),
+  tr AS (
+    SELECT doc_id, toks[i] AS u, toks[i + 1] AS w
+    FROM dt, unnest(range(1, len(toks))) r(i)
+    WHERE len(toks) >= 2
+  ),
+  bi AS (SELECT u, w, COUNT(*) AS bi_cnt FROM tr GROUP BY 1, 2),
+  ctx AS (SELECT u, SUM(bi_cnt) AS ctx_cnt FROM bi GROUP BY 1),
+  uni AS (
+    SELECT w, COUNT(*) AS uni_cnt
+    FROM (SELECT unnest({_TOKS_SQL}) AS w FROM documents) GROUP BY 1
+  ),
+  tots AS (SELECT SUM(uni_cnt) AS total, COUNT(*) AS vocab FROM uni),
+  sc AS (
+    SELECT tr.doc_id,
+           LN(0.7 * (CAST(bi.bi_cnt AS DOUBLE) / CAST(ctx.ctx_cnt AS DOUBLE))
+              + 0.30000000000000004
+                * (CAST(uni.uni_cnt + 1 AS DOUBLE)
+                   / CAST(tots.total + tots.vocab AS DOUBLE))) AS lp
+    FROM tr
+    JOIN bi ON tr.u = bi.u AND tr.w = bi.w
+    JOIN ctx ON tr.u = ctx.u
+    JOIN uni ON tr.w = uni.w
+    CROSS JOIN tots
+  ),
+  agg AS (
+    SELECT doc_id, COUNT(*) AS n_bigrams,
+           ROUND(EXP(-SUM(lp) / COUNT(*)), 6) AS ppl2
+    FROM sc GROUP BY doc_id
+  )
+  SELECT doc_id, 'n_bigrams' AS k, CAST(n_bigrams AS DOUBLE) AS v FROM agg
+  UNION ALL
+  SELECT doc_id, 'ppl2' AS k, ppl2 AS v FROM agg
+"""
+
+
+def x19c_bigram_perplexity(docs):
+    """pipeline/quality: INTERPOLATED bigram-LM perplexity (Jelinek-
+    Mercer λ=0.7 toward the KenLM-class filters; two count aggregates +
+    transition joins) over ``docs`` (the documents table), per doc
+    n_bigrams and ppl2 melted to (doc_id, k, v)"""
+    from photon_ml_spark.operators.text import bigram_perplexity
+
+    p2 = bigram_perplexity(docs, lam=0.7).select(
+        "doc_id", "n_bigrams", F.round("ppl", 6).alias("ppl2")
+    )
+    return p2.selectExpr(
+        "doc_id",
+        "stack(2, 'n_bigrams', CAST(n_bigrams AS DOUBLE), "
+        "'ppl2', CAST(ppl2 AS DOUBLE)) AS (k, v)",
     )
 
 
@@ -1858,18 +1904,17 @@ lang_vocab AS (
     )
 
 
-@register(
-    "x29_bpe_tokenizer",
-    oracle=_bpe_oracle_sql(6, 2),
-    note="pipeline/tokenizer: distributed BPE training (Sennrich et al. "
-    "2016) on the WORD-FREQUENCY table — vocab-bounded state however "
-    "large the corpus; per round one pair-count aggregate + argmax "
-    "(count desc, lexicographic ties) + one global-leftmost regex "
-    "merge, engine-replayable via the double-space symbol layout — "
-    "plus per-language encode stats (total BPE tokens, distinct "
-    "symbols) from the vocab-level encode joined back to documents",
-)
+X29_BPE_TOKENIZER_SQL = _bpe_oracle_sql(6, 2)
+
+
 def x29_bpe_tokenizer(spark, sf_dir):
+    """pipeline/tokenizer: distributed BPE training (Sennrich et al.
+    2016) on the WORD-FREQUENCY table — vocab-bounded state however
+    large the corpus; per round one pair-count aggregate + argmax (count
+    desc, lexicographic ties) + one global-leftmost regex merge,
+    engine-replayable via the double-space symbol layout — plus
+    per-language encode stats (total BPE tokens, distinct symbols) from
+    the vocab-level encode joined back to documents"""
     from photon_ml_spark.operators.text import (
         bpe_encode_words,
         bpe_train,
@@ -1916,18 +1961,106 @@ def x29_bpe_tokenizer(spark, sf_dir):
     return merge_rows.unionByName(enc_rows)
 
 
-@register(
-    "x11_fingerprint",
-    oracle="""
+# Unigram-LM tokenizer block (folded into the x21 suite): Viterbi-segment
+# the corpus's distinct words under a FIXED integer-scored vocabulary.
+# Integer scores make segmentation totals exact across engines, and
+# the (score DESC, segmentation ASC) tie-break is replayed by the
+# oracle via brute-force enumeration of all 2^(L-1) split masks per
+# word — an EXACT oracle for a dynamic program SQL cannot express
+# directly (words capped at 12 chars keep the enumeration at ≤2048
+# masks/word).
+UNIGRAM_GATE_VOCAB = {
+    **{c: -30 for c in "abcdefghijklmnopqrstuvwxyz"},
+    "th": -9, "he": -11, "in": -10, "er": -12, "an": -13, "re": -14,
+    "on": -15, "at": -16, "en": -17, "es": -18, "st": -19, "ar": -20,
+    "te": -21, "ed": -22, "or": -23, "ti": -24, "al": -25, "nd": -26,
+    "the": -8, "ing": -7, "ion": -12, "ent": -13, "ati": -14, "for": -15,
+}
+_UNIGRAM_CASE = " ".join(
+    f"WHEN '{p}' THEN {s}" for p, s in sorted(UNIGRAM_GATE_VOCAB.items())
+)
+X29B_UNIGRAM_TOKENIZER_SQL = f"""
+WITH uw AS (
+  SELECT DISTINCT w AS word FROM (
+    SELECT unnest({_TOKS_SQL}) AS w FROM documents WHERE doc_id % 9 = 0
+  ) WHERE regexp_matches(w, '^[a-z]+$') AND length(w) BETWEEN 2 AND 12
+),
+um AS (
+  -- range() rejects lateral column args: enumerate to the 12-char max
+  -- (2^11 masks) and filter per word
+  SELECT word, r.range AS mask
+  FROM uw, range(0, 2048) r
+  WHERE r.range < (1 << (length(word) - 1))
+),
+uc AS (
+  SELECT word,
+         [0] || list_filter(range(1, length(word)),
+                            i -> (mask >> (i - 1)) & 1 = 1)
+             || [length(word)] AS cuts
+  FROM um
+),
+up AS (
+  SELECT word,
+         list_transform(range(1, len(cuts)),
+                        k -> substr(word, cuts[k] + 1, cuts[k+1] - cuts[k]))
+           AS pieces
+  FROM uc
+),
+us AS (
+  SELECT word, pieces,
+         list_transform(pieces, p -> CASE p {_UNIGRAM_CASE} ELSE NULL END) AS psc
+  FROM up
+),
+uv AS (
+  SELECT word, array_to_string(pieces, ' ') AS seg,
+         CAST(list_sum(psc) AS BIGINT) AS score,
+         CAST(len(pieces) AS BIGINT) AS n_pieces,
+         ROW_NUMBER() OVER (
+           PARTITION BY word
+           ORDER BY list_sum(psc) DESC, array_to_string(pieces, ' ') ASC
+         ) AS rn
+  FROM us
+  WHERE len(list_filter(psc, x -> x IS NULL)) = 0
+)
+SELECT word, seg, score, n_pieces FROM uv WHERE rn = 1
+"""
+
+
+def x29b_unigram_tokenizer(spark, sf_dir):
+    """pipeline/tokenizer: unigram-LM (sentencepiece-style) Viterbi
+    segmentation of the distinct words of every ninth doc under
+    ``UNIGRAM_GATE_VOCAB``; the oracle enumerates every split mask"""
+    from photon_ml_spark.operators.text import tokens, unigram_encode_words
+
+    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 9 == 0)
+    words = (
+        docs.select(F.explode(tokens(F.col("text"))).alias("word"))
+        .filter(
+            F.col("word").rlike("^[a-z]+$")
+            & F.length("word").between(2, 12)
+        )
+        .distinct()
+    )
+    seg = unigram_encode_words(words, UNIGRAM_GATE_VOCAB)
+    return seg.select(
+        "word",
+        F.array_join("syms", " ").alias("seg"),
+        F.col("seg_score").cast("long").alias("score"),
+        F.size("syms").cast("long").alias("n_pieces"),
+    )
+
+
+X11_FINGERPRINT_SQL = """
 SELECT doc_id,
        md5(trim(regexp_replace(regexp_replace(lower(text), '[^\\w\\s]', '', 'g'),
                                '\\s+', ' ', 'g'))) AS fp
 FROM documents WHERE doc_id % 7 = 0
-""",
-    note="pipeline/text: md5 content fingerprint of normalized text "
-    "(portable digest)",
-)
+"""
+
+
 def x11_fingerprint(spark, sf_dir):
+    """pipeline/text: md5 content fingerprint of normalized text
+    (portable digest)"""
     from photon_ml_spark.operators.text import fingerprint_md5
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 7 == 0)

@@ -14,21 +14,20 @@ from photon_ml_spark.queries import register
 from photon_ml_spark.sources.datasets import load_events
 
 
-@register(
-    "e1_event_window_agg",
-    oracle="""
+E1_EVENT_WINDOW_AGG_SQL = """
 SELECT strftime(time_bucket(INTERVAL '15 minutes', ts), '%Y-%m-%d %H:%M:%S')
          AS window_start,
        event_type,
        CAST(COUNT(*) AS BIGINT) AS n_events,
        SUM(ROUND(value * 100)) / 100 AS value_sum
 FROM events GROUP BY 1, 2
-""",
-    note="streaming/e1: tumbling 15-min event-time window counts + exact "
-    "cents-grid value sums — same code path as the readStream variant "
-    "(watermark-bounded state)",
-)
+"""
+
+
 def e1_event_window_agg(spark, sf_dir):
+    """streaming/e1: tumbling 15-min event-time window counts + exact
+    cents-grid value sums — same code path as the readStream variant
+    (watermark-bounded state)"""
     from photon_ml_spark.streaming.events import windowed_event_counts
 
     ev = load_events(spark, sf_dir)
@@ -43,10 +42,10 @@ SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) % 7 AS k_bucket,
        CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
 FROM events GROUP BY 1
 """,
-    note="streaming/e2: typed JSON property extraction (F3 map-value-cast "
-    "analog, AvroDataReader.scala:453-468) + aggregation by derived key",
 )
 def e2_event_json_props(spark, sf_dir):
+    """streaming/e2: typed JSON property extraction (F3 map-value-cast
+    analog, AvroDataReader.scala:453-468) + aggregation by derived key"""
     from photon_ml_spark.streaming.events import extract_props
 
     ev = extract_props(
@@ -61,19 +60,18 @@ def e2_event_json_props(spark, sf_dir):
     )
 
 
-@register(
-    "e4_stream_scoring",
-    oracle="""
+E4_STREAM_SCORING_SQL = """
 SELECT event_id,
        ROUND(-1.0 + value * 0.5 + CAST(json_extract_string(props, '$.k') AS DOUBLE) * 0.01, 6)
          AS score
 FROM events WHERE event_id % 17 = 0
-""",
-    note="streaming/e4: stateless literal-model scoring over the event "
-    "stream (GameScoringDriver over readStream — same code path scores "
-    "micro-batches; see tests/test_streaming.py)",
-)
+"""
+
+
 def e4_stream_scoring(spark, sf_dir):
+    """streaming/e4: stateless literal-model scoring over the event
+    stream (GameScoringDriver over readStream — same code path scores
+    micro-batches; see tests/test_streaming.py)"""
     from photon_ml_spark.streaming.events import extract_props, score_events
 
     ev = load_events(spark, sf_dir).filter(F.col("event_id") % 17 == 0)
@@ -102,20 +100,18 @@ SELECT user_id, event_type,
        CAST(n AS BIGINT) AS n_occurrences
 FROM r WHERE rn = 1
 """,
-    note="streaming/e5: exact-dedup bookkeeping — first occurrence per "
-    "(user, event_type) by event time (deterministic (ts, id) "
-    "tie-break) + duplicate count; ONE aggregation state row per key "
-    "under readStream (the scalable streaming dropDuplicates)",
 )
 def e5_stream_first_seen(spark, sf_dir):
+    """streaming/e5: exact-dedup bookkeeping — first occurrence per
+    (user, event_type) by event time (deterministic (ts, id) tie-break)
+    + duplicate count; ONE aggregation state row per key under
+    readStream (the scalable streaming dropDuplicates)"""
     from photon_ml_spark.streaming.events import first_seen
 
     return first_seen(load_events(spark, sf_dir))
 
 
-@register(
-    "e6_asof_join",
-    oracle="""
+E6_ASOF_JOIN_SQL = """
 WITH l AS (
   SELECT event_id, user_id, ts FROM events WHERE event_id % 3 = 0
 ),
@@ -128,14 +124,15 @@ SELECT l.event_id, l.user_id,
        strftime(r.ts, '%Y-%m-%d %H:%M:%S') AS asof_ts,
        r.snap_v AS asof_snap_v
 FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
-""",
-    note="temporal/as-of join: attach the most recent per-user snapshot "
-    "(right_ts <= left_ts, inclusive) to each event — union + tagged "
-    "per-key ordered window carrying the last right payload forward "
-    "(one shuffle + one sort, the merge-join shape); oracle is "
-    "DuckDB's native ASOF LEFT JOIN",
-)
+"""
+
+
 def e6_asof_join(spark, sf_dir):
+    """temporal/as-of join: attach the most recent per-user snapshot
+    (right_ts <= left_ts, inclusive) to each event — union + tagged
+    per-key ordered window carrying the last right payload forward (one
+    shuffle + one sort, the merge-join shape); oracle is DuckDB's native
+    ASOF LEFT JOIN"""
     from photon_ml_spark.operators.temporal import as_of_join
 
     ev = load_events(spark, sf_dir)
@@ -156,9 +153,7 @@ def e6_asof_join(spark, sf_dir):
     )
 
 
-@register(
-    "e7_range_join",
-    oracle="""
+E7_RANGE_JOIN_SQL = """
 WITH l AS (
   SELECT event_id, user_id, CAST(epoch(ts) AS BIGINT) AS t
   FROM events WHERE event_id % 5 = 0
@@ -172,15 +167,15 @@ r AS (
 SELECT l.event_id, r.anchor_id, l.user_id
 FROM l JOIN r ON l.user_id = r.user_id
                AND l.t >= r.t_start AND l.t <= r.t_end
-""",
-    note="temporal/range join: events joined to every same-user 10-min "
-    "interval containing them — right intervals exploded over "
-    "fixed-width time buckets, equi-join on (user, bucket) + exact "
-    "range filter (the interval-join decomposition; a raw BETWEEN "
-    "predicate would BroadcastNestedLoopJoin); oracle is the plain "
-    "quadratic BETWEEN join",
-)
+"""
+
+
 def e7_range_join(spark, sf_dir):
+    """temporal/range join: events joined to every same-user 10-min
+    interval containing them — right intervals exploded over fixed-width
+    time buckets, equi-join on (user, bucket) + exact range filter (the
+    interval-join decomposition; a raw BETWEEN predicate would
+    BroadcastNestedLoopJoin); oracle is the plain quadratic BETWEEN join"""
     from photon_ml_spark.operators.temporal import range_join
 
     ev = load_events(spark, sf_dir).withColumn(
@@ -202,9 +197,7 @@ def e7_range_join(spark, sf_dir):
     return out.select("event_id", "anchor_id", "user_id")
 
 
-@register(
-    "e3_event_sessions",
-    oracle="""
+E3_EVENT_SESSIONS_SQL = """
 WITH o AS (
   SELECT user_id, ts, ROUND(value * 100) AS v,
          CASE WHEN LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
@@ -227,21 +220,20 @@ sess AS (
 SELECT user_id, strftime(start_ts, '%Y-%m-%d %H:%M:%S') AS session_start,
        CAST(n_events AS BIGINT) AS n_events, value_sum
 FROM sess
-""",
-    note="streaming/e3: per-user session_window aggregation (5-min gap, "
-    "half-open merge) — oracle reproduces it as gaps-and-islands; "
-    "stateful-streaming capable via watermark",
-)
+"""
+
+
 def e3_event_sessions(spark, sf_dir):
+    """streaming/e3: per-user session_window aggregation (5-min gap,
+    half-open merge) — oracle reproduces it as gaps-and-islands;
+    stateful-streaming capable via watermark"""
     from photon_ml_spark.streaming.events import sessionize
 
     ev = load_events(spark, sf_dir)
     return sessionize(ev, gap="5 minutes")
 
 
-@register(
-    "e8_interval_join",
-    oracle="""
+E8_INTERVAL_JOIN_SQL = """
 WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_id % 3 = 0),
 r AS (SELECT event_id, user_id, ts FROM events WHERE event_id % 5 = 0)
 SELECT l.user_id,
@@ -250,14 +242,15 @@ SELECT l.user_id,
        strftime(r.ts, '%Y-%m-%d %H:%M:%S') AS r_ts
 FROM l JOIN r ON l.user_id = r.user_id
              AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 10 MINUTE
-""",
-    note="streaming/e8: batch side of the stream-stream interval join "
-    "(attribution window: same-user right events within [l_ts, l_ts + "
-    "10 min]); identical code runs under readStream with watermarks on "
-    "both sides bounding join state — parity in "
-    "tests/test_streaming.py::test_interval_join_stream_matches_batch",
-)
+"""
+
+
 def e8_interval_join(spark, sf_dir):
+    """streaming/e8: batch side of the stream-stream interval join
+    (attribution window: same-user right events within [l_ts, l_ts + 10
+    min]); identical code runs under readStream with watermarks on both
+    sides bounding join state — parity in
+    tests/test_streaming.py::test_interval_join_stream_matches_batch"""
     from photon_ml_spark.streaming.events import interval_join_events
 
     ev = load_events(spark, sf_dir)

@@ -26,3 +26,8 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def oracle_sf_dir():
+    return SF_DIR_ORACLE

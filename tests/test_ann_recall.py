@@ -3,7 +3,9 @@ equality is pinned elsewhere; the number a 100 TB user tunes is
 recall@k at n_probe ≪ cells on NON-grid data. Floors here are measured
 values minus margin on the deterministic jittered construction
 (scripts/ann_recall.py — stress-harness cosine jitter, fixed KMeans
-seed, hash-mod sampling); the sf0.1 curve lives in BASELINE.md."""
+seed, hash-mod sampling); the sf0.1 curve lives in BASELINE.md. The
+sampled IVF quantizer training is pinned here too: deterministic,
+covering every row, full probe still brute force."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -121,3 +123,36 @@ def test_pq_refine_recall_floor(spark, recall_setup, tmp_path):
     )
     assert refined >= 0.95, (raw, refined)
     assert refined >= raw, (raw, refined)
+
+
+def test_ivf_sampled_training_is_deterministic_and_covers_corpus(
+    spark, sf_dir, tmp_path
+):
+    """save_ivf_index's sampled quantizer training: deterministic
+    (same corpus + seed -> identical centroids), assignment covers
+    every row, and full probe stays exactly brute force."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    cents = []
+    for d in ("i1", "i2"):
+        idx = str(tmp_path / d)
+        # tiny threshold forces the sampled path on this 500-row corpus
+        similarity.save_ivf_index(
+            emb, idx, k=4, train_sample=200,
+        )
+        cents.append(
+            sorted(
+                tuple(r.centroid)
+                for r in spark.read.parquet(f"{idx}/centroids").collect()
+            )
+        )
+    assert cents[0] == cents[1]
+    vecs = spark.read.parquet(str(tmp_path / "i1") + "/vectors")
+    assert vecs.count() == emb.count()  # every row assigned
+    queries = emb.filter(F.col("vec_id") % 25 == 0)
+    full = similarity.ivf_topk_from_index(
+        spark, str(tmp_path / "i1"), queries, k=5, n_probe=4
+    )
+    brute = similarity.cosine_topk(emb, queries, k=5)
+    a = {(r.query_id, r.rank): (r.vec_id, r.cosine) for r in full.collect()}
+    b = {(r.query_id, r.rank): (r.vec_id, r.cosine) for r in brute.collect()}
+    assert a == b

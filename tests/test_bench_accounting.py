@@ -1,7 +1,8 @@
 """BENCH row accounting: stamped rows must decompose exactly —
 row total == Σ constituents (round-7 verdict Next #2). bench.main also
 asserts the invariant at runtime on every published row; this pins the
-helper's arithmetic without paying for a full bench run."""
+helper's arithmetic without paying for a full bench run, and runs two
+suites down the stamped path the bench takes."""
 
 import pytest
 
@@ -30,3 +31,39 @@ def test_close_stamps_empty_row_is_all_overhead():
     total = bench.close_stamps(stamps, 0.75)
     assert stamps == {"overhead": 0.75}
     assert total == pytest.approx(0.75, abs=1e-9)
+
+
+@pytest.mark.parametrize(
+    "name, keys",
+    [
+        # _widen: one stamp per cross-joined 1-row constituent
+        ("m1_custom_solvers", {"box", "tron", "prior", "byjoin"}),
+        # build stamps, x22's phase stamps and the split_build residual
+        (
+            "x21_chunk_split",
+            {
+                "chunk_build", "split_pairs", "split_cluster", "split_build",
+                "bpe_build", "unigram_build",
+                "chunk", "split", "bpe", "unigram",
+            },
+        ),
+    ],
+)
+def test_stamped_suite_matches_gate_run(spark, sf_dir, name, keys):
+    """The bench's stamped run of a suite returns the gate run's rows
+    and stamps exactly its named blocks."""
+    from photon_ml_spark.materialize import scope
+    from photon_ml_spark.queries import all_queries
+
+    run = all_queries()[name].run
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    plain = rows(run(spark, sf_dir))
+    stamps: dict[str, float] = {}
+    with scope():
+        stamped = rows(run(spark, sf_dir, stamps=stamps))
+    assert stamped == plain
+    assert set(stamps) == keys
+    assert all(v >= 0 for v in stamps.values())

@@ -1,6 +1,10 @@
 """Local replica of the driver's correctness gate: run every registered
 query on Spark AND its oracle SQL on DuckDB at sf0.01, compare
-row-counts, sorted-column schemas, and values."""
+row-counts, sorted-column schemas, and values.
+
+Before each DataFrame runs, its pre-execution physical plan is recorded
+for the plan-shape checks in ``test_plan_sweep``, so those checks read
+the plan of this very execution instead of building every query again."""
 
 import math
 import os
@@ -10,6 +14,7 @@ import pytest
 
 from photon_ml_spark.queries import all_queries
 from photon_ml_spark.sources.datasets import TABLES
+from test_plan_sweep import record_plan
 
 ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
@@ -62,7 +67,9 @@ def _compare(spark_pdf, oracle_pdf, name):
 @pytest.mark.parametrize("name", WITH_ORACLE)
 def test_oracle_match(spark, ddb, name):
     spec = REGISTRY[name]
-    sdf = spec.run(spark, ORACLE_SF_DIR).toPandas()
+    df = spec.run(spark, ORACLE_SF_DIR)
+    record_plan(df, name)
+    sdf = df.toPandas()
     odf = ddb.execute(spec.oracle).df()
     _compare(sdf, odf, name)
 
@@ -70,5 +77,7 @@ def test_oracle_match(spark, ddb, name):
 @pytest.mark.parametrize("name", ROWS_ONLY)
 def test_rows_only(spark, name):
     spec = REGISTRY[name]
-    n = spec.run(spark, ORACLE_SF_DIR).count()
+    df = spec.run(spark, ORACLE_SF_DIR)
+    record_plan(df, name)
+    n = df.count()
     assert n >= 0

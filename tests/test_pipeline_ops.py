@@ -1,6 +1,8 @@
 """Semantic tests for dedup / similarity / multimodal operators
 (properties the oracle can't express: recall, completeness, plumbing)."""
 
+import inspect
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -2392,3 +2394,283 @@ def test_pq_ksub_bounds(spark, emb):
     for bad in (0, 128, 256):
         with pytest.raises(ValueError, match=r"\[1, 127\]"):
             similarity.pq_train_sampled(emb, m=8, ksub=bad, vec_col="qe")
+
+
+# ---------------------------------------------- scale and safety guards
+
+
+def test_simhash_default_is_scale_form():
+    """A default-argument call must plan the WIDE signature (2^15
+    buckets per band at bands=4), not the 16-bit LCG oracle shape the
+    round-11 100x ledger measured at 562x wall."""
+    for fn in (dedup.simhash_signatures, dedup.simhash_neardup_pairs):
+        params = inspect.signature(fn).parameters
+        assert params["bits"].default == 60, fn.__name__
+        assert params["bit_hash"].default == "xxhash", fn.__name__
+    assert dedup.SIMHASH_BITS == 60
+    assert dedup.SIMHASH_ORACLE_BITS == 16
+    # default bands=4 -> 60/4 = 15 bits -> 32768 buckets per band
+    bands = inspect.signature(dedup.simhash_neardup_pairs).parameters[
+        "bands"
+    ].default
+    assert 2 ** (dedup.SIMHASH_BITS // bands) >= 32768
+
+
+def test_collapse_exact_sets_verify_clean(docs):
+    """verify=True exact-compares each member's shingle set against its
+    representative's; on a real corpus (honest fingerprints) it must
+    pass and return the identical membership/rep relation."""
+    base = docs.limit(30)
+    dups = base.filter(F.col("doc_id") % 3 == 0).withColumn(
+        "doc_id", F.col("doc_id") + 1_000_000
+    )
+    sids = dedup.token_ids(base.unionByName(dups), n=1).cache()
+    m0, r0 = dedup.collapse_exact_sets(sids)
+    m1, r1 = dedup.collapse_exact_sets(sids, verify=True)
+    assert {tuple(r) for r in m0.collect()} == {
+        tuple(r) for r in m1.collect()
+    }
+    assert r0.count() == r1.count()
+    sids.unpersist()
+
+
+def test_collapse_verify_audits_forced_bad_membership(spark, monkeypatch):
+    """The verify audit must be sound WITHOUT trusting the fingerprint:
+    force a wrong membership (as a real 2^-62 collision would) and
+    assert both failure modes are caught — a member with a shingle
+    outside its rep's set (containment) and a member whose set is a
+    strict SUBSET of the rep's (the case one-sided containment alone
+    would pass; caught by the distinct-cardinality comparison even
+    when duplicate (id, sid) rows inflate raw row counts)."""
+    rows = [
+        (1, 10), (1, 20),           # rep: {10, 20}
+        (2, 10), (2, 20), (2, 20),  # honest dup of 1, with a dup row
+        (3, 10), (3, 30),           # {10, 30}: 30 not in rep's set
+        (4, 10), (4, 10),           # {10}: strict subset, 2 raw rows
+    ]
+    sids = spark.createDataFrame(rows, "doc_id long, sid long")
+    forced = spark.createDataFrame(
+        [(1, 1), (2, 1), (3, 1), (4, 1)], "doc_id long, __rep long"
+    )
+    monkeypatch.setattr(
+        dedup, "_membership_from_fingerprints", lambda fp, id_col: forced
+    )
+    with pytest.raises(ValueError, match="collision") as ei:
+        dedup.collapse_exact_sets(sids, verify=True)
+    assert "2 doc(s)" in str(ei.value)  # 3 (containment) + 4 (subset)
+
+
+def test_collapse_verify_passes_with_duplicate_rows(spark):
+    """Honest groups whose input relation carries duplicate (id, sid)
+    rows must still verify clean: containment + distinct-cardinality
+    are multiplicity-blind."""
+    rows = [
+        (1, 10), (1, 20),
+        (2, 10), (2, 20), (2, 10),  # same set as 1... but 3 raw rows
+        (3, 10), (3, 20),
+    ]
+    sids = spark.createDataFrame(rows, "doc_id long, sid long")
+    membership, reps = dedup.collapse_exact_sets(sids, verify=True)
+    got = {(r["doc_id"], r["__rep"]) for r in membership.collect()}
+    # 1 and 3 merge (identical relations); 2's raw row count differs so
+    # the fingerprint keeps it separate (a missed merge, never a wrong
+    # one — the documented duplicate-row behavior)
+    assert got == {(1, 1), (3, 1), (2, 2)}
+
+
+def test_cosine_full_cross_guard(emb, monkeypatch):
+    """block_col=None is a full self cross-join: above the documented
+    row cap it must raise instead of OOM, unless the caller opts in
+    with allow_full_cross=True. Blocked calls never pay the guard."""
+    small = emb.limit(40)
+    monkeypatch.setattr(similarity, "FULL_CROSS_MAX_ROWS", 10)
+    with pytest.raises(ValueError, match="allow_full_cross"):
+        similarity.cosine_neardup_pairs(small, 0.9, vec_col="qe").count()
+    # opt-in accepts the quadratic cost
+    n_opt = similarity.cosine_neardup_pairs(
+        small, 0.9, vec_col="qe", allow_full_cross=True
+    ).count()
+    # the collapse_exact path threads the opt-in through its recursion
+    n_col = similarity.cosine_neardup_pairs(
+        small, 0.9, vec_col="qe", allow_full_cross=True,
+        collapse_exact=True,
+    ).count()
+    assert n_opt == n_col
+    # blocked form is the scale path: no guard, no opt-in needed
+    similarity.cosine_neardup_pairs(
+        small, 0.9, block_col="label", vec_col="qe"
+    ).count()
+    monkeypatch.setattr(similarity, "FULL_CROSS_MAX_ROWS", 100_000)
+    assert (
+        similarity.cosine_neardup_pairs(small, 0.9, vec_col="qe").count()
+        == n_opt
+    )
+
+
+def test_full_cross_guard_single_pass(emb):
+    """The success-path plan reads localCheckpointed blocks (LogicalRDD)
+    on both cross-join sides — the upstream lineage executes once for
+    the guard count and never again (r12 ADVICE: the guard used to be
+    a second full pass per call)."""
+    small = emb.limit(40).select("vec_id", "qe")
+    out = similarity.cosine_neardup_pairs(small, 0.9, vec_col="qe")
+    analyzed = out._jdf.queryExecution().analyzed().toString()
+    assert "LogicalRDD" in analyzed
+    assert "parquet" not in analyzed.lower()
+    assert out.count() >= 0  # plan executes
+
+
+def test_collapse_exact_respects_block_col(spark):
+    """Bit-identical vectors in DIFFERENT blocks must not merge when
+    the block is not a function of the vector (ADVICE r11 #1): the
+    collapsed blocked run emits exactly the uncollapsed blocked run's
+    pairs — no cross-block pairs at cosine 1.0."""
+    v = [1.0, 0.0, 0.0]
+    w = [0.9, 0.1, 0.0]
+    rows = [
+        (1, "en", v), (2, "en", v),   # same block, identical -> pair
+        (3, "fr", v), (4, "fr", w),   # other block, 3 identical to 1/2
+        (5, "en", w),
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id long, lang string, embedding array<double>"
+    )
+    blocked = {
+        (r.id_a, r.id_b)
+        for r in similarity.cosine_neardup_pairs(
+            df, 0.95, block_col="lang"
+        ).collect()
+    }
+    collapsed = {
+        (r.id_a, r.id_b)
+        for r in similarity.cosine_neardup_pairs(
+            df, 0.95, block_col="lang", collapse_exact=True
+        ).collect()
+    }
+    assert collapsed == blocked
+    assert (1, 2) in collapsed
+    assert (1, 3) not in collapsed and (2, 3) not in collapsed
+
+
+def test_refine_incomplete_corpus_keeps_quantized_score(
+    spark, emb, tmp_path
+):
+    """An incomplete refine frame must degrade gracefully (ADVICE r11
+    #2): shortlist ids missing from the refine corpus keep their
+    quantized score instead of vanishing, so every query still gets k
+    rows."""
+    queries = emb.filter(F.col("vec_id") % 25 == 0)
+    corpus = emb.select("vec_id", "qe")
+    idx = str(tmp_path / "ivf_sq8_partial_refine")
+    similarity.save_ivf_index(
+        emb, idx, k=4, vec_col="qe", seed=42, max_iter=5, sq8=True
+    )
+    k = 5
+    # refine corpus missing every odd id — roughly half the shortlist
+    partial = corpus.filter(F.col("vec_id") % 2 == 0)
+    refined = similarity.ivf_topk_from_index(
+        spark, idx, queries, k=k, n_probe=4, vec_col="qe",
+        refine=partial, refine_factor=2,
+    ).collect()
+    per_q = {}
+    for r in refined:
+        per_q.setdefault(r.query_id, []).append(r)
+    assert all(len(v) == k for v in per_q.values())
+    assert len(per_q) == queries.count()
+    # missing-side rows survive with a finite (quantized) score
+    odd = [r for r in refined if r.vec_id % 2 == 1]
+    assert odd, "some odd ids should make the top-k"
+    assert all(r.cosine is not None for r in refined)
+    # even ids carry the TRUE cosine (exact re-rank applied)
+    true_cos = {
+        (r.query_id, r.vec_id): round(r.cosine, 9)
+        for r in similarity.cosine_topk(
+            corpus, queries, k=corpus.count(), vec_col="qe"
+        ).collect()
+    }
+    for r in refined:
+        if r.vec_id % 2 == 0:
+            assert round(r.cosine, 9) == true_cos[(r.query_id, r.vec_id)]
+
+
+def test_refined_col_flags_unrefined_rows(spark, emb, tmp_path):
+    """refined_col makes a truncated refine corpus OBSERVABLE: rows
+    whose score was exactly re-ranked carry True, rows that kept the
+    quantized score carry False — with no extra job on the search
+    lineage. Default call keeps the r12 4-column schema."""
+    queries = emb.filter(F.col("vec_id") % 25 == 0)
+    corpus = emb.select("vec_id", "qe")
+    idx = str(tmp_path / "ivf_sq8_flagged_refine")
+    similarity.save_ivf_index(
+        emb, idx, k=4, vec_col="qe", seed=42, max_iter=5, sq8=True
+    )
+    partial = corpus.filter(F.col("vec_id") % 2 == 0)
+    flagged = similarity.ivf_topk_from_index(
+        spark, idx, queries, k=5, n_probe=4, vec_col="qe",
+        refine=partial, refine_factor=2, refined_col="refined",
+    )
+    assert flagged.columns == [
+        "query_id", "vec_id", "cosine", "rank", "refined"
+    ]
+    rows = flagged.collect()
+    assert all(r.refined == (r.vec_id % 2 == 0) for r in rows)
+    assert any(not r.refined for r in rows)  # truncation is visible
+    # an agg over the flag quantifies the gap (the observability story)
+    n_unrefined = flagged.filter(~F.col("refined")).count()
+    assert n_unrefined == sum(1 for r in rows if not r.refined)
+    # default: schema unchanged from r12 (no surprise column)
+    default = similarity.ivf_topk_from_index(
+        spark, idx, queries, k=5, n_probe=4, vec_col="qe",
+        refine=partial, refine_factor=2,
+    )
+    assert default.columns == ["query_id", "vec_id", "cosine", "rank"]
+
+
+def test_fake_decoders_match_python_stubs(spark, sf_dir):
+    """The Catalyst fake decode paths (sha2 + conv expressions) must be
+    value-identical to the Python stub decoders they replaced."""
+    from photon_ml_spark.operators import multimodal as mm
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(40)
+    payloads = mm.attach_payload(docs)
+    rows = {
+        r.doc_id: r for r in mm.decode_image(payloads, fake=True).collect()
+    }
+    arows = {
+        r.doc_id: r for r in mm.decode_audio(payloads, fake=True).collect()
+    }
+    vrows = {
+        r.doc_id: r for r in mm.decode_video(payloads, fake=True).collect()
+    }
+    for r in payloads.collect():
+        p = bytes(r.payload)
+        w, h, luma = mm._fake_decode(p)
+        got = rows[r.doc_id]
+        assert (got.width, got.height) == (w, h)
+        assert got.mean_luma == luma and got.decode_ok
+        sr, ns, rms = mm._fake_audio_decode(p)
+        ga = arows[r.doc_id]
+        assert (ga.sample_rate, ga.n_samples, ga.rms) == (sr, ns, rms)
+        vw, vh, fps, nf, vl = mm._fake_video_decode(p)
+        gv = vrows[r.doc_id]
+        assert (gv.width, gv.height, gv.fps, gv.n_frames) == (vw, vh, fps, nf)
+        assert gv.mean_luma == vl
+        assert gv.duration_sec == nf / fps
+    # and no Python-eval node anywhere in the fake plans
+    for d in (
+        mm.decode_image(payloads, fake=True),
+        mm.decode_audio(payloads, fake=True),
+        mm.decode_video(payloads, fake=True),
+    ):
+        plan = d._jdf.queryExecution().executedPlan().toString()
+        assert "EvalPython" not in plan and "MapInPandas" not in plan
+    # a NULL payload: the fake paths read it as the real ones do
+    # (zeros, decode_ok=False), never NULL metrics with decode_ok=True
+    null = spark.createDataFrame(
+        [(7, None, "image/fake")], "doc_id long, payload binary, media_type string"
+    )
+    for decode in (mm.decode_image, mm.decode_audio, mm.decode_video):
+        fake = decode(null, fake=True).collect()
+        real = decode(null, fake=False).collect()
+        assert fake == real, decode.__name__
+        assert fake[0].decode_ok is False

@@ -1,5 +1,5 @@
 """Registry integrity: the driver's correctness gate records the first
-50 entries of ``all_queries()``, whose order comes from ``GATE_ORDER``.
+50 entries of ``all_queries()``, which are exactly ``GATE_ORDER``.
 A query module that fails to import makes ``all_queries()`` raise — a
 silent import failure would shrink both the gate and the oracle test
 with no signal."""
@@ -8,7 +8,7 @@ import sys
 
 import pytest
 
-from photon_ml_spark.queries import GATE_ORDER, all_queries
+from photon_ml_spark.queries import GATE_ORDER, QUERY_REGISTRY, all_queries
 
 
 def test_gate_order_fully_registered():
@@ -18,8 +18,10 @@ def test_gate_order_fully_registered():
         f"GATE_ORDER names missing from the registry (query module "
         f"failed to import?): {missing}"
     )
-    # the gate window is exactly the first len(GATE_ORDER) entries
-    assert list(qs)[: len(GATE_ORDER)] == GATE_ORDER
+    # the registry is exactly the gate window: suites compose their
+    # constituents directly, so nothing else registers
+    assert list(qs) == GATE_ORDER
+    assert sorted(QUERY_REGISTRY) == sorted(GATE_ORDER)
 
 
 def test_gate_order_has_no_duplicates_and_fits_window():

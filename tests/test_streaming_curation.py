@@ -10,6 +10,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from photon_ml_spark.operators import dedup
 from photon_ml_spark.streaming.curation import (
     neardup_process_batch,
     stream_neardup,
@@ -246,3 +247,66 @@ def test_crash_before_params_rebootstraps(spark, tmp_path, docs):
         r.doc_id for r in spark.read.parquet(out).select("doc_id").collect()
     )
     assert os.path.exists(os.path.join(idx, "params.json"))
+
+
+def test_drop_new_duplicates_batch_side_membership(
+    spark, oracle_sf_dir, tmp_path
+):
+    """r13: drop_new_duplicates tests pair-endpoint membership against
+    the BATCH-side ids instead of scanning the corpus-sized index-id
+    relation four times — equivalent under the incremental contract
+    (endpoints ⊆ indexed ∪ new, disjoint by the clash guard). Pins
+    (a) output identical to the index-side 4-join reference form and
+    (b) the indexed_ids argument is no longer scanned at all."""
+    docs = (
+        spark.read.parquet(f"{oracle_sf_dir}/documents.parquet")
+        .filter(F.col("doc_id") % 4 == 0)
+    )
+    old = docs.filter(F.col("doc_id") % 3 != 0)
+    new = docs.filter(F.col("doc_id") % 3 == 0)
+    idx = str(tmp_path / "dnd_idx")
+    dedup.save_minhash_index(old, idx, n=2, num_hashes=16)
+    pairs = dedup.incremental_neardup(
+        new, idx, threshold=0.4, n=2, num_hashes=16, bands=4,
+        collapse_exact=True,
+    ).persist()
+    assert pairs.count() > 0  # non-trivial resolution
+
+    # reference: the pre-r13 index-side membership form
+    o = old.select("doc_id")
+    hits_old = (
+        pairs.join(o.withColumnRenamed("doc_id", "id_a"), "id_a", "left_semi")
+        .select(F.col("id_b").alias("doc_id"))
+        .unionByName(
+            pairs.join(
+                o.withColumnRenamed("doc_id", "id_b"), "id_b", "left_semi"
+            ).select(F.col("id_a").alias("doc_id"))
+        )
+        .distinct()
+    )
+    ref_survivors = new.join(hits_old, "doc_id", "left_anti")
+    ref_new_new = (
+        pairs.join(o.withColumnRenamed("doc_id", "id_a"), "id_a", "left_anti")
+        .join(o.withColumnRenamed("doc_id", "id_b"), "id_b", "left_anti")
+        .select("id_a", "id_b")
+    )
+    ref = (
+        dedup.cluster_and_keep(ref_survivors, ref_new_new, id_col="doc_id")
+        .filter("is_keep")
+        .drop("cluster_id", "is_keep")
+    )
+    ref_ids = sorted(r.doc_id for r in ref.select("doc_id").collect())
+    got = dedup.drop_new_duplicates(new, pairs, old.select("doc_id"))
+    got_ids = sorted(r.doc_id for r in got.select("doc_id").collect())
+    assert got_ids == ref_ids and len(got_ids) < new.count()
+
+    # (b) the index-id relation is never evaluated: a frame that
+    # raises on ANY action passes through untouched
+    poison = spark.range(1).select(
+        F.assert_true(F.lit(False)).alias("x"), F.col("id").alias("doc_id")
+    )
+    got2 = dedup.drop_new_duplicates(new, pairs, poison)
+    assert sorted(
+        r.doc_id for r in got2.select("doc_id").collect()
+    ) == ref_ids
+    pairs.unpersist()
