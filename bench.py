@@ -103,11 +103,9 @@ def run_flagship(spark, sf_dir: str) -> int:
         StorageLevel.MEMORY_AND_DISK_DESER,
     )
     training.count()
-    dictionary = persist(
-        featurize.build_feature_dictionary(
-            training, ["features"], has_intercept=True
-        ),
-        StorageLevel.MEMORY_AND_DISK_DESER,
+    # a local relation: re-reading it runs no job, caching it would
+    dictionary = featurize.build_feature_dictionary(
+        training, ["features"], has_intercept=True
     )
     shard = FeatureShardConfig("features", ["features"])
     # tiny dictionary -> zero-shuffle map-side assembly; single cache of
@@ -130,10 +128,11 @@ def run_flagship(spark, sf_dir: str) -> int:
         assembled, dim=5, family="binomial", diagnostics=False
     )
     scored = scoring.score_literal(assembled, model)
-    auc = metrics.auroc(scored, score="score", label="response").first().auroc
+    auc = metrics.roc_areas(
+        scored, score="score", label="response", names=("auroc",)
+    )["auroc"]
     assert 0.0 <= auc <= 1.0
     release(assembled)
-    release(dictionary)
     return n
 
 

@@ -251,8 +251,10 @@ def _shard_configs(cfg) -> dict:
 def _assembled(spark, cfg, dictionaries=None):
     """Read the input and attach every configured feature shard's
     sparse-pair columns. Returns ``(frame, {shard: dictionary},
-    {shard: dim})``; dictionaries built here are cached in the
-    caller's scope."""
+    {shard: dim})``. Each dictionary is collected once, bounded by
+    ``MAP_STRATEGY_MAX_KEYS``: the rows that fit are both the dim and
+    the literal map of the assembly, and only a larger dictionary is
+    counted and joined."""
     from photon_ml_spark.sources import featurize
 
     raw = _read_input(spark, cfg)
@@ -260,21 +262,21 @@ def _assembled(spark, cfg, dictionaries=None):
     dictionaries = dict(dictionaries or {})
     dims = {}
     df = raw
+    cap = featurize.MAP_STRATEGY_MAX_KEYS
     for name, shard in shards.items():
         if dictionaries.get(name) is None:
             # built from the RAW frame — a dictionary plan hanging off
             # an earlier shard's assembly join would redo that join
-            dictionaries[name] = persist(
-                featurize.build_feature_dictionary(
-                    raw, shard.feature_bags, has_intercept=shard.has_intercept
-                ),
-                StorageLevel.MEMORY_AND_DISK_DESER,
+            dictionaries[name] = featurize.build_feature_dictionary(
+                raw, shard.feature_bags, has_intercept=shard.has_intercept
             )
-        n_keys = dictionaries[name].count()
-        dims[name] = n_keys
-        strategy = "map" if n_keys <= 100_000 else "join"
+        entries = dictionaries[name].limit(cap + 1).collect()
+        fits = len(entries) <= cap
+        dims[name] = len(entries) if fits else dictionaries[name].count()
         df = featurize.assemble_shard(
-            df, dictionaries[name], shard, strategy=strategy
+            df, dictionaries[name], shard,
+            strategy="map" if fits else "join",
+            entries=entries if fits else None,
         )
     return df, dictionaries, dims
 
@@ -1076,10 +1078,10 @@ def _validation_metric(validation_frame, family, fitted) -> float:
 
     scored = _with_eval_margin(fitted.transform(validation_frame))
     if family in ("binomial", "logistic"):
-        with scope():
-            auc = metrics.auroc(
-                scored, score="__eval_margin", label="response"
-            ).first().auroc
+        auc = metrics.roc_areas(
+            scored, score="__eval_margin", label="response",
+            names=("auroc",),
+        )["auroc"]
         if auc is None:
             raise ValueError(
                 "validation frame has a single response class (or "
@@ -1368,9 +1370,12 @@ def index(cfg: dict, spark: SparkSession) -> None:
     """Offline feature-indexing job — the reference's standalone
     FeatureIndexingDriver (photon-client/.../index/
     FeatureIndexingDriver.scala:218-291: distinct feature keys →
-    contiguous ids → persisted per-shard stores; its PalDB off-heap
-    requirement above ~200k features, :41-42, disappears because the
-    dictionary stays a distributed parquet relation end to end).
+    contiguous ids → persisted per-shard stores). Up to
+    ``featurize.MAP_STRATEGY_MAX_KEYS`` keys the index is assigned on
+    the driver, as the reference's in-memory map was; its PalDB
+    off-heap requirement above ~200k features, :41-42, disappears
+    because a larger dictionary stays a distributed relation end to
+    end, written as parquet either way.
 
     Config: ``input`` (+ optional ``input_format``), ``feature_bags``,
     ``output_dir``; optional ``has_intercept`` (default true) and
@@ -1479,10 +1484,6 @@ def _evaluate_scores(scored, evaluators: list) -> dict:
             "evaluators need a 'response' label column on the scoring "
             "input — score without evaluators, or add labels"
         )
-    # one scoring pass feeds every requested metric: without the
-    # persist each .first() below re-executes the full scoring plan
-    # (random-effect joins included) once per evaluator
-    sdf = persist(_with_eval_margin(scored))
     m, lbl = "__eval_margin", "response"
     loss_kinds = {
         "LOGISTIC_LOSS": "logistic",
@@ -1490,13 +1491,25 @@ def _evaluate_scores(scored, evaluators: list) -> dict:
         "SQUARED_LOSS": "squared",
         "SMOOTHED_HINGE_LOSS": "smoothed_hinge",
     }
+    # AUC and AUPR integrate one collected curve; every other evaluator
+    # is a pass of its own over the scored frame
+    areas = {"AUC": "auroc", "AUPR": "aupr"}
+    names = [str(ev).strip().upper() for ev in evaluators]
+    wanted = sorted({areas[n] for n in names if n in areas})
+    sdf = _with_eval_margin(scored)
+    if sum(n not in areas for n in names) + bool(wanted) > 1:
+        # one scoring pass feeds every pass: without the persist each
+        # one re-executes the full scoring plan (random-effect joins
+        # included)
+        sdf = persist(sdf)
+    roc = (
+        metrics.roc_areas(sdf, score=m, label=lbl, names=wanted)
+        if wanted else {}
+    )
     out = {}
-    for ev in evaluators:
-        name = str(ev).strip().upper()
-        if name == "AUC":
-            v = metrics.auroc(sdf, score=m, label=lbl).first().auroc
-        elif name == "AUPR":
-            v = metrics.aupr(sdf, score=m, label=lbl).first().aupr
+    for ev, name in zip(evaluators, names):
+        if name in areas:
+            v = roc[areas[name]]
         elif name == "RMSE":
             v = metrics.weighted_rmse(sdf, score=m, label=lbl).first().rmse
         elif name == "MAE":

@@ -1,8 +1,12 @@
 """Evaluation suite (SURVEY §2.4 A9–A13) as one-pass aggregations.
 
 Every metric is a Catalyst aggregation / window computation over a
-scored DataFrame with columns (score, label, weight) — no collect, no
-Python in the hot path, so the same code evaluates 60k rows or 100 TB.
+scored DataFrame with columns (score, label, weight), so the same code
+evaluates 60k rows or 100 TB. The exception is ``roc_areas``, the
+drivers' AUROC/AUPR: when the tie-grouped curve fits the driver
+(``LOCAL_ROC_MAX_GROUPS`` distinct scores) it is fetched with one
+bounded collect and integrated in numpy, like the reference's local
+kernel; above that bound it runs the DataFrame metrics.
 
 Mirrors photon-api/.../evaluation/{RMSE,SquaredLoss,LogisticLoss,
 PoissonLoss,SmoothedHingeLoss}Evaluator.scala, AreaUnderROCCurveEvaluator
@@ -13,10 +17,11 @@ the legacy suite photon-client/.../evaluation/Evaluation.scala:40-165.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from photon_ml_spark.functions import links
-from photon_ml_spark.materialize import persist
+from photon_ml_spark.materialize import persist, scope
 
 
 def _w(weight: str | None) -> Column:
@@ -62,6 +67,16 @@ def loss_metric(
 ROC_BUCKETS = 4096
 
 
+def _tie_groups(df: DataFrame, score, label, weight) -> DataFrame:
+    """One (s, pos, neg) row per distinct score: the weighted positive
+    and negative mass of each tie group."""
+    w = _w(weight)
+    return df.groupBy(F.col(score).alias("s")).agg(
+        F.sum(w * F.col(label)).alias("pos"),
+        F.sum(w * (F.lit(1.0) - F.col(label))).alias("neg"),
+    )
+
+
 def _roc_points(df: DataFrame, score, label, weight,
                 buckets: int = ROC_BUCKETS) -> DataFrame:
     """Tie-grouped cumulative positives/negatives ordered by score desc,
@@ -81,9 +96,10 @@ def _roc_points(df: DataFrame, score, label, weight,
     exact global totals (total_pos, total_neg) so downstream metrics
     need no extra pass. Equi-width buckets can be uneven on very skewed
     score distributions, but per-bucket work is still bounded by the
-    densest score range rather than the whole relation.
+    densest score range rather than the whole relation. A NULL score
+    sorts last, as in ``ORDER BY s DESC``: it gets bucket 0, below
+    every score.
     """
-    w = _w(weight)
     # cache the tie-grouped relation (narrow: one (s, pos, neg) row per
     # distinct score): it feeds THREE plan branches — the min/max/total
     # stats, the per-bucket totals (via offsets), and the final windowed
@@ -93,19 +109,14 @@ def _roc_points(df: DataFrame, score, label, weight,
     # frame three times). The metric functions return lazy frames, so
     # the caller's scope owns the cache; the AUC/AUPR/peak-F1 trio over
     # one scored frame shares a single entry.
-    g = persist(
-        df.groupBy(F.col(score).alias("s")).agg(
-            F.sum(w * F.col(label)).alias("pos"),
-            F.sum(w * (F.lit(1.0) - F.col(label))).alias("neg"),
-        )
-    )
+    g = persist(_tie_groups(df, score, label, weight))
     stats = g.agg(
         F.min("s").alias("__lo"), F.max("s").alias("__hi"),
         F.sum("pos").alias("total_pos"), F.sum("neg").alias("total_neg"),
     )
     gb = g.join(F.broadcast(stats)).withColumn(
         "__bkt",
-        F.when(
+        F.when(F.col("s").isNull(), F.lit(0)).when(
             F.col("__hi") > F.col("__lo"),
             F.least(
                 F.lit(buckets),
@@ -178,6 +189,80 @@ def peak_f1(df: DataFrame, score="score", label="label", weight=None) -> DataFra
         / (F.col("ctp") + F.col("cfp") + F.col("total_pos"))
     )
     return pts.agg(F.max(f1).alias("peak_f1"))
+
+
+#: Most tie groups (distinct scores) ``roc_areas`` integrates on the
+#: driver, 24 MB of Arrow doubles at the bound; a longer curve runs the
+#: bucketed DataFrame plans instead.
+LOCAL_ROC_MAX_GROUPS = 1_000_000
+
+
+def roc_areas(
+    df: DataFrame, score="score", label="label", weight=None,
+    names=("auroc", "aupr"),
+) -> dict:
+    """``{name: value}`` for ``names`` ⊆ {auroc, aupr}; a value is None
+    where the curve has no area (no rows, no positive mass, or for
+    AUROC no negative mass).
+
+    Up to ``LOCAL_ROC_MAX_GROUPS`` tie groups, one bounded collect of
+    (s, pos, neg) and an exact numpy integration with the formulas of
+    ``auroc``/``aupr`` (the reference's local kernel,
+    AreaUnderROCCurveLocalEvaluator.scala:25-72). Above the bound the
+    DataFrame metrics run instead, in a scope of their own."""
+    groups = (
+        _tie_groups(df, score, label, weight)
+        .limit(LOCAL_ROC_MAX_GROUPS + 1)
+        .toArrow()
+    )
+    if groups.num_rows > LOCAL_ROC_MAX_GROUPS:
+        fns = {"auroc": auroc, "aupr": aupr}
+        with scope():
+            return {
+                n: fns[n](df, score, label, weight).first()[0] for n in names
+            }
+    areas = _local_areas(groups)
+    return {n: areas[n] for n in names}
+
+
+def _local_areas(groups) -> dict:
+    """AUROC and AUPR of the collected (s, pos, neg) tie groups (an
+    Arrow table), swept in the order of ``ORDER BY s DESC``: NaN first,
+    NULL last. As in Spark, a NULL mass is left out of every sum; pos
+    and neg of a group are NULL together (both sum the same rows)."""
+
+    def col(name):
+        c = groups.column(name)
+        return (
+            c.to_numpy(zero_copy_only=False).astype(float),
+            c.is_null().to_numpy(zero_copy_only=False),
+        )
+
+    (s, null_s), (pos, null_m), (neg, _) = col("s"), col("pos"), col("neg")
+    rank = np.where(null_s, 2, np.where(np.isnan(s), 0, 1))
+    order = np.lexsort((np.where(rank == 1, -s, 0.0), rank))
+    known = ~null_m[order]
+    if not known.any():
+        return {"auroc": None, "aupr": None}
+    pos = np.where(known, pos[order], 0.0)
+    neg = np.where(known, neg[order], 0.0)
+    ctp, cfp = np.cumsum(pos), np.cumsum(neg)
+    total_pos, total_neg = pos.sum(), neg.sum()
+    pos, neg, ctp, cfp = pos[known], neg[known], ctp[known], cfp[known]
+    area = (neg * (2.0 * ctp - pos) / 2.0).sum()
+    with np.errstate(divide="ignore", invalid="ignore"):
+        prec = ctp / (ctp + cfp)
+        ptp = ctp - pos
+        pdenom = ptp + (cfp - neg)
+        pprec = np.where(pdenom > 0, ptp / pdenom, 1.0)
+    term = (pos * (prec + pprec) / 2.0)[ctp + cfp != 0].sum()
+    return {
+        "auroc": (
+            float(area / (total_pos * total_neg))
+            if total_pos * total_neg != 0 else None
+        ),
+        "aupr": float(term / total_pos) if total_pos != 0 else None,
+    }
 
 
 def logistic_data_loglik_and_aic(

@@ -40,7 +40,9 @@ def densify(
     (no Python UDF). Null feature arrays become all-zero vectors.
     GLR materializes dense coefficient vectors anyway, so dense input
     costs nothing extra at fit time; at scoring time we keep the sparse
-    pairs (ml/scoring.py) and never densify.
+    pairs (ml/scoring.py) and never densify. The column carries its
+    size as ML attribute metadata, so spark.ml reads the feature count
+    from the schema instead of running a ``head()`` job for it.
     """
     m = F.map_from_arrays(
         F.coalesce(F.col(indices_col), F.array()),
@@ -50,7 +52,12 @@ def densify(
         F.sequence(F.lit(0), F.lit(dim - 1)),
         lambda i: F.coalesce(F.element_at(m, i.cast("long")), F.lit(0.0)),
     )
-    return df.withColumn(out_col, array_to_vector(dense))
+    return df.withColumn(
+        out_col,
+        array_to_vector(dense).alias(
+            out_col, metadata={"ml_attr": {"num_attrs": dim}}
+        ),
+    )
 
 
 @dataclass

@@ -278,12 +278,10 @@ def x6_neardup_pairs(spark, sf_dir, stamps=None):
     # returned pair relation. x33 also reports per-batch phase stamps
     # around its real actions; streaming_build is the residual glue.
     with timed(stamps, "incremental_build"):
-        inc = pipe.x32_incremental_neardup(spark, sf_dir, doc_sids=sids)
+        inc = pipe.x32_incremental_neardup(docs, sids)
     inc = _stamp(stamps, "incremental", inc)
     with timed(stamps, "streaming_build", phases="streaming") as ps:
-        stream = pipe.x33_stream_neardup(
-            spark, sf_dir, doc_sids=sids, phase_stamps=ps
-        )
+        stream = pipe.x33_stream_neardup(docs, sids, phase_stamps=ps)
     stream = _stamp(stamps, "streaming", stream)
     return _union([lsh, sim, emb, sigs, inc, stream])
 

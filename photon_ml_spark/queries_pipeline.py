@@ -449,14 +449,15 @@ FROM i_s
 """
 
 
-def x32_incremental_neardup(spark, sf_dir, doc_sids):
+def x32_incremental_neardup(docs, doc_sids):
     """pipeline/dedup: PERSISTED-INDEX incremental near-dedup over the
     even-doc-id half of the corpus — save_minhash_index bootstraps
     batch=-1 state on disk for the indexed 2/3, incremental_neardup
     LSH-joins the new 1/3 against the STORED relations (never a corpus
     rescan), drop_new_duplicates resolves first-seen survivors; oracle
     replays index-side ∪ batch-side banding + exact-Jaccard verify + the
-    new-new component closure. ``doc_sids``: see x5"""
+    new-new component closure. ``docs``: the documents scan;
+    ``doc_sids``: see x5"""
     import tempfile
 
     from photon_ml_spark.operators.dedup import (
@@ -465,7 +466,6 @@ def x32_incremental_neardup(spark, sf_dir, doc_sids):
         save_minhash_index,
     )
 
-    docs = _t(spark, sf_dir, "documents")
     half = docs.filter(F.col("doc_id") % 2 == 0)
     old = half.filter(F.col("doc_id") % 3 != 0)
     new = half.filter(F.col("doc_id") % 3 == 0)
@@ -535,7 +535,7 @@ FROM s1_s
 """
 
 
-def x33_stream_neardup(spark, sf_dir, doc_sids, phase_stamps=None):
+def x33_stream_neardup(docs, doc_sids, phase_stamps=None):
     """streaming/dedup: 2-micro-batch STREAMING near-dedup replay over
     the odd-doc-id half of the corpus — neardup_process_batch (the
     foreachBatch body) bootstraps the shared index from batch 0
@@ -544,12 +544,11 @@ def x33_stream_neardup(spark, sf_dir, doc_sids, phase_stamps=None):
     state; output = published survivors with their publish-partition id,
     so the staged batch=<id> layout itself is under the value hash;
     oracle replays both batches (stream/batch parity of the wrapper is
-    pytest-pinned). ``doc_sids``: see x5"""
+    pytest-pinned). ``docs``: the documents scan; ``doc_sids``: see x5"""
     import tempfile
 
     from photon_ml_spark.streaming.curation import neardup_process_batch
 
-    docs = _t(spark, sf_dir, "documents")
     half = docs.filter(F.col("doc_id") % 2 == 1)
     root = tempfile.mkdtemp(prefix="photon_stream_dedup_")
     for bid, keep in ((0, F.col("doc_id") % 3 != 0), (1, F.col("doc_id") % 3 == 0)):
@@ -564,7 +563,7 @@ def x33_stream_neardup(spark, sf_dir, doc_sids, phase_stamps=None):
             # (detect vs the persisted index) — per-batch phase stamps
             for k, v in t.items():
                 phase_stamps[f"b{bid}_{k}"] = v
-    return spark.read.parquet(f"{root}/docs").select(
+    return docs.sparkSession.read.parquet(f"{root}/docs").select(
         F.lit("stream").alias("variant"),
         F.col("doc_id").alias("id_a"),
         F.col("batch").cast("long").alias("id_b"),

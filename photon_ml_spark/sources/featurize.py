@@ -8,17 +8,24 @@ Rebuilds the reference's Avro feature pipeline Spark-first:
 - shard-vector assembly with duplicate-feature detection and intercept
   slot (AvroDataReader.scala:309-346)
 
-Scale notes: the dictionary is a DataFrame joined at ingest — never a
-driver-side map (the reference needed PalDB off-heap stores above ~200k
+Scale notes: a dictionary that fits the driver
+(``MAP_STRATEGY_MAX_KEYS``, intercept slot included) is indexed there,
+the way the reference kept its index map in memory: one bounded
+collect of the distinct keys, a Python sort, and a local relation
+(``LocalTableScan``) that later reads and collects without a Spark
+job. Above that bound the dictionary stays a DataFrame joined at
+ingest (the reference needed PalDB off-heap stores above ~200k
 features, FeatureIndexingDriver.scala:41-42; a broadcast-or-shuffle
-join subsumes that). Index assignment uses the shared JVM
+join subsumes that), and index assignment uses the shared JVM
 zipWithIndex (operators/indexing.py): range-partitioned sort, so no
 single-partition row_number bottleneck at 100M+ features, and no
-Python-RDD round-trip — the vocabulary never leaves Tungsten.
+Python-RDD round-trip.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from photon_ml_spark.datamodel import (
@@ -26,6 +33,7 @@ from photon_ml_spark.datamodel import (
     INTERCEPT_KEY,
     FeatureShardConfig,
 )
+from photon_ml_spark.materialize import persist, release
 from photon_ml_spark.operators.indexing import zip_with_index
 
 
@@ -50,6 +58,13 @@ def exploded_features(df: DataFrame, feature_bags: list[str]) -> DataFrame:
     return out
 
 
+#: Most dictionary entries (intercept slot included) kept on the driver:
+#: up to it a dictionary is built locally and assembled through a
+#: literal map (``assemble_shard(strategy='map')``); above it both run
+#: as distributed plans.
+MAP_STRATEGY_MAX_KEYS = 100_000
+
+
 def build_feature_dictionary(
     df: DataFrame,
     feature_bags: list[str],
@@ -72,6 +87,13 @@ def build_feature_dictionary(
     getSelectedFeatureSetFromFile — an allowlist the reference reads
     from an Avro NameAndTerm file and applies while building the index
     map); Spark-first it is a semi-join, never a driver set.
+
+    One bounded collect (``MAP_STRATEGY_MAX_KEYS`` entries with the
+    intercept) decides the path. Keys that fit are sorted in Python —
+    code-point order, the same order as Spark's binary UTF-8 string
+    compare — and returned as a local relation. Above the bound the
+    distinct keys, persisted in the caller's scope while the index is
+    built, feed the JVM zipWithIndex.
     """
     keys = None
     for bag in feature_bags:
@@ -85,6 +107,24 @@ def build_feature_dictionary(
             selected_features.select("feature_key").distinct(),
             "feature_key",
             "left_semi",
+        )
+    spark = keys.sparkSession
+    cap = MAP_STRATEGY_MAX_KEYS - int(has_intercept)
+    keys = persist(keys)
+    head = keys.limit(cap + 1).toArrow().column("feature_key")
+    if len(head) <= cap:
+        release(keys)
+        names = sorted(head.to_pylist())
+        if has_intercept:
+            names.append(INTERCEPT_KEY)
+        return spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "feature_key": pd.Series(names, dtype=object),
+                    "feature_index": np.arange(len(names), dtype=np.int64),
+                }
+            ),
+            "feature_key string, feature_index long",
         )
 
     # Scalable deterministic zipWithIndex — ROW_NUMBER() OVER (ORDER BY
@@ -101,9 +141,11 @@ def build_feature_dictionary(
         keys, "feature_key", id_col="feature_index",
         n_partitions=n_partitions,
     )
+    # the index reads its eager checkpoint from here on
+    release(keys)
     if has_intercept:
         # 1-row JVM literal (no createDataFrame → no ExistingRDD scan)
-        intercept = keys.sparkSession.range(1).select(
+        intercept = spark.range(1).select(
             F.lit(INTERCEPT_KEY).alias("feature_key"),
             F.lit(n).cast("long").alias("feature_index"),
         )
@@ -229,9 +271,6 @@ def _collect_pairs(mapped: DataFrame, shard: FeatureShardConfig, uid_col: str) -
     )
 
 
-MAP_STRATEGY_MAX_KEYS = 100_000
-
-
 def assemble_shard(
     df: DataFrame,
     dictionary: DataFrame,
@@ -240,6 +279,7 @@ def assemble_shard(
     broadcast_dict: bool = True,
     strategy: str = "join",
     max_map_keys: int = MAP_STRATEGY_MAX_KEYS,
+    entries: list | None = None,
 ) -> DataFrame:
     """Attach ``<shard>_indices``/``<shard>_values`` sparse-pair columns.
 
@@ -270,11 +310,13 @@ def assemble_shard(
     advisory: the collect is bounded by ``limit(max_map_keys + 1)``
     (never an unbounded driver fetch) and an oversized dictionary
     silently falls back to the shuffle-safe ``'join'`` plan.
+    ``entries``: the dictionary's rows when the caller has already
+    collected them, so ``'map'`` collects nothing again.
     """
-    if strategy == "map":
+    if strategy == "map" and entries is None:
         entries = dictionary.limit(max_map_keys + 1).collect()
-        if len(entries) > max_map_keys:
-            strategy = "join"  # dictionary too big for a literal map
+    if strategy == "map" and len(entries) > max_map_keys:
+        strategy = "join"  # dictionary too big for a literal map
     if strategy == "map":
         mapping = F.map_from_arrays(
             F.array(*[F.lit(r[0]) for r in entries]),

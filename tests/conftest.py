@@ -1,4 +1,5 @@
 import os
+import uuid
 
 import pytest
 
@@ -31,3 +32,24 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def oracle_sf_dir():
     return SF_DIR_ORACLE
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` → the number of Spark jobs ``fn()`` ran,
+    read after the listener bus has delivered every job event."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"spark-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -1,8 +1,9 @@
 """BENCH row accounting: stamped rows must decompose exactly —
 row total == Σ constituents (round-7 verdict Next #2). bench.main also
 asserts the invariant at runtime on every published row; this pins the
-helper's arithmetic without paying for a full bench run, and runs two
-suites down the stamped path the bench takes."""
+helper's arithmetic without paying for a full bench run, and checks the
+stamps of the two suites that the oracle gate runs down the stamped
+path the bench takes."""
 
 import pytest
 
@@ -49,21 +50,12 @@ def test_close_stamps_empty_row_is_all_overhead():
         ),
     ],
 )
-def test_stamped_suite_matches_gate_run(spark, sf_dir, name, keys):
-    """The bench's stamped run of a suite returns the gate run's rows
-    and stamps exactly its named blocks."""
-    from photon_ml_spark.materialize import scope
-    from photon_ml_spark.queries import all_queries
+def test_stamped_suite_matches_gate_run(spark, name, keys):
+    """The gate run of these suites is the bench's stamped run
+    (``test_oracle.stamped_run``, whose rows the oracle checks), and it
+    stamps exactly its named blocks."""
+    from test_oracle import stamped_run
 
-    run = all_queries()[name].run
-
-    def rows(df):
-        return sorted(map(tuple, df.collect()), key=repr)
-
-    plain = rows(run(spark, sf_dir))
-    stamps: dict[str, float] = {}
-    with scope():
-        stamped = rows(run(spark, sf_dir, stamps=stamps))
-    assert stamped == plain
+    stamps = stamped_run(spark, name)[1]
     assert set(stamps) == keys
     assert all(v >= 0 for v in stamps.values())

@@ -67,9 +67,11 @@ def _assert_jvm_only(df, label):
 
 
 def test_feature_dictionary_plan_is_jvm_only(spark):
-    """S3/S4 dictionary build never leaves Tungsten — the vocabulary
-    (>200k keys at the reference's own indexing trigger,
-    FeatureIndexingDriver.scala:41-42) must not cross into Python."""
+    """S3/S4 dictionary plan starts no Python worker. A small
+    vocabulary is indexed on the driver and planned as a
+    ``LocalTableScan``; a large one (>200k keys at the reference's own
+    indexing trigger, FeatureIndexingDriver.scala:41-42) is indexed by
+    the JVM zipWithIndex and never crosses into Python."""
     from photon_ml_spark.sources import datasets, featurize
 
     tr = datasets.lineitem_training_frame(

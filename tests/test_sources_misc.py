@@ -2,6 +2,7 @@
 (J11 '-'), daily path resolution edge cases (S7/F4)."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from photon_ml_spark.ml.scoring import add_scores
@@ -193,3 +194,118 @@ def test_spread_scan_guard_and_validation(spark):
     for bad in (0, -3):
         with pytest.raises(ValueError):
             spread_scan(df, min_partitions=bad)
+
+
+def _bag_frame(spark, rows):
+    return spark.createDataFrame(
+        rows,
+        "uid long, a array<struct<name string, term string, value double>>, "
+        "b array<struct<name string, term string, value double>>",
+    )
+
+
+def _dictionary_rows(d):
+    return [tuple(r) for r in d.orderBy("feature_index").collect()]
+
+
+# keys whose order differs between code points, UTF-16 units and
+# case-folding: 'B' < 'a', 'z' < 'é' < '｡' (U+FF61) < '😀' (U+1F600, a
+# surrogate pair in UTF-16, so before U+FF61 there), plus NULL terms
+_KEY_ROWS = [
+    (1, [{"name": "a", "term": "x", "value": 1.0},
+         {"name": "B", "term": "x", "value": 1.0},
+         {"name": "é", "term": None, "value": 1.0}],
+        [{"name": "😀", "term": "t", "value": 2.0}]),
+    (2, [{"name": "A", "term": "x", "value": 1.0},
+         {"name": "｡", "term": "", "value": 1.0}],
+        [{"name": "z", "term": "Z", "value": 2.0},
+         {"name": "a", "term": "x", "value": 3.0}]),
+    (3, [], None),
+]
+
+
+@pytest.mark.parametrize("has_intercept", [True, False])
+@pytest.mark.parametrize("selected", [False, True])
+def test_local_dictionary_equals_zip_with_index(
+    spark, monkeypatch, has_intercept, selected
+):
+    """The driver-side build (sort in Python) and the over-the-cap JVM
+    zipWithIndex build give the same dictionary row for row."""
+    from photon_ml_spark.datamodel import FEATURE_KEY_SEP as S
+    from photon_ml_spark.sources import featurize
+
+    df = _bag_frame(spark, _KEY_ROWS)
+    allow = (
+        spark.createDataFrame(
+            [(f"a{S}x",), (f"😀{S}t",), (f"｡{S}",), ("absent",)],
+            "feature_key string",
+        )
+        if selected else None
+    )
+
+    def build():
+        return featurize.build_feature_dictionary(
+            df, ["a", "b"], has_intercept=has_intercept,
+            selected_features=allow,
+        )
+
+    local = build()
+    assert local._jdf.queryExecution().executedPlan().toString().startswith(
+        "LocalTableScan"
+    )
+    monkeypatch.setattr(featurize, "MAP_STRATEGY_MAX_KEYS", 2)
+    distributed = build()
+    assert "LocalTableScan" not in (
+        distributed._jdf.queryExecution().executedPlan().toString()
+    )
+    rows = _dictionary_rows(local)
+    assert rows == _dictionary_rows(distributed)
+    keys = [k for k, _ in rows if k != "(INTERCEPT)"]
+    assert keys == sorted(keys)
+    assert len(rows) == (3 if selected else 7) + has_intercept
+
+
+@pytest.mark.parametrize("has_intercept", [True, False])
+def test_empty_dictionary_both_paths(spark, monkeypatch, has_intercept):
+    from photon_ml_spark.sources import featurize
+
+    df = _bag_frame(spark, _KEY_ROWS).limit(0)
+    local = _dictionary_rows(
+        featurize.build_feature_dictionary(df, ["a", "b"], has_intercept)
+    )
+    # a bound of -1 real keys sends even an empty key set to zipWithIndex
+    monkeypatch.setattr(
+        featurize, "MAP_STRATEGY_MAX_KEYS", int(has_intercept) - 1
+    )
+    zipped = []
+    zip_with_index = featurize.zip_with_index
+    monkeypatch.setattr(
+        featurize, "zip_with_index",
+        lambda *a, **k: zipped.append(1) or zip_with_index(*a, **k),
+    )
+    distributed = _dictionary_rows(
+        featurize.build_feature_dictionary(df, ["a", "b"], has_intercept)
+    )
+    assert zipped
+    assert local == distributed == (
+        [("(INTERCEPT)", 0)] if has_intercept else []
+    )
+
+
+def test_local_dictionary_job_count(spark, spark_jobs):
+    """One bounded collect builds a small dictionary (the zipWithIndex
+    build ran a range checkpoint and a stats collect besides), and
+    re-reading it runs no job at all."""
+    from photon_ml_spark.sources import featurize
+
+    df = _bag_frame(spark, _KEY_ROWS)
+    built = []
+    n = spark_jobs(
+        lambda: built.append(
+            featurize.build_feature_dictionary(df, ["a", "b"])
+        )
+    )
+    assert n <= 3
+    d = built[0]
+    assert spark_jobs(d.collect) == 0
+    assert spark_jobs(lambda: d.limit(10).collect()) == 0
