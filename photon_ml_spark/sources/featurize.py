@@ -33,7 +33,6 @@ from photon_ml_spark.datamodel import (
     INTERCEPT_KEY,
     FeatureShardConfig,
 )
-from photon_ml_spark.materialize import persist, release
 from photon_ml_spark.operators.indexing import zip_with_index
 
 
@@ -92,8 +91,9 @@ def build_feature_dictionary(
     intercept) decides the path. Keys that fit are sorted in Python —
     code-point order, the same order as Spark's binary UTF-8 string
     compare — and returned as a local relation. Above the bound the
-    distinct keys, persisted in the caller's scope while the index is
-    built, feed the JVM zipWithIndex.
+    distinct keys feed the JVM zipWithIndex, which scans them again.
+    Keys are not cached for that rescan: the cache would cost every
+    build a job, and only the over-the-bound path would read it.
     """
     keys = None
     for bag in feature_bags:
@@ -110,10 +110,8 @@ def build_feature_dictionary(
         )
     spark = keys.sparkSession
     cap = MAP_STRATEGY_MAX_KEYS - int(has_intercept)
-    keys = persist(keys)
     head = keys.limit(cap + 1).toArrow().column("feature_key")
     if len(head) <= cap:
-        release(keys)
         names = sorted(head.to_pylist())
         if has_intercept:
             names.append(INTERCEPT_KEY)
@@ -141,8 +139,6 @@ def build_feature_dictionary(
         keys, "feature_key", id_col="feature_index",
         n_partitions=n_partitions,
     )
-    # the index reads its eager checkpoint from here on
-    release(keys)
     if has_intercept:
         # 1-row JVM literal (no createDataFrame → no ExistingRDD scan)
         intercept = spark.range(1).select(

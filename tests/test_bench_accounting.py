@@ -51,9 +51,9 @@ def test_close_stamps_empty_row_is_all_overhead():
     ],
 )
 def test_stamped_suite_matches_gate_run(spark, name, keys):
-    """The gate run of these suites is the bench's stamped run
-    (``test_oracle.stamped_run``, whose rows the oracle checks), and it
-    stamps exactly its named blocks."""
+    """The bench's stamped run of these suites
+    (``test_oracle.stamped_run``, whose rows the oracle checks beside
+    the plain run's) stamps exactly its named blocks."""
     from test_oracle import stamped_run
 
     stamps = stamped_run(spark, name)[1]

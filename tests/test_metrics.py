@@ -69,6 +69,25 @@ def test_over_the_cap_runs_the_dataframe_metrics(spark, monkeypatch):
         assert fallback[name] == pytest.approx(local[name], abs=1e-12)
 
 
+def test_over_the_cap_scans_the_input_once(spark, monkeypatch):
+    """The fallback reads the tie groups the bounded collect cached: each
+    input row is evaluated once, not once more by the DataFrame plans."""
+    from pyspark.sql import functions as F
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def tick(s):
+        seen.add(1)
+        return s
+
+    traced = F.udf(tick, "double").asNondeterministic()
+    df = _frame(spark, "weights")
+    df = df.withColumn("score", traced("score"))
+    monkeypatch.setattr(metrics, "LOCAL_ROC_MAX_GROUPS", 2)
+    metrics.roc_areas(df, weight="w")
+    assert seen.value == 300
+
+
 def test_undefined_areas_are_none(spark):
     one_class = spark.createDataFrame(
         [(0.3, 1.0), (0.7, 1.0)], "score double, label double"
@@ -97,9 +116,10 @@ def test_perfect_ranking(spark):
 
 
 def test_local_auc_job_count(spark, spark_jobs):
-    """One bounded collect: the tie-group shuffle and its result (the
-    DataFrame ``auroc`` runs ~20 jobs on the same frame)."""
+    """One bounded collect: the tie-group shuffle, the cache of its
+    result and the collect (the DataFrame ``auroc`` runs ~20 jobs on the
+    same frame)."""
     df = _frame(spark, "weights").cache()
     df.count()
-    assert spark_jobs(lambda: metrics.roc_areas(df, weight="w")) <= 2
+    assert spark_jobs(lambda: metrics.roc_areas(df, weight="w")) <= 3
     df.unpersist()

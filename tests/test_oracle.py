@@ -6,9 +6,9 @@ Before each DataFrame runs, its pre-execution physical plan is recorded
 for the plan-shape checks in ``test_plan_sweep``, so those checks read
 the plan of this very execution instead of building every query again.
 
-The suites in ``STAMPED`` run down the bench's stamped path instead
+The suites in ``STAMPED`` also run down the bench's stamped path
 (``stamps=``), once per session: the oracle checks the rows of that
-run, and ``test_bench_accounting`` reads its stamps."""
+run too, and ``test_bench_accounting`` reads its stamps."""
 
 import math
 import os
@@ -39,7 +39,6 @@ def stamped_run(spark, name):
         stamps: dict[str, float] = {}
         with scope():
             df = REGISTRY[name].run(spark, ORACLE_SF_DIR, stamps=stamps)
-            record_plan(df, name)
             _STAMPED_RUNS[name] = (df.toPandas(), stamps)
     return _STAMPED_RUNS[name]
 
@@ -88,14 +87,13 @@ def _compare(spark_pdf, oracle_pdf, name):
 @pytest.mark.parametrize("name", WITH_ORACLE)
 def test_oracle_match(spark, ddb, name):
     spec = REGISTRY[name]
-    if name in STAMPED:
-        sdf = stamped_run(spark, name)[0]
-    else:
-        df = spec.run(spark, ORACLE_SF_DIR)
-        record_plan(df, name)
-        sdf = df.toPandas()
+    df = spec.run(spark, ORACLE_SF_DIR)
+    record_plan(df, name)
+    sdf = df.toPandas()
     odf = ddb.execute(spec.oracle).df()
     _compare(sdf, odf, name)
+    if name in STAMPED:
+        _compare(stamped_run(spark, name)[0], odf, f"{name} (stamped)")
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY)

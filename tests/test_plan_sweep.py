@@ -66,19 +66,39 @@ def _assert_jvm_only(df, label):
         assert node not in plan, f"{label}: {node} in plan\n{plan}"
 
 
-def test_feature_dictionary_plan_is_jvm_only(spark):
-    """S3/S4 dictionary plan starts no Python worker. A small
-    vocabulary is indexed on the driver and planned as a
-    ``LocalTableScan``; a large one (>200k keys at the reference's own
-    indexing trigger, FeatureIndexingDriver.scala:41-42) is indexed by
-    the JVM zipWithIndex and never crosses into Python."""
+def _lineitem_dictionary(spark):
     from photon_ml_spark.sources import datasets, featurize
 
     tr = datasets.lineitem_training_frame(
         spark, SF, uid_strategy="monotonic"
     )
     d = featurize.build_feature_dictionary(tr, ["features"])
+    # the analyzed plan: a plan-identical dictionary cached elsewhere in
+    # the session replaces the physical scan with an InMemoryTableScan
+    return d, d._jdf.queryExecution().analyzed().toString()
+
+
+def test_feature_dictionary_plan_is_jvm_only(spark):
+    """S3/S4 dictionary plan starts no Python worker. A small
+    vocabulary is indexed on the driver and planned as a local
+    relation."""
+    d, plan = _lineitem_dictionary(spark)
+    assert plan.startswith("LocalRelation"), plan
     _assert_jvm_only(d, "build_feature_dictionary")
+
+
+def test_large_feature_dictionary_plan_is_jvm_only(spark, monkeypatch):
+    """A vocabulary above the driver bound (>200k keys at the
+    reference's own indexing trigger, FeatureIndexingDriver.scala:
+    41-42) is indexed by the JVM zipWithIndex and never crosses into
+    Python. A bound of 2 entries sends the lineitem vocabulary down
+    that path."""
+    from photon_ml_spark.sources import featurize
+
+    monkeypatch.setattr(featurize, "MAP_STRATEGY_MAX_KEYS", 2)
+    d, plan = _lineitem_dictionary(spark)
+    assert "LocalRelation" not in plan, plan
+    _assert_jvm_only(d, "build_feature_dictionary (zipWithIndex)")
 
 
 def test_token_ids_plan_is_jvm_only(spark):
