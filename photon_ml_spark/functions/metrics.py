@@ -154,13 +154,17 @@ def auroc(df: DataFrame, score="score", label="label", weight=None) -> DataFrame
     cumulative counts are recovered algebraically (prev_ctp = ctp − pos,
     prev_cfp = cfp − neg) so no lag window is needed; the cumulative
     sums themselves come from the bucketed two-phase ``_roc_points`` —
-    no unpartitioned window anywhere in the plan."""
+    no unpartitioned window anywhere in the plan. NULL when the input
+    has no positive or no negative mass (``try_divide``: under ANSI a
+    plain divide by the zero total raises instead)."""
     pts = _roc_points(df, score, label, weight)
     # trapezoid: (cfp - prev_cfp) * (ctp + prev_ctp) / 2 with
     # prev_* = cumulative minus this tie-group's own mass.
     area = F.col("neg") * (F.lit(2.0) * F.col("ctp") - F.col("pos")) / 2.0
     return pts.agg(
-        (F.sum(area) / (F.max("total_pos") * F.max("total_neg"))).alias("auroc")
+        F.try_divide(
+            F.sum(area), F.max("total_pos") * F.max("total_neg")
+        ).alias("auroc")
     )
 
 
@@ -168,14 +172,15 @@ def aupr(df: DataFrame, score="score", label="label", weight=None) -> DataFrame:
     """Weighted area under the precision-recall curve, trapezoid between
     consecutive tie-grouped points; curve starts at (recall=0,
     precision=1) by convention (AreaUnderPRCurveEvaluator). Previous
-    point recovered algebraically — no lag window."""
+    point recovered algebraically — no lag window. NULL when the input
+    has no positive mass."""
     pts = _roc_points(df, score, label, weight)
-    prec = F.col("ctp") / (F.col("ctp") + F.col("cfp"))
+    prec = F.try_divide(F.col("ctp"), F.col("ctp") + F.col("cfp"))
     ptp = F.col("ctp") - F.col("pos")
     pdenom = ptp + (F.col("cfp") - F.col("neg"))
     pprec = F.when(pdenom > 0, ptp / pdenom).otherwise(F.lit(1.0))
     term = F.col("pos") * (prec + pprec) / 2.0
-    return pts.agg((F.sum(term) / F.max("total_pos")).alias("aupr"))
+    return pts.agg(F.try_divide(F.sum(term), F.max("total_pos")).alias("aupr"))
 
 
 def peak_f1(df: DataFrame, score="score", label="label", weight=None) -> DataFrame:
@@ -184,9 +189,9 @@ def peak_f1(df: DataFrame, score="score", label="label", weight=None) -> DataFra
     F1 = 2·TP / (TP + FP + P). P comes from the carried global total —
     one bucketed sweep, no per-threshold scan, no global window."""
     pts = _roc_points(df, score, label, weight)
-    f1 = (
-        F.lit(2.0) * F.col("ctp")
-        / (F.col("ctp") + F.col("cfp") + F.col("total_pos"))
+    f1 = F.try_divide(
+        F.lit(2.0) * F.col("ctp"),
+        F.col("ctp") + F.col("cfp") + F.col("total_pos"),
     )
     return pts.agg(F.max(f1).alias("peak_f1"))
 

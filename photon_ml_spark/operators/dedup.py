@@ -408,26 +408,57 @@ def _verify_jaccard_pairs(
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate (id_a, id_b) pairs
     against a (id, sid) shingle relation — the shared tail of every
-    LSH dedup flow. Returns (id_a, id_b, jaccard) at ≥ threshold."""
-    sizes = sids.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
-    a = sids.select(F.col(id_col).alias("id_a"), "sid")
-    b = sids.select(F.col(id_col).alias("id_b"), "sid")
-    inter = (
-        cand.join(a, "id_a").join(b, ["id_b", "sid"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
+    LSH dedup flow. Returns (id_a, id_b, jaccard) at ≥ threshold.
+
+    Only the candidates' documents are grouped into sid arrays (``sids``
+    semi-joined to the ids in ``cand``), so an incremental run never
+    groups the whole stored index; ``_verify_sid_lists`` does the rest.
+    Contract: ``sids`` holds distinct, non-NULL (id, sid) rows, as
+    ``token_ids``, ``token_ids_hashed`` and the stored index do."""
+    ids = cand.select(F.col("id_a").alias(id_col)).unionByName(
+        cand.select(F.col("id_b").alias(id_col))
     )
+    lists = (
+        sids.join(ids, id_col, "left_semi")
+        .groupBy(id_col)
+        .agg(_sid_list())
+    )
+    return _verify_sid_lists(cand, lists, id_col, threshold)
+
+
+def _sid_list():
+    """The aggregate giving each document its shingle ids as one array
+    (``__sids``), the form ``_verify_sid_lists`` reads."""
+    return F.collect_list("sid").alias("__sids")
+
+
+def _verify_sid_lists(
+    cand: DataFrame, lists: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """Exact Jaccard of candidate pairs on one row per document:
+    ``lists`` is (``id_col``, ``__sids``), each document's shingle ids as
+    an array. ``cand ⋈ lists(id_a) ⋈ lists(id_b)``, then
+    ``n_inter = size(array_intersect)`` and
+    ``n_inter / (size_a + size_b − n_inter)`` — the pair's two arrays
+    meet in one row instead of one row per shared shingle.
+
+    With distinct sids per document, ``array_intersect`` counts exactly
+    the shared sids and the sizes are the set sizes, so the value is the
+    exact set Jaccard. A pair with no shared shingle is never emitted,
+    even at threshold 0 (``n_inter > 0``), and a candidate id without a
+    list drops out."""
+    a = lists.select(F.col(id_col).alias("id_a"), F.col("__sids").alias("__a"))
+    b = lists.select(F.col(id_col).alias("id_b"), F.col("__sids").alias("__b"))
     return (
-        inter.join(
-            sizes.select(F.col(id_col).alias("id_a"),
-                         F.col("set_size").alias("size_a")),
-            "id_a",
+        cand.join(a, "id_a")
+        .join(b, "id_b")
+        .select(
+            "id_a", "id_b",
+            F.size(F.array_intersect("__a", "__b")).alias("n_inter"),
+            F.size("__a").alias("size_a"),
+            F.size("__b").alias("size_b"),
         )
-        .join(
-            sizes.select(F.col(id_col).alias("id_b"),
-                         F.col("set_size").alias("size_b")),
-            "id_b",
-        )
+        .filter(F.col("n_inter") > 0)
         .withColumn(
             "jaccard",
             F.col("n_inter")
@@ -502,15 +533,18 @@ def collapse_exact_sets(
     (one extra join over the doc×shingle relation + an eager count;
     raises ``ValueError`` on any mismatch).
 
-    INPUT CONTRACT: ``sids`` rows should be distinct per (id, sid) —
-    true for the ``token_ids`` / ``token_ids_hashed`` producers. With
-    duplicate rows the row-count term of the fingerprint counts
-    multiplicity, so two docs with the same SET but different
-    duplication patterns land in different groups (a missed merge,
-    never a wrong merge). The verify path is robust to duplicates
-    either way: it checks one-sided containment plus per-group
-    DISTINCT-sid cardinality, which together imply set equality
-    regardless of row multiplicity."""
+    INPUT CONTRACT: ``sids`` rows should be distinct, non-NULL per
+    (id, sid) — true for the ``token_ids`` / ``token_ids_hashed``
+    producers and the stored index. With duplicate rows the row-count
+    term of the fingerprint counts multiplicity, so two docs with the
+    same SET but different duplication patterns land in different
+    groups (a missed merge, never a wrong merge), and the Jaccard
+    verification, which groups each candidate doc's rows into one sid
+    array (``_verify_jaccard_pairs``), would count them in the array
+    sizes but once in the intersection. The verify path is robust to
+    duplicates either way: it checks one-sided containment plus
+    per-group DISTINCT-sid cardinality, which together imply set
+    equality regardless of row multiplicity."""
     fp = sids.groupBy(id_col).agg(*_fingerprint_aggs())
     membership = _membership_from_fingerprints(fp, id_col)
     reps = membership.filter(F.col(id_col) == F.col("__rep")).select(id_col)
@@ -677,34 +711,37 @@ def minhash_lsh_collapsed(
     True)`` returns).
 
     Pass shape: ONE aggregation over the doc×shingle relation computes
-    the minhash signatures AND the exact-set fingerprint together
-    (``_fingerprint_aggs``), so the collapse adds only a per-doc
-    groupBy + semi-join over the 1-row/doc signature frame — the same
-    two big-relation passes (signatures, verification) as the
-    uncollapsed pipeline."""
+    the minhash signatures, the exact-set fingerprint
+    (``_fingerprint_aggs``) AND each doc's shingle-id array
+    (``_sid_list``), checkpointed as one row per doc. Everything after
+    it — the collapse, the LSH bucket join and the exact-Jaccard
+    verification of the representatives' candidate pairs — reads that
+    per-doc frame, so the doc×shingle relation is read by this one pass
+    only (it is not cached here for that reason). ``doc_sids`` must hold
+    distinct, non-NULL (id, sid) rows, as ``token_ids`` gives them (see
+    ``collapse_exact_sets``)."""
     sids = (
         doc_sids
         if doc_sids is not None
-        else persist(
-            token_ids(df, id_col, text_col, n, tokens_col=tokens_col),
-            StorageLevel.MEMORY_AND_DISK_DESER,
-        )
+        else token_ids(df, id_col, text_col, n, tokens_col=tokens_col)
     )
     aggs = [
         F.min((F.col("sid") * a + b) % MINHASH_PRIME).alias(f"mh{i}")
         for i, (a, b) in enumerate(MINHASH_PARAMS[:num_hashes])
-    ] + _fingerprint_aggs()
+    ] + _fingerprint_aggs() + [_sid_list()]
     sigfp = checkpoint(sids.groupBy(id_col).agg(*aggs))
     membership = _membership_from_fingerprints(
         sigfp.select(id_col, "__n", "__s1", "__s2"), id_col
     )
     reps = membership.filter(F.col(id_col) == F.col("__rep")).select(id_col)
-    rep_sigs = sigfp.join(reps, id_col, "left_semi").select(
-        id_col, *[f"mh{i}" for i in range(num_hashes)]
+    rep_rows = sigfp.join(reps, id_col, "left_semi")
+    cand = lsh_candidate_pairs(
+        rep_rows.select(id_col, *[f"mh{i}" for i in range(num_hashes)]),
+        id_col, num_hashes, bands,
     )
-    cand = lsh_candidate_pairs(rep_sigs, id_col, num_hashes, bands)
-    rep_sids = sids.join(reps, id_col, "left_semi")
-    rep_pairs = _verify_jaccard_pairs(cand, rep_sids, id_col, threshold)
+    rep_pairs = _verify_sid_lists(
+        cand, rep_rows.select(id_col, "__sids"), id_col, threshold
+    )
     return rep_pairs, membership
 
 

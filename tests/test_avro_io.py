@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from photon_ml_spark.materialize import persist, scope
 from photon_ml_spark.sources import avro_io
 from photon_ml_spark.sources.datasets import lineitem_training_frame
 from photon_ml_spark.sources.featurize import build_feature_dictionary
@@ -89,9 +90,10 @@ def test_jvm_cross_check(spark, tmp_path):
     assert recs[1].get("uid") is None
 
 
+@scope()
 def test_spark_training_example_round_trip(spark, sf_dir, tmp_path):
     path = str(tmp_path / "training_avro")
-    frame = lineitem_training_frame(spark, sf_dir).limit(200).cache()
+    frame = persist(lineitem_training_frame(spark, sf_dir).limit(200))
     avro_io.write_training_examples(frame, path)
     back = avro_io.read_training_examples(spark, path)
     a = {
@@ -110,13 +112,14 @@ def test_spark_training_example_round_trip(spark, sf_dir, tmp_path):
     assert a == b
 
 
+@scope()
 def test_fixed_effect_avro_round_trip(spark, sf_dir, tmp_path):
     from photon_ml_spark.datamodel import FeatureShardConfig
     from photon_ml_spark.ml import glm
     from photon_ml_spark.sources import featurize
 
-    frame = lineitem_training_frame(spark, sf_dir).cache()
-    dictionary = build_feature_dictionary(frame, ["features"]).cache()
+    frame = persist(lineitem_training_frame(spark, sf_dir))
+    dictionary = persist(build_feature_dictionary(frame, ["features"]))
     shard = FeatureShardConfig("features", ["features"])
     assembled = featurize.assemble_shard(frame, dictionary, shard, strategy="map")
     model = glm.fit_fixed_effect(assembled, dim=5, family="binomial")
@@ -139,11 +142,12 @@ def test_fixed_effect_avro_round_trip(spark, sf_dir, tmp_path):
         )
 
 
+@scope()
 def test_random_effect_avro_round_trip(spark, sf_dir, tmp_path):
     from photon_ml_spark.ml.random_effects import fit_random_effects
 
-    frame = lineitem_training_frame(spark, sf_dir).cache()
-    dictionary = build_feature_dictionary(frame, ["features"]).cache()
+    frame = persist(lineitem_training_frame(spark, sf_dir))
+    dictionary = persist(build_feature_dictionary(frame, ["features"]))
     li = frame.select(
         "uid", "response", "offset", "weight",
         F.col("suppkey").alias("entity"),
@@ -155,9 +159,9 @@ def test_random_effect_avro_round_trip(spark, sf_dir, tmp_path):
             F.element_at(F.col("features"), 2)["value"].cast("double"),
         ).alias("features_values"),
     )
-    models = fit_random_effects(
+    models = persist(fit_random_effects(
         li, entity_col="entity", dim=2, family="gaussian", reg_param=1.0
-    ).cache()
+    ))
 
     path = str(tmp_path / "re_avro")
     avro_io.write_avro(

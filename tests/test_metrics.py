@@ -106,6 +106,24 @@ def test_undefined_areas_are_none(spark):
         )
 
 
+def test_dataframe_metrics_are_null_on_one_class(spark, monkeypatch):
+    """Under ANSI a plain divide by a zero class total raises
+    DIVIDE_BY_ZERO; the DataFrame metrics return NULL instead, as
+    ``roc_areas`` does below and above its bound."""
+    one_class = spark.createDataFrame(
+        [(0.3, 1.0), (0.7, 1.0)], "score double, label double"
+    )
+    with scope():
+        assert metrics.auroc(one_class).first()[0] is None
+        assert metrics.aupr(one_class).first()[0] == 1.0
+        assert metrics.peak_f1(one_class).first()[0] == 1.0
+        no_positives = one_class.withColumn("label", one_class.label * 0)
+        assert metrics.auroc(no_positives).first()[0] is None
+        assert metrics.aupr(no_positives).first()[0] is None
+    monkeypatch.setattr(metrics, "LOCAL_ROC_MAX_GROUPS", 1)
+    assert metrics.roc_areas(one_class) == {"auroc": None, "aupr": 1.0}
+
+
 def test_perfect_ranking(spark):
     df = spark.createDataFrame(
         [(0.9, 1.0), (0.8, 1.0), (0.2, 0.0), (0.1, 0.0)],

@@ -6,6 +6,7 @@ import inspect
 import pytest
 from pyspark.sql import functions as F
 
+from photon_ml_spark.materialize import persist, scope
 from photon_ml_spark.operators import dedup, multimodal, similarity
 
 SF = "/root/testdata/sf0.01"
@@ -1267,6 +1268,135 @@ def test_collapse_hot_bucket_stays_linear(spark):
     assert len(boiler) == 300 and sum(1 for r in boiler if r[2]) == 1
     sids.unpersist()
     rep_pairs.unpersist()
+
+
+def _row_join_jaccard(cand, sids, threshold):
+    """Reference verifier: one (id_a, id_b, sid) row per shared shingle,
+    counted per pair and divided by the union of the two set sizes."""
+    sizes = sids.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    a = sids.select(F.col("doc_id").alias("id_a"), "sid")
+    b = sids.select(F.col("doc_id").alias("id_b"), "sid")
+    return (
+        cand.join(a, "id_a").join(b, ["id_b", "sid"])
+        .groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("n_inter"))
+        .join(sizes.select(F.col("doc_id").alias("id_a"),
+                           F.col("n").alias("size_a")), "id_a")
+        .join(sizes.select(F.col("doc_id").alias("id_b"),
+                           F.col("n").alias("size_b")), "id_b")
+        .withColumn(
+            "jaccard",
+            F.col("n_inter")
+            / (F.col("size_a") + F.col("size_b") - F.col("n_inter")).cast(
+                "double"
+            ),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+def _pair_rows(df):
+    return sorted((r.id_a, r.id_b, r.jaccard) for r in df.collect())
+
+
+@pytest.mark.parametrize("threshold", [0.0, 0.5, 0.8])
+@scope()
+def test_sid_list_verifier_matches_row_join(docs, spark, threshold):
+    """The per-document sid-array verifier returns exactly the rows of a
+    (id, sid) row join: identical sets, disjoint sets (never emitted,
+    even at threshold 0), a candidate id absent from ``sids`` and the
+    large hashed sids of the corpus, on its LSH candidates."""
+    from photon_ml_spark.operators.dedup import (
+        _verify_jaccard_pairs,
+        lsh_candidate_pairs,
+        minhash_signatures,
+        token_ids_hashed,
+    )
+
+    sets = {1: [1, 2, 3, 4], 2: [4, 3, 2, 1], 3: [1, 2, 3, 9], 4: [50, 51],
+            5: [60], 6: [1, 2, 3, 4, 5, 6, 7, 8, 9, 10]}
+    hand = spark.createDataFrame(
+        [(d, s) for d, ss in sets.items() for s in ss], "doc_id long, sid long"
+    )
+    ids = list(sets) + [99]  # 99 has no shingle rows
+    hand_cand = spark.createDataFrame(
+        [(a, b) for a in ids for b in ids if a < b], "id_a long, id_b long"
+    )
+    hashed = persist(token_ids_hashed(docs, n=2))
+    corpus_cand = lsh_candidate_pairs(
+        minhash_signatures(hashed, "doc_id", 16), "doc_id", 16, 4
+    ).unionByName(
+        spark.createDataFrame([(0, 10**9)], "id_a long, id_b long")
+    )
+    for cand, sids in ((hand_cand, hand), (corpus_cand, hashed)):
+        got = _pair_rows(_verify_jaccard_pairs(cand, sids, "doc_id", threshold))
+        want = _pair_rows(_row_join_jaccard(cand, sids, threshold))
+        assert got == want
+        assert got, "each case should verify some pairs"
+
+
+@scope()
+def test_verifier_joins_no_sid_key(docs, spark):
+    """Verification meets a candidate pair's two documents on their ids
+    only: no join of the generic or the collapsed near-dup plan is keyed
+    on a shingle id."""
+    import re
+
+    from photon_ml_spark.operators.dedup import (
+        _verify_jaccard_pairs,
+        lsh_candidate_pairs,
+        minhash_lsh_collapsed,
+        minhash_signatures,
+        token_ids,
+    )
+
+    sids = token_ids(docs, n=2)
+    cand = lsh_candidate_pairs(
+        minhash_signatures(sids, "doc_id", 16), "doc_id", 16, 4
+    )
+    generic = _verify_jaccard_pairs(cand, sids, "doc_id", 0.5)
+    collapsed, _ = minhash_lsh_collapsed(docs, threshold=0.5, n=2)
+    for plan in (generic, collapsed):
+        tree = plan._jdf.queryExecution().optimizedPlan().treeString()
+        joins = [ln for ln in tree.splitlines() if "Join " in ln]
+        assert joins
+        assert not [ln for ln in joins if re.search(r"\bsid#", ln)]
+
+
+@scope()
+def test_incremental_neardup_groups_only_candidate_ids(docs, spark, tmp_path):
+    """The increment groups the sid rows of its candidates' documents
+    only: the aggregate that builds the sid arrays reads the stored
+    index through a semi-join on the candidate ids, never whole."""
+    from photon_ml_spark.operators.dedup import (
+        incremental_neardup,
+        save_minhash_index,
+    )
+
+    idx = str(tmp_path / "idx")
+    save_minhash_index(docs.filter("doc_id % 3 != 0"), idx, n=2)
+    pairs = incremental_neardup(
+        docs.filter("doc_id % 3 = 0"), idx, threshold=0.5, n=2
+    )
+    tree = pairs._jdf.queryExecution().optimizedPlan().treeString()
+    lines = tree.splitlines()
+
+    def depth(ln):
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    def subtree(top):
+        for ln in lines[top + 1:]:
+            if depth(ln) <= depth(lines[top]):
+                break
+            yield ln
+
+    # one aggregate per side of the pair (id_a, id_b)
+    aggs = [i for i, ln in enumerate(lines)
+            if "Aggregate" in ln and "collect_list(sid" in ln]
+    assert aggs
+    for top in aggs:
+        assert any("Join LeftSemi" in ln for ln in subtree(top))
+    assert pairs.count() > 0
 
 
 def test_incremental_collapse_matches_uncollapsed(spark, tmp_path):
