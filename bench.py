@@ -121,12 +121,7 @@ def run_flagship(spark, sf_dir: str) -> int:
     )
     n = assembled.count()
     release(training)
-    # diagnostics=False: the flagship reads only coefficients+intercept;
-    # the GLR summary statistics are ~4 extra aggregation jobs (guide
-    # §1.2 — don't compute what you throw away)
-    model = glm.fit_fixed_effect(
-        assembled, dim=5, family="binomial", diagnostics=False
-    )
+    model = glm.fit_fixed_effect(assembled, dim=5, family="binomial")
     scored = scoring.score_literal(assembled, model)
     auc = metrics.roc_areas(
         scored, score="score", label="response", names=("auroc",)

@@ -164,15 +164,12 @@ def _fit_coordinate(
             elastic_net_param=cfg.elastic_net_param, solver=cfg.solver,
             lower_bounds=cfg.lower_bounds, upper_bounds=cfg.upper_bounds,
             prior_mean=cfg.prior_mean, prior_precision=cfg.prior_precision,
-            # the loop refits this coordinate every iteration and never
-            # reads the GLR summary diagnostics — skip their ~4 extra
-            # aggregation jobs per update (guide §1.2)
-            diagnostics=False,
             # M7: the previous update's model (or pretrained, on the
             # first update) is the optimizer start point — the
             # reference passes the existing model into every
             # optimizationProblem.run (CoordinateDescent / ModelTraining.
-            # scala:178-224). Custom-solver paths only; GLR ignores it.
+            # scala:178-224). Custom-solver paths only; the IRLS routes
+            # ignore it.
             x0=prior if isinstance(prior, glm_mod.FixedEffectGLM) else None,
         )
     if cfg.active_cap is not None:

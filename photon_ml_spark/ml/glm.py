@@ -5,10 +5,24 @@ treeAggregate gradient rounds (photon-api/.../optimization/
 DistributedOptimizationProblem.scala:112-157, photon-lib/.../
 optimization/Optimizer.scala:162-244). Spark-first, the same
 capability — weighted, offset-bearing GLM with L2 — is
-``GeneralizedLinearRegression`` (IRLS, internally treeAggregate-based),
-so the solve stays entirely JVM-side. The optimizer menu (LBFGS vs
-TRON etc.) is an implementation detail, not a capability; families and
-offset/weight semantics are the contract.
+``GeneralizedLinearRegression`` (IRLS over WeightedLeastSquares
+treeAggregates). The optimizer menu (LBFGS vs TRON etc.) is an
+implementation detail, not a capability; families and offset/weight
+semantics are the contract.
+
+``fit_fixed_effect`` has three routes:
+
+- **local IRLS** — a pure-L2 binomial/gaussian/poisson fit whose
+  design has at most ``LOCAL_FIT_MAX_CELLS`` rows × (dim + 1) cells is
+  fetched with one bounded Arrow collect and solved on the driver by
+  spark.ml GLR's own IRLS arithmetic in numpy (``_irls``): the model GLR
+  computes, without the densified cache and one treeAggregate job per
+  IRLS step;
+- **GLR** — the same fits above that bound (or where the local
+  Cholesky fails) run ``GeneralizedLinearRegression`` JVM-side;
+- **custom solvers** — L1/elastic net, priors, box constraints, the
+  smoothed hinge, TRON and fits wider than ``GLR_MAX_FEATURES`` run the
+  distributed solvers of ml/distributed_solver.py.
 """
 
 from __future__ import annotations
@@ -90,6 +104,10 @@ class FixedEffectGLM:
 #: count (IRLS materializes dim x dim normal equations)
 GLR_MAX_FEATURES = 4096
 
+#: rows × (dim + 1) cells of the largest design ``fit_fixed_effect``
+#: collects and solves on the driver: 32 MB of dense doubles
+LOCAL_FIT_MAX_CELLS = 1 << 22
+
 
 def fit_fixed_effect(
     df: DataFrame,
@@ -110,16 +128,22 @@ def fit_fixed_effect(
     tol: float = 1e-6,
     solver: str = "auto",
     x0=None,
-    diagnostics: bool = True,
 ) -> FixedEffectGLM:
-    """Fit one distributed GLM (M1) with offset (M6), weight, L2 (M4).
+    """Fit one fixed-effect GLM (M1) with offset (M6), weight, L2 (M4).
 
-    Pure-L2 fits on a GLR family run on spark.ml GLR (IRLS, offset-
-    capable, JVM-side). Anything GLR can't express — L1/elastic net
-    (``elastic_net_param`` > 0, OWLQN semantics: L1 never touches the
-    intercept), a Gaussian prior on the fixed coordinate
-    (``prior_mean``/``prior_precision``, length dim+1, M9), box
-    constraints (``lower_bounds``/``upper_bounds``, LBFGSB), or the
+    Pure-L2 fits on a GLR family (binomial, gaussian, poisson) compute
+    spark.ml GLR's IRLS model. Up to ``LOCAL_FIT_MAX_CELLS`` cells
+    (rows × (dim + 1)) one bounded Arrow collect fetches the design and
+    the IRLS runs on the driver (``meta["route"] == "local_irls"``);
+    above the bound, or where the local Cholesky finds collinear
+    columns, GLR runs JVM-side (``"glr"``). Inputs GLR rejects (a NULL,
+    NaN or infinite label or offset, a negative weight, a binomial
+    label whose initial mean leaves (0, 1), a negative poisson label)
+    raise ``ValueError`` on the local route. Anything GLR can't express
+    — L1/elastic net (``elastic_net_param`` > 0, OWLQN semantics: L1
+    never touches the intercept), a Gaussian prior on the fixed
+    coordinate (``prior_mean``/``prior_precision``, length dim+1, M9),
+    box constraints (``lower_bounds``/``upper_bounds``, LBFGSB), or the
     smoothed-hinge family — routes to the distributed custom solver
     (ml/distributed_solver.py), which handles offsets in every mode.
 
@@ -147,8 +171,8 @@ def fit_fixed_effect(
     # run(trainingData, previousModel)): accept a previous model (or a
     # raw beta vector, intercept LAST) as the optimizer start point.
     # Convergence accelerator only — the solution is unchanged at
-    # convergence. The GLR/IRLS path below has no initialization hook
-    # and ignores it (IRLS converges in few iterations regardless).
+    # convergence. The IRLS routes below start from GLR's own initial
+    # fit and ignore it (IRLS converges in few iterations regardless).
     if isinstance(x0, FixedEffectGLM):
         prev = np.asarray(x0.coefficients, dtype=np.float64)
         if prev.shape != (dim,):
@@ -237,6 +261,21 @@ def fit_fixed_effect(
             },
         )
 
+    local = _fit_local(
+        df, dim, family, indices_col, values_col, label_col, weight_col,
+        offset_col, reg_param, max_iter, tol,
+    )
+    if local is not None:
+        coefficients, intercept, iterations = local
+        return FixedEffectGLM(
+            family=family,
+            coefficients=coefficients,
+            intercept=intercept,
+            dim=dim,
+            reg_param=reg_param,
+            meta={"iterations": iterations, "route": "local_irls"},
+        )
+
     # project to the fit's columns and cache: IRLS re-reads the input
     # every iteration, and re-running the densify transform (and
     # everything upstream) per iteration dominates fit time otherwise
@@ -263,24 +302,6 @@ def fit_fixed_effect(
     if offset_col:
         glr.setOffsetCol(offset_col)
     model = glr.fit(vec_df)
-    # training diagnostics (the legacy driver's model log, A12 inputs:
-    # Evaluation.scala / Driver.computeAndLogModelMetrics) — extracted
-    # BEFORE release: each first access runs a predictions pass over
-    # vec_df, which must hit the cache, not recompute the lineage
-    s = model.summary
-    meta = {"iterations": s.numIterations}  # stored by training — no job
-    # ``diagnostics=False`` (r13, guide §1.2: don't compute what you
-    # throw away): each summary statistic below is a SEPARATE
-    # aggregation job over the predictions frame — ~4 extra passes per
-    # fit. Iterative callers (the CD loop fits one coordinate per
-    # update) and the bench flagship never read them; the model-log
-    # paths keep the default.
-    if diagnostics:
-        for attr in ("deviance", "nullDeviance", "aic", "dispersion"):
-            try:
-                meta[attr] = float(getattr(s, attr))
-            except Exception:
-                pass
     release(vec_df)
     return FixedEffectGLM(
         family=family,
@@ -288,5 +309,202 @@ def fit_fixed_effect(
         intercept=float(model.intercept),
         dim=dim,
         reg_param=reg_param,
-        meta=meta,
+        # stored by training: reading it runs no job
+        meta={"iterations": model.summary.numIterations, "route": "glr"},
     )
+
+
+#: GLR's clamp of the fitted mean (Binomial/Poisson ``project``)
+_EPS = 1e-16
+
+#: a Cholesky pivot below this share of its diagonal entry marks
+#: collinear columns; the fit then runs GLR, which retries such a
+#: system with its quasi-Newton solver
+_PIVOT_RTOL = 1e-10
+
+
+def _fit_local(
+    df, dim, family, indices_col, values_col, label_col, weight_col,
+    offset_col, reg_param, max_iter, tol,
+):
+    """(coefficients, intercept, iterations) of GLR's IRLS on the
+    driver, or None: the design is above ``LOCAL_FIT_MAX_CELLS``, or
+    a WLS solve has no usable Cholesky solution."""
+    cap = LOCAL_FIT_MAX_CELLS // (dim + 1)
+    t = df.select(
+        F.col(indices_col).alias("i"),
+        F.col(values_col).alias("v"),
+        F.col(label_col).cast("double").alias("y"),
+        (F.col(weight_col).cast("double") if weight_col else F.lit(1.0)).alias("w"),
+        (F.col(offset_col).cast("double") if offset_col else F.lit(0.0)).alias("o"),
+    ).limit(cap + 1).toArrow()
+    if t.num_rows > cap:
+        return None
+    X, y, w, o = _design(t, dim)
+    return _irls(X, y, w, o, _GLR_FAMILY[family], reg_param, max_iter, tol)
+
+
+def _design(t, dim):
+    """(X, y, w, o) numpy arrays of the collected rows, checked as GLR
+    checks its input; X is ``densify``'s matrix (NULL arrays and NULL
+    values read 0, indices outside [0, dim) are dropped)."""
+    import pyarrow.compute as pc
+
+    def lists(name):
+        c = t.column(name).combine_chunks()
+        lengths = pc.fill_null(pc.list_value_length(c), 0).to_numpy()
+        return lengths, pc.list_flatten(c)
+
+    n_i, idx = lists("i")
+    n_v, val = lists("v")
+    if not np.array_equal(n_i, n_v) or idx.null_count:
+        raise ValueError(
+            "feature indices and values must be arrays of equal length "
+            "without NULL indices"
+        )
+    rows = np.repeat(np.arange(t.num_rows), n_i)
+    idx = idx.to_numpy().astype(np.int64)
+    val = pc.fill_null(val, 0.0).to_numpy().astype(np.float64)
+    keep = (idx >= 0) & (idx < dim)
+    flat = rows[keep] * dim + idx[keep]
+    val = val[keep]
+    if np.unique(flat).size < flat.size:
+        raise ValueError("a feature index repeats within a row")
+    if not np.isfinite(val).all():
+        raise ValueError("feature values must not be NaN or infinite")
+    X = np.zeros((t.num_rows, dim))
+    X.ravel()[flat] = val
+
+    y, w, o = (
+        t.column(c).to_numpy().astype(np.float64) for c in ("y", "w", "o")
+    )
+    if not np.isfinite(y).all():
+        raise ValueError("labels must not be NULL, NaN or infinite")
+    if not (np.isfinite(w) & (w >= 0)).all():
+        raise ValueError("weights must not be NULL, NaN, negative or infinite")
+    if not np.isfinite(o).all():
+        raise ValueError("offsets must not be NULL, NaN or infinite")
+    if not w.sum() > 0:
+        raise ValueError("the sum of weights must be positive")
+    return X, y, w, o
+
+
+def _binomial_mu0(y, w):
+    mu = (w * y + 0.5) / (w + 1.0)
+    if not ((mu > 0.0) & (mu < 1.0)).all():
+        raise ValueError(
+            "binomial labels must give an initial mean (w·y + 0.5)/(w + 1) "
+            "in (0, 1)"
+        )
+    return mu
+
+
+def _poisson_mu0(y, w):
+    if (y < 0).any():
+        raise ValueError("poisson labels must be non-negative")
+    return np.maximum(y, 0.1)
+
+
+#: GLR's Family/Link pairs: initial mean, link, fitted mean (unlink,
+#: then ``project``), link derivative, variance
+_IRLS_FAMILY = {
+    "binomial": (
+        _binomial_mu0,
+        lambda mu: np.log(mu / (1.0 - mu)),
+        lambda eta: np.clip(1.0 / (1.0 + np.exp(-eta)), _EPS, 1.0 - _EPS),
+        lambda mu: 1.0 / (mu * (1.0 - mu)),
+        lambda mu: mu * (1.0 - mu),
+    ),
+    "poisson": (
+        _poisson_mu0,
+        np.log,
+        lambda eta: np.clip(np.exp(eta), _EPS, np.finfo(np.float64).max),
+        lambda mu: 1.0 / mu,
+        lambda mu: mu,
+    ),
+}
+
+
+def _irls(X, y, w, o, family, reg_param, max_iter, tol):
+    """spark.ml GLR's fit (GeneralizedLinearRegression.train,
+    IterativelyReweightedLeastSquares.fit): (β, β0, iterations), or
+    None where a WLS solve fails.
+
+    Gaussian (identity link) is one standardized WLS on y − offset,
+    reported as 1 iteration. Otherwise the initial model is a
+    standardized WLS on link(μ0) − offset; each step solves an
+    unstandardized WLS on the working label and weight at the previous
+    model and stops once no coefficient or the intercept moved by tol
+    or more, or at ``max_iter``."""
+    if family == "gaussian":
+        fit = _wls(X, y - o, w, reg_param, standardize=True)
+        return None if fit is None else (*fit, 1)
+    mu0, link, fitted, deriv, variance = _IRLS_FAMILY[family]
+    fit = _wls(X, link(mu0(y, w)) - o, w, reg_param, standardize=True)
+    iterations = 0
+    with np.errstate(over="ignore"):
+        while fit is not None and iterations < max_iter:
+            beta, b0 = fit
+            eta = X @ beta + b0 + o
+            mu = fitted(eta)
+            d = deriv(mu)
+            fit = _wls(
+                X, eta - o + (y - mu) * d, w / (d * d) / variance(mu),
+                reg_param, standardize=False,
+            )
+            iterations += 1
+            if fit is None:
+                break
+            step = beta - fit[0]
+            # GLR reduces the coefficient change with max(|a|, |b|),
+            # which leaves a single coefficient's change signed
+            d_beta = step[0] if step.size == 1 else np.abs(step).max(initial=0.0)
+            if max(d_beta, abs(b0 - fit[1])) < tol:
+                break
+    return None if fit is None else (*fit, iterations)
+
+
+def _wls(X, b, w, reg_param, standardize):
+    """spark.ml ``WeightedLeastSquares`` with an intercept on its
+    Cholesky route: (β, β0), or None where that route gives no usable
+    solution (a feature variance that rounds below 0, a failed or
+    near-singular factorization).
+
+    The normal equations are solved on weighted moments with features
+    and label scaled by their standard deviations. The ridge on feature
+    j is λ/σ_b when ``standardize`` (GLR's initial fit) and λ/σ_j² when
+    not (its IRLS steps). A column with σ_j = 0 has coefficient 0 and
+    no part in the solve, as in GLR; a constant label gives β = 0 and
+    β0 = its mean."""
+    p = w / w.sum()
+    pX = X * p[:, None]
+    a_bar = pX.sum(axis=0)
+    b_bar = p @ b
+    b_std = np.sqrt(max(p @ (b * b) - b_bar * b_bar, 0.0))
+    beta = np.zeros(X.shape[1])
+    if b_std == 0.0:
+        return beta, float(b_bar)
+    aa = pX.T @ X
+    with np.errstate(invalid="ignore"):
+        a_std = np.sqrt(np.diag(aa) - a_bar * a_bar)
+    if np.isnan(a_std).any():
+        return None
+    live = a_std != 0.0
+    s = a_std[live]
+    k = s.size
+    lam = reg_param / b_std
+    A = np.empty((k + 1, k + 1))
+    A[:k, :k] = aa[np.ix_(live, live)] / np.outer(s, s)
+    A[:k, :k][np.diag_indices(k)] += lam if standardize else lam / (s * s) * b_std
+    A[:k, k] = A[k, :k] = a_bar[live] / s
+    A[k, k] = 1.0
+    rhs = np.append((pX[:, live].T @ b) / (s * b_std), b_bar / b_std)
+    try:
+        L = np.linalg.cholesky(A)
+    except np.linalg.LinAlgError:
+        return None
+    if (np.diag(L) ** 2 <= _PIVOT_RTOL * np.diag(A)).any():
+        return None
+    x = np.linalg.solve(L.T, np.linalg.solve(L, rhs))
+    beta[live] = x[:k] * b_std / s
+    return beta, float(x[k] * b_std)

@@ -1052,8 +1052,10 @@ FROM lineitem
 """,
 )
 def m1_glr_fixed_effect(spark, sf_dir):
-    """M1/A1/M6 MAIN path — spark.ml GLR IRLS (binomial, offset +
-    weight, JVM-side whole-stage codegen), the solver the flagship uses
+    """M1/A1/M6 MAIN path — spark.ml GLR's IRLS (binomial, offset +
+    weight), the solver the flagship uses: at sf0.01 the design fits
+    ``LOCAL_FIT_MAX_CELLS``, so it runs on the driver over one bounded
+    Arrow collect; above the bound GLR runs it JVM-side
     (DistributedOptimizationProblem.scala:112-157,
     GeneralizedLinearModel training loop). Verified by the m13/m2b
     FIXED-POINT pattern: the weighted logistic gradient Σ
@@ -1075,9 +1077,6 @@ def m1_glr_fixed_effect(spark, sf_dir):
     m = fit_fixed_effect(
         li, dim=1, family="binomial", weight_col="weight", offset_col="offset",
         reg_param=0.0, tol=1e-10, max_iter=100,
-        # r13: the gate output reads only coefficients/intercept (+ the
-        # free iterations count) — skip the ~4 summary-statistic jobs
-        diagnostics=False,
     )
     assert m.meta.get("iterations", 0) > 0  # really went through IRLS
     x = F.element_at("features_values", 1)

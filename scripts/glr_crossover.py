@@ -1,9 +1,14 @@
 """GLR↔distributed-LBFGS crossover measurement (VERDICT r11 Next #8).
 
-``fit_fixed_effect`` auto-routes: spark.ml GLR (IRLS — JVM-side
-normal equations, O(dim²) per iteration, hard-capped at 4096 features
-by WeightedLeastSquares) up to ``GLR_MAX_FEATURES``; the distributed
-LBFGS solver (O(dim) treeAggregate gradient passes) past it. This
+``fit_fixed_effect`` auto-routes a pure-L2 fit three ways: GLR's IRLS
+in numpy on the driver while the design has at most
+``LOCAL_FIT_MAX_CELLS`` rows × (dim + 1) cells; spark.ml GLR (IRLS —
+JVM-side normal equations, O(dim²) per iteration, hard-capped at 4096
+features by WeightedLeastSquares) above that, up to
+``GLR_MAX_FEATURES``; the distributed LBFGS solver (O(dim)
+treeAggregate gradient passes) past it. At the default ROWS every
+measured dim is above the local bound, so ``glr`` times spark.ml GLR;
+each fit records its ``route``. This
 script measures fit wall time vs dim for BOTH engines on the same
 synthetic frame so users sizing wide shards know what each engine
 costs where — the number behind the routing constant.
@@ -100,7 +105,7 @@ def main() -> None:
                 cell[label] = {
                     "sec": round(time.perf_counter() - t0, 2),
                     "iters": m.meta.get("iterations"),
-                    "optimizer": m.meta.get("optimizer", "irls"),
+                    "route": m.meta.get("route", m.meta.get("optimizer")),
                 }
             finally:
                 glm.GLR_MAX_FEATURES = glr_cap

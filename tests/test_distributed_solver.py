@@ -267,7 +267,7 @@ def test_x0_warm_start_accelerates_and_matches(uni):
 
 def test_glr_lbfgs_routing_boundary(spark, monkeypatch):
     """The wide-fit auto-route (VERDICT r11 Next #8): fit_fixed_effect
-    runs spark.ml GLR (IRLS) up to exactly GLR_MAX_FEATURES and the
+    runs IRLS up to exactly GLR_MAX_FEATURES and the
     distributed LBFGS solver one feature past it — pinned at a
     monkeypatched boundary so the test stays cheap — and the two
     engines agree on the same well-conditioned problem."""
@@ -289,9 +289,8 @@ def test_glr_lbfgs_routing_boundary(spark, monkeypatch):
         df, dim=3, family="gaussian", reg_param=0.0,
         weight_col=None, offset_col=None,
     )
-    # GLR path: summary-derived meta, no "optimizer" tag
-    assert at_boundary.meta.get("optimizer") is None
-    assert "deviance" in at_boundary.meta
+    # 400 rows × 4 cells are under the local bound: driver-side IRLS
+    assert at_boundary.meta["route"] == "local_irls"
 
     monkeypatch.setattr(glm, "GLR_MAX_FEATURES", 2)
     past_boundary = glm.fit_fixed_effect(
@@ -305,3 +304,119 @@ def test_glr_lbfgs_routing_boundary(spark, monkeypatch):
     assert past_boundary.intercept == pytest.approx(
         at_boundary.intercept, abs=1e-4
     )
+
+
+def _irls_frame(spark, family, cols=(0, 1, 2), n=2000, seed=5):
+    """Weighted, offset-bearing frame on scaled, non-centred features;
+    column j of the design is feature ``cols[j]``."""
+    import pandas as pd
+
+    rng = np.random.default_rng(seed)
+    X = rng.normal(size=(n, 3)) * [1.0, 3.0, 10.0] + [0.5, -2.0, 30.0]
+    offset = 0.3 * rng.normal(size=n)
+    eta = X @ [0.4, -0.2, 0.05] - 1.2 + offset
+    y = {
+        "binomial": (rng.uniform(size=n) < 1 / (1 + np.exp(-eta))).astype(float),
+        "poisson": rng.poisson(np.exp(0.3 * eta)).astype(float),
+        "gaussian": eta + rng.normal(size=n),
+    }[family]
+    return spark.createDataFrame(pd.DataFrame({
+        "features_indices": [list(range(len(cols)))] * n,
+        "features_values": list(X[:, list(cols)]),
+        "response": y,
+        "weight": rng.uniform(0.5, 2.0, size=n),
+        "offset": offset,
+    }))
+
+
+def _glr_fit(monkeypatch, df, **kw):
+    """The same fit down the JVM GLR route (local bound forced to 0)."""
+    with monkeypatch.context() as m:
+        m.setattr(glm, "LOCAL_FIT_MAX_CELLS", 0)
+        fit = glm.fit_fixed_effect(df, **kw)
+    assert fit.meta["route"] == "glr"
+    return fit
+
+
+@pytest.mark.parametrize("family", ["binomial", "gaussian", "poisson"])
+@pytest.mark.parametrize("reg_param", [0.0, 0.05])
+def test_local_irls_matches_glr(spark, monkeypatch, family, reg_param):
+    """The driver-side IRLS computes spark.ml GLR's model: the same
+    coefficients to 1e-9 after the same number of iterations."""
+    df = _irls_frame(spark, family)
+    kw = dict(dim=3, family=family, reg_param=reg_param, tol=1e-8)
+    local = glm.fit_fixed_effect(df, **kw)
+    ref = _glr_fit(monkeypatch, df, **kw)
+    assert local.meta["route"] == "local_irls"
+    assert local.meta["iterations"] == ref.meta["iterations"]
+    assert np.allclose(local.coefficients, ref.coefficients, rtol=0, atol=1e-9)
+    assert local.intercept == pytest.approx(ref.intercept, abs=1e-9)
+
+
+def test_local_irls_never_set_column_is_zero(spark, monkeypatch):
+    """A column no row sets (the intercept slot of the CLI's feature
+    dictionaries) gets exactly 0 and leaves the solve: the other
+    coefficients are GLR's fit without that column."""
+    df = _irls_frame(spark, "binomial", cols=(0, 1))
+    local = glm.fit_fixed_effect(df, dim=3, family="binomial", reg_param=0.05)
+    ref = _glr_fit(monkeypatch, df, dim=2, family="binomial", reg_param=0.05)
+    assert local.meta["route"] == "local_irls"
+    assert local.coefficients[2] == 0.0
+    assert np.allclose(local.coefficients[:2], ref.coefficients, rtol=0, atol=1e-9)
+    assert local.intercept == pytest.approx(ref.intercept, abs=1e-9)
+
+
+def test_local_irls_collinear_columns_run_glr(spark):
+    """Collinear columns fail the local Cholesky; GLR, which retries
+    such a system with its quasi-Newton solver, fits instead."""
+    df = _irls_frame(spark, "gaussian", cols=(0, 1, 1))
+    fit = glm.fit_fixed_effect(df, dim=3, family="gaussian")
+    assert fit.meta["route"] == "glr"
+
+
+def test_local_irls_bound(spark, monkeypatch):
+    """Up to LOCAL_FIT_MAX_CELLS cells (rows × (dim + 1)) the fit runs
+    on the driver; one row more and GLR runs."""
+    df = _irls_frame(spark, "binomial", n=200)
+    monkeypatch.setattr(glm, "LOCAL_FIT_MAX_CELLS", 200 * 4)
+    at = glm.fit_fixed_effect(df, dim=3, family="binomial")
+    monkeypatch.setattr(glm, "LOCAL_FIT_MAX_CELLS", 200 * 4 - 1)
+    past = glm.fit_fixed_effect(df, dim=3, family="binomial")
+    assert (at.meta["route"], past.meta["route"]) == ("local_irls", "glr")
+    assert np.allclose(at.coefficients, past.coefficients, rtol=0, atol=1e-9)
+
+
+@pytest.mark.parametrize(
+    "family,column,value",
+    [
+        ("binomial", "response", 2.0),  # initial mean 1.25
+        ("binomial", "weight", -1.0),
+        ("poisson", "response", -1.0),
+        ("gaussian", "response", None),
+    ],
+    ids=["binomial_mean", "negative_weight", "negative_poisson", "null_label"],
+)
+def test_local_irls_rejects_what_glr_rejects(
+    spark, monkeypatch, family, column, value
+):
+    df = _irls_frame(spark, family, n=50)
+    bad = df.withColumn(
+        column,
+        F.when(F.monotonically_increasing_id() == 0, F.lit(value).cast("double"))
+        .otherwise(F.col(column)),
+    )
+    with pytest.raises(ValueError):
+        glm.fit_fixed_effect(bad, dim=3, family=family)
+    with pytest.raises(Exception):
+        _glr_fit(monkeypatch, bad, dim=3, family=family)
+
+
+def test_local_irls_runs_at_most_two_jobs(spark, spark_jobs):
+    df = _irls_frame(spark, "binomial").cache()
+    df.count()
+    fits = []
+    assert spark_jobs(
+        lambda: fits.append(glm.fit_fixed_effect(df, dim=3, family="binomial"))
+    ) <= 2
+    assert fits[0].meta["route"] == "local_irls"
+    df.unpersist()
