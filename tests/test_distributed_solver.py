@@ -366,11 +366,18 @@ def test_local_irls_never_set_column_is_zero(spark, monkeypatch):
     assert local.intercept == pytest.approx(ref.intercept, abs=1e-9)
 
 
-def test_local_irls_collinear_columns_run_glr(spark):
-    """Collinear columns fail the local Cholesky; GLR, which retries
-    such a system with its quasi-Newton solver, fits instead."""
-    df = _irls_frame(spark, "gaussian", cols=(0, 1, 1))
-    fit = glm.fit_fixed_effect(df, dim=3, family="gaussian")
+@pytest.mark.parametrize("jitter", [0.0, 1e-6], ids=["exact", "near"])
+def test_local_irls_collinear_columns_run_glr(spark, jitter):
+    """A copied column fails the local Cholesky; a copy off by 1e-6
+    noise factors with a pivot below ``_PIVOT_RTOL``, where the local
+    and GLR solutions part by O(1). Either way GLR, which retries a
+    singular system with its quasi-Newton solver, fits instead."""
+    v = F.col("features_values")
+    df = _irls_frame(spark, "binomial", cols=(0, 1, 1)).withColumn(
+        "features_values",
+        F.array(v[0], v[1], v[2] + jitter * F.randn(seed=1)),
+    )
+    fit = glm.fit_fixed_effect(df, dim=3, family="binomial")
     assert fit.meta["route"] == "glr"
 
 
@@ -412,11 +419,9 @@ def test_local_irls_rejects_what_glr_rejects(
 
 
 def test_local_irls_runs_at_most_two_jobs(spark, spark_jobs):
-    df = _irls_frame(spark, "binomial").cache()
-    df.count()
+    df = _irls_frame(spark, "binomial")
     fits = []
     assert spark_jobs(
         lambda: fits.append(glm.fit_fixed_effect(df, dim=3, family="binomial"))
     ) <= 2
     assert fits[0].meta["route"] == "local_irls"
-    df.unpersist()
