@@ -154,7 +154,7 @@ def _score_coordinate(df: DataFrame, cfg: CoordinateConfig, model, out_col: str)
 
 def _fit_coordinate(
     data: DataFrame, cfg: CoordinateConfig, family: str, prior, offset_col: str,
-    uid_col: str = "uid",
+    uid_col: str = "uid", num_rows: int | None = None,
 ):
     if cfg.kind == "fixed":
         return glm_mod.fit_fixed_effect(
@@ -171,6 +171,7 @@ def _fit_coordinate(
             # scala:178-224). Custom-solver paths only; the IRLS routes
             # ignore it.
             x0=prior if isinstance(prior, glm_mod.FixedEffectGLM) else None,
+            num_rows=num_rows,
         )
     if cfg.active_cap is not None:
         from photon_ml_spark.operators.sampling import per_entity_cap
@@ -227,7 +228,9 @@ def train_game(
     emit ``CoordinateUpdateEvent``s to registered listeners while the
     loop is still running (events.py)."""
     df = persist(df)
-    df.count()
+    # the residual-offset join keeps one row per uid, so this is every
+    # fixed update's row count
+    num_rows = df.count()
 
     model = GameModel(family=family, configs={c.name: c for c in coordinates})
     score_dfs: dict[str, DataFrame] = {}
@@ -272,7 +275,8 @@ def train_game(
                 # it as prior/carry-forward, fixed as optimizer x0
                 prior = model.coordinates.get(cfg.name)
                 coord_model = _fit_coordinate(
-                    data, cfg, family, prior, offset_col, uid_col=uid_col
+                    data, cfg, family, prior, offset_col, uid_col=uid_col,
+                    num_rows=num_rows,
                 )
                 if cfg.kind == "random":
                     coord_model = checkpoint(coord_model)

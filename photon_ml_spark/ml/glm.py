@@ -12,14 +12,16 @@ semantics are the contract.
 
 ``fit_fixed_effect`` has three routes:
 
-- **local IRLS** — a pure-L2 binomial/gaussian/poisson fit whose
-  design has at most ``LOCAL_FIT_MAX_CELLS`` rows × (dim + 1) cells is
-  fetched with one bounded Arrow collect and solved on the driver by
-  spark.ml GLR's own IRLS arithmetic in numpy (``_irls``): the model GLR
+- **local IRLS** — a pure-L2 binomial/gaussian/poisson fit of at most
+  ``LOCAL_FIT_MAX_CELLS`` cells (rows × (dim + 1) + dim²) is fetched
+  with one bounded Arrow collect and solved on the driver by spark.ml
+  GLR's own IRLS arithmetic in numpy (``_irls``): the model GLR
   computes, without the densified cache and one treeAggregate job per
   IRLS step;
 - **GLR** — the same fits above that bound (or where the local
-  Cholesky fails) run ``GeneralizedLinearRegression`` JVM-side;
+  Cholesky fails) run ``GeneralizedLinearRegression`` JVM-side; a
+  caller that passes the row count (``num_rows``, as coordinate descent
+  does) skips the bounded collect when the count is above the bound;
 - **custom solvers** — L1/elastic net, priors, box constraints, the
   smoothed hinge, TRON and fits wider than ``GLR_MAX_FEATURES`` run the
   distributed solvers of ml/distributed_solver.py.
@@ -104,8 +106,14 @@ class FixedEffectGLM:
 #: count (IRLS materializes dim x dim normal equations)
 GLR_MAX_FEATURES = 4096
 
-#: rows × (dim + 1) cells of the largest design ``fit_fixed_effect``
-#: collects and solves on the driver: 32 MB of dense doubles
+#: cells of the largest fit ``fit_fixed_effect`` solves on the driver,
+#: counted as rows × (dim + 1) + dim². The collected Arrow rows (about
+#: twice the dense design for dense rows) are dropped once the design
+#: is built; the IRLS then holds the design, its weighted copy and up
+#: to four dim × dim arrays: at most 4 · 2^22 doubles (128 MB).
+#: Measured on dense binomial fits at the bound (dim 16 and 1500): at
+#: most 67 MB of numpy arrays beside 68 MB of Arrow rows while the
+#: design is built, at most 81 MB in the IRLS.
 LOCAL_FIT_MAX_CELLS = 1 << 22
 
 
@@ -128,18 +136,22 @@ def fit_fixed_effect(
     tol: float = 1e-6,
     solver: str = "auto",
     x0=None,
+    num_rows: int | None = None,
 ) -> FixedEffectGLM:
     """Fit one fixed-effect GLM (M1) with offset (M6), weight, L2 (M4).
 
     Pure-L2 fits on a GLR family (binomial, gaussian, poisson) compute
     spark.ml GLR's IRLS model. Up to ``LOCAL_FIT_MAX_CELLS`` cells
-    (rows × (dim + 1)) one bounded Arrow collect fetches the design and
-    the IRLS runs on the driver (``meta["route"] == "local_irls"``);
-    above the bound, or where the local Cholesky finds collinear
-    columns, GLR runs JVM-side (``"glr"``). Inputs GLR rejects (a NULL,
-    NaN or infinite label or offset, a negative weight, a binomial
-    label whose initial mean leaves (0, 1), a negative poisson label)
-    raise ``ValueError`` on the local route. Anything GLR can't express
+    (rows × (dim + 1) + dim²) one bounded Arrow collect fetches the
+    design and the IRLS runs on the driver (``meta["route"] ==
+    "local_irls"``); above the bound, or where the local Cholesky finds
+    collinear columns, GLR runs JVM-side (``"glr"``). ``num_rows`` is
+    the row count of ``df`` where the caller knows it: a count above
+    the bound goes straight to GLR, without a collect that would read
+    the input once more only to find it too large. Inputs GLR rejects
+    (a NULL, NaN or infinite label or offset, a negative weight, a
+    binomial label whose initial mean leaves (0, 1), a negative
+    poisson label) raise ``ValueError`` on the local route. Anything GLR can't express
     — L1/elastic net (``elastic_net_param`` > 0, OWLQN semantics: L1
     never touches the intercept), a Gaussian prior on the fixed
     coordinate (``prior_mean``/``prior_precision``, length dim+1, M9),
@@ -263,7 +275,7 @@ def fit_fixed_effect(
 
     local = _fit_local(
         df, dim, family, indices_col, values_col, label_col, weight_col,
-        offset_col, reg_param, max_iter, tol,
+        offset_col, reg_param, max_iter, tol, num_rows,
     )
     if local is not None:
         coefficients, intercept, iterations = local
@@ -325,12 +337,14 @@ _PIVOT_RTOL = 1e-10
 
 def _fit_local(
     df, dim, family, indices_col, values_col, label_col, weight_col,
-    offset_col, reg_param, max_iter, tol,
+    offset_col, reg_param, max_iter, tol, num_rows,
 ):
     """(coefficients, intercept, iterations) of GLR's IRLS on the
-    driver, or None: the design is above ``LOCAL_FIT_MAX_CELLS``, or
-    a WLS solve has no usable Cholesky solution."""
-    cap = LOCAL_FIT_MAX_CELLS // (dim + 1)
+    driver, or None: the fit is above ``LOCAL_FIT_MAX_CELLS``, or a
+    WLS solve has no usable Cholesky solution."""
+    cap = (LOCAL_FIT_MAX_CELLS - dim * dim) // (dim + 1)
+    if cap < 1 or (num_rows is not None and num_rows > cap):
+        return None
     t = df.select(
         F.col(indices_col).alias("i"),
         F.col(values_col).alias("v"),
@@ -341,6 +355,7 @@ def _fit_local(
     if t.num_rows > cap:
         return None
     X, y, w, o = _design(t, dim)
+    del t
     return _irls(X, y, w, o, _GLR_FAMILY[family], reg_param, max_iter, tol)
 
 
@@ -362,17 +377,20 @@ def _design(t, dim):
             "feature indices and values must be arrays of equal length "
             "without NULL indices"
         )
-    rows = np.repeat(np.arange(t.num_rows), n_i)
-    idx = idx.to_numpy().astype(np.int64)
-    val = pc.fill_null(val, 0.0).to_numpy().astype(np.float64)
+    idx = idx.to_numpy().astype(np.int64, copy=False)
+    val = pc.fill_null(val, 0.0).to_numpy().astype(np.float64, copy=False)
     keep = (idx >= 0) & (idx < dim)
-    flat = rows[keep] * dim + idx[keep]
-    val = val[keep]
-    if np.unique(flat).size < flat.size:
-        raise ValueError("a feature index repeats within a row")
+    flat = np.repeat(np.arange(t.num_rows) * dim, n_i)
+    flat += idx
+    if not keep.all():
+        flat, val = flat[keep], val[keep]
+    del idx, keep
     if not np.isfinite(val).all():
         raise ValueError("feature values must not be NaN or infinite")
     X = np.zeros((t.num_rows, dim))
+    X.ravel()[flat] = 1.0
+    if np.count_nonzero(X) < flat.size:
+        raise ValueError("a feature index repeats within a row")
     X.ravel()[flat] = val
 
     y, w, o = (
@@ -494,11 +512,14 @@ def _wls(X, b, w, reg_param, standardize):
     k = s.size
     lam = reg_param / b_std
     A = np.empty((k + 1, k + 1))
-    A[:k, :k] = aa[np.ix_(live, live)] / np.outer(s, s)
+    A[:k, :k] = aa[np.ix_(live, live)]
+    del aa
+    A[:k, :k] /= s[:, None]
+    A[:k, :k] /= s
     A[:k, :k][np.diag_indices(k)] += lam if standardize else lam / (s * s) * b_std
     A[:k, k] = A[k, :k] = a_bar[live] / s
     A[k, k] = 1.0
-    rhs = np.append((pX[:, live].T @ b) / (s * b_std), b_bar / b_std)
+    rhs = np.append((pX.T @ b)[live] / (s * b_std), b_bar / b_std)
     try:
         L = np.linalg.cholesky(A)
     except np.linalg.LinAlgError:

@@ -1,14 +1,15 @@
 """GLR↔distributed-LBFGS crossover measurement (VERDICT r11 Next #8).
 
 ``fit_fixed_effect`` auto-routes a pure-L2 fit three ways: GLR's IRLS
-in numpy on the driver while the design has at most
-``LOCAL_FIT_MAX_CELLS`` rows × (dim + 1) cells; spark.ml GLR (IRLS —
+in numpy on the driver while the fit has at most
+``LOCAL_FIT_MAX_CELLS`` cells (rows × (dim + 1) + dim²); spark.ml GLR (IRLS —
 JVM-side normal equations, O(dim²) per iteration, hard-capped at 4096
 features by WeightedLeastSquares) above that, up to
 ``GLR_MAX_FEATURES``; the distributed LBFGS solver (O(dim)
 treeAggregate gradient passes) past it. At the default ROWS every
-measured dim is above the local bound, so ``glr`` times spark.ml GLR;
-each fit records its ``route``. This
+measured dim is above the local bound, so ``glr`` times spark.ml GLR
+(the frame's row count goes in as ``num_rows``, so no bounded collect
+runs first); each fit records its ``route``. This
 script measures fit wall time vs dim for BOTH engines on the same
 synthetic frame so users sizing wide shards know what each engine
 costs where — the number behind the routing constant.
@@ -88,7 +89,7 @@ def main() -> None:
     glr_cap = glm.GLR_MAX_FEATURES
     for dim in DIMS:
         df = persist(synth_frame(spark, dim), StorageLevel.MEMORY_AND_DISK_DESER)
-        df.count()
+        n = df.count()
         cell: dict = {}
         engines = []
         if dim <= glr_cap:
@@ -101,6 +102,7 @@ def main() -> None:
                 m = glm.fit_fixed_effect(
                     df, dim=dim, family="gaussian", reg_param=0.01,
                     weight_col=None, offset_col=None, max_iter=50,
+                    num_rows=n,
                 )
                 cell[label] = {
                     "sec": round(time.perf_counter() - t0, 2),

@@ -382,15 +382,30 @@ def test_local_irls_collinear_columns_run_glr(spark, jitter):
 
 
 def test_local_irls_bound(spark, monkeypatch):
-    """Up to LOCAL_FIT_MAX_CELLS cells (rows × (dim + 1)) the fit runs
-    on the driver; one row more and GLR runs."""
+    """Up to LOCAL_FIT_MAX_CELLS cells (rows × (dim + 1) + dim²) the
+    fit runs on the driver; one cell less and GLR runs."""
     df = _irls_frame(spark, "binomial", n=200)
-    monkeypatch.setattr(glm, "LOCAL_FIT_MAX_CELLS", 200 * 4)
+    monkeypatch.setattr(glm, "LOCAL_FIT_MAX_CELLS", 200 * 4 + 3 * 3)
     at = glm.fit_fixed_effect(df, dim=3, family="binomial")
-    monkeypatch.setattr(glm, "LOCAL_FIT_MAX_CELLS", 200 * 4 - 1)
+    monkeypatch.setattr(glm, "LOCAL_FIT_MAX_CELLS", 200 * 4 + 3 * 3 - 1)
     past = glm.fit_fixed_effect(df, dim=3, family="binomial")
     assert (at.meta["route"], past.meta["route"]) == ("local_irls", "glr")
     assert np.allclose(at.coefficients, past.coefficients, rtol=0, atol=1e-9)
+
+
+def test_local_irls_row_count_skips_collect(spark, monkeypatch, spark_jobs):
+    """A caller's row count above the bound sends the fit to GLR with
+    the jobs of GLR alone: no collect reads the input first."""
+    df = _irls_frame(spark, "binomial", n=200)
+    kw = dict(dim=3, family="binomial")
+    forced = spark_jobs(lambda: _glr_fit(monkeypatch, df, **kw))
+    monkeypatch.setattr(glm, "LOCAL_FIT_MAX_CELLS", 199 * 4 + 3 * 3)
+    fits = []
+    jobs = spark_jobs(
+        lambda: fits.append(glm.fit_fixed_effect(df, num_rows=200, **kw))
+    )
+    assert fits[0].meta["route"] == "glr"
+    assert jobs == forced
 
 
 @pytest.mark.parametrize(
