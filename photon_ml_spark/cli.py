@@ -1993,10 +1993,14 @@ def curate(cfg: dict, spark: SparkSession) -> None:
         # downstream consumers (cluster_and_keep here, leakage_safe_
         # split below) take the LINEAR rep-pair + member→rep star edge
         # list — same connected components as the full pair relation,
-        # never the within-group cliques.
+        # never the within-group cliques. Shingles are numbered by hash,
+        # as in the incremental flow (dedup.minhash_signatures says why
+        # dense ids do not suit minhash), and a small verified edge list
+        # is clustered on the driver (dedup.connected_components).
         rep_pairs, membership = dedup.minhash_lsh_collapsed(
             docs, threshold=nd.get("threshold", 0.5),
             n=nd.get("n", 2), tokens_col=TOK,
+            num_hashes=nd.get("num_hashes", 16), bands=nd.get("bands", 4),
         )
         pairs = persist(
             dedup.neardup_cluster_edges(rep_pairs, membership),

@@ -1,8 +1,9 @@
 """Deduplication operators for training-data pipelines.
 
 Five dedup families, each a pure-DataFrame pipeline designed for the
-100 TB regime (shuffle on shingle/bucket keys, no driver state, no
-cross joins except within tiny candidate buckets):
+100 TB regime (shuffle on shingle/bucket keys, driver state only in
+size-bounded collects, no cross joins except within tiny candidate
+buckets):
 
 - exact (hash-groupBy on a canonical fingerprint)
 - n-gram Jaccard (shingle self-join with |A∩B| counting)
@@ -15,14 +16,18 @@ cross joins except within tiny candidate buckets):
 Portability: minhash/simhash use *linear permutations over a dense
 token-id dictionary* ((a·id + b) mod p) instead of engine hash
 functions, so every stage is reproducible in ANSI SQL for the oracle.
-At production scale swap `token_ids` for xxhash64(token) — same
-pipeline shape, one less join.
+At production scale swap `token_ids` for xxhash64(token)
+(`token_ids_hashed`) — same pipeline shape, one less join, and a real
+permutation family: over a small dense vocabulary the linear hashes are
+all increasing in the id (see `minhash_signatures`).
 """
 
 from __future__ import annotations
 
 import json
 
+import numpy as np
+import pyarrow as pa
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
@@ -349,6 +354,12 @@ def token_ids(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     partitions. At scale replace with xxhash64(shingle)
     (``token_ids_hashed``) — same pipeline shape, one less join — at
     the cost of SQL-portable ids.
+
+    Not a minhash input outside the oracle rows: with fewer than about
+    2,147 distinct shingles every ``MINHASH_PARAMS`` hash is increasing
+    in these ids (see ``minhash_signatures``), so LSH over them bands
+    one value. The gate rows keep them because their SQL oracles pin
+    this form.
     """
     from photon_ml_spark.operators.indexing import zip_with_index
 
@@ -362,7 +373,15 @@ def minhash_signatures(
     doc_sids: DataFrame, id_col: str = "doc_id", num_hashes: int = 16
 ) -> DataFrame:
     """Minhash signature per doc: mh_i = min over shingles of
-    (a_i·sid + b_i) mod p. One aggregation pass computes all i."""
+    (a_i·sid + b_i) mod p. One aggregation pass computes all i.
+
+    The family permutes only ids spread over [0, p), as
+    ``token_ids_hashed`` gives them. Every a_i is at most 1,000,003, so
+    for sid below about 2,147 no term wraps mod p and each hash is
+    increasing in the sid: on dense ``token_ids`` of a small vocabulary
+    all components of a signature come from the doc's smallest sid, and
+    the bands of ``lsh_candidate_pairs`` carry one value between them
+    (every doc sharing that shingle becomes a candidate)."""
     aggs = [
         F.min((F.col("sid") * a + b) % MINHASH_PRIME).alias(f"mh{i}")
         for i, (a, b) in enumerate(MINHASH_PARAMS[:num_hashes])
@@ -719,11 +738,13 @@ def minhash_lsh_collapsed(
     per-doc frame, so the doc×shingle relation is read by this one pass
     only (it is not cached here for that reason). ``doc_sids`` must hold
     distinct, non-NULL (id, sid) rows, as ``token_ids`` gives them (see
-    ``collapse_exact_sets``)."""
+    ``collapse_exact_sets``); without it shingles are numbered by hash
+    (``token_ids_hashed``; ``tokens_col`` feeds it), the ids over which
+    ``MINHASH_PARAMS`` permutes (see ``minhash_signatures``)."""
     sids = (
         doc_sids
         if doc_sids is not None
-        else token_ids(df, id_col, text_col, n, tokens_col=tokens_col)
+        else token_ids_hashed(df, id_col, text_col, n, tokens_col=tokens_col)
     )
     aggs = [
         F.min((F.col("sid") * a + b) % MINHASH_PRIME).alias(f"mh{i}")
@@ -995,6 +1016,13 @@ def contaminated_docs(
     )
 
 
+#: Most edges (as given, before symmetrizing) that ``connected_components``
+#: resolves on the driver: one bounded Arrow collect of two longs an edge
+#: (16 MB at the bound) and a numpy label propagation. A longer edge list
+#: runs the distributed loop.
+LOCAL_CC_MAX_EDGES = 1_000_000
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
@@ -1008,9 +1036,22 @@ def connected_components(
     Returns (node, component) where component = min node id in the
     node's component, for every node that appears in an edge.
 
-    Distributed min-label propagation with pointer jumping, the
-    DataFrame rendering of the MapReduce CC algorithms (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14):
+    Up to ``LOCAL_CC_MAX_EDGES`` edges, one bounded collect of the edge
+    list and min-label propagation with pointer jumping in numpy
+    (``_local_components``); the result is a local relation. The
+    loop below costs a persist, a checkpoint and a few jobs per
+    iteration whatever the edge list's size, and the ``curate_corpus``
+    benchmark's seed-1 corpus clusters 78 edges. The edge list is
+    persisted before the collect, so ``pairs``' plan (typically the
+    whole LSH and verification) runs once on either side of the
+    bound: above it the loop reads that cache. The probe's price there
+    is one shuffle of at most ``LOCAL_CC_MAX_EDGES + 1`` edges per
+    partition and their collect.
+
+    Above the bound: distributed min-label propagation with pointer
+    jumping, the DataFrame rendering of the MapReduce CC algorithms
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC'14):
 
     - each iteration is two shuffles (neighbor-min groupBy + label
       self-join), both on node keys — no driver state, no collect;
@@ -1024,20 +1065,33 @@ def connected_components(
       persist discipline, reference RandomEffectDataset.scala:279-341
       eager-materialization pattern).
 
-    Dup clusters are dense (diameter is tiny), so in practice this
+    Dup clusters are dense (diameter is tiny), so in practice the loop
     runs 2-3 iterations; ``max_iter`` is a hard stop against
     pathological chain graphs, raising rather than silently returning
-    partial components.
+    partial components. It bounds the loop only; the local path always
+    converges.
+
+    Both paths give the same labels, NULL endpoints included: a NULL
+    endpoint never joins two nodes, and the NULL node itself takes the
+    component of its smallest non-NULL neighbour (NULL if it has none).
     """
-    e = pairs.select(
-        F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
-    )
     # SERIALIZED caching throughout: edge and label frames are one row
     # per edge/node — at corpus scale, deserialized storage means
     # billions of per-row objects (the GC-pressure failure mode the
     # round-8 dictionary stress hit); serialized blocks are a few big
     # buffers, and the per-iteration reads of (long, long) rows
     # deserialize for pennies.
+    e = persist(
+        pairs.select(
+            F.col(src).cast("long").alias("u"),
+            F.col(dst).cast("long").alias("v"),
+        )
+    )
+    head = e.limit(LOCAL_CC_MAX_EDGES + 1).toArrow()
+    if head.num_rows <= LOCAL_CC_MAX_EDGES:
+        release(e)
+        return _local_components(pairs.sparkSession, head)
+    del head
     edges = persist(
         e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
@@ -1061,6 +1115,8 @@ def connected_components(
         )
     )
     prev_sum = init_obs.get["s"]
+    # the init job filled the edge cache; nothing reads e again
+    release(e)
     converged = False
     for _ in range(max_iter):
         # neighbor-min via the SYMMETRIC edge list joined on its cached
@@ -1127,6 +1183,59 @@ def connected_components(
         )
     return labels.select(
         F.col("u").alias("node"), F.col("label").alias("component")
+    )
+
+
+def _local_components(spark, edges) -> DataFrame:
+    """``connected_components`` of a collected (u, v) Arrow table.
+
+    Nodes are numbered in sorted order, so the smallest number in a
+    component is its smallest id. Each round hooks the root of every
+    edge's larger-rooted end onto the smaller root (``np.minimum.at``),
+    then pointer jumping points every node at its root; a round that
+    changes no root is the fixpoint, where each component has one root,
+    its minimum. On a chain of n nodes the first round hooks every node
+    onto its smaller neighbour, ~log2(n) jumps finish it, and a second
+    round confirms the fixpoint.
+    """
+    u_ok, v_ok = (edges.column(c).is_valid().to_numpy(zero_copy_only=False)
+                  for c in ("u", "v"))
+    u, v = (edges.column(c).fill_null(0).to_numpy() for c in ("u", "v"))
+    nodes = np.unique(np.concatenate([u[u_ok], v[v_ok]]))
+    both = u_ok & v_ok
+    a, b = np.searchsorted(nodes, u[both]), np.searchsorted(nodes, v[both])
+    label = np.arange(len(nodes))
+    while True:
+        new = label.copy()
+        low = np.minimum(label[a], label[b])
+        np.minimum.at(new, label[a], low)
+        np.minimum.at(new, label[b], low)
+        while True:
+            jumped = new[new]
+            if np.array_equal(jumped, new):
+                break
+            new = jumped
+        if np.array_equal(new, label):
+            break
+        label = new
+    node = pa.array(nodes, pa.int64())
+    component = pa.array(nodes[label], pa.int64())
+    if not both.all():
+        # the distributed loop's NULL node: present as an edge end, it
+        # joins nothing, and pointer jumping gives it the component of
+        # its init label, the smallest non-NULL neighbour
+        partners = np.concatenate([v[~u_ok & v_ok], u[u_ok & ~v_ok]])
+        null_comp = (
+            nodes[label[np.searchsorted(nodes, partners.min())]]
+            if len(partners) else None
+        )
+        node = pa.concat_arrays([node, pa.array([None], pa.int64())])
+        component = pa.concat_arrays(
+            [component, pa.array([null_comp], pa.int64())]
+        )
+    return spark.createDataFrame(
+        pa.table({"node": node, "component": component}),
+        "node long, component long",
     )
 
 

@@ -1707,8 +1707,9 @@ def x22_leakage_safe_split(spark, sf_dir, phase_stamps=None):
             uniform=lcg_uniform(F.col("cluster_id") * 104729, 11),
         )
     if phase_stamps is not None:
-        # cluster_and_keep's connected-components loop is eager, so it
-        # was the edge list's last reader
+        # connected_components reads the edge list eagerly (its bounded
+        # collect, or the distributed loop above the bound), so
+        # cluster_and_keep was the edge list's last reader
         release(pairs)
     return out.select("doc_id", "cluster_id", "split")
 

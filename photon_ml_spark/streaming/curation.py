@@ -251,9 +251,10 @@ def neardup_process_batch(
             pairs = neardup_cluster_edges(
                 rep_pairs, membership, id_col=id_col
             )
-            # cluster_and_keep's connected-components loop runs EAGER
-            # actions (per-iteration localCheckpoint), and the lazy LSH
-            # detection feeds it — this phase is detection + resolution
+            # cluster_and_keep's connected components run EAGER actions
+            # (one bounded collect of the edge list, or per-iteration
+            # localCheckpoints above the bound), and the lazy LSH
+            # detection feeds them — this phase is detection + resolution
             survivors = _phase(
                 "resolve",
                 lambda: cluster_and_keep(batch, pairs, id_col=id_col)

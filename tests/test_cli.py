@@ -482,6 +482,46 @@ def test_cli_train_per_group_evaluation(spark, tmp_path, capsys):
     assert all(0.0 <= r.auc <= 1.0 for r in rows)
 
 
+def test_cli_curate_near_dedup_lsh_shape(spark, tmp_path, capsys,
+                                         monkeypatch):
+    """Full-mode near dedup hands ``near_dedup.num_hashes``/``bands`` to
+    the LSH banding, as the incremental flow does."""
+    from photon_ml_spark.operators import dedup
+
+    seen = []
+    real = dedup.lsh_candidate_pairs
+
+    def spy(signatures, id_col="doc_id", num_hashes=16, bands=4):
+        seen.append((num_hashes, bands))
+        return real(signatures, id_col, num_hashes, bands)
+
+    monkeypatch.setattr(dedup, "lsh_candidate_pairs", spy)
+    inp = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(
+        [
+            (1, "alpha beta gamma delta epsilon"),
+            (2, "alpha beta gamma delta zeta"),   # near-dup of 1
+            (3, "completely unrelated words here"),
+        ],
+        "doc_id long, text string",
+    ).write.parquet(inp)
+    out = str(tmp_path / "curated")
+    cli.curate(
+        {
+            "input": inp,
+            "output_dir": out,
+            "near_dedup": {"threshold": 0.5, "n": 1, "num_hashes": 8,
+                           "bands": 8},
+        },
+        spark,
+    )
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert seen == [(8, 8)]
+    assert rep["report"]["after_near_dedup"] == 2
+    assert {r.doc_id for r in spark.read.parquet(f"{out}/docs").collect()} \
+        == {1, 3}
+
+
 def test_cli_curate_incremental_index_mode(spark, tmp_path, capsys):
     """Batch curate with near_dedup.index_path: run 1 (batch 0)
     bootstraps the shared persisted index; run 2 (batch 1) drops docs

@@ -3,6 +3,7 @@
 
 import inspect
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -471,6 +472,100 @@ def test_connected_components_edge_direction_irrelevant(spark):
 def test_connected_components_empty(spark):
     pairs = spark.createDataFrame([], "id_a long, id_b long")
     assert dedup.connected_components(pairs).count() == 0
+
+
+_CC_CASES = {
+    "chain": [(i, i + 1) for i in range(1, 12)] + [(100, 101), (101, 102)],
+    "star": [(0, i) for i in range(1, 8)],
+    "clique": [(i, j) for i in range(5) for j in range(5) if i < j],
+    "reversed_duplicate": [(5, 2), (2, 9), (9, 5), (7, 3), (3, 7), (3, 7),
+                           (9, 2)],
+    "self_loops": [(4, 4), (4, 6), (8, 8)],
+    "two_components": [(1, 2), (3, 4)],
+    "empty": [],
+    # a NULL end joins nothing, and the NULL node takes the component of
+    # its smallest non-NULL neighbour (5 → 2, not 10 → 1)
+    "null_endpoints": [(None, 5), (10, None), (1, 10), (None, None),
+                       (20, 21), (5, 30), (30, 2)],
+}
+
+
+def _cc_map(spark, rows):
+    pairs = spark.createDataFrame(rows, "id_a long, id_b long")
+    return {r.node: r.component
+            for r in dedup.connected_components(pairs).collect()}
+
+
+@pytest.mark.parametrize("case", list(_CC_CASES))
+def test_connected_components_local_matches_distributed(
+    spark, monkeypatch, case
+):
+    """The driver-side path gives the distributed loop's labels. A bound
+    of -1 sends even an empty edge list to the loop."""
+    local = _cc_map(spark, _CC_CASES[case])
+    monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", -1)
+    assert _cc_map(spark, _CC_CASES[case]) == local
+    if case == "null_endpoints":
+        assert local == {None: 2, 1: 1, 10: 1, 20: 20, 21: 20, 2: 2, 5: 2,
+                         30: 2}
+
+
+def test_connected_components_local_path_jobs(spark, spark_jobs):
+    """Below the bound: one bounded collect, and the result is a local
+    relation, so resolving and reading the components takes ≤ 2 jobs."""
+    pairs = spark.createDataFrame(_CC_CASES["chain"], "id_a long, id_b long")
+    assert spark_jobs(
+        lambda: dedup.connected_components(pairs).collect()
+    ) <= 2
+
+
+def test_connected_components_above_bound_runs_loop(spark, monkeypatch):
+    """More edges than the bound run the distributed loop (its init and
+    iteration checkpoints), which still releases everything but the
+    returned labels; at the bound no checkpoint runs."""
+    calls = []
+    real = dedup.checkpoint
+
+    def counted(df, *a, **k):
+        calls.append(1)
+        return real(df, *a, **k)
+
+    monkeypatch.setattr(dedup, "checkpoint", counted)
+    rows = _CC_CASES["two_components"] + [(2, 3), (3, 5), (6, 7)]
+    expected = {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 6: 6, 7: 6}
+    monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", len(rows))
+    assert _cc_map(spark, rows) == expected
+    assert not calls
+    monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", len(rows) - 1)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    assert _cc_map(spark, rows) == expected
+    assert len(calls) >= 2
+    assert len(set(jsc.getPersistentRDDs().keySet()) - before) <= 1
+
+
+def test_connected_components_above_bound_reads_pairs_once(
+    spark, monkeypatch
+):
+    """Above the bound the loop reads the edge list the bounded collect
+    cached: each input row is evaluated once, so an unpersisted upstream
+    plan (LSH and verification) does not run a second time."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        seen.add(1)
+        return x
+
+    traced = F.udf(tick, "long").asNondeterministic()
+    rows = _CC_CASES["chain"]
+    pairs = spark.createDataFrame(rows, "id_a long, id_b long").withColumn(
+        "id_a", traced("id_a")
+    )
+    monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", 2)
+    got = {r.node: r.component
+           for r in dedup.connected_components(pairs).collect()}
+    assert got == _cc_map(spark, rows)
+    assert seen.value == len(rows)
 
 
 def test_cluster_and_keep_singletons_survive(spark, docs):
@@ -2804,3 +2899,30 @@ def test_fake_decoders_match_python_stubs(spark, sf_dir):
         real = decode(null, fake=False).collect()
         assert fake == real, decode.__name__
         assert fake[0].decode_ok is False
+
+
+def _single_source_share(sids) -> float:
+    """Share of docs whose minhash signature takes all of its components
+    from one shingle (the argmin of every hash is the same sid)."""
+    a = np.array([p[0] for p in dedup.MINHASH_PARAMS], dtype=np.int64)
+    b = np.array([p[1] for p in dedup.MINHASH_PARAMS], dtype=np.int64)
+    by_doc: dict = {}
+    for doc, sid in sids.collect():
+        by_doc.setdefault(doc, []).append(sid)
+    single = 0
+    for ids in by_doc.values():
+        h = (np.outer(np.array(ids, dtype=np.int64), a) + b) % dedup.MINHASH_PRIME
+        arg = h.argmin(axis=0)
+        single += bool((arg == arg[0]).all())
+    return single / len(by_doc)
+
+
+def test_minhash_family_permutes_hashed_ids_only(spark, sf_dir):
+    """``MINHASH_PARAMS`` hashes are (a·sid + b) mod p with a ≤ 1,000,003:
+    below sid ≈ 2,147 nothing wraps, every hash is increasing in the id,
+    and all 16 components of a signature come from the doc's smallest id.
+    The dense bigram ids of a small vocabulary live there; hashed ids
+    spread over [0, p), where the hashes act as permutations."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    assert _single_source_share(dedup.token_ids(docs, n=2)) == 1.0
+    assert _single_source_share(dedup.token_ids_hashed(docs, n=2)) <= 0.05
